@@ -19,8 +19,8 @@ was regime, not code.  So every number here is a MEDIAN:
   ``BENCH_QUERY_REPS`` (default 3) reps interleaved round-robin
   (q1,q2,...,q1,q2,...) so no query owns a quiet or noisy stretch of
   the host; ``queries.<q>`` is the median, raw reps in ``query_reps``
-  — the same discipline tools/query_timing.py and tools/ab_bench.py
-  established.
+  — the same interleaved-rep discipline as the variant A/Bs recorded
+  in BASELINE.md.
 
 The artifact is self-describing about its substrate (round-4 ADVICE):
 ``protocol.workdir`` / ``protocol.local_dir`` record where snapshots

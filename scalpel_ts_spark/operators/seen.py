@@ -246,9 +246,6 @@ def new_urls(
     hash_col: str = "url_hash",
     persisted_out: list | None = None,
     dedup: bool = False,
-    narrow: bool = False,
-    preagg: bool = False,
-    broadcast_new: bool = True,
     **bloom_kwargs,
 ) -> DataFrame:
     """candidates ∖ seen — exact, with optional bloom prefilter.
@@ -273,78 +270,17 @@ def new_urls(
     pass a list; the internal persisted frame is appended so it can be
     unpersisted after the result is materialized.  One-shot callers may
     omit it (the cache dies with the session).
-
-    ``narrow=True`` (requires blooms + dedup): the bucket cogroup
-    carries ONLY the int64 hash — dedup and bloom probe never touch
-    the URL strings, so the Arrow exchange is 8 bytes/row instead of
-    the full (url, host_id, hash) width (round-4 verdict's top crawl
-    lever: the cogroup was 41%% of crawl wall and the engine's worst
-    1->4-core section, DRAM-bound on string traffic).  Strings are
-    re-attached afterwards by semi-joining the raw candidate frame
-    against the (small, post-dedup, post-anti-join) new-hash set —
-    broadcast when the CALLER's a-priori bound on that set is small
-    (``broadcast_new=True`` — the crawl engine gates on its per-round
-    discovery budget, ~8 links x cap x n_hosts vs 4M rows = 32 MB of
-    8-byte hashes; the same budget-conditional pattern as
-    frontier_anti_join), a shuffle semi-join past it — then deduped
-    with a hash-keyed aggregate
-    whose exchange carries only the genuinely-NEW rows (duplicate
-    in-links included), not the full discovery volume.  min() is the
-    deterministic pick; rows with equal hash are identical anyway
-    (the 64-bit hash is the engine-wide URL identity).
-
-    ``preagg=True`` (requires dedup): dedup runs as a JVM hash
-    aggregate (``groupBy(hash).agg(min(*))``) BEFORE the bucket
-    cogroup instead of inside it.  Two exchanges instead of one, but
-    both cheaper: the aggregate's map-side partial combine removes
-    intra-partition duplicate links before anything is exchanged
-    (strings ride JVM tungsten rows, never Arrow), and the cogroup
-    then ships only DISTINCT URLs — the Arrow volume shrinks by the
-    crawl's duplication factor (avg in-degree, ~4-8x on link graphs).
-    min() is deterministic; rows with equal hash are identical (the
-    64-bit hash is the engine-wide URL identity).
     """
     if blooms is None:
         if dedup:
             candidates = candidates.dropDuplicates([hash_col])
         return candidates.join(seen.select(hash_col), hash_col, "left_anti")
-    if preagg:
-        assert dedup and not narrow, "preagg is a standalone dedup strategy"
-        other = [c for c in candidates.columns if c != hash_col]
-        candidates = (
-            candidates.groupBy(hash_col)
-            .agg(*[F.min(c).alias(c) for c in other])
-            .select(candidates.columns)
-        )
-        dedup = False  # already exact-deduped; cogroup probes only
-
-    def _probe_then_anti(cand: DataFrame, dedup_by_hash: bool) -> DataFrame:
-        # shared tail of both probe shapes: tag via the bucket cogroup
-        # (persisted once — both filter branches read it), let bloom
-        # misses skip the anti-join, exact-check only the suspects
-        tagged = bloom_prefilter(
-            cand, blooms, hash_col, dedup_by_hash=dedup_by_hash,
-            **bloom_kwargs,
-        ).persist()
-        if persisted_out is not None:
-            persisted_out.append(tagged)
-        definite_new = tagged.filter(F.col("maybe_seen") == 0).drop("maybe_seen")
-        suspects = tagged.filter(F.col("maybe_seen") == 1).drop("maybe_seen")
-        checked = suspects.join(seen.select(hash_col), hash_col, "left_anti")
-        return definite_new.unionByName(checked)
-
-    if narrow:
-        assert dedup, "narrow probe implies hash dedup"
-        new_hashes = _probe_then_anti(
-            candidates.select(hash_col), dedup_by_hash=True
-        )
-        if broadcast_new:
-            new_hashes = F.broadcast(new_hashes)
-        other = [c for c in candidates.columns if c != hash_col]
-        return (
-            candidates.join(new_hashes, hash_col, "left_semi")
-            .groupBy(hash_col)
-            .agg(*[F.min(c).alias(c) for c in other])
-            .select(candidates.columns)
-        )
-    return _probe_then_anti(candidates, dedup_by_hash=dedup)
+    tagged = bloom_prefilter(
+        candidates, blooms, hash_col, dedup_by_hash=dedup, **bloom_kwargs
+    ).persist()
+    if persisted_out is not None:
+        persisted_out.append(tagged)
+    definite_new = tagged.filter(F.col("maybe_seen") == 0).drop("maybe_seen")
+    suspects = tagged.filter(F.col("maybe_seen") == 1).drop("maybe_seen")
+    checked = suspects.join(seen.select(hash_col), hash_col, "left_anti")
+    return definite_new.unionByName(checked)

@@ -1,24 +1,32 @@
 """The crawl engine: PySpark-native URL frontier + fetch scheduler.
 
-One crawl round is one Spark job pipeline over snapshot tables:
+One crawl round is one Spark job pipeline over snapshot tables.
+``CrawlEngine.run_round`` runs it as the stage methods named on the
+right, which pass one ``_Round`` state object:
 
-    frontier ──(refill token buckets)── host_state
+    frontier ──(refill token buckets)── host_state   _select
        │ join on host_id
        ▼
-    salted top-k per host (operators.topk — politeness priority queue)
-       │ (production: robots pre-vet for hosts with no cached rules)
-    fetch UDF ── parse+extract UDF (one parse: spans, links, title)
+    salted top-k per host (operators.topk)
+       │ (production: robots pre-vet for hosts       _robots_prevet
+       │  with no cached rules)
+    fetch UDF ── parse+extract UDF                   _fetch_extract
+       │  (one parse: spans, links, title)
+    explode links ── canonicalize                    _discover_dedup
        │
-    explode links ── canonicalize
+    bloom prefilter + hash dedup (ONE bucket
+    exchange) + exact anti-join vs seen
+    (operators.seen)
        │
-    bloom prefilter + hash dedup (ONE bucket exchange) + exact
-    anti-join vs seen (operators.seen)
+    robots rules for new hosts (cache table)         _robots
        │
-    robots filter (runs on the small genuinely-new set: per-URL
-    allow/deny commutes with dedup and set-difference)
+    robots filter on the small genuinely-new set     _next_frontier
+    (per-URL allow/deny commutes with dedup and
+    set-difference); next frontier, token spend
        │
-    write snapshots: docs+, fetch_log+, seen+, frontier', host_state',
-                     bloom', manifest (metrics + per-partition lineage)
+    write snapshots: docs+, fetch_log+, seen+,       _commit
+       frontier', host_state', bloom', robots'       (_next_bloom)
+    manifest (metrics + per-partition lineage)       _record
 
 Storage goes through the :mod:`scalpel_ts_spark.plans.storage` seam:
 the sandbox uses ``ParquetSnapshotStorage`` (every table versioned by
@@ -42,6 +50,7 @@ from __future__ import annotations
 
 import time
 from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -122,6 +131,13 @@ def _obs_count(obs: Observation, key: str) -> int:
         return 0
 
 
+def _with_count(df: DataFrame, name: str) -> tuple[DataFrame, Observation]:
+    """``df`` observed with its row count under ``name``, and the
+    Observation that holds the count once an action ran the plan."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias(name)), obs
+
+
 def _coalesce_for_write(
     df: DataFrame, est_rows: int, rows_per_file: int = 262_144
 ) -> DataFrame:
@@ -167,6 +183,76 @@ def resolve_write_small(storage):
     return write_small
 
 
+@dataclass
+class _Round:
+    """The state one crawl round's stages hand each other.
+
+    ``run_round`` makes one per round; each stage method reads the
+    fields earlier stages set and sets its own.  ``caches`` holds every
+    frame the round persisted, and ``release`` unpersists them.
+    ``sections`` are wall seconds measured contiguously from ``t0``:
+    each ``mark`` closes the interval since the previous mark."""
+
+    r: int
+    t0: float = field(default_factory=time.time)
+    sections: dict = field(default_factory=dict)
+    caches: list = field(default_factory=list)
+    # select (+ production robots pre-vet)
+    frontier: DataFrame | None = None
+    new_state: DataFrame | None = None
+    candidates: DataFrame | None = None
+    single_phase: bool = False
+    par: int = 1
+    robots_prev: DataFrame | None = None
+    miss_sites: DataFrame | None = None
+    prefetch_rules: DataFrame | None = None
+    prefetch_obs: Observation | None = None
+    denied: DataFrame | None = None
+    # fetch_extract
+    fetched_all: DataFrame | None = None
+    fetched: DataFrame | None = None
+    content: DataFrame | None = None
+    has_err: bool = False
+    lineage: list = field(default_factory=list)
+    n_fetched: int = 0
+    n_errors: int = 0
+    # discover_dedup, robots
+    seen: DataFrame | None = None
+    blooms: DataFrame | None = None
+    new_keys: DataFrame | None = None
+    robots: DataFrame | None = None
+    robots_obs: Observation | None = None
+    # next frontier, commit
+    fresh: DataFrame | None = None
+    seen_delta: DataFrame | None = None
+    n_new_obs: Observation | None = None
+    denied_obs: Observation | None = None
+    kept_obs: Observation | None = None
+    next_frontier: DataFrame | None = None
+    host_state_next: DataFrame | None = None
+    n_new: int = 0
+    n_denied: int = 0
+
+    def __post_init__(self):
+        self._last = self.t0
+
+    def mark(self, label: str) -> None:
+        now = time.time()
+        self.sections[label] = round(
+            self.sections.get(label, 0.0) + now - self._last, 3
+        )
+        self._last = now
+
+    def cache(self, df: DataFrame) -> DataFrame:
+        self.caches.append(df.persist())
+        return df
+
+    def release(self) -> None:
+        for df in self.caches:
+            df.unpersist()
+        self.caches.clear()
+
+
 class CrawlEngine:
     def __init__(
         self,
@@ -182,7 +268,6 @@ class CrawlEngine:
         bloom_bits_per_key: int = 10,
         bloom_max_bucket_bytes: int = 64 << 20,
         bloom_presize_keys: int | None = None,
-        narrow_probe: bool = False,
         write_docs: bool = True,
         compact_every: int = 8,
         storage: SnapshotStorage | None = None,
@@ -267,22 +352,6 @@ class CrawlEngine:
             bloom_buckets,
             -(-expected_discovery // bloom_target_rows_per_bucket),
         )
-        #: hash-only bucket cogroup + string re-attach (see
-        #: operators/seen.new_urls narrow path).  Default OFF: measured
-        #: on this single box (tools/probe_ab.py, 2M rows, interleaved
-        #: in-session reps) the narrow shape loses at EVERY seen
-        #: fraction (0.1/0.6/0.9 -> wide 2.45/1.30/1.81 s vs narrow
-        #: 3.50/1.78/2.35 s) because its extra candidate scan +
-        #: broadcast barrier + re-attach aggregate outweigh the Arrow
-        #: width saving when the "exchange" is local DRAM.  On a real
-        #: multi-executor cluster the bucket exchange is NETWORK: 8 B
-        #: vs ~100 B per discovered link is a ~10x traffic cut, so the
-        #: flag is the deploy-time knob for network-bound shuffles
-        #: (results are identical either way — equality-tested).  A
-        #: third shape, JVM pre-aggregate dedup (new_urls(preagg=True),
-        #: map-side partial combine before a probe-only cogroup), was
-        #: also measured: beats narrow, still loses to wide here.
-        self.narrow_probe = narrow_probe
         #: bloom bitmap sizing: ~10 bits/key => ~1% FP.  Bitmaps are
         #: sized at init from the SEED count (x4 growth headroom) and
         #: RE-SIZED + rebuilt at every compaction from the tracked seen
@@ -346,7 +415,6 @@ class CrawlEngine:
             "bloom_bits_per_key": self.bloom_bits_per_key,
             "bloom_max_bucket_bytes": self.bloom_max_bucket_bytes,
             "bloom_presize_keys": self.bloom_presize_keys,
-            "narrow_probe": self.narrow_probe,
             "compact_every": self.compact_every,
             "max_fetch_retries": self.max_fetch_retries,
             "broadcast_fetched_max": self.broadcast_fetched_max,
@@ -445,12 +513,8 @@ class CrawlEngine:
         # the seed count rides the frontier write as an Observation
         # (no separate count job): it seeds the arithmetic row
         # trackers AND sizes the bloom bitmaps below
-        seed_obs = Observation()
-        self._write(
-            frontier.observe(seed_obs, F.count(F.lit(1)).alias("n")),
-            "frontier",
-            0,
-        )
+        observed, seed_obs = _with_count(frontier, "n")
+        self._write(observed, "frontier", 0)
         n_seeds = _obs_count(seed_obs, "n")
         self._frontier_rows = n_seeds
         self._seen_rows = n_seeds
@@ -546,6 +610,10 @@ class CrawlEngine:
         storage = storage or ParquetSnapshotStorage(spark, workdir)
         manifest = storage.load_manifest()
         cfg = manifest["config"]
+        # manifests written while the narrow seen probe existed carry
+        # its knob; both probe shapes gave identical results, so
+        # dropping it cannot change a resumed crawl
+        cfg.pop("narrow_probe", None)
         eng = cls(
             spark,
             workdir,
@@ -645,20 +713,37 @@ class CrawlEngine:
     # --- one crawl round ---------------------------------------------------
 
     def run_round(self) -> dict:
-        r = self.round
-        t0 = time.time()
-        sections: dict = {}
-        _last = [t0]
+        """One crawl round: the stages of the module diagram over one
+        ``_Round``.  Sections ``fetch_extract`` and ``robots`` are
+        marked here, ``seen_dedup`` and ``commit`` inside ``_commit``;
+        the round's caches are released on every exit path."""
+        st = _Round(self.round)
+        try:
+            self._select(st)
+            self._fetch_extract(st)
+            st.mark("fetch_extract")
+            # a zero-fetch round still COMMITS when the robots pre-vet
+            # denied candidates: those rows must leave the frontier, or
+            # the same denied batch would be re-selected forever
+            if st.n_fetched == 0 and (
+                st.denied is None or st.denied.limit(1).count() == 0
+            ):
+                return self._uncommitted(st)
+            self._consec_all_error_rounds = 0
+            self._discover_dedup(st)
+            self._robots(st)
+            st.mark("robots")
+            self._next_frontier(st)
+            self._commit(st)
+            return self._record(st)
+        finally:
+            st.release()
 
-        def _mark(label: str):
-            now = time.time()
-            sections[label] = round(
-                sections.get(label, 0.0) + now - _last[0], 3
-            )
-            _last[0] = now
-
-        frontier = self._read("frontier", r)
-        host_state = self._read("host_state", r)
+    def _select(self, st: _Round) -> None:
+        """Token refill and the politeness-budgeted salted top-k; on the
+        production path, the robots pre-vet of first-contact hosts."""
+        frontier = st.frontier = self._read("frontier", st.r)
+        host_state = self._read("host_state", st.r)
 
         # 1. token-bucket refill for hosts with pending work; hosts not
         #    pending this round keep their balance untouched (matches
@@ -677,7 +762,7 @@ class CrawlEngine:
         # r6 profile showed the host_state commit alone re-running it
         # for 4s a round at a 700k-row frontier.  The cache is one row
         # per pending/known host, materialized by the first job.
-        new_state = refreshed.unionByName(idle).persist()
+        st.new_state = st.cache(refreshed.unionByName(idle))
 
         # 2. politeness-budgeted selection: salted top-k per host by
         #    (priority, seq) with k = the host's token balance.
@@ -685,7 +770,7 @@ class CrawlEngine:
         #    the frontier is per-URL (10^10 design point) — broadcast
         #    the small side so the frontier is not shuffled for this
         #    join
-        budgeted = frontier.join(F.broadcast(new_state), "host_id")
+        budgeted = frontier.join(F.broadcast(st.new_state), "host_id")
         # single_phase from the ARITHMETIC frontier row count: the
         # optimizer's estimate of a frontier-x-broadcast join is a
         # cardinality product (junk), so topk's own size gate never
@@ -698,7 +783,7 @@ class CrawlEngine:
         # init/resume pays one parquet-metadata count
         if self._frontier_rows is None:
             self._frontier_rows = frontier.count()
-        single_phase_sel = self._frontier_rows <= 2_000_000
+        st.single_phase = self._frontier_rows <= 2_000_000
         # fetch-stage parallelism, derived from the round's expected
         # fetch volume (~2k rows/task), capped at ONE task per core:
         # each Python-stage task pays a measured ~140ms runner-init
@@ -709,8 +794,8 @@ class CrawlEngine:
         # a bigger cluster.
         cores = self.spark.sparkContext.defaultParallelism
         expected = min(self._frontier_rows, self.cap * self.n_hosts)
-        par = max(1, min(cores, -(-expected // 2048)))
-        if single_phase_sel and self.fetch_stage is None:
+        st.par = max(1, min(cores, -(-expected // 2048)))
+        if st.single_phase and self.fetch_stage is None:
             # pre-key the selection exchange at the fetch stage's own
             # partitioning: the single-phase window reuses it (same
             # host_id clustering), and the fused fetch UDF then runs
@@ -718,106 +803,95 @@ class CrawlEngine:
             # repartition, one exchange fewer per round.  Balance:
             # a host's selected rows are capped at `cap`, so host
             # keying bounds any task at cap x (hosts/par) rows.
-            budgeted = budgeted.repartition(par, "host_id")
-        candidates = topk_per_group(
+            budgeted = budgeted.repartition(st.par, "host_id")
+        st.candidates = topk_per_group(
             budgeted,
             group_cols=["host_id"],
             order_cols=[F.col("priority"), F.col("seq")],
             k=F.col("tokens"),
             salt_buckets=self.salt_buckets,
             prune_k=self.cap,
-            single_phase=single_phase_sel,
+            single_phase=st.single_phase,
         ).drop("tokens")
-
-        # 2b. robots-before-first-fetch (production path only; round-3
-        #     ADVICE, medium): RFC 9309 requires consulting robots.txt
-        #     BEFORE crawling, but rules are normally fetched at link-
-        #     discovery time — so a host's very first contact (round-1
-        #     seeds, typically) would otherwise be fetched blind.
-        #     Hosts in the batch with no cached robots row get their
-        #     robots.txt fetched NOW; only THEIR candidate rows pay the
-        #     cogrouped vet (hosts with a cached row were vetted when
-        #     their URLs were discovered); denied rows are excluded
-        #     from the fetch AND removed from the frontier (they can
-        #     never legally be fetched).  In steady state every host
-        #     has a cached row, so this is an empty anti-join.
-        robots_prev = self._read("robots", r)
-        prefetch_rules = None
-        denied = None
-        round_caches: list = []
+        st.robots_prev = self._read("robots", st.r)
         if self.robots_stage is not None:
-            # the candidate batch (bounded by the round budget) gets
-            # FOUR consumers in this path — miss-host detection, the
-            # vet split, the fetch stage, and the denied-keys anti-join
-            # in the frontier write — so one bounded persist stops the
-            # top-k selection from recomputing per consumer
-            candidates = candidates.persist()
-            round_caches.append(candidates)
-            miss_sites = (
-                candidates.groupBy("host_id")
-                .agg(F.min("url").alias("url"))
-                .join(robots_prev.select("host_id"), "host_id", "left_anti")
-                .persist()
-            )
-            round_caches.append(miss_sites)
-            prefetch_obs = Observation()
-            prefetch_rules = (
-                self._robots_fetch(miss_sites, robots_prev)
-                .observe(
-                    prefetch_obs, F.count(F.lit(1)).alias("n_prefetch")
-                )
-                .persist()
-            )
-            round_caches.append(prefetch_rules)
-            miss_hosts = F.broadcast(miss_sites.select("host_id"))
-            unknown = candidates.join(miss_hosts, "host_id", "left_semi")
-            vetted = (
-                robots_filter_stage(
-                    self._with_path(unknown), prefetch_rules
-                )
-                .drop("path")
-                .persist()
-            )
-            round_caches.append(vetted)
-            candidates = candidates.join(
-                miss_hosts, "host_id", "left_anti"
-            ).unionByName(vetted)
-            denied = unknown.join(
-                vetted.select("url_hash"), "url_hash", "left_anti"
-            ).select("url_hash")
+            self._robots_prevet(st)
 
-        # 3. fetch + single-parse extraction (spans, links, title).
-        # The Python stage needs explicit ROW-based partitioning (AQE
-        # sizes by bytes; fetch/parse cost is per row and the UDF's
-        # output is ~10x its input).  `par` was derived before the
-        # selection; on the single-phase path the selection exchange
-        # already established it, so the fused UDF rides the window's
-        # stage with no further repartition.
-        has_err = False
+    def _robots_prevet(self, st: _Round) -> None:
+        """Robots-before-first-fetch (production path only; round-3
+        ADVICE, medium): RFC 9309 requires consulting robots.txt
+        BEFORE crawling, but rules are normally fetched at link-
+        discovery time — so a host's very first contact (round-1
+        seeds, typically) would otherwise be fetched blind.  Hosts in
+        the batch with no cached robots row get their robots.txt
+        fetched NOW; only THEIR candidate rows pay the cogrouped vet
+        (hosts with a cached row were vetted when their URLs were
+        discovered); denied rows are excluded from the fetch AND
+        removed from the frontier (they can never legally be fetched).
+        In steady state every host has a cached row, so this is an
+        empty anti-join."""
+        # the candidate batch (bounded by the round budget) gets FOUR
+        # consumers in this path — miss-host detection, the vet split,
+        # the fetch stage, and the denied-keys anti-join in the
+        # frontier write — so one bounded persist stops the top-k
+        # selection from recomputing per consumer
+        candidates = st.cache(st.candidates)
+        st.miss_sites = st.cache(
+            candidates.groupBy("host_id")
+            .agg(F.min("url").alias("url"))
+            .join(st.robots_prev.select("host_id"), "host_id", "left_anti")
+        )
+        prefetch, st.prefetch_obs = _with_count(
+            self._robots_fetch(st.miss_sites, st.robots_prev), "n_prefetch"
+        )
+        st.prefetch_rules = st.cache(prefetch)
+        miss_hosts = F.broadcast(st.miss_sites.select("host_id"))
+        unknown = candidates.join(miss_hosts, "host_id", "left_semi")
+        vetted = st.cache(
+            robots_filter_stage(
+                self._with_path(unknown), st.prefetch_rules
+            ).drop("path")
+        )
+        st.candidates = candidates.join(
+            miss_hosts, "host_id", "left_anti"
+        ).unionByName(vetted)
+        st.denied = unknown.join(
+            vetted.select("url_hash"), "url_hash", "left_anti"
+        ).select("url_hash")
+
+    def _fetch_extract(self, st: _Round) -> None:
+        """Fetch + single-parse extraction (spans, links, title), and
+        the one job that materializes it with per-partition lineage
+        and error counts.
+
+        The Python stage needs explicit ROW-based partitioning (AQE
+        sizes by bytes; fetch/parse cost is per row and the UDF's
+        output is ~10x its input).  ``par`` was derived before the
+        selection; on the single-phase path the selection exchange
+        already established it, so the fused UDF rides the window's
+        stage with no further repartition.
+
+        Failed fetches (non-null ``fetch_error``) are NOT fetched:
+        excluded from docs/fetch_log/seen and host tokens unspent — but
+        their url_hashes are kept as DATA (not just a count) so the
+        frontier update can bump each row's retry counter and drop
+        rows past max_fetch_retries instead of re-selecting a
+        permanently failing URL every round (round-2 ADVICE, high).
+        The HTTP status rides along when the fetch stage provides one:
+        4xx rows ARE fetched (leave the frontier, spend a token, logged
+        with their status) but their bodies are CONTENT-FILTERED out of
+        the docs corpus and link discovery — a custom 404 page is
+        neither training data nor a link source."""
+        candidates = st.candidates
         if self.fetch_stage is not None:
             # no pre-repartition: a grouped fetch stage (http_fetch_
             # stage's applyInPandas) shuffles by host itself — a prior
             # (host, url) exchange would just be shuffled again
             with_html = self.fetch_stage(candidates)
-            has_err = "fetch_error" in with_html.columns
-        else:
-            with_html = None
-        # failed fetches are NOT fetched: excluded from docs/fetch_log/
-        # seen and host tokens unspent — but their url_hashes are kept
-        # as DATA (not just a count) so the frontier update below can
-        # bump each row's retry counter and drop rows past
-        # max_fetch_retries instead of re-selecting a permanently
-        # failing URL every round (round-2 ADVICE, high).  The HTTP
-        # status rides along when the fetch stage provides one: 4xx
-        # rows ARE fetched (leave the frontier, spend a token, logged
-        # with their status) but their bodies are CONTENT-FILTERED out
-        # of the docs corpus and link discovery — a custom 404 page is
-        # neither training data nor a link source
-        if with_html is not None:
-            has_status = "status" in with_html.columns
-            keep_cols = list(candidates.columns) + (
-                ["status"] if has_status else []
-            ) + (["fetch_error"] if has_err else [])
+            st.has_err = "fetch_error" in with_html.columns
+            keep_cols = list(candidates.columns) + [
+                c for c in ("status", "fetch_error") if c in with_html.columns
+            ]
             extracted = with_html.withColumn(
                 "ex", crawl_extract_udf()(F.col("url"), F.col("html"))
             )
@@ -828,10 +902,9 @@ class CrawlEngine:
             # back to the JVM (two chained pandas UDFs would ship each
             # body JVM->Python->JVM->Python; see fused_fetch_extract_
             # udf's docstring and the A/B in BASELINE.md r5)
-            has_status = False
             keep_cols = list(candidates.columns)
             n_hosts = self.n_hosts
-            if single_phase_sel:
+            if st.single_phase:
                 # the selection exchange was pre-keyed at (par,
                 # host_id) and the single-phase window reused it, so
                 # the candidate batch is already row-balanced on `par`
@@ -839,21 +912,21 @@ class CrawlEngine:
                 # stage, no second exchange
                 spread = candidates
             else:
-                spread = candidates.repartition(par, "host_id", "url_hash")
+                spread = candidates.repartition(st.par, "host_id", "url_hash")
             extracted = spread.withColumn(
                 "ex",
                 fused_fetch_extract_udf(
                     lambda u: html_for_url(u, n_hosts)
                 )(F.col("url")),
             )
-        fetched_all = extracted.select(*keep_cols, "ex").persist()
-        err = (
-            F.col("fetch_error").isNotNull() if has_err else F.lit(False)
+        fetched_all = st.fetched_all = st.cache(
+            extracted.select(*keep_cols, "ex")
         )
+        err = F.col("fetch_error").isNotNull() if st.has_err else F.lit(False)
         # one job: materialize fetch+extract AND collect per-partition
         # lineage + error counts; n_fetched derives from the lineage
         self.spark.sparkContext.setJobDescription(
-            f"fetch+extract stats r{r}"
+            f"fetch+extract stats r{st.r}"
         )
         stats = (
             fetched_all.groupBy(F.spark_partition_id().alias("pid"))
@@ -864,87 +937,73 @@ class CrawlEngine:
             .collect()
         )
         self.spark.sparkContext.setJobDescription(None)
-        lineage = [
+        st.lineage = [
             {"partition": row["pid"], "rows": row["rows"]} for row in stats
         ]
-        n_fetched = sum(row["rows"] for row in stats)
-        n_errors = sum(row["errs"] for row in stats)
-        fetched = (
+        st.n_fetched = sum(row["rows"] for row in stats)
+        st.n_errors = sum(row["errs"] for row in stats)
+        st.fetched = (
             fetched_all.filter(~err).drop("fetch_error")
-            if has_err
+            if st.has_err
             else fetched_all
         )
         # 2xx (or statusless synthetic) rows are corpus+discovery
         # content; non-2xx rows stay in fetched (seen/log/tokens) only
-        if has_status:
-            content = fetched.filter(
+        if "status" in st.fetched.columns:
+            st.content = st.fetched.filter(
                 F.col("status").isNull()
                 | ((F.col("status") >= 200) & (F.col("status") < 300))
             )
         else:
-            content = fetched
-        _mark("fetch_extract")
-        # a zero-fetch round still COMMITS when the robots pre-vet
-        # denied candidates: those rows must leave the frontier, or the
-        # same denied batch would be re-selected forever
-        if n_fetched == 0 and (
-            denied is None or denied.limit(1).count() == 0
-        ):
-            new_state.unpersist()
-            fetched_all.unpersist()
-            for cached in round_caches:
-                cached.unpersist()
-            # 'frontier exhausted' and 'every fetch failed this round'
-            # are different conditions (round-2 ADVICE, medium): a
-            # clean empty round ends the crawl; an all-error round is
-            # retried (tokens refill, rows kept) up to
-            # max_fetch_retries consecutive times, then the crawl
-            # stops rather than spinning on a dead network
-            if n_errors > 0:
-                self._consec_all_error_rounds += 1
-            stopped = (
-                n_errors == 0
-                or self._consec_all_error_rounds >= self.max_fetch_retries
-            )
-            return {
-                "round": r + 1,
-                "fetched": 0,
-                "stopped": stopped,
-                "fetch_errors": n_errors,
-                # nothing was written and self.round did not advance: a
-                # retried outage round must not collide with the later
-                # committed round of the same number in metrics streams
-                "committed": False,
-            }
-        self._consec_all_error_rounds = 0
+            st.content = st.fetched
 
-        # 4. link discovery -> canonical candidate URLs.  Robots rules
-        #    come from the per-host cache table: rules are fetched only
-        #    for hosts seen for the first time (cache misses are a
-        #    per-round metric), plus — production path — bounded
-        #    re-fetches of unreachable hosts whose cached DISALLOW_ALL
-        #    sentinel must not stick forever (round-3 ADVICE; RFC 9309
-        #    scopes complete-disallow to while the file is
-        #    unreachable).
+    def _uncommitted(self, st: _Round) -> dict:
+        """Result of a round that fetched nothing and commits nothing.
+
+        'frontier exhausted' and 'every fetch failed this round' are
+        different conditions (round-2 ADVICE, medium): a clean empty
+        round ends the crawl; an all-error round is retried (tokens
+        refill, rows kept) up to max_fetch_retries consecutive times,
+        then the crawl stops rather than spinning on a dead network."""
+        if st.n_errors > 0:
+            self._consec_all_error_rounds += 1
+        stopped = (
+            st.n_errors == 0
+            or self._consec_all_error_rounds >= self.max_fetch_retries
+        )
+        return {
+            "round": st.r + 1,
+            "fetched": 0,
+            "stopped": stopped,
+            "fetch_errors": st.n_errors,
+            # nothing was written and self.round did not advance: a
+            # retried outage round must not collide with the later
+            # committed round of the same number in metrics streams
+            "committed": False,
+        }
+
+    def _discover_dedup(self, st: _Round) -> None:
+        """Link discovery -> canonical URLs -> the genuinely-new set
+        (bloom prefilter + in-bucket hash dedup + exact anti-join
+        against seen)."""
+        # 4. link discovery -> canonical candidate URLs.
         # NOT persisted: at discovery volume re-running the regex pass
         # from the (persisted) fetched content costs less than
         # materializing a cache of every link string (profiled: persist
         # 2.1s vs recompute 1.2s per macro-round), and skipping the
         # cache keeps memory high-water independent of discovery
-        # volume — the scale-safe choice.  Under the narrow probe this
-        # frame has two consumers (hash keys into the bucket cogroup;
-        # the string re-attach) — both recompute from cached content.
+        # volume — the scale-safe choice.
         candidates_raw = (
-            content.select(F.explode("ex.links").alias("raw_url"))
+            st.content.select(F.explode("ex.links").alias("raw_url"))
             .select(canonicalize_url(F.col("raw_url")).alias("url"))
             .withColumn("host_id", host_id_col(F.col("url")))
             .filter(F.col("host_id").isNotNull())
         )
-        if prefetch_rules is not None:
+        if st.prefetch_rules is not None:
             # rules fetched by the pre-vet join the cache view for the
             # rest of the round (and its write) — never re-fetched at
             # discovery time
-            robots_prev = robots_prev.unionByName(prefetch_rules)
+            st.robots_prev = st.robots_prev.unionByName(st.prefetch_rules)
 
         # 5. seen-set dedup FIRST: the in-bucket hash dedup rides the
         #    bloom cogroup's url_hash-derived exchange (one exchange
@@ -952,72 +1011,71 @@ class CrawlEngine:
         #    dropDuplicates shuffle — round-3 verdict's top lever), and
         #    the exact anti-join sees only bloom suspects.  Only
         #    (url, host_id, url_hash) travels through the exchange.
-        seen = self._seen_union(r)
-        blooms = self._read("bloom", r) if self.use_bloom else None
-        bloom_caches: list = []
+        st.seen = self._seen_union(st.r)
+        st.blooms = self._read("bloom", st.r) if self.use_bloom else None
         discovered = candidates_raw.select(
             "url", "host_id", url_hash(F.col("url")).alias("url_hash")
         )
         # persisted: the genuinely-new set (post-dedup, post-anti-join
         # — orders of magnitude smaller than raw discovery) feeds both
         # the new-host robots lookup and the robots vet below
-        new_keys = new_urls(
-            discovered,
-            seen,
-            blooms,
-            n_buckets=self.bloom_buckets,
-            persisted_out=bloom_caches,
-            dedup=True,
-            # hash-only Arrow exchange; strings re-attached against the
-            # post-anti-join new set (bounded per round by the
-            # discovery volume, whose hash set broadcasts at 8 B/row)
-            narrow=self.narrow_probe,
-            broadcast_new=8 * self.cap * self.n_hosts <= 4_000_000,
-            max_rows_per_bucket=4 * self.bloom_target_rows_per_bucket,
-        ).persist()
-        bloom_caches.append(new_keys)
-        # robots rules: fetched once per host with a genuinely-new URL
-        # this round (cache misses ride the robots write as an
-        # Observation), plus — production path — bounded re-fetches of
-        # unreachable hosts.  Hosts whose every discovered link is
-        # already seen need no rules: nothing of theirs can enter the
-        # frontier this round, and the pre-vet covers first contact.
+        st.new_keys = st.cache(
+            new_urls(
+                discovered,
+                st.seen,
+                st.blooms,
+                n_buckets=self.bloom_buckets,
+                persisted_out=st.caches,
+                dedup=True,
+                max_rows_per_bucket=4 * self.bloom_target_rows_per_bucket,
+            )
+        )
+
+    def _robots(self, st: _Round) -> None:
+        """The round's robots cache table: rules are fetched only for
+        hosts seen for the first time (cache misses ride the robots
+        write as an Observation), plus — production path — bounded
+        re-fetches of unreachable hosts whose cached DISALLOW_ALL
+        sentinel must not stick forever (round-3 ADVICE; RFC 9309
+        scopes complete-disallow to while the file is unreachable).
+        Hosts whose every discovered link is already seen need no
+        rules: nothing of theirs can enter the frontier this round,
+        and the pre-vet covers first contact."""
+        robots_prev = st.robots_prev
         if self.robots_stage is not None:
             new_sites = (
-                new_keys.groupBy("host_id")
+                st.new_keys.groupBy("host_id")
                 .agg(F.min("url").alias("url"))
                 .join(robots_prev.select("host_id"), "host_id", "left_anti")
             )
+            # a host the pre-vet just fetched is not retried again
+            # within the same round
             retry_sites = robots_prev.filter(
                 (F.col("fetch_fails") > 0)
                 & (F.col("fetch_fails") <= F.lit(self.max_fetch_retries))
-            ).select("host_id", "url")
-            if prefetch_rules is not None:
-                # a host the pre-vet just fetched is not retried again
-                # within the same round
-                retry_sites = retry_sites.join(
-                    miss_sites.select("host_id"), "host_id", "left_anti"
-                )
+            ).select("host_id", "url").join(
+                st.miss_sites.select("host_id"), "host_id", "left_anti"
+            )
             sites = new_sites.unionByName(retry_sites)
-            new_rules = self._robots_fetch(sites, robots_prev).persist()
+            new_rules = st.cache(self._robots_fetch(sites, robots_prev))
             robots_kept = robots_prev.join(
                 retry_sites.select("host_id"), "host_id", "left_anti"
             )
         else:
             new_hosts = (
-                new_keys.select("host_id")
+                st.new_keys.select("host_id")
                 .distinct()
                 .join(robots_prev.select("host_id"), "host_id", "left_anti")
             )
-            new_rules = fetch_robots_rules(new_hosts).persist()
+            new_rules = st.cache(fetch_robots_rules(new_hosts))
             robots_kept = robots_prev
-        robots_obs = Observation()
-        robots = robots_kept.unionByName(
-            new_rules.observe(
-                robots_obs, F.count(F.lit(1)).alias("n_new_rules")
-            )
-        )
-        _mark("robots")
+        new_rules, st.robots_obs = _with_count(new_rules, "n_new_rules")
+        st.robots = robots_kept.unionByName(new_rules)
+
+    def _next_frontier(self, st: _Round) -> None:
+        """Robots-vet the new set into ``fresh``, then the next
+        frontier (pending - fetched - robots-denied + fresh) and the
+        post-spend token balances."""
         # robots vetting AFTER the set-difference: per-URL allow/deny
         # commutes with dedup and anti-join, so it vets the (much
         # smaller) genuinely-new set instead of the full discovery
@@ -1026,32 +1084,32 @@ class CrawlEngine:
         # frontier/bloom — exactly as when the filter ran first.
         if self.robots_stage is not None:
             allowed = robots_filter_stage(
-                self._with_path(new_keys), robots
+                self._with_path(st.new_keys), st.robots
             ).drop("path")
         else:
             allowed = (
-                new_keys.join(F.broadcast(robots), "host_id")
+                st.new_keys.join(F.broadcast(st.robots), "host_id")
                 .filter(
                     page_id_col(F.col("url")) % F.col("disallow_mod")
                     != F.col("disallow_rem")
                 )
                 .drop("disallow_mod", "disallow_rem")
             )
-        fresh = allowed.select(
-            "url",
-            "host_id",
-            F.lit(r + 1).alias("priority"),
-            seq_col(F.col("url")).alias("seq"),
-            "url_hash",
-            F.lit(0).alias("fails"),
-        ).persist()
+        fresh = st.fresh = st.cache(
+            allowed.select(
+                "url",
+                "host_id",
+                F.lit(st.r + 1).alias("priority"),
+                seq_col(F.col("url")).alias("seq"),
+                "url_hash",
+                F.lit(0).alias("fails"),
+            )
+        )
         # the new-URL count rides the seen write as an Observation
         # instead of paying a separate count job; fresh stays persisted
         # because three sinks consume it (seen, frontier, bloom)
-        n_new_obs = Observation()
-        seen_delta = fresh.observe(
-            n_new_obs, F.count(F.lit(1)).alias("n_new")
-        ).select("url", "url_hash")
+        observed, st.n_new_obs = _with_count(fresh, "n_new")
+        st.seen_delta = observed.select("url", "url_hash")
 
         # 6. next frontier = pending - fetched - robots-denied + fresh.
         #    The removal set is bounded by the round budget (cap x
@@ -1059,26 +1117,23 @@ class CrawlEngine:
         #    subsets of the candidate batch): broadcast only while that
         #    bound is small, else a plain anti-join (frontier_anti_join)
         round_budget = self.cap * self.n_hosts
-        removal_keys = fetched.select("url_hash")
-        denied_obs = None
-        if denied is not None:
-            denied_obs = Observation()
-            removal_keys = removal_keys.unionByName(
-                denied.observe(
-                    denied_obs, F.count(F.lit(1)).alias("n_denied")
-                )
-            )
+        removal_keys = st.fetched.select("url_hash")
+        if st.denied is not None:
+            denied, st.denied_obs = _with_count(st.denied, "n_denied")
+            removal_keys = removal_keys.unionByName(denied)
         kept = frontier_anti_join(
-            frontier,
+            st.frontier,
             removal_keys,
             round_budget,
             self.broadcast_fetched_max,
         )
-        if has_err and n_errors > 0:
+        if st.has_err and st.n_errors > 0:
             # errored rows stay, with a bumped retry counter; rows past
             # the retry budget are dropped so a permanently failing URL
             # cannot occupy its host's top-k selection forever
-            err_keys = fetched_all.filter(err).select(
+            err_keys = st.fetched_all.filter(
+                F.col("fetch_error").isNotNull()
+            ).select(
                 "url_hash", F.lit(1).alias("_errored")
             )
             if round_budget <= self.broadcast_fetched_max:
@@ -1094,70 +1149,69 @@ class CrawlEngine:
                 .drop("_errored")
                 .filter(F.col("fails") <= F.lit(self.max_fetch_retries))
             )
-        next_frontier = kept.unionByName(fresh)
+            # retry-capped drops make the arithmetic row tracker drift;
+            # an Observation on the kept branch rides the frontier
+            # write and restores the exact count
+            kept, st.kept_obs = _with_count(kept, "n_kept")
+        st.next_frontier = kept.unionByName(fresh)
 
         # 7. spend tokens
-        spent = fetched.groupBy("host_id").agg(F.count("*").alias("used"))
-        host_state_next = new_state.join(spent, "host_id", "left").select(
+        spent = st.fetched.groupBy("host_id").agg(F.count("*").alias("used"))
+        st.host_state_next = st.new_state.join(spent, "host_id", "left").select(
             "host_id",
             (F.col("tokens") - F.coalesce(F.col("used"), F.lit(0)))
             .cast("int")
             .alias("tokens"),
         )
 
-        # 8. commit the round's snapshots.  The seven tables are
-        #    independent and their expensive inputs (fetched, fresh,
-        #    new_rules) are persisted+materialized before their
-        #    consumers race, so the writes are submitted CONCURRENTLY
-        #    from driver threads — Spark schedules them as parallel
-        #    jobs, collapsing commit latency from the sum of seven
-        #    jobs to roughly the slowest one.  (On a cluster this is
-        #    the standard multi-sink pattern; atomicity stays at round
-        #    granularity because the manifest is written only after
-        #    every future completes.)  Tables whose inputs were ALL
-        #    materialized by the stats job (docs, fetch_log,
-        #    host_state read only fetched_all/new_state cache) start
-        #    EARLY, overlapping the seen write's discovery pipeline;
-        #    tables consuming `fresh`/`new_keys` (frontier, bloom,
-        #    robots) wait for the seen write to populate those caches
-        #    — racing them cold would recompute the dedup plan per
-        #    consumer (caches are per-executor on a real cluster).
-        nxt = r + 1
+    def _commit(self, st: _Round) -> None:
+        """Commit the round's snapshots; marks ``seen_dedup`` after the
+        seen write and ``commit`` at the end.
+
+        The seven tables are independent and their expensive inputs
+        (fetched, fresh, new_rules) are persisted+materialized before
+        their consumers race, so the writes are submitted CONCURRENTLY
+        from driver threads — Spark schedules them as parallel jobs,
+        collapsing commit latency from the sum of seven jobs to
+        roughly the slowest one.  (On a cluster this is the standard
+        multi-sink pattern; atomicity stays at round granularity
+        because the manifest is written only after every write
+        completes.)  Tables whose inputs were ALL materialized by the
+        stats job (docs, fetch_log, host_state read only
+        fetched_all/new_state cache) start EARLY, overlapping the seen
+        write's discovery pipeline; tables consuming `fresh`/`new_keys`
+        (frontier, bloom, robots) wait for the seen write to populate
+        those caches — racing them cold would recompute the dedup plan
+        per consumer (caches are per-executor on a real cluster)."""
+        nxt = st.r + 1
         early_writes = []
         if self.write_docs:
-            early_writes.append(
-                (
-                    _coalesce_for_write(
-                        content.select(
-                            "url",
-                            F.lit(nxt).alias("round"),
-                            F.col("ex.title").alias("title"),
-                            F.col("ex.spans").alias("spans"),
-                        ),
-                        n_fetched,
-                        # docs rows are wide (span arrays): smaller
-                        # files keep the parquet ENCODE parallel — at
-                        # bench scale ~8 writer tasks, not 1-2
-                        rows_per_file=8_192,
-                    ),
-                    "docs",
-                )
+            docs = st.content.select(
+                "url",
+                F.lit(nxt).alias("round"),
+                F.col("ex.title").alias("title"),
+                F.col("ex.spans").alias("spans"),
             )
+            # docs rows are wide (span arrays): smaller files keep the
+            # parquet ENCODE parallel — at bench scale ~8 writer tasks,
+            # not 1-2
+            early_writes.append((
+                _coalesce_for_write(docs, st.n_fetched, rows_per_file=8_192),
+                "docs",
+            ))
         log_cols = [
-            F.lit(r).alias("round"),
+            F.lit(st.r).alias("round"),
             F.col("priority"),
             F.col("seq"),
             F.col("url"),
             F.col("host_id"),
             F.size("ex.links").alias("n_links"),
         ]
-        if has_status:  # 4xx/5xx visibility in the log (ADVICE r2)
+        if "status" in st.fetched.columns:  # 4xx/5xx in the log (ADVICE r2)
             log_cols.append(F.col("status"))
         early_writes.append(
-            (
-                _coalesce_for_write(fetched.select(*log_cols), n_fetched),
-                "fetch_log",
-            )
+            (_coalesce_for_write(st.fetched.select(*log_cols), st.n_fetched),
+             "fetch_log")
         )
         last_full = max(self._seen_full_rounds())
         compacted = nxt - last_full >= self.compact_every
@@ -1167,149 +1221,62 @@ class CrawlEngine:
             # chain — file count and scan cost per round — is bounded
             # for arbitrarily long crawls
             wpar = self.spark.sparkContext.defaultParallelism
-            full = seen.select("url", "url_hash").unionByName(seen_delta)
+            full = st.seen.select("url", "url_hash").unionByName(st.seen_delta)
             seen_write = (full.repartition(wpar, "url_hash"), "seen")
         else:
             # delta volume is bounded by the round's discovery
             # amplification (~8 links/page)
             seen_write = (
-                _coalesce_for_write(seen_delta, n_fetched * 8), "seen"
+                _coalesce_for_write(st.seen_delta, st.n_fetched * 8), "seen"
             )
-        # the seen write pulls `fresh` through its persist (and fires
-        # the n_new observation) on the MAIN thread while the early
-        # cache-only writes run beside it; frontier/bloom/robots are
-        # submitted only after it returns (see the step-8 note above)
-        pool = ThreadPoolExecutor(max_workers=8)
-        futures = [
-            pool.submit(self._write, df, table, nxt)
-            for df, table in early_writes
-        ]
-        futures.append(
-            pool.submit(
-                self._write_per_host, host_state_next, "host_state", nxt
-            )
-        )
-        self._write(*seen_write, nxt)
-        # the seen write carries the whole discovery+dedup pipeline
-        # (explode -> canonicalize -> robots filter -> bloom/anti-join),
-        # so it gets its own section: 'commit' below is pure snapshot-
-        # write cost, comparable round-to-round
-        _mark("seen_dedup")
-        # the n_new observation fired with the seen write above; the
-        # tracked seen count sizes the compaction bloom rebuild below
-        n_new = _obs_count(n_new_obs, "n_new")
-        self._seen_rows += n_new
-        kept_obs = None
-        frontier_df = next_frontier
-        if has_err and n_errors > 0:
-            # retry-capped drops make the arithmetic row tracker drift;
-            # an Observation on the kept branch rides the frontier
-            # write and restores the exact count
-            kept_obs = Observation()
-            frontier_df = kept.observe(
-                kept_obs, F.count(F.lit(1)).alias("n_kept")
-            ).unionByName(fresh)
-        late_writes = [
-            (
-                _coalesce_for_write(
-                    frontier_df, self._frontier_rows + 8 * n_fetched
-                ),
-                "frontier",
-            )
-        ]
-        if self.use_bloom:
-            # bucket-count growth: when the seen set has outgrown what
-            # the current count can hold at <= bloom_max_bucket_bytes
-            # per bucket, double buckets until it fits — safe only
-            # here, because the rebuild below writes fresh bitmaps
-            # keyed by the new count and the manifest config updates
-            # in the same commit (probe bucketing must always match
-            # the on-disk build bucketing; see resume()).
-            want_buckets = self.bloom_buckets
-            while (
-                bloom_bits_for(
-                    4 * self._seen_rows, want_buckets,
-                    self.bloom_bits_per_key,
-                )
-                > 8 * self.bloom_max_bucket_bytes
-            ):
-                want_buckets <<= 1
-            want_bits = bloom_bits_for(
-                4 * self._seen_rows, want_buckets,
-                self.bloom_bits_per_key,
-            )
-            # upward-only (at unchanged bucket count): the seen set
-            # never shrinks, so a smaller want_bits can only mean lost
-            # tracking (e.g. a resumed pre-sizing manifest) — keep the
-            # larger on-disk geometry.  A bucket-count change always
-            # rebuilds (per-bucket bits legitimately shrink then).
-            if want_buckets > self.bloom_buckets or want_bits > self._bloom_bits:
-                # RESIZE + rebuild: without this a fixed bitmap
-                # saturates as the crawl grows (at 4M seen keys the
-                # old fixed 2^17 bits ran ~1 bit/key, FP~100%, and the
-                # bloom bypassed nothing — the whole discovery volume
-                # rode the exact anti-join it exists to bypass).  The
-                # rebuild scans the full seen set: the just-rewritten
-                # compacted snapshot when this round compacted, else
-                # the bounded snapshot+delta union.  The x4 sizing
-                # headroom means this fires only when the seen set has
-                # QUADRUPLED past the last sizing — O(log growth)
-                # rebuilds over a whole crawl, each one seen-scan.
-                self._bloom_bits = want_bits
-                rebuild_src = (
-                    self._read("seen", nxt)
-                    if compacted
-                    else self._seen_union(nxt)
-                )
-                bloom_df = build_bloom(
-                    rebuild_src,
-                    n_buckets=want_buckets,
-                    bits_per_bucket=self._bloom_bits,
-                )
-            else:
-                # incremental: OR this round's new hashes into the
-                # previous bitmaps partition-locally — never rescans
-                # seen history (existing bitmaps keep their stored
-                # geometry; the param only sizes brand-new buckets)
-                bloom_df = update_bloom(
-                    blooms, fresh.select("url_hash"),
-                    n_buckets=self.bloom_buckets,
-                    bits_per_bucket=self._bloom_bits,
-                )
-            # bitmap rows are ~bits/8 bytes each; pack ~64 MB per file
-            # at whatever geometry the bitmaps currently have
-            late_writes.append(
-                (
-                    _coalesce_for_write(
-                        bloom_df,
-                        want_buckets,
-                        rows_per_file=max(
-                            1, (64 << 20) // max(1, self._bloom_bits // 8)
-                        ),
-                    ),
-                    "bloom",
+        want_buckets = self.bloom_buckets
+        # the pool spans every submission and the result loop, so an
+        # exception anywhere (the main-thread seen write included)
+        # still waits for the writes already in flight
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            futures = [
+                pool.submit(self._write, df, table, nxt)
+                for df, table in early_writes
+            ]
+            futures.append(
+                pool.submit(
+                    self._write_per_host, st.host_state_next, "host_state",
+                    nxt,
                 )
             )
-        # robots is per-host (write_small fast path) but consumes
-        # new_rules -> new_keys, so it belongs to the late batch
-        futures += [
-            pool.submit(self._write, df, table, nxt)
-            for df, table in late_writes
-        ]
-        futures.append(
-            pool.submit(self._write_per_host, robots, "robots", nxt)
-        )
-        try:
+            # the seen write pulls `fresh` through its persist (and
+            # fires the n_new observation) on the MAIN thread while the
+            # early cache-only writes run beside it
+            self._write(*seen_write, nxt)
+            st.mark("seen_dedup")
+            # the tracked seen count sizes the bloom rebuild below
+            st.n_new = _obs_count(st.n_new_obs, "n_new")
+            self._seen_rows += st.n_new
+            frontier_est = self._frontier_rows + 8 * st.n_fetched
+            late_writes = [
+                (_coalesce_for_write(st.next_frontier, frontier_est),
+                 "frontier")
+            ]
+            if self.use_bloom:
+                bloom_df, want_buckets = self._next_bloom(st, compacted)
+                late_writes.append((bloom_df, "bloom"))
+            futures += [
+                pool.submit(self._write, df, table, nxt)
+                for df, table in late_writes
+            ]
+            # robots is per-host (write_small fast path) but consumes
+            # new_rules -> new_keys, so it belongs to the late batch
+            futures.append(
+                pool.submit(self._write_per_host, st.robots, "robots", nxt)
+            )
             for fut in futures:
                 fut.result()
-        finally:
-            pool.shutdown()
         if compacted:
             # record the full snapshot only AFTER its write succeeded —
             # marking it earlier would let a failed-then-retried round
             # treat a mere delta as the entire seen set
             self.manifest.setdefault("seen_full_rounds", [0]).append(nxt)
-        if self.use_bloom and want_buckets != self.bloom_buckets:
+        if want_buckets != self.bloom_buckets:
             # switch the engine to the grown bucket count only AFTER
             # the rebuilt bitmaps landed: probe bucketing must always
             # match the latest COMMITTED build (a failed write must
@@ -1317,41 +1284,109 @@ class CrawlEngine:
             # via resume — the manifest below commits both together)
             self.bloom_buckets = want_buckets
             self.manifest["config"]["bloom_buckets"] = want_buckets
-        n_denied = (
-            _obs_count(denied_obs, "n_denied") if denied_obs is not None else 0
-        )
-        if kept_obs is not None:
-            self._frontier_rows = _obs_count(kept_obs, "n_kept") + n_new
+        if st.denied_obs is not None:
+            st.n_denied = _obs_count(st.denied_obs, "n_denied")
+        if st.kept_obs is not None:
+            self._frontier_rows = _obs_count(st.kept_obs, "n_kept") + st.n_new
         else:
             self._frontier_rows = (
-                self._frontier_rows - n_fetched - n_denied + n_new
+                self._frontier_rows - st.n_fetched - st.n_denied + st.n_new
             )
-        for cached in bloom_caches:
-            cached.unpersist()
-        for cached in round_caches:
-            cached.unpersist()
-        new_rules.unpersist()
-        new_state.unpersist()
-        fetched_all.unpersist()
-        fresh.unpersist()
-        _mark("commit")
+        st.release()
+        st.mark("commit")
 
-        cache_misses = _obs_count(robots_obs, "n_new_rules")
-        if prefetch_rules is not None:
-            cache_misses += _obs_count(prefetch_obs, "n_prefetch")
+    def _next_bloom(self, st: _Round, compacted: bool):
+        """The next round's bloom bitmaps, ready to write, and their
+        bucket count: rebuilt from the seen set when it outgrew the
+        current sizing, else this round's new hashes OR-ed into the
+        previous ones."""
+        # bucket-count growth: when the seen set has outgrown what
+        # the current count can hold at <= bloom_max_bucket_bytes
+        # per bucket, double buckets until it fits — safe only
+        # here, because the rebuild below writes fresh bitmaps
+        # keyed by the new count and the manifest config updates
+        # in the same commit (probe bucketing must always match
+        # the on-disk build bucketing; see resume()).
+        want_buckets = self.bloom_buckets
+        while (
+            bloom_bits_for(
+                4 * self._seen_rows, want_buckets,
+                self.bloom_bits_per_key,
+            )
+            > 8 * self.bloom_max_bucket_bytes
+        ):
+            want_buckets <<= 1
+        want_bits = bloom_bits_for(
+            4 * self._seen_rows, want_buckets,
+            self.bloom_bits_per_key,
+        )
+        # upward-only (at unchanged bucket count): the seen set
+        # never shrinks, so a smaller want_bits can only mean lost
+        # tracking (e.g. a resumed pre-sizing manifest) — keep the
+        # larger on-disk geometry.  A bucket-count change always
+        # rebuilds (per-bucket bits legitimately shrink then).
+        if want_buckets > self.bloom_buckets or want_bits > self._bloom_bits:
+            # RESIZE + rebuild: without this a fixed bitmap
+            # saturates as the crawl grows (at 4M seen keys the
+            # old fixed 2^17 bits ran ~1 bit/key, FP~100%, and the
+            # bloom bypassed nothing — the whole discovery volume
+            # rode the exact anti-join it exists to bypass).  The
+            # rebuild scans the full seen set: the just-rewritten
+            # compacted snapshot when this round compacted, else
+            # the bounded snapshot+delta union.  The x4 sizing
+            # headroom means this fires only when the seen set has
+            # QUADRUPLED past the last sizing — O(log growth)
+            # rebuilds over a whole crawl, each one seen-scan.
+            self._bloom_bits = want_bits
+            nxt = st.r + 1
+            rebuild_src = (
+                self._read("seen", nxt)
+                if compacted
+                else self._seen_union(nxt)
+            )
+            bloom_df = build_bloom(
+                rebuild_src,
+                n_buckets=want_buckets,
+                bits_per_bucket=self._bloom_bits,
+            )
+        else:
+            # incremental: OR this round's new hashes into the
+            # previous bitmaps partition-locally — never rescans
+            # seen history (existing bitmaps keep their stored
+            # geometry; the param only sizes brand-new buckets)
+            bloom_df = update_bloom(
+                st.blooms, st.fresh.select("url_hash"),
+                n_buckets=self.bloom_buckets,
+                bits_per_bucket=self._bloom_bits,
+            )
+        # bitmap rows are ~bits/8 bytes each; pack ~64 MB per file at
+        # whatever geometry the bitmaps currently have
+        return _coalesce_for_write(
+            bloom_df,
+            want_buckets,
+            rows_per_file=max(1, (64 << 20) // max(1, self._bloom_bits // 8)),
+        ), want_buckets
+
+    def _record(self, st: _Round) -> dict:
+        """The committed round's metrics, appended to the manifest,
+        which is saved last: the round's atomic commit point."""
+        nxt = st.r + 1
+        cache_misses = _obs_count(st.robots_obs, "n_new_rules")
+        if st.prefetch_obs is not None:
+            cache_misses += _obs_count(st.prefetch_obs, "n_prefetch")
         self._host_rows += cache_misses
         metrics = {
             "round": nxt,
-            "fetched": n_fetched,
-            "discovered_new": n_new,
-            "fetch_errors": n_errors,
+            "fetched": st.n_fetched,
+            "discovered_new": st.n_new,
+            "fetch_errors": st.n_errors,
             "robots_cache_misses": cache_misses,
-            "wall_sec": round(time.time() - t0, 3),
-            "sections": sections,
-            "lineage": lineage,
+            "wall_sec": round(time.time() - st.t0, 3),
+            "sections": st.sections,
+            "lineage": st.lineage,
         }
-        if denied_obs is not None:
-            metrics["robots_denied"] = n_denied
+        if st.denied_obs is not None:
+            metrics["robots_denied"] = st.n_denied
         self.manifest["rounds"].append(metrics)
         self.manifest["seen_rows"] = self._seen_rows
         self.manifest["bloom_bits"] = self._bloom_bits

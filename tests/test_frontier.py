@@ -8,6 +8,9 @@
    anti-join is the authority).
 """
 
+import json
+import os
+
 import pytest
 
 from scalpel_ts_spark.plans.frontier import CrawlEngine
@@ -49,6 +52,16 @@ def test_spark_crawl_matches_simulator(spark, tmp_path_factory, sim_state):
     assert _engine_log(eng) == _sim_log(sim_state)
     got_seen = {r.url for r in eng.seen().collect()}
     assert got_seen == sim_state.seen
+    # the round-metrics contract perfbench reads: sections in order,
+    # each measured contiguously from the round's start, and lineage
+    # accounting for every fetched row
+    assert len(eng.manifest["rounds"]) == ROUNDS
+    for m in eng.manifest["rounds"]:
+        secs = m["sections"]
+        assert list(secs) == ["fetch_extract", "robots", "seen_dedup", "commit"]
+        assert all(v >= 0 for v in secs.values())
+        assert sum(secs.values()) <= m["wall_sec"] + 0.01
+        assert sum(p["rows"] for p in m["lineage"]) == m["fetched"]
 
 
 def test_resume_produces_identical_tail(spark, tmp_path_factory, sim_state):
@@ -58,6 +71,14 @@ def test_resume_produces_identical_tail(spark, tmp_path_factory, sim_state):
     )
     eng.init(SEEDS)
     eng.run(2)
+    # a manifest written while the narrow seen probe existed carries
+    # its knob in the config; resume must drop it
+    mpath = os.path.join(wd, "manifest.json")
+    with open(mpath) as f:
+        manifest = json.load(f)
+    manifest["config"]["narrow_probe"] = True
+    with open(mpath, "w") as f:
+        json.dump(manifest, f)
     # simulate a crash: reopen from the manifest and continue
     eng2 = CrawlEngine.resume(spark, wd)
     assert eng2.round == 2
@@ -84,27 +105,57 @@ def test_bloom_prefilter_is_transparent(spark, tmp_path_factory):
     assert {r.url for r in eng.seen().collect()} == sim.seen
 
 
-def test_narrow_probe_matches_simulator(spark, tmp_path_factory, sim_state):
-    # wide is the engine default (measured faster on this box — see
-    # frontier.py narrow_probe rationale); the narrow shape is the
-    # network-shuffle deploy knob and must stay equal to the
-    # executable spec too
-    wd = str(tmp_path_factory.mktemp("crawl_narrow"))
+def test_commit_waits_for_writes_in_flight(spark, tmp_path_factory):
+    # a failing seen write (main thread) must not return while the
+    # concurrent docs/fetch_log/host_state writes are still running,
+    # and must leave the round uncommitted
+    import threading
+    import time
+
+    from scalpel_ts_spark.plans.storage import ParquetSnapshotStorage
+
+    class SlowStorage(ParquetSnapshotStorage):
+        in_flight = 0
+        lock = threading.Lock()
+
+        def _slow(self, write, df, table, rnd):
+            if table == "seen":
+                if rnd == 1:
+                    time.sleep(0.3)  # the early writes are in flight
+                    raise OSError("seen write failed")
+                return write(df, table, rnd)
+            with self.lock:
+                self.in_flight += 1
+            try:
+                time.sleep(1)
+                write(df, table, rnd)
+            finally:
+                with self.lock:
+                    self.in_flight -= 1
+
+        def write(self, df, table, rnd):
+            self._slow(super().write, df, table, rnd)
+
+        def write_small(self, df, table, rnd):
+            self._slow(super().write_small, df, table, rnd)
+
+    wd = str(tmp_path_factory.mktemp("crawl_commitfail"))
+    storage = SlowStorage(spark, wd)
     eng = CrawlEngine(
-        spark, wd, n_hosts=N_HOSTS, cap=8, refill=4,
-        narrow_probe=True, write_docs=False,
+        spark, wd, n_hosts=N_HOSTS, cap=8, refill=4, storage=storage
     )
     eng.init(SEEDS)
-    eng.run(ROUNDS)
-    assert _engine_log(eng) == _sim_log(sim_state)
-    assert {r.url for r in eng.seen().collect()} == sim_state.seen
+    with pytest.raises(OSError, match="seen write failed"):
+        eng.run_round()
+    assert storage.in_flight == 0
+    assert storage.load_manifest()["rounds"] == []
 
 
-def test_probe_variants_match_wide(spark):
-    # hash-only cogroup + string re-attach (both re-attach paths) and
-    # JVM pre-aggregate dedup == the wide fused probe.
-    # Rows are a pure function of url_hash — the engine-wide premise
-    # (equal hash => identical row) the narrow dedup relies on.
+def test_new_urls_dedup_matches_python(spark):
+    # dedup=True keeps one row per new hash, through both the bloom
+    # split-union (in-bucket dedup) and the no-bloom dropDuplicates
+    # branch.  Rows are a pure function of url_hash, the engine-wide
+    # premise (equal hash => identical row).
     import pyspark.sql.functions as F
 
     from scalpel_ts_spark.operators.seen import build_bloom, new_urls
@@ -117,23 +168,14 @@ def test_probe_variants_match_wide(spark):
         key.alias("url_hash"),
     )
     seen = spark.range(0, 300).select(F.col("id").alias("url_hash"))
-    blooms = build_bloom(seen, n_buckets=8)
-    wide = new_urls(
-        cand, seen, blooms, n_buckets=8, dedup=True
-    ).collect()
-    expected = sorted((r.url, r.host_id, r.url_hash) for r in wide)
-    variants = [
-        {"narrow": True, "broadcast_new": True},
-        {"narrow": True, "broadcast_new": False},
-        {"preagg": True},
-    ]
-    for kw in variants:
-        got = new_urls(
-            cand, seen, blooms, n_buckets=8, dedup=True, **kw
-        ).collect()
+    expected = sorted(
+        (f"http://h{k % 7}.test/p/{k}", k % 7, k) for k in range(300, 900)
+    )
+    for blooms in (build_bloom(seen, n_buckets=8), None):
+        got = new_urls(cand, seen, blooms, n_buckets=8, dedup=True).collect()
         assert sorted(
             (r.url, r.host_id, r.url_hash) for r in got
-        ) == expected, kw
+        ) == expected, f"blooms={blooms is not None}"
 
 
 def test_bloom_buckets_autoscale_with_budget(spark, tmp_path_factory):

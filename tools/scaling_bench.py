@@ -105,15 +105,8 @@ def child(cores: int) -> None:
     # politeness budget must cover the whole frontier (cap x n_hosts
     # >= seeded URLs) so the macro-round fetches everything it seeded
     cap = max(4096, PAGES_PER_HOST + 256)
-    # SCALING_NARROW=1 measures the hash-only bucket-cogroup probe
-    # (operators/seen.new_urls(narrow=True)) at THIS scale: the shape
-    # loses at bench scale on 32 unpinned cores (BASELINE.md narrow-
-    # probe A/B), but the pinned 1->4-core pair is bandwidth-starved in
-    # exactly the section the narrow shape shrinks, so the trade is
-    # re-measured where it matters before any deploy-knob guidance.
-    narrow = os.environ.get("SCALING_NARROW", "0") == "1"
     eng = CrawlEngine(spark, wd, n_hosts=N_HOSTS, cap=cap, refill=cap // 2,
-                      salt_buckets=32, write_docs=True, narrow_probe=narrow)
+                      salt_buckets=32, write_docs=True)
     seeds = spark.range(N_HOSTS * PAGES_PER_HOST).select(
         F.concat(
             F.lit("http://h"), (F.col("id") % N_HOSTS).cast("string"),
@@ -141,8 +134,6 @@ def child(cores: int) -> None:
     dt = time.time() - t0
     host = _host_pct(cpu0, _cpu_sample())
     host["calib_jvm_sec"] = calib_sec
-    if narrow:
-        host["narrow_probe"] = True
     fetched = sum(m["fetched"] for m in metrics)
     sections: dict = {}
     for m in metrics:
