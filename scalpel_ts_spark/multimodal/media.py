@@ -93,7 +93,6 @@ def media_features(
     df: DataFrame,
     ref_col: str = "media_ref",
     blob_col: str = "blob",
-    mime_col: str | None = None,
     fake_decode: bool = True,
     max_records_per_batch: int | None = None,
 ) -> DataFrame:

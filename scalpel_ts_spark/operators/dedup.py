@@ -582,7 +582,6 @@ def winnow_duplicates(
     w: int = 16,
     text_col: str = "text",
     id_col: str = "doc_id",
-    max_fp_freq: int | None = None,
     persisted_out: list | None = None,
 ) -> DataFrame:
     """Near-dup pairs by winnowing-fingerprint overlap (the MOSS
@@ -595,30 +594,15 @@ def winnow_duplicates(
     all-pairs scope (same role the LSH band join plays for minhash,
     but with a hard guarantee instead of a probabilistic one).
     Verification recomputes exact fingerprint-set Jaccard on the
-    candidate pairs only — on the lossless path by COUNTING joined
-    rows per pair (distinct per-doc sets make count == intersection;
-    union follows from per-doc sizes), which needs no array set-ops
-    (measured 11x at sf0.1 vs re-joining the arrays).
+    candidate pairs only, by COUNTING joined rows per pair (distinct
+    per-doc sets make count == intersection; union follows from
+    per-doc sizes), which needs no array set-ops (measured 11x at
+    sf0.1 vs re-joining the arrays).
 
     Scale shape: per-doc fingerprinting is a pure JVM map stage; the
     only shuffles are the fingerprint equi-join (fan-out bounded by
     winnowing's ~2/(w+1) selection density) and the per-pair
     partial-aggregated count.  No all-pairs anywhere.
-
-    **Frequent-fingerprint skew** (``max_fp_freq``): a fingerprint
-    shared by ``c`` documents contributes ``c·(c-1)/2`` joined rows,
-    so boilerplate grams make the candidate join quadratic in the
-    duplication factor (measured on the synthetic corpus: 10x docs →
-    ~100x candidate rows, hottest fp in 24% of docs).  Passing
-    ``max_fp_freq=N`` drops fingerprints occurring in more than ``N``
-    docs from CANDIDATE GENERATION only (verification still uses full
-    sets, so reported inter/uni are unchanged).  Recall contract: a
-    pair is missed only if EVERY fingerprint it shares occurs in
-    > ``N`` docs — i.e. the pair's entire overlap is corpus-wide
-    boilerplate.  ``None`` (default) keeps the lossless join; that is
-    what the all-pairs oracle checks.  Calibrate the cap per corpus:
-    on the synthetic sf0.1 tables the smallest lossless cap is 166
-    (~3% of docs) — BASELINE.md records the measurement recipe.
 
     Output: (id_a, id_b, inter, uni) with id_a < id_b — integer set
     sizes, float-free like :func:`jaccard_pairs`.
@@ -644,81 +628,45 @@ def winnow_duplicates(
     if persisted_out is not None:
         persisted_out.append(fps)
     exploded = fps.select(F.col(id_col), F.explode("fps").alias("fp"))
-    if max_fp_freq is None:
-        # Lossless path: per-doc fingerprint sets are DISTINCT, so each
-        # shared fingerprint contributes exactly one joined row per
-        # pair — count(*) per (id_a, id_b) IS |intersection|, and
-        # |union| = n_a + n_b - inter from a per-doc size table small
-        # enough to broadcast.  This replaces the wide array re-joins
-        # + array_intersect/array_union verification with one
-        # partial-aggregated count shuffle: measured 7.9s -> ~1s on
-        # the verification stage at sf0.1 (8.2M candidate pairs).
-        sizes = fps.select(F.col(id_col), F.size("fps").alias("_n"))
-        pair_inter = (
-            exploded.select("fp", F.col(id_col).alias("id_a"))
-            .join(exploded.select("fp", F.col(id_col).alias("id_b")), "fp")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b")
-            .agg(F.count("*").cast("int").alias("inter"))
-        )
-        num, den = _ratio_as_ints(threshold)
-        return (
-            pair_inter.join(
-                sizes.select(F.col(id_col).alias("id_a"), F.col("_n").alias("_na")),
-                "id_a",
-            )
-            .join(
-                sizes.select(F.col(id_col).alias("id_b"), F.col("_n").alias("_nb")),
-                "id_b",
-            )
-            .select(
-                "id_a",
-                "id_b",
-                "inter",
-                (F.col("_na") + F.col("_nb") - F.col("inter")).alias("uni"),
-            )
-            # long cast: see _verify_jaccard (int32 * den overflows on
-            # multi-million-fingerprint documents; ANSI mode throws)
-            .filter(
-                F.col("inter").cast("long") * den
-                >= F.col("uni").cast("long") * num
-            )
-        )
-    # Capped path: hot fingerprints leave candidate generation, so the
-    # join count would UNDERCOUNT the true intersection — verification
-    # must re-join the full fingerprint sets (the documented contract:
-    # reported inter/uni always reflect complete sets).
-    # one extra hash-aggregate (map-side partial) + a re-join on
-    # the same fp key; both shuffles are on the already-exploded
-    # narrow (fp, id) rows
-    rare = (
-        exploded.groupBy("fp")
-        .agg(F.count("*").alias("_c"))
-        .filter(F.col("_c") <= max_fp_freq)
-        .select("fp")
-    )
-    exploded = exploded.join(rare, "fp")
-    cands = (
-        exploded.select(F.col("fp"), F.col(id_col).alias("id_a"))
-        .join(
-            exploded.select(F.col("fp"), F.col(id_col).alias("id_b")),
-            "fp",
-        )
+    # per-doc fingerprint sets are DISTINCT, so each shared
+    # fingerprint contributes exactly one joined row per pair —
+    # count(*) per (id_a, id_b) IS |intersection|, and |union| =
+    # n_a + n_b - inter from a per-doc size table small enough to
+    # broadcast.  This replaces the wide array re-joins
+    # + array_intersect/array_union verification with one
+    # partial-aggregated count shuffle: measured 7.9s -> ~1s on
+    # the verification stage at sf0.1 (8.2M candidate pairs).
+    sizes = fps.select(F.col(id_col), F.size("fps").alias("_n"))
+    pair_inter = (
+        exploded.select("fp", F.col(id_col).alias("id_a"))
+        .join(exploded.select("fp", F.col(id_col).alias("id_b")), "fp")
         .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
+        .groupBy("id_a", "id_b")
+        .agg(F.count("*").cast("int").alias("inter"))
     )
-    pairs = (
-        cands.join(
-            fps.select(F.col(id_col).alias("id_a"), F.col("fps").alias("sh_a")),
+    num, den = _ratio_as_ints(threshold)
+    return (
+        pair_inter.join(
+            sizes.select(F.col(id_col).alias("id_a"), F.col("_n").alias("_na")),
             "id_a",
         )
         .join(
-            fps.select(F.col(id_col).alias("id_b"), F.col("fps").alias("sh_b")),
+            sizes.select(F.col(id_col).alias("id_b"), F.col("_n").alias("_nb")),
             "id_b",
         )
+        .select(
+            "id_a",
+            "id_b",
+            "inter",
+            (F.col("_na") + F.col("_nb") - F.col("inter")).alias("uni"),
+        )
+        # long cast: see _verify_jaccard (int32 * den overflows on
+        # multi-million-fingerprint documents; ANSI mode throws)
+        .filter(
+            F.col("inter").cast("long") * den
+            >= F.col("uni").cast("long") * num
+        )
     )
-    return _verify_jaccard(pairs, threshold)
 
 
 def simhash_udf():

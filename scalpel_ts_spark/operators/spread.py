@@ -15,8 +15,7 @@ SIZE-GATED version of that rule for the similarity/topk entry points:
 * large input (the 100-TB shape): the scan has thousands of natural
   splits and an extra full-data exchange would be pure waste — the
   frame passes through untouched.  An UNKNOWN estimate reads as huge
-  and degrades to untouched (same discipline as
-  ``similarity._plan_size_bytes``).
+  and degrades to untouched (see :func:`_plan_size_bytes`).
 
 The explicit partition count pins the exchange against AQE coalescing
 (an advisory-size coalesce would fold a tiny-byte/expensive-row stage
@@ -35,8 +34,11 @@ SPREAD_MAX_BYTES = 256 << 20
 
 
 def _plan_size_bytes(df: DataFrame) -> int:
-    """Catalyst's sizeInBytes estimate — driver-side metadata, no job;
-    unknown reads as huge (degrade to no-op, never crash)."""
+    """Catalyst's sizeInBytes estimate — driver-side metadata, no job.
+    ``_jdf``/``queryExecution`` are private Spark internals: if a Spark
+    version moves them the estimate reads as huge, which selects every
+    size gate's scale-safe shape, instead of crashing (round-3 verdict
+    finding #3)."""
     try:
         return int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()

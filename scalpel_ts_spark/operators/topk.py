@@ -48,33 +48,29 @@ def topk_per_group(
     group_cols: Sequence[str],
     order_cols: Sequence[Column],
     k: Column | int,
-    salt_col: Column | None = None,
     salt_buckets: int = 16,
     prune_k: int | None = None,
     rank_col: str = "_rank",
     keep_rank: bool = False,
-    single_phase_max_bytes: int | None = None,
     single_phase: bool | None = None,
 ) -> DataFrame:
     """Keep the top-``k`` rows per group under ``order_cols``.
 
     ``k`` may be a per-row Column (e.g. the host's politeness token
-    count, joined on beforehand) or a literal.  ``salt_col`` defaults
-    to a deterministic hash of the ordering key — never random, so
-    plans are reproducible.
+    count, joined on beforehand) or a literal.  The salt is a
+    deterministic hash of the input row — never random, so plans are
+    reproducible.
 
-    ``single_phase_max_bytes``: when the per-row-``k`` input's
-    optimizer size estimate is under this bound, the two-phase salted
-    prune (an extra exchange + window pass, there to bound a monster
-    group's reducer input) is skipped for ONE exact window — at a
-    small absolute input even a fully skewed group is a bounded task,
-    and the salt exchange is pure overhead (the crawl's selection
-    pipeline spent 2 of its ~10 per-round jobs on it at bench scale,
-    r6).  Default None (from ``SINGLE_PHASE_MAX_BYTES``); pass 0 to
-    pin the salted path regardless of size (its precondition tests
-    do).  An unknown estimate reads as huge -> salted path, and the
-    two strategies are row-identical (the salt prune is lossless), so
-    the gate can never change results.
+    When the per-row-``k`` input's optimizer size estimate is under
+    ``SINGLE_PHASE_MAX_BYTES``, the two-phase salted prune (an extra
+    exchange + window pass, there to bound a monster group's reducer
+    input) is skipped for ONE exact window — at a small absolute
+    input even a fully skewed group is a bounded task, and the salt
+    exchange is pure overhead (the crawl's selection pipeline spent 2
+    of its ~10 per-round jobs on it at bench scale, r6).  An unknown
+    estimate reads as huge -> salted path, and the two strategies are
+    row-identical (the salt prune is lossless), so the gate can never
+    change results.
 
     ``single_phase``: explicit override of the size gate for callers
     that KNOW the input's row volume better than the optimizer — the
@@ -86,6 +82,13 @@ def topk_per_group(
     """
     k_col = F.lit(k) if isinstance(k, int) else k
 
+    def exact_topk(frame: DataFrame) -> DataFrame:
+        w = Window.partitionBy(*group_cols).orderBy(*order_cols)
+        out = frame.withColumn(rank_col, F.row_number().over(w)).filter(
+            F.col(rank_col) <= k_col
+        )
+        return out if keep_rank else out.drop(rank_col)
+
     if isinstance(k, int):
         # literal limit: Catalyst inserts WindowGroupLimit, a map-side
         # partial top-k that already bounds a hot group's reducer input
@@ -94,33 +97,15 @@ def topk_per_group(
         # host holding 50%).  Salting below is reserved for per-row k
         # (politeness token quotas), where the rank filter is not a
         # literal and WindowGroupLimit cannot apply.
-        w = Window.partitionBy(*group_cols).orderBy(*order_cols)
-        out = df.withColumn(rank_col, F.row_number().over(w)).filter(
-            F.col(rank_col) <= k_col
-        )
-        return out if keep_rank else out.drop(rank_col)
+        return exact_topk(df)
 
-    if single_phase_max_bytes is None:
-        single_phase_max_bytes = SINGLE_PHASE_MAX_BYTES
     if single_phase is None:
-        single_phase = _plan_size_bytes(df) < single_phase_max_bytes
+        single_phase = _plan_size_bytes(df) < SINGLE_PHASE_MAX_BYTES
     if single_phase:
-        w = Window.partitionBy(*group_cols).orderBy(*order_cols)
-        out = df.withColumn(rank_col, F.row_number().over(w)).filter(
-            F.col(rank_col) <= k_col
-        )
-        return out if keep_rank else out.drop(rank_col)
+        return exact_topk(df)
 
     if prune_k is None:
         prune_k = 256  # upper bound for any sane per-round host quota
-
-    if salt_col is None:
-        # hash every input column (order_cols may be SortOrder
-        # expressions, which can't be hashed) — deterministic and
-        # data-derived, never random / scheduling-dependent
-        salt_col = F.pmod(
-            F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(salt_buckets)
-        )
 
     # The salt-local prune is lossless ONLY under k <= prune_k; a row
     # whose quota exceeds prune_k could deserve a global rank beyond
@@ -137,15 +122,17 @@ def topk_per_group(
             "would silently drop qualifying rows"
         ),
     ).isNull()
-    salted = df.withColumn("_salt", salt_col)
+    # hash every input column (order_cols may be SortOrder
+    # expressions, which can't be hashed) — deterministic and
+    # data-derived, never random / scheduling-dependent
+    salt = F.pmod(
+        F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(salt_buckets)
+    )
+    salted = df.withColumn("_salt", salt)
     w1 = Window.partitionBy(*group_cols, "_salt").orderBy(*order_cols)
     pruned = (
         salted.withColumn("_srank", F.row_number().over(w1))
         .filter((F.col("_srank") <= F.lit(prune_k)) & k_bound_ok)
         .drop("_srank", "_salt")
     )
-    w2 = Window.partitionBy(*group_cols).orderBy(*order_cols)
-    out = pruned.withColumn(rank_col, F.row_number().over(w2)).filter(
-        F.col(rank_col) <= k_col
-    )
-    return out if keep_rank else out.drop(rank_col)
+    return exact_topk(pruned)

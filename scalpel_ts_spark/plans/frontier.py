@@ -62,7 +62,9 @@ from scalpel_ts_spark.operators.extract import (
     fused_fetch_extract_udf,
 )
 from scalpel_ts_spark.operators.seen import (
-    bloom_bits_for,
+    BLOOM_MIN_BUCKETS,
+    BLOOM_ROWS_PER_BUCKET,
+    bloom_geometry,
     build_bloom,
     new_urls,
     update_bloom,
@@ -85,6 +87,19 @@ TABLES = (
 #: comfort zone; above this the anti-join falls back to a plain shuffle
 DEFAULT_BROADCAST_FETCHED_MAX = 3_000_000
 
+#: config keys of options that no longer exist: manifests written
+#: before their removal still resume (each one's old value only tuned
+#: performance; ``bloom_buckets`` moved to a top-level manifest key)
+_RETIRED_CONFIG_KEYS = (
+    "narrow_probe",
+    "bloom_buckets",
+    "bloom_target_rows_per_bucket",
+    "bloom_bits_per_key",
+    "bloom_max_bucket_bytes",
+    "bloom_presize_keys",
+    "broadcast_fetched_max",
+)
+
 #: per-host tables (one row per host) are collected and written driver-
 #: side below this row count: no distributed-write job, no commit-
 #: protocol renames.  Above it (10^7-host design point) they stay
@@ -96,20 +111,20 @@ def frontier_anti_join(
     frontier: DataFrame,
     fetched_keys: DataFrame,
     expected_rows: int,
-    broadcast_max: int = DEFAULT_BROADCAST_FETCHED_MAX,
 ) -> DataFrame:
     """``frontier MINUS fetched`` on url_hash — the per-round frontier
     update.
 
     The fetched side is bounded by the round budget (cap x n_hosts,
-    known a priori), so when that bound is under ``broadcast_max`` the
-    join broadcasts it and the frontier is never shuffled.  At design-
-    point budgets (10^7 hosts x 8 tokens ~ 10^8 rows) a forced
-    broadcast would OOM the driver, so past the threshold this stays a
-    plain left_anti join and lets AQE pick the strategy from observed
-    sizes (round-2 verdict finding #1).
+    known a priori), so when that bound is under
+    ``DEFAULT_BROADCAST_FETCHED_MAX`` the join broadcasts it and the
+    frontier is never shuffled.  At design-point budgets (10^7 hosts x
+    8 tokens ~ 10^8 rows) a forced broadcast would OOM the driver, so
+    past the threshold this stays a plain left_anti join and lets AQE
+    pick the strategy from observed sizes (round-2 verdict finding
+    #1).
     """
-    if expected_rows <= broadcast_max:
+    if expected_rows <= DEFAULT_BROADCAST_FETCHED_MAX:
         fetched_keys = F.broadcast(fetched_keys)
     return frontier.join(fetched_keys, "url_hash", "left_anti")
 
@@ -263,18 +278,12 @@ class CrawlEngine:
         refill: int = 4,
         salt_buckets: int = 16,
         use_bloom: bool = True,
-        bloom_buckets: int = 32,
-        bloom_target_rows_per_bucket: int = 1_000_000,
-        bloom_bits_per_key: int = 10,
-        bloom_max_bucket_bytes: int = 64 << 20,
-        bloom_presize_keys: int | None = None,
         write_docs: bool = True,
         compact_every: int = 8,
         storage: SnapshotStorage | None = None,
         fetch_stage=None,
         robots_stage=None,
         max_fetch_retries: int = 3,
-        broadcast_fetched_max: int = DEFAULT_BROADCAST_FETCHED_MAX,
     ):
         """``fetch_stage``: optional ``df -> df + html column`` callable
         replacing the synthetic fetcher — the production seam.  E.g.::
@@ -311,10 +320,6 @@ class CrawlEngine:
         host's politeness budget forever (round-2 ADVICE, high).  The
         same bound caps consecutive ALL-error rounds before ``run``
         stops: transient total outages retry, genuine dead-ends halt.
-
-        ``broadcast_fetched_max``: the fetched-set anti-join broadcasts
-        only while the round budget (cap x n_hosts) is under this row
-        count; see :func:`frontier_anti_join`.
         """
         self.spark = spark
         self.workdir = workdir
@@ -328,58 +333,20 @@ class CrawlEngine:
         # (round-4 verdict #3: a static 32 at a 100x crawl puts ~1/32
         # of a macro-round's discovery in one task).  Expected
         # discovery ≈ link amplification (~8/page) x round budget
-        # (cap x n_hosts); the constructor value is a FLOOR, and the
-        # probe itself asserts a hard per-bucket row bound (4x target)
-        # so a config mismatch fails loudly instead of OOMing.  At the
-        # 10^10-URL design point (10^8-URL rounds) this derives ~800
-        # buckets — matching the >=512 the module docstring sizes for.
-        expected_discovery = 8 * cap * n_hosts
-        self._expected_discovery = expected_discovery
-        #: init-time bloom sizing headroom in KEYS beyond the seed
-        #: count.  The engine knows a-priori how fast the seen set can
-        #: grow — one round adds at most the discovery budget (~8
-        #: links/page x cap x n_hosts, the same estimate the bucket
-        #: count uses) — so sizing bitmaps only for the SEED set
-        #: guarantees an early full-seen-scan rebuild on any crawl
-        #: whose frontier outgrows its seeds (the bench crawl paid two
-        #: rebuilds inside four rounds, r6 profile: 3-4 s apiece).
-        #: Default None derives the per-round discovery budget; tests
-        #: exercising the resize path pass 0 to keep seed-only sizing.
-        #: Memory stays bounded by bloom_max_bucket_bytes either way.
-        self.bloom_presize_keys = bloom_presize_keys
-        self.bloom_target_rows_per_bucket = bloom_target_rows_per_bucket
+        # (cap x n_hosts); the probe itself asserts a hard per-bucket
+        # row bound (see bloom_prefilter) so a mismatch fails loudly
+        # instead of OOMing.  At the 10^10-URL design point
+        # (10^8-URL rounds) this derives ~800 buckets — matching the
+        # >=512 the seen module docstring sizes for.  The same
+        # estimate presizes the bitmaps at init().
+        self._expected_discovery = 8 * cap * n_hosts
+        #: bloom geometry STATE (operators.seen.bloom_geometry): set at
+        #: init(), grown only at rebuilds, pinned by resume()
         self.bloom_buckets = max(
-            bloom_buckets,
-            -(-expected_discovery // bloom_target_rows_per_bucket),
+            BLOOM_MIN_BUCKETS,
+            -(-self._expected_discovery // BLOOM_ROWS_PER_BUCKET),
         )
-        #: bloom bitmap sizing: ~10 bits/key => ~1% FP.  Bitmaps are
-        #: sized at init from the SEED count (x4 growth headroom) and
-        #: RE-SIZED + rebuilt at every compaction from the tracked seen
-        #: count — a fixed bitmap would saturate as the crawl grows
-        #: (at 4M seen keys the old fixed 2^17 bits/bucket ran at
-        #: ~1 bit/key, FP ~100%, so the whole discovery volume rode
-        #: the exact anti-join and the bloom bypassed nothing).
-        #: Saturation between compactions only degrades FP (the exact
-        #: anti-join stays the authority); the next rebuild restores
-        #: the budget.  Memory: seen_rows x bits_per_key x 4 bits
-        #: total, spread over bloom_buckets partition-owned rows.
-        self.bloom_bits_per_key = bloom_bits_per_key
-        #: per-bucket bitmap byte bound: one bucket's bitmap is one
-        #: cogroup task's numpy heap, so on a LONG crawl whose seen set
-        #: outgrows what the (discovery-volume-derived) bucket count
-        #: can hold at bits_per_key, the BUCKET COUNT grows at the next
-        #: rebuild instead of the per-bucket bitmaps growing without
-        #: bound — the rebuild is a fresh build keyed by the new count
-        #: (the only safe point to change bucketing) and rewrites the
-        #: manifest config in the same commit, so resume stays
-        #: consistent.  64 MiB/bucket = ~205M keys/bucket at 10 bits
-        #: x4 headroom; a 10^10-URL crawl at the 32-bucket floor grows
-        #: to 128 buckets instead of carrying 1.5 GB bitmaps per task.
-        #: clamped to bloom_bits_for's 2^17-bit floor — a bound below
-        #: the smallest bitmap a bucket can have would make the
-        #: bucket-growth loop spin forever chasing an unreachable size
-        self.bloom_max_bucket_bytes = max(bloom_max_bucket_bytes, (1 << 17) // 8)
-        self._bloom_bits = 1 << 17  # re-derived at init()/compaction
+        self._bloom_bits = 1 << 17  # re-derived at init()/rebuilds
         self._seen_rows = 0
         self.write_docs = write_docs
         self.compact_every = compact_every
@@ -387,7 +354,6 @@ class CrawlEngine:
         self.fetch_stage = fetch_stage
         self.robots_stage = robots_stage
         self.max_fetch_retries = max_fetch_retries
-        self.broadcast_fetched_max = broadcast_fetched_max
         self.round = 0
         self._frontier_rows: int | None = None
         #: tracked host-universe size (rows in the per-host tables),
@@ -410,14 +376,8 @@ class CrawlEngine:
             "refill": self.refill,
             "salt_buckets": self.salt_buckets,
             "use_bloom": self.use_bloom,
-            "bloom_buckets": self.bloom_buckets,
-            "bloom_target_rows_per_bucket": self.bloom_target_rows_per_bucket,
-            "bloom_bits_per_key": self.bloom_bits_per_key,
-            "bloom_max_bucket_bytes": self.bloom_max_bucket_bytes,
-            "bloom_presize_keys": self.bloom_presize_keys,
             "compact_every": self.compact_every,
             "max_fetch_retries": self.max_fetch_retries,
-            "broadcast_fetched_max": self.broadcast_fetched_max,
         }
 
     # --- snapshot IO (thin delegates onto the storage seam) ---------------
@@ -486,6 +446,12 @@ class CrawlEngine:
         return self.storage.read_union("seen", range(base, upto + 1))
 
     def _save_manifest(self):
+        # the seen/bloom sizing state commits with every manifest save
+        self.manifest.update(
+            seen_rows=self._seen_rows,
+            bloom_bits=self._bloom_bits,
+            bloom_buckets=self.bloom_buckets,
+        )
         self.storage.save_manifest(self.manifest)
 
     # --- lifecycle --------------------------------------------------------
@@ -548,25 +514,13 @@ class CrawlEngine:
         )
         if self.use_bloom:
             # bitmaps sized for the seed set PLUS the a-priori
-            # discovery budget, x4 growth headroom (~bits_per_key
-            # bits/key => ~1% FP until the seen set quadruples past
-            # the estimate; the compaction rebuild below re-sizes).
-            # Seed-only sizing forced an early full-seen-scan rebuild
-            # on every crawl whose frontier outgrows its seeds; the
-            # per-bucket byte bound still caps memory, growth beyond
-            # it stays the rebuild path's job.
-            presize = self.bloom_presize_keys
-            if presize is None:
-                presize = self._expected_discovery
-            self._bloom_bits = bloom_bits_for(
-                4 * (n_seeds + presize),
-                self.bloom_buckets,
-                self.bloom_bits_per_key,
+            # discovery budget: seed-only sizing forced an early
+            # full-seen-scan rebuild on every crawl whose frontier
+            # outgrows its seeds (the bench crawl paid two rebuilds
+            # inside four rounds, r6 profile: 3-4 s apiece)
+            self.bloom_buckets, self._bloom_bits = bloom_geometry(
+                n_seeds + self._expected_discovery, self.bloom_buckets
             )
-            while self._bloom_bits > 8 * self.bloom_max_bucket_bytes and (
-                self._bloom_bits > 1 << 17
-            ):
-                self._bloom_bits >>= 1
             init_writes.append(
                 (
                     self._write,
@@ -589,8 +543,6 @@ class CrawlEngine:
         self._host_rows = 0
         self.manifest["rounds"] = []
         self.manifest["seen_full_rounds"] = [0]
-        self.manifest["seen_rows"] = self._seen_rows
-        self.manifest["bloom_bits"] = self._bloom_bits
         self._save_manifest()
 
     @classmethod
@@ -610,10 +562,11 @@ class CrawlEngine:
         storage = storage or ParquetSnapshotStorage(spark, workdir)
         manifest = storage.load_manifest()
         cfg = manifest["config"]
-        # manifests written while the narrow seen probe existed carry
-        # its knob; both probe shapes gave identical results, so
-        # dropping it cannot change a resumed crawl
-        cfg.pop("narrow_probe", None)
+        # bloom bucket count: a top-level key since it became state;
+        # older manifests kept it in the config
+        bloom_buckets = manifest.get("bloom_buckets", cfg.get("bloom_buckets"))
+        for key in _RETIRED_CONFIG_KEYS:
+            cfg.pop(key, None)
         eng = cls(
             spark,
             workdir,
@@ -635,15 +588,15 @@ class CrawlEngine:
         # bytes), so _bloom_bits only steers FUTURE rebuilds — but the
         # BUCKET COUNT is not: a bucket with no bloom row reads as
         # "definitely new", which is only correct under the build-time
-        # bucketing.  The constructor may re-derive a LARGER count than
-        # the manifest's (a pre-autoscale manifest missing
-        # bloom_target_rows_per_bucket resumes at today's default and
-        # can out-derive its stored floor), and probing at the wrong
-        # count would cogroup candidates against empty bloom rows and
-        # silently bypass the exact anti-join — so pin the stored
-        # geometry; bucket growth happens only through a rebuild,
-        # which rewrites bitmaps and manifest config together.
-        eng.bloom_buckets = cfg.get("bloom_buckets", eng.bloom_buckets)
+        # bucketing.  The constructor may derive a different count
+        # than the stored one (init() may have grown it, or the rule
+        # changed since), and probing at the wrong count would
+        # cogroup candidates against empty bloom rows and silently
+        # bypass the exact anti-join — so pin the stored geometry;
+        # bucket growth happens only through a rebuild, which rewrites
+        # bitmaps and manifest together.
+        if bloom_buckets is not None:
+            eng.bloom_buckets = bloom_buckets
         eng._seen_rows = manifest.get("seen_rows", 0)
         eng._bloom_bits = manifest.get("bloom_bits", eng._bloom_bits)
         return eng
@@ -1027,7 +980,6 @@ class CrawlEngine:
                 n_buckets=self.bloom_buckets,
                 persisted_out=st.caches,
                 dedup=True,
-                max_rows_per_bucket=4 * self.bloom_target_rows_per_bucket,
             )
         )
 
@@ -1121,12 +1073,7 @@ class CrawlEngine:
         if st.denied is not None:
             denied, st.denied_obs = _with_count(st.denied, "n_denied")
             removal_keys = removal_keys.unionByName(denied)
-        kept = frontier_anti_join(
-            st.frontier,
-            removal_keys,
-            round_budget,
-            self.broadcast_fetched_max,
-        )
+        kept = frontier_anti_join(st.frontier, removal_keys, round_budget)
         if st.has_err and st.n_errors > 0:
             # errored rows stay, with a bumped retry counter; rows past
             # the retry budget are dropped so a permanently failing URL
@@ -1136,7 +1083,7 @@ class CrawlEngine:
             ).select(
                 "url_hash", F.lit(1).alias("_errored")
             )
-            if round_budget <= self.broadcast_fetched_max:
+            if round_budget <= DEFAULT_BROADCAST_FETCHED_MAX:
                 err_keys = F.broadcast(err_keys)
             kept = (
                 kept.join(err_keys, "url_hash", "left")
@@ -1276,14 +1223,12 @@ class CrawlEngine:
             # marking it earlier would let a failed-then-retried round
             # treat a mere delta as the entire seen set
             self.manifest.setdefault("seen_full_rounds", [0]).append(nxt)
-        if want_buckets != self.bloom_buckets:
-            # switch the engine to the grown bucket count only AFTER
-            # the rebuilt bitmaps landed: probe bucketing must always
-            # match the latest COMMITTED build (a failed write must
-            # leave the next probe on the old geometry, in-process or
-            # via resume — the manifest below commits both together)
-            self.bloom_buckets = want_buckets
-            self.manifest["config"]["bloom_buckets"] = want_buckets
+        # switch the engine to a grown bucket count only AFTER the
+        # rebuilt bitmaps landed: probe bucketing must always match the
+        # latest COMMITTED build (a failed write must leave the next
+        # probe on the old geometry, in-process or via resume — the
+        # manifest commits both together)
+        self.bloom_buckets = want_buckets
         if st.denied_obs is not None:
             st.n_denied = _obs_count(st.denied_obs, "n_denied")
         if st.kept_obs is not None:
@@ -1300,25 +1245,14 @@ class CrawlEngine:
         bucket count: rebuilt from the seen set when it outgrew the
         current sizing, else this round's new hashes OR-ed into the
         previous ones."""
-        # bucket-count growth: when the seen set has outgrown what
-        # the current count can hold at <= bloom_max_bucket_bytes
-        # per bucket, double buckets until it fits — safe only
-        # here, because the rebuild below writes fresh bitmaps
-        # keyed by the new count and the manifest config updates
-        # in the same commit (probe bucketing must always match
-        # the on-disk build bucketing; see resume()).
-        want_buckets = self.bloom_buckets
-        while (
-            bloom_bits_for(
-                4 * self._seen_rows, want_buckets,
-                self.bloom_bits_per_key,
-            )
-            > 8 * self.bloom_max_bucket_bytes
-        ):
-            want_buckets <<= 1
-        want_bits = bloom_bits_for(
-            4 * self._seen_rows, want_buckets,
-            self.bloom_bits_per_key,
+        # bucket-count growth (bloom_geometry doubles buckets once a
+        # bitmap would pass BLOOM_MAX_BUCKET_BYTES) is safe only here,
+        # because the rebuild below writes fresh bitmaps keyed by the
+        # new count and the manifest records it in the same commit
+        # (probe bucketing must always match the on-disk build
+        # bucketing; see resume()).
+        want_buckets, want_bits = bloom_geometry(
+            self._seen_rows, self.bloom_buckets
         )
         # upward-only (at unchanged bucket count): the seen set
         # never shrinks, so a smaller want_bits can only mean lost
@@ -1388,8 +1322,6 @@ class CrawlEngine:
         if st.denied_obs is not None:
             metrics["robots_denied"] = st.n_denied
         self.manifest["rounds"].append(metrics)
-        self.manifest["seen_rows"] = self._seen_rows
-        self.manifest["bloom_bits"] = self._bloom_bits
         self.round = nxt
         self._save_manifest()
         return metrics

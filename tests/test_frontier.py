@@ -13,6 +13,8 @@ import os
 
 import pytest
 
+from scalpel_ts_spark.operators import seen as seen_ops
+from scalpel_ts_spark.plans import frontier as frontier_plan
 from scalpel_ts_spark.plans.frontier import CrawlEngine
 from scalpel_ts_spark.plans.simulator import simulate_crawl
 from scalpel_ts_spark.sources.synthetic import make_url
@@ -71,17 +73,28 @@ def test_resume_produces_identical_tail(spark, tmp_path_factory, sim_state):
     )
     eng.init(SEEDS)
     eng.run(2)
-    # a manifest written while the narrow seen probe existed carries
-    # its knob in the config; resume must drop it
+    # a manifest written before the retired options were removed
+    # carries each one in its config (at its old default), with the
+    # bloom bucket count stored there instead of at the top level;
+    # resume must drop the options and still pin the bucket count
     mpath = os.path.join(wd, "manifest.json")
     with open(mpath) as f:
         manifest = json.load(f)
-    manifest["config"]["narrow_probe"] = True
+    manifest["config"].update(
+        narrow_probe=False,
+        bloom_buckets=manifest.pop("bloom_buckets"),
+        bloom_target_rows_per_bucket=1_000_000,
+        bloom_bits_per_key=10,
+        bloom_max_bucket_bytes=64 << 20,
+        bloom_presize_keys=None,
+        broadcast_fetched_max=3_000_000,
+    )
     with open(mpath, "w") as f:
         json.dump(manifest, f)
     # simulate a crash: reopen from the manifest and continue
     eng2 = CrawlEngine.resume(spark, wd)
     assert eng2.round == 2
+    assert eng2.bloom_buckets == eng.bloom_buckets
     eng2.run(ROUNDS - 2)
     assert _engine_log(eng2) == _sim_log(sim_state)
     assert {r.url for r in eng2.seen().collect()} == sim_state.seen
@@ -178,41 +191,42 @@ def test_new_urls_dedup_matches_python(spark):
         ) == expected, f"blooms={blooms is not None}"
 
 
-def test_bloom_buckets_autoscale_with_budget(spark, tmp_path_factory):
+def test_bloom_buckets_autoscale_with_budget(
+    spark, tmp_path_factory, monkeypatch
+):
     # round-4 verdict #3: bucket count must track expected discovery
-    # volume (8 links x cap x n_hosts), constructor value is a floor
+    # volume (8 links x cap x n_hosts), BLOOM_MIN_BUCKETS is a floor.
+    # The 10^10 design point derives >= 512 from the real target
+    big = CrawlEngine(
+        spark, str(tmp_path_factory.mktemp("crawl_bb10")),
+        n_hosts=2_000_000, cap=50, write_docs=False,
+    )
+    assert big.bloom_buckets >= 512
+    monkeypatch.setattr(frontier_plan, "BLOOM_ROWS_PER_BUCKET", 5)
     wd = str(tmp_path_factory.mktemp("crawl_scalebb"))
     eng = CrawlEngine(
-        spark, wd, n_hosts=N_HOSTS, cap=8, refill=4,
-        bloom_target_rows_per_bucket=5, write_docs=False,
+        spark, wd, n_hosts=N_HOSTS, cap=8, refill=4, write_docs=False,
     )
     # ceil(8*8*20 / 5) = 256 buckets, well above the 32 floor
     assert eng.bloom_buckets == 256
     eng.init(SEEDS)
     eng.run(ROUNDS)
     assert _engine_log(eng) == _sim_log(_sim())
-    # and the 10^10 design point derives >= 512 from the default target
-    big = CrawlEngine(
-        spark, str(tmp_path_factory.mktemp("crawl_bb10")),
-        n_hosts=2_000_000, cap=50, write_docs=False,
-    )
-    assert big.bloom_buckets >= 512
 
 
-def test_bloom_bucket_overflow_guard(spark):
+def test_bloom_bucket_overflow_guard(spark, monkeypatch):
     # a config mismatch (huge candidate volume into one task's pandas
     # heap) must raise, not OOM (round-4 verdict #3)
     import pyspark.sql.functions as F
 
     from scalpel_ts_spark.operators.seen import bloom_prefilter, build_bloom
 
+    monkeypatch.setattr(seen_ops, "BLOOM_ROWS_PER_BUCKET", 250)  # guard 1000
     seen = spark.range(0, 10).select(F.col("id").alias("url_hash"))
     blooms = build_bloom(seen, n_buckets=1)
     cand = spark.range(0, 5000).select(F.col("id").alias("url_hash"))
     with pytest.raises(Exception, match="bloom bucket overflow"):
-        bloom_prefilter(
-            cand, blooms, n_buckets=1, max_rows_per_bucket=1000
-        ).count()
+        bloom_prefilter(cand, blooms, n_buckets=1).count()
 
 
 def test_robots_cache_fetches_each_host_once(spark, tmp_path_factory):
@@ -232,17 +246,22 @@ def test_robots_cache_fetches_each_host_once(spark, tmp_path_factory):
 
 
 def test_non_default_bloom_buckets_match_simulator(
-    spark, tmp_path_factory, sim_state
+    spark, tmp_path_factory, sim_state, monkeypatch
 ):
     # regression: new_urls must probe with the SAME bucket count the
     # bitmaps were built with, or already-seen URLs re-enter the
-    # frontier as bloom false negatives (ADVICE r1)
+    # frontier as bloom false negatives (ADVICE r1).  The patched
+    # constants derive a non-power-of-two count of 7 buckets
+    monkeypatch.setattr(frontier_plan, "BLOOM_MIN_BUCKETS", 2)
+    monkeypatch.setattr(frontier_plan, "BLOOM_ROWS_PER_BUCKET", 183)
     wd = str(tmp_path_factory.mktemp("crawl_bb7"))
     eng = CrawlEngine(
-        spark, wd, n_hosts=N_HOSTS, cap=8, refill=4,
-        bloom_buckets=7, write_docs=False,
+        spark, wd, n_hosts=N_HOSTS, cap=8, refill=4, write_docs=False,
     )
+    # ceil(8*8*20 / 183) = 7 buckets, above the floor of 2
+    assert eng.bloom_buckets == 7
     eng.init(SEEDS)
+    assert eng.bloom_buckets == 7
     eng.run(ROUNDS)
     assert _engine_log(eng) == _sim_log(sim_state)
     assert {r.url for r in eng.seen().collect()} == sim_state.seen
@@ -272,7 +291,9 @@ def test_seen_compaction_bounds_delta_chain(spark, tmp_path_factory, sim_state):
     assert eng2.round - base < 2
 
 
-def test_bloom_resizes_as_seen_grows(spark, tmp_path_factory, sim_state):
+def test_bloom_resizes_as_seen_grows(
+    spark, tmp_path_factory, sim_state, monkeypatch
+):
     # bitmaps are sized from the seed count at init and RE-SIZED +
     # rebuilt as the seen set outgrows them — from the snapshot+delta
     # union on ordinary rounds, from the full snapshot on compaction
@@ -282,15 +303,15 @@ def test_bloom_resizes_as_seen_grows(spark, tmp_path_factory, sim_state):
     # floor the way a 4M-URL crawl does at the default 10 bits/key:
     # seen is 19 after round 1 (union-path resize), 95 after the
     # compacting round 2 (snapshot-path rebuild).
+    monkeypatch.setattr(seen_ops, "BLOOM_BITS_PER_KEY", 100_000)
     wd = str(tmp_path_factory.mktemp("crawl_bloomresize"))
-    # bloom_presize_keys=0 pins seed-only init sizing (the default
-    # derives the discovery budget, which would presize past the
-    # growth this test exists to exercise)
     eng = CrawlEngine(
         spark, wd, n_hosts=N_HOSTS, cap=8, refill=4,
-        compact_every=2, bloom_bits_per_key=100_000, write_docs=False,
-        bloom_presize_keys=0,
+        compact_every=2, write_docs=False,
     )
+    # a zero discovery estimate pins seed-only init sizing (the real
+    # estimate would presize past the growth this test exercises)
+    eng._expected_discovery = 0
     eng.init(SEEDS)
     assert eng._bloom_bits == 1 << 17  # 3 seeds: floor geometry
     eng.run(1)  # non-compaction round: union-path resize
@@ -315,58 +336,60 @@ def test_bloom_resizes_as_seen_grows(spark, tmp_path_factory, sim_state):
     assert {r.url for r in eng2.seen().collect()} == sim_state.seen
 
 
-def test_bloom_bucket_count_pinned_on_resume(spark, tmp_path_factory):
+def test_bloom_bucket_count_pinned_on_resume(
+    spark, tmp_path_factory, monkeypatch
+):
     # the probe's bucketing MUST match the count the on-disk bitmaps
     # were built with: a bucket with no bloom row reads "definitely
     # new" (bypassing the exact anti-join), which is only correct
-    # under the build-time bucketing.  A pre-autoscale manifest that
-    # lacks bloom_target_rows_per_bucket would resume at today's
-    # default and the constructor could re-derive MORE buckets than
-    # the bitmaps have — resume must pin the stored count instead.
-    import json
-    import os
-
+    # under the build-time bucketing.  Where the constructor's rule
+    # now derives MORE buckets than the bitmaps have (the rule
+    # changed since the manifest was written), resume must pin the
+    # stored count instead.
     wd = str(tmp_path_factory.mktemp("crawl_bucketpin"))
     eng = CrawlEngine(
         spark, wd, n_hosts=N_HOSTS, cap=8, refill=4, write_docs=False
     )
     eng.init(SEEDS)
     eng.run(2)
-    # rewrite the manifest as the pre-autoscale code would have left
-    # it: a small stored bucket count, no autoscale knob, and a config
-    # whose re-derivation exceeds the stored count
+    # rewrite the manifest with a small stored bucket count, and raise
+    # the floor so that re-derivation exceeds it
     mpath = os.path.join(wd, "manifest.json")
     with open(mpath) as f:
         manifest = json.load(f)
-    manifest["config"]["bloom_buckets"] = 4
-    manifest["config"]["bloom_target_rows_per_bucket"] = 1  # re-derives 1280
+    manifest["bloom_buckets"] = 4
     with open(mpath, "w") as f:
         json.dump(manifest, f)
+    monkeypatch.setattr(frontier_plan, "BLOOM_MIN_BUCKETS", 1024)
     eng2 = CrawlEngine.resume(spark, wd)
     assert eng2.bloom_buckets == 4
 
 
-def test_bloom_bucket_count_grows_at_rebuild(spark, tmp_path_factory, sim_state):
+def test_bloom_bucket_count_grows_at_rebuild(
+    spark, tmp_path_factory, sim_state, monkeypatch
+):
     # long-crawl path: when the seen set outgrows what the current
-    # bucket count can hold at <= bloom_max_bucket_bytes per bitmap,
+    # bucket count can hold at <= BLOOM_MAX_BUCKET_BYTES per bitmap,
     # the BUCKET COUNT doubles at the next rebuild (fresh build keyed
     # by the new count) instead of per-bucket bitmaps growing without
-    # bound.  bits_per_key is cranked so this small crawl hits the
-    # bound the way a 10^10-URL crawl would at 10 bits/key; the bound
-    # itself clamps to the 2^17-bit bitmap floor (16 KiB).
+    # bound.  Bits per key are cranked and the bound is set to the
+    # 2^17-bit bitmap floor (16 KiB), so this small crawl hits it the
+    # way a 10^10-URL crawl would at 10 bits/key; 3 seeds still fit
+    # 2 floor-sized buckets at init.
+    monkeypatch.setattr(frontier_plan, "BLOOM_MIN_BUCKETS", 2)
+    monkeypatch.setattr(seen_ops, "BLOOM_BITS_PER_KEY", 10_000)
+    monkeypatch.setattr(seen_ops, "BLOOM_MAX_BUCKET_BYTES", (1 << 17) // 8)
     wd = str(tmp_path_factory.mktemp("crawl_bucketgrow"))
     eng = CrawlEngine(
-        spark, wd, n_hosts=N_HOSTS, cap=8, refill=4,
-        bloom_buckets=2, bloom_bits_per_key=100_000,
-        bloom_max_bucket_bytes=1,  # clamps to the 16 KiB floor
-        write_docs=False,
+        spark, wd, n_hosts=N_HOSTS, cap=8, refill=4, write_docs=False,
     )
+    eng._expected_discovery = 0  # seed-only init sizing
     eng.init(SEEDS)
     assert eng.bloom_buckets == 2
     eng.run(1)  # seen grows past what 2 floor-sized buckets hold
     grown = eng.bloom_buckets
     assert grown > 2
-    assert eng.manifest["config"]["bloom_buckets"] == grown
+    assert eng.manifest["bloom_buckets"] == grown
     # on-disk bitmaps were rebuilt at the new bucketing
     assert eng._read("bloom", 1).count() <= grown
     # growth is transparent: the remaining rounds (probing at the new
@@ -377,6 +400,22 @@ def test_bloom_bucket_count_grows_at_rebuild(spark, tmp_path_factory, sim_state)
     eng2.run(ROUNDS - 2)
     assert _engine_log(eng2) == _sim_log(sim_state)
     assert {r.url for r in eng2.seen().collect()} == sim_state.seen
+
+
+# the init geometry (seeds + one round's discovery budget) of every
+# crawl shape in the repo, and one past the per-bitmap byte bound
+@pytest.mark.parametrize(
+    "n_keys, want",
+    [
+        (256 + 8 * 8 * 64, (32, 1 << 17)),  # perfbench crawl_deep
+        (len(SEEDS) + 8 * 8 * N_HOSTS, (32, 1 << 17)),  # this module
+        (5_000 + 8 * 512 * 200, (32, 1 << 20)),  # bench.py
+        (2_000_000 + 8 * 4_256 * 500, (32, 1 << 25)),  # scaling_bench
+        (10**9, (128, 1 << 29)),  # buckets double past 64 MiB
+    ],
+)
+def test_bloom_geometry_at_repo_shapes(n_keys, want):
+    assert seen_ops.bloom_geometry(n_keys, 32) == want
 
 
 def _synthetic_http(url):
@@ -557,15 +596,16 @@ def test_fetched_antijoin_broadcast_is_conditional(spark):
     # from observed sizes — the hint is what must be conditional)
     from pyspark.sql import functions as F
 
-    from scalpel_ts_spark.plans.frontier import frontier_anti_join
+    from scalpel_ts_spark.plans.frontier import (
+        DEFAULT_BROADCAST_FETCHED_MAX,
+        frontier_anti_join,
+    )
 
     frontier = spark.range(100).select(F.col("id").alias("url_hash"))
     fetched = spark.range(10).select(F.col("id").alias("url_hash"))
-    under = frontier_anti_join(
-        frontier, fetched, expected_rows=10, broadcast_max=1000
-    )
+    under = frontier_anti_join(frontier, fetched, expected_rows=10)
     over = frontier_anti_join(
-        frontier, fetched, expected_rows=10_000, broadcast_max=1000
+        frontier, fetched, expected_rows=DEFAULT_BROADCAST_FETCHED_MAX + 1
     )
     under_plan = under._jdf.queryExecution().analyzed().toString()
     over_plan = over._jdf.queryExecution().analyzed().toString()
@@ -806,28 +846,27 @@ def test_crawl_invariants_oracle_matches_simulator():
 
 
 def test_bloom_presized_for_discovery_budget_avoids_rebuild(
-    spark, tmp_path_factory
+    spark, tmp_path_factory, monkeypatch
 ):
-    # default init sizing covers seeds + the a-priori per-round
-    # discovery budget (8 links/page x cap x n_hosts), so a short
-    # crawl growing well past its seed count triggers NO mid-crawl
-    # full-seen-scan rebuild (the r6 bench crawl paid two inside four
-    # rounds under seed-only sizing); the per-bucket byte bound still
-    # clamps the geometry.
-    from scalpel_ts_spark.operators.seen import bloom_bits_for
-
+    # init sizing covers seeds + the a-priori per-round discovery
+    # budget (8 links/page x cap x n_hosts), so a short crawl growing
+    # well past its seed count triggers NO mid-crawl full-seen-scan
+    # rebuild (the r6 bench crawl paid two inside four rounds under
+    # seed-only sizing).  Bits per key are cranked so that seed-only
+    # sizing WOULD rebuild here: 95 seen keys after round 2 need 2^18
+    # bits per bucket, 3 seeds only the 2^17 floor.
+    monkeypatch.setattr(seen_ops, "BLOOM_BITS_PER_KEY", 20_000)
     wd = str(tmp_path_factory.mktemp("crawl_bloompresize"))
     eng = CrawlEngine(
         spark, wd, n_hosts=N_HOSTS, cap=8, refill=4, write_docs=False,
     )
     eng.init(SEEDS)
     sized = eng._bloom_bits
-    assert sized >= bloom_bits_for(
-        4 * (len(SEEDS) + 8 * 8 * N_HOSTS),
-        eng.bloom_buckets,
-        eng.bloom_bits_per_key,
+    assert (eng.bloom_buckets, sized) == seen_ops.bloom_geometry(
+        len(SEEDS) + 8 * 8 * N_HOSTS, 32
     )
     eng.run(2)
-    assert eng._seen_rows > 4 * len(SEEDS)  # grew well past the seeds
+    # grew well past the seeds: seed-only sizing would have rebuilt
+    assert seen_ops.bloom_geometry(eng._seen_rows, 32)[1] > 1 << 17
     assert eng._bloom_bits == sized  # ...with no resize/rebuild
-    assert eng.bloom_buckets == eng.manifest["config"]["bloom_buckets"]
+    assert eng.bloom_buckets == eng.manifest["bloom_buckets"]

@@ -25,16 +25,16 @@ def test_per_row_k_exceeding_prune_k_fails_loudly(spark):
     df = _frontier(spark).withColumn(
         "quota", F.when(F.col("host_id") == 0, 300).otherwise(4)
     )
-    # single_phase_max_bytes=0 pins the salted path (the size gate
-    # would otherwise route this tiny input to the one-window shape,
-    # where the prune precondition does not exist)
+    # single_phase=False pins the salted path (the size gate would
+    # otherwise route this tiny input to the one-window shape, where
+    # the prune precondition does not exist)
     out = topk_per_group(
         df,
         group_cols=["host_id"],
         order_cols=[F.col("priority"), F.col("seq")],
         k=F.col("quota"),
         prune_k=8,
-        single_phase_max_bytes=0,
+        single_phase=False,
     )
     with pytest.raises(Exception, match="exceeds prune_k"):
         out.collect()
@@ -53,7 +53,7 @@ def test_per_row_k_within_prune_k_matches_unsalted(spark):
             k=F.col("quota"),
             prune_k=8,
             salt_buckets=4,
-            single_phase_max_bytes=0,  # pin the salted path under test
+            single_phase=False,  # pin the salted path under test
         ).collect()
     )
     w = Window.partitionBy("host_id").orderBy("priority", "seq")
@@ -77,7 +77,7 @@ def test_null_per_row_k_drops_rows_without_failing(spark):
         order_cols=[F.col("priority"), F.col("seq")],
         k=F.col("quota"),
         prune_k=8,
-        single_phase_max_bytes=0,  # salted path: NULL k must not trip
+        single_phase=False,  # salted path: NULL k must not trip
     ).collect()
     assert {r.host_id for r in rows} == {1, 2, 3}
 
@@ -105,7 +105,7 @@ def test_single_phase_gate_matches_salted(spark):
     salted = sorted(
         (r.host_id, r.seq)
         for r in topk_per_group(
-            df, **kw, single_phase_max_bytes=0
+            df, **kw, single_phase=False
         ).collect()
     )
     assert gated == salted

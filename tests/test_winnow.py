@@ -136,42 +136,6 @@ def test_winnow_dedup_matches_allpairs(spark):
     assert (0, 1) in got  # near-dup survives threshold
 
 
-def test_winnow_stop_fingerprint_cap(spark):
-    """max_fp_freq drops boilerplate fingerprints from candidate gen
-    only: pairs sharing a RARE fp are unaffected (inter/uni identical
-    to the lossless run); a pair whose entire overlap is hotter than
-    the cap disappears."""
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    boiler = " shared boilerplate footer line"  # on EVERY doc -> hot fps
-    corpus = [(i, f"unrelated filler number {i} {i}" * 3 + boiler) for i in range(6)]
-    corpus += [(10, base + boiler), (11, base + " tiny edit" + boiler)]
-    df = spark.createDataFrame(corpus, "doc_id bigint, text string")
-
-    lossless = {
-        (r["id_a"], r["id_b"]): (r["inter"], r["uni"])
-        for r in winnow_duplicates(df, threshold=0.3, k=4, w=4).collect()
-    }
-    capped = {
-        (r["id_a"], r["id_b"]): (r["inter"], r["uni"])
-        for r in winnow_duplicates(
-            df, threshold=0.3, k=4, w=4, max_fp_freq=4
-        ).collect()
-    }
-    # the real near-dup pair shares rare (base-text) fps: kept, with
-    # IDENTICAL verification numbers (cap affects candidates only)
-    assert (10, 11) in capped
-    assert capped[(10, 11)] == lossless[(10, 11)]
-    # capped results are a subset of lossless, and any dropped pair's
-    # overlap was pure boilerplate (every shared fp hotter than cap)
-    assert set(capped) <= set(lossless)
-    for pair in set(lossless) - set(capped):
-        a, b = pair
-        fa = set(_py_winnow(dict(corpus)[a], 4, 4))
-        fb = set(_py_winnow(dict(corpus)[b], 4, 4))
-        all_fps = [f for _, t in corpus for f in _py_winnow(t, 4, 4)]
-        assert all(all_fps.count(f) > 4 for f in fa & fb)
-
-
 def test_winnow_pairs_feed_component_clustering(spark):
     """Composability: winnow pairs are (id_a, id_b) edges, so the
     keep-one-per-cluster primitive consumes them directly — an exact
