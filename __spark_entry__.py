@@ -48,6 +48,7 @@ from scalpel_ts_spark.operators.similarity import (
     ivf_topk,
     lsh_topk,
 )
+from scalpel_ts_spark.operators.spread import spread_small
 from scalpel_ts_spark.operators.topk import topk_per_group
 
 SF0001 = "/root/testdata/sf0.001"
@@ -103,9 +104,9 @@ def _spans_html() -> F.Column:
 def q_extract_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _tbl(spark, sf_dir, "documents")
     # parquet scans partition by bytes; extraction cost is per row —
-    # spread the Python stage across all cores explicitly
-    par = spark.sparkContext.defaultParallelism
-    html = docs.repartition(par, "doc_id").select(
+    # spread the Python stage across all cores (size-gated no-op at
+    # scale; operators/spread.py)
+    html = spread_small(docs, "doc_id").select(
         "doc_id", _spans_html().alias("html")
     )
     spans = html.select(
@@ -517,8 +518,6 @@ def q_topk_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the window's own partition column so no extra exchange appears
     (no-op at scale; operators/spread.py).
     """
-    from scalpel_ts_spark.operators.spread import spread_small
-
     li = _tbl(spark, sf_dir, "lineitem")
     return topk_per_group(
         spread_small(li, "l_suppkey")

@@ -86,10 +86,6 @@ class _BindTo:
         return {self.name: value}
 
 
-def _mk(run):
-    return Scraper(run)
-
-
 class _Map(Scraper):
     __slots__ = ("inner", "f")
 

@@ -36,16 +36,6 @@ def _down(z: Zipper):
     return Zipper(z.lefts + (z.focus,), z.rights[0], z.rights[1:])
 
 
-def _insert_left(elem, z: Zipper) -> Zipper:
-    """Insert to the left of focus, focusing the new element."""
-    return Zipper(z.lefts, elem, (z.focus,) + z.rights)
-
-
-def _insert_right(elem, z: Zipper) -> Zipper:
-    """Insert to the right of focus, focusing the new element."""
-    return Zipper(z.lefts + (z.focus,), elem, z.rights)
-
-
 def _zipper_from_specs(specs) -> Zipper:
     """None-bookended zipper focused on the leading bookend
     (SerialScraper.ts:134-139)."""

@@ -66,15 +66,6 @@ def canonicalize_url_sql_duckdb(col: str) -> str:
     )
 
 
-def url_host(canon_url: Column) -> Column:
-    """Host (no port) of an already-canonical URL."""
-    return F.regexp_extract(canon_url, r"^[a-z][a-z0-9+.\-]*://([^/:?]+)", 1)
-
-
 def url_hash(canon_url: Column) -> Column:
     """64-bit identity of a canonical URL (frontier/seen key)."""
     return F.xxhash64(canon_url)
-
-
-def host_hash(host: Column) -> Column:
-    return F.xxhash64(host)

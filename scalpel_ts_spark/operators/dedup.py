@@ -37,6 +37,7 @@ from scalpel_ts_spark.functions.text import (
     winnow_fingerprints,
     word_shingles,
 )
+from scalpel_ts_spark.operators.spread import spread_small
 
 _MERSENNE61 = (1 << 61) - 1
 
@@ -193,8 +194,9 @@ def minhash_signature_udf(n_perm: int = 128, seed: int = 42):
     return _udf
 
 
-def band_keys(sig: Column, n_bands: int, rows_per_band: int) -> Column:
-    """Fold each band of the signature into one 64-bit bucket key.
+def band_keys(sig_col: str, n_bands: int, rows_per_band: int) -> Column:
+    """Fold each band of the signature column ``sig_col`` into one
+    64-bit bucket key.
 
     key = xxhash64(band_idx, band values...) via a rolling polynomial
     inside higher-order functions — JVM-side, no Python.
@@ -203,15 +205,10 @@ def band_keys(sig: Column, n_bands: int, rows_per_band: int) -> Column:
     ``F.aggregate`` lambdas through the Python API cost ~0.4 s of
     py4j round-trips per query CONSTRUCTION (~13 ms per higher-order
     function, measured r6) — a single SQL parse builds the identical
-    expression tree in one hop.  ``sig`` must therefore be a plain
-    column reference (every in-repo caller passes one).
+    expression tree in one hop.  The column name is backtick-quoted,
+    so any name (keywords, dashes, backticks) is a plain reference.
     """
-    sig_sql = sig._jc.toString()
-    if not sig_sql.isidentifier():
-        raise ValueError(
-            "band_keys: sig must be a simple column reference, got "
-            f"{sig_sql!r}"
-        )
+    sig_sql = "`" + sig_col.replace("`", "``") + "`"
 
     def one_band(b: int) -> str:
         # acc stays < 2^31 so acc*1000003 + v fits a long (ANSI-safe);
@@ -259,7 +256,7 @@ def lsh_candidate_pairs(
     with_sig = with_sig.filter(sig_ok)
     bands = with_sig.select(
         F.col(id_col),
-        F.posexplode(band_keys(F.col(sig_col), n_bands, rows_per_band)).alias(
+        F.posexplode(band_keys(sig_col, n_bands, rows_per_band)).alias(
             "band", "key"
         ),
     )
@@ -307,12 +304,11 @@ def minhash_near_duplicates(
             f"n_perm({n_perm}): bands past the signature end would give "
             "every document an identical key (all-pairs blowup)"
         )
-    # row-count repartition first: the shingle/minhash stages cost per
-    # ROW, but an upstream parquet scan partitions by bytes (one small
-    # file => one task) — same rule as the fetch/extract stage
-    par = df.sparkSession.sparkContext.defaultParallelism
+    # row-count spread first: the shingle/minhash stages cost per ROW,
+    # but an upstream parquet scan partitions by bytes (one small file
+    # => one task) — size-gated no-op at scale (operators/spread.py)
     shingled = (
-        df.repartition(par, id_col)
+        spread_small(df, id_col)
         .select(
             F.col(id_col),
             word_shingles(F.col(text_col), shingle_n).alias("shingles"),
@@ -612,9 +608,8 @@ def winnow_duplicates(
     receive it for unpersisting after the action — the same cache
     contract as :func:`minhash_near_duplicates`.
     """
-    par = df.sparkSession.sparkContext.defaultParallelism
     fps = (
-        df.repartition(par, id_col)
+        spread_small(df, id_col)
         .filter(F.col(text_col).isNotNull())
         .select(
             F.col(id_col),
@@ -735,9 +730,8 @@ def simhash_near_duplicates(
     assert max_hamming < 4, "4-band split is lossless only for hamming <= 3"
     from scalpel_ts_spark.functions.text import tokens as tokens_col
 
-    par = df.sparkSession.sparkContext.defaultParallelism
     with_sim = (
-        df.repartition(par, id_col)
+        spread_small(df, id_col)
         .select(F.col(id_col), tokens_col(F.col(text_col)).alias("_toks"))
         # NULL-token docs all hash to simhash 0 and would pair with
         # EACH OTHER at hamming 0 (one megabucket of contentless

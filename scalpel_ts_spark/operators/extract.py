@@ -335,11 +335,11 @@ def fused_fetch_extract_udf(fetch_fn):
     even though the engine drops ``html`` immediately after
     extraction.  Fusing them means bodies are produced and consumed
     inside the same worker process and only the ~10x-smaller extract
-    struct rides Arrow.  This is also the production shape: a real
-    deployment composes the parser into its fetch stage the same way
-    (see ``http_fetch_stage``'s ``extract`` hook) so multi-KB bodies
-    never hit the exchange.  ``fetch_fn``: url -> html string (the
-    synthetic web's ``html_for_url`` in the sandbox).
+    struct rides Arrow.  A production fetch stage should compose the
+    parser the same way so multi-KB bodies never hit the exchange
+    (``http_fetch_stage`` still returns ``html``).  ``fetch_fn``:
+    url -> html string (the synthetic web's ``html_for_url`` in the
+    sandbox).
     """
 
     @F.pandas_udf(CRAWL_EXTRACT_SCHEMA)

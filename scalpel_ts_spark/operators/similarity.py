@@ -30,7 +30,7 @@ from scalpel_ts_spark.functions.vector import (
     lsh_buckets_udf,
     norm,
 )
-from scalpel_ts_spark.operators.spread import _plan_size_bytes, spread_small
+from scalpel_ts_spark.operators.spread import spread_small
 from scalpel_ts_spark.operators.topk import topk_per_group
 
 
@@ -92,13 +92,6 @@ def brute_force_topk(
     ).select("query_id", "neighbor_id", "rank")
 
 
-def _id_buckets(df, id_alias, vec_col, id_col, udf):
-    return df.select(
-        F.col(id_col).alias(id_alias),
-        F.posexplode(udf(F.col(vec_col))).alias("table", "bucket"),
-    )
-
-
 def _with_probe_flips(df, n_bits: int, probe_radius: int):
     """Query-side multi-probe (Lv et al. 2007, "Multi-Probe LSH"):
     besides its own sign-bucket, a query also probes every bucket at
@@ -123,11 +116,6 @@ def _with_probe_flips(df, n_bits: int, probe_radius: int):
     return df.withColumn("bucket", F.explode(variants))
 
 
-#: flip to the id-only discipline once the banded vector shuffle
-#: (plan-size estimate x n_tables) would exceed this
-CARRY_VECTORS_MAX_BYTES = 512 << 20
-
-
 def lsh_candidates(
     left: DataFrame,
     right: DataFrame,
@@ -137,7 +125,6 @@ def lsh_candidates(
     seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    carry_vectors: bool | None = None,
     left_probe_radius: int = 0,
 ) -> DataFrame:
     """Distinct (id_a, vec_a, _na, id_b, vec_b, _nb) pairs colliding
@@ -152,127 +139,57 @@ def lsh_candidates(
     flipping both sides squares the probe volume for the same recall
     one-sided probing buys.
 
-    Two physically different plans produce the same pairs; the gate is
-    the estimated banded vector shuffle volume (measured interleaved
-    A/B, BASELINE.md round 3 — the same volume-gating discipline
-    topk_per_group applies to its strategies):
-
-    * ``carry_vectors=True`` (small inputs): embeddings ride through
-      the (table, bucket) equi-join and the pair-distinct — two fewer
-      exchanges and two fewer jobs, 2.5x faster at benchmark scale.
-    * ``carry_vectors=False`` (the 100-TB shape): candidate generation
-      and pair-dedup run on IDS ONLY — the embeddings (the widest
-      columns in the system) would otherwise ride the join AND the
-      distinct n_tables times per pair; vectors are re-joined once per
-      side onto the already-deduped pairs.  AQE skew-split handles
-      dense buckets.
-
-    ``carry_vectors=None`` decides from Catalyst's optimized-plan size
-    estimate (file-stats based for parquet sources, propagated through
-    projections/unions — no job runs) against CARRY_VECTORS_MAX_BYTES;
-    an unknown/huge estimate falls to the id-only (scale-safe) shape.
+    The embeddings ride through the (table, bucket) equi-join and the
+    pair-distinct, so the output needs no re-join onto the vectors
+    (measured 2.26 s against 5.69 s for an id-only join plus two
+    vector re-joins, BASELINE.md round 3).  AQE skew-split handles
+    dense buckets.
     """
     planes = hyperplanes(dim, n_tables, n_bits, seed)
     udf = lsh_buckets_udf(planes, n_tables, n_bits)
+
     # the hyperplane-signature UDF and the band explode cost per ROW,
     # but a small parquet scan is 1-2 tasks (single row group) — the
     # r6 profile showed the whole bucketing stage of embedding_neardup
     # on 2 tasks, 0.7 s of a 1.5 s query.  Size-gated: no-op at scale.
+    # Each side carries its per-row norm so the exact-cosine
+    # verification/re-rank downstream is dot/(na*nb) — computed once
+    # per ROW here instead of once per candidate PAIR there
+    # (bit-identical; see functions.vector.cosine_with_norms).
+    def bucketed(df: DataFrame) -> DataFrame:
+        return spread_small(df, id_col).select(
+            F.col(id_col).alias("_id"),
+            F.col(vec_col).alias("_vec"),
+            norm(F.col(vec_col)).alias("_n"),
+            F.posexplode(udf(F.col(vec_col))).alias("table", "bucket"),
+        )
+
+    def side(bk: DataFrame, s: str) -> DataFrame:
+        return bk.select(
+            F.col("_id").alias(f"id_{s}"),
+            F.col("_vec").alias(f"vec_{s}"),
+            F.col("_n").alias(f"_n{s}"),
+            "table",
+            "bucket",
+        )
+
+    bk_a = bucketed(left)
     if right is left:
-        left = right = spread_small(left, id_col)
+        # symmetric near-dup generation: the bucketed corpus frame
+        # feeds BOTH join sides — persist it so the signature UDF and
+        # the norm run once over the corpus, not once per side
+        # (measured: the whole scan+UDF pipeline was recomputed per
+        # side, r6).  Session-lifetime cache, same contract as
+        # minhash_near_duplicates' signature persist.
+        bk_a = bk_b = bk_a.persist()
     else:
-        left = spread_small(left, id_col)
-        right = spread_small(right, id_col)
-    if carry_vectors is None:
-        est = _plan_size_bytes(left) + (
-            0 if right is left else _plan_size_bytes(right)
-        )
-        carry_vectors = est * n_tables < CARRY_VECTORS_MAX_BYTES
-    # Output carries per-side norms ("_na"/"_nb") so the exact-cosine
-    # verification/re-rank downstream is dot/(na*nb) — each norm is
-    # computed once per ROW here instead of once per candidate PAIR
-    # there (bit-identical; see functions.vector.cosine_with_norms).
-    if carry_vectors:
-        if right is left:
-            # symmetric near-dup generation: the bucketed corpus frame
-            # feeds BOTH join sides — persist it so the signature UDF
-            # and the norm run once over the corpus, not once per side
-            # (measured: the whole scan+UDF pipeline was recomputed
-            # per side, r6).  Session-lifetime cache, same contract as
-            # minhash_near_duplicates' signature persist.
-            bk = left.select(
-                F.col(id_col).alias("_id"),
-                F.col(vec_col).alias("_vec"),
-                norm(F.col(vec_col)).alias("_n"),
-                F.posexplode(udf(F.col(vec_col))).alias("table", "bucket"),
-            ).persist()
-            a = _with_probe_flips(
-                bk.select(
-                    F.col("_id").alias("id_a"),
-                    F.col("_vec").alias("vec_a"),
-                    F.col("_n").alias("_na"),
-                    "table",
-                    "bucket",
-                ),
-                n_bits,
-                left_probe_radius,
-            )
-            b = bk.select(
-                F.col("_id").alias("id_b"),
-                F.col("_vec").alias("vec_b"),
-                F.col("_n").alias("_nb"),
-                "table",
-                "bucket",
-            )
-        else:
-            a = _with_probe_flips(
-                left.select(
-                    F.col(id_col).alias("id_a"),
-                    F.col(vec_col).alias("vec_a"),
-                    norm(F.col(vec_col)).alias("_na"),
-                    F.posexplode(udf(F.col(vec_col))).alias(
-                        "table", "bucket"
-                    ),
-                ),
-                n_bits,
-                left_probe_radius,
-            )
-            b = right.select(
-                F.col(id_col).alias("id_b"),
-                F.col(vec_col).alias("vec_b"),
-                norm(F.col(vec_col)).alias("_nb"),
-                F.posexplode(udf(F.col(vec_col))).alias("table", "bucket"),
-            )
-        return (
-            a.join(b, ["table", "bucket"])
-            .filter(F.col("id_a") != F.col("id_b"))
-            .dropDuplicates(["id_a", "id_b"])
-            .select("id_a", "vec_a", "_na", "id_b", "vec_b", "_nb")
-        )
-    a = _with_probe_flips(
-        _id_buckets(left, "id_a", vec_col, id_col, udf),
-        n_bits,
-        left_probe_radius,
-    )
-    b = _id_buckets(right, "id_b", vec_col, id_col, udf)
-    pairs = (
-        a.join(b, ["table", "bucket"])
+        bk_b = bucketed(right)
+    a = _with_probe_flips(side(bk_a, "a"), n_bits, left_probe_radius)
+    return (
+        a.join(side(bk_b, "b"), ["table", "bucket"])
         .filter(F.col("id_a") != F.col("id_b"))
-        .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
-    )
-    vec_a = left.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("vec_a"),
-        norm(F.col(vec_col)).alias("_na"),
-    )
-    vec_b = right.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("vec_b"),
-        norm(F.col(vec_col)).alias("_nb"),
-    )
-    return pairs.join(vec_a, "id_a").join(vec_b, "id_b").select(
-        "id_a", "vec_a", "_na", "id_b", "vec_b", "_nb"
+        .select("id_a", "vec_a", "_na", "id_b", "vec_b", "_nb")
     )
 
 
@@ -286,7 +203,6 @@ def lsh_topk(
     seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    carry_vectors: bool | None = None,
     probe_radius: int = 0,
 ) -> DataFrame:
     """Approximate top-k: LSH candidate generation + exact cosine
@@ -299,7 +215,7 @@ def lsh_topk(
     tests/test_training_ops.py pins regression floors)."""
     cand = lsh_candidates(
         queries, corpus, dim, n_tables, n_bits, seed, id_col, vec_col,
-        carry_vectors, left_probe_radius=probe_radius,
+        left_probe_radius=probe_radius,
     ).select(
         F.col("id_a").alias("query_id"),
         F.col("id_b").alias("neighbor_id"),
@@ -527,13 +443,10 @@ def embedding_near_duplicates(
     seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    carry_vectors: bool | None = None,
 ) -> DataFrame:
     """Near-dup pairs (id_a < id_b) with exact cosine >= threshold,
     generated via LSH buckets, verified exactly."""
-    cand = lsh_candidates(
-        df, df, dim, n_tables, n_bits, seed, id_col, vec_col, carry_vectors
-    )
+    cand = lsh_candidates(df, df, dim, n_tables, n_bits, seed, id_col, vec_col)
     return (
         cand.filter(F.col("id_a") < F.col("id_b"))
         .withColumn(

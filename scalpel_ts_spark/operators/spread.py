@@ -5,9 +5,9 @@ and a file is further divisible only at row-group boundaries — a
 single-row-group file is one task no matter what, so a stage whose
 cost is per ROW (vectorized UDF, window rank, explode) can end up on
 1-3 tasks while 30 cores idle (measured: the whole ann_ivf pipeline on
-ONE task, 0.76 s of a 1.5 s query — r6 profile).  The dedup operators
-already repartition for exactly this reason; this helper is the shared,
-SIZE-GATED version of that rule for the similarity/topk entry points:
+ONE task, 0.76 s of a 1.5 s query — r6 profile).  This helper is the
+package's one SIZE-GATED rule for that case, used by the dedup,
+similarity, quality and extraction entry points:
 
 * small input (Catalyst optimized-plan estimate under
   ``SPREAD_MAX_BYTES``): one cheap exchange buys full-core parallelism
@@ -36,9 +36,8 @@ SPREAD_MAX_BYTES = 256 << 20
 def _plan_size_bytes(df: DataFrame) -> int:
     """Catalyst's sizeInBytes estimate — driver-side metadata, no job.
     ``_jdf``/``queryExecution`` are private Spark internals: if a Spark
-    version moves them the estimate reads as huge, which selects every
-    size gate's scale-safe shape, instead of crashing (round-3 verdict
-    finding #3)."""
+    version moves them the estimate reads as huge, which leaves the
+    frame untouched instead of crashing (round-3 verdict finding #3)."""
     try:
         return int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()

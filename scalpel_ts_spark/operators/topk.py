@@ -36,12 +36,6 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from scalpel_ts_spark.operators.spread import _plan_size_bytes
-
-#: per-row-k inputs estimated under this take one exact window; the
-#: two-phase salted prune engages above it (or on unknown estimates)
-SINGLE_PHASE_MAX_BYTES = 256 << 20
-
 
 def topk_per_group(
     df: DataFrame,
@@ -52,7 +46,7 @@ def topk_per_group(
     prune_k: int | None = None,
     rank_col: str = "_rank",
     keep_rank: bool = False,
-    single_phase: bool | None = None,
+    single_phase: bool = False,
 ) -> DataFrame:
     """Keep the top-``k`` rows per group under ``order_cols``.
 
@@ -61,24 +55,14 @@ def topk_per_group(
     deterministic hash of the input row — never random, so plans are
     reproducible.
 
-    When the per-row-``k`` input's optimizer size estimate is under
-    ``SINGLE_PHASE_MAX_BYTES``, the two-phase salted prune (an extra
+    ``single_phase=True`` skips the two-phase salted prune (an extra
     exchange + window pass, there to bound a monster group's reducer
-    input) is skipped for ONE exact window — at a small absolute
-    input even a fully skewed group is a bounded task, and the salt
-    exchange is pure overhead (the crawl's selection pipeline spent 2
-    of its ~10 per-round jobs on it at bench scale, r6).  An unknown
-    estimate reads as huge -> salted path, and the two strategies are
-    row-identical (the salt prune is lossless), so the gate can never
-    change results.
-
-    ``single_phase``: explicit override of the size gate for callers
-    that KNOW the input's row volume better than the optimizer — the
-    crawl engine tracks its frontier row count arithmetically, while
-    the optimizer's estimate of the frontier-x-broadcast join is junk
-    (cardinality products), so the gate never fires there.  True
-    forces the one-window shape, False the salted shape, None keeps
-    the estimate gate.
+    input) for ONE exact window — for callers that KNOW their input's
+    row volume is small, e.g. the crawl engine, which tracks its
+    frontier row count arithmetically (the selection pipeline spent 2
+    of its ~10 per-round jobs on the salt exchange at bench scale,
+    r6).  The two strategies are row-identical (the salt prune is
+    lossless), so the flag can never change results.
     """
     k_col = F.lit(k) if isinstance(k, int) else k
 
@@ -89,19 +73,15 @@ def topk_per_group(
         )
         return out if keep_rank else out.drop(rank_col)
 
-    if isinstance(k, int):
+    if isinstance(k, int) or single_phase:
         # literal limit: Catalyst inserts WindowGroupLimit, a map-side
         # partial top-k that already bounds a hot group's reducer input
         # to k x num_map_partitions — measured faster than explicit
         # two-phase salting (2.4s vs 6.4s on a 2M-row frontier with one
         # host holding 50%).  Salting below is reserved for per-row k
         # (politeness token quotas), where the rank filter is not a
-        # literal and WindowGroupLimit cannot apply.
-        return exact_topk(df)
-
-    if single_phase is None:
-        single_phase = _plan_size_bytes(df) < SINGLE_PHASE_MAX_BYTES
-    if single_phase:
+        # literal and WindowGroupLimit cannot apply, unless the caller
+        # vouches for a small input with single_phase.
         return exact_topk(df)
 
     if prune_k is None:

@@ -724,13 +724,13 @@ class CrawlEngine:
         #    the small side so the frontier is not shuffled for this
         #    join
         budgeted = frontier.join(F.broadcast(st.new_state), "host_id")
-        # single_phase from the ARITHMETIC frontier row count: the
+        # single_phase from the ARITHMETIC frontier row count (the
         # optimizer's estimate of a frontier-x-broadcast join is a
-        # cardinality product (junk), so topk's own size gate never
-        # fires here.  Under ~2M rows even a monster host's pending
-        # set is one bounded task and the salt phase is a pure extra
-        # exchange + window pass; past it (or untracked) the salted
-        # skew-safe shape engages — both shapes are row-identical.
+        # cardinality product, junk).  Under ~2M rows even a monster
+        # host's pending set is one bounded task and the salt phase
+        # is a pure extra exchange + window pass; past it (or
+        # untracked) the salted skew-safe shape engages — both shapes
+        # are row-identical.
         # the frontier row count is tracked arithmetically
         # (rows' = rows - fetched + new); the first round after
         # init/resume pays one parquet-metadata count

@@ -11,7 +11,7 @@ mapping is code, not comments:
   written only after every table of the round committed).
 * :class:`IcebergSnapshotStorage` — the cluster implementation: one
   Iceberg table per logical table, partitioned by a ``round`` column
-  (plus ``bucket(url_hash)`` / ``bucket(host_hash)`` sub-partitioning
+  (plus the ``BUCKET_SPECS`` sub-partitioning, e.g. ``bucket(64, host_id)``,
   declared at table-creation time), written via
   ``writeTo(...).overwrite(round == N)`` so each round commit is one
   atomic Iceberg snapshot that replaces the whole round; the manifest

@@ -125,10 +125,6 @@ def seq_col(url):
     return host_id_col(url) * F.lit(1_000_000_000) + page_id_col(url)
 
 
-def robots_allowed_col(url):
-    return page_id_col(url) % 13 != 7
-
-
 def fetch_robots_rules(hosts_df):
     """Synthetic per-host robots.txt fetch: every host's rules parse
     to 'disallow pages where p % 13 == 7' (matches

@@ -25,16 +25,12 @@ def test_per_row_k_exceeding_prune_k_fails_loudly(spark):
     df = _frontier(spark).withColumn(
         "quota", F.when(F.col("host_id") == 0, 300).otherwise(4)
     )
-    # single_phase=False pins the salted path (the size gate would
-    # otherwise route this tiny input to the one-window shape, where
-    # the prune precondition does not exist)
     out = topk_per_group(
         df,
         group_cols=["host_id"],
         order_cols=[F.col("priority"), F.col("seq")],
         k=F.col("quota"),
         prune_k=8,
-        single_phase=False,
     )
     with pytest.raises(Exception, match="exceeds prune_k"):
         out.collect()
@@ -53,7 +49,6 @@ def test_per_row_k_within_prune_k_matches_unsalted(spark):
             k=F.col("quota"),
             prune_k=8,
             salt_buckets=4,
-            single_phase=False,  # pin the salted path under test
         ).collect()
     )
     w = Window.partitionBy("host_id").orderBy("priority", "seq")
@@ -77,15 +72,14 @@ def test_null_per_row_k_drops_rows_without_failing(spark):
         order_cols=[F.col("priority"), F.col("seq")],
         k=F.col("quota"),
         prune_k=8,
-        single_phase=False,  # salted path: NULL k must not trip
     ).collect()
     assert {r.host_id for r in rows} == {1, 2, 3}
 
 
 def test_single_phase_gate_matches_salted(spark):
-    # the size gate's one-window shape must be row-identical to the
-    # salted two-phase shape (the prune is lossless), including on
-    # NULL quotas
+    # single_phase=True's one-window shape must be row-identical to the
+    # default salted two-phase shape (the prune is lossless), including
+    # on NULL quotas
     df = _frontier(spark).withColumn(
         "quota",
         F.when(F.col("host_id") == 0, F.lit(None).cast("int")).otherwise(
@@ -98,14 +92,12 @@ def test_single_phase_gate_matches_salted(spark):
         k=F.col("quota"),
         prune_k=8,
     )
-    gated = sorted(
+    one_window = sorted(
         (r.host_id, r.seq)
-        for r in topk_per_group(df, **kw).collect()  # default gate: small
+        for r in topk_per_group(df, **kw, single_phase=True).collect()
     )
     salted = sorted(
-        (r.host_id, r.seq)
-        for r in topk_per_group(
-            df, **kw, single_phase=False
-        ).collect()
+        (r.host_id, r.seq) for r in topk_per_group(df, **kw).collect()
     )
-    assert gated == salted
+    assert one_window == salted
+    assert {h for h, _ in salted} == {1, 2, 3}
