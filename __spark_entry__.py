@@ -27,6 +27,7 @@ from scalpel_ts_spark.functions.url import (
     canonicalize_url,
     canonicalize_url_sql_duckdb,
 )
+from scalpel_ts_spark.operators.cuckoo import CuckooTable
 from scalpel_ts_spark.operators.dedup import (
     exact_duplicates,
     minhash_near_duplicates,
@@ -41,7 +42,12 @@ from scalpel_ts_spark.operators.quality import (
     top_ngram_repetition,
     top_ngram_repetition_sql,
 )
-from scalpel_ts_spark.operators.seen import build_bloom, new_urls
+from scalpel_ts_spark.operators.seen import (
+    Bloom,
+    build_filter,
+    new_urls,
+    update_filter,
+)
 from scalpel_ts_spark.operators.similarity import (
     brute_force_topk,
     embedding_near_duplicates,
@@ -377,8 +383,8 @@ def q_seen_antijoin_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     seen = customer.filter(F.col("c_custkey") % 3 == 0).select(
         F.col("c_custkey").alias("key")
     )
-    blooms = build_bloom(seen, hash_col="key", n_buckets=8)
-    return new_urls(cand, seen, blooms, hash_col="key", n_buckets=8)
+    blooms = build_filter(seen, Bloom, hash_col="key", n_buckets=8)
+    return new_urls(cand, seen, blooms, Bloom, hash_col="key", n_buckets=8)
 
 
 _SEEN_ANTIJOIN_SQL = """
@@ -393,12 +399,6 @@ def q_seen_cuckoo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cuckoo prefilter (deletable variant) + exact anti-join, after
     an insert+delete update — must equal plain NOT EXISTS on the
     post-update seen set."""
-    from scalpel_ts_spark.operators.cuckoo import (
-        build_cuckoo,
-        cuckoo_prefilter,
-        update_cuckoo,
-    )
-
     orders = _tbl(spark, sf_dir, "orders")
     customer = _tbl(spark, sf_dir, "customer")
     cand = orders.select(F.col("o_custkey").alias("key")).distinct()
@@ -412,16 +412,12 @@ def q_seen_cuckoo(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_custkey").alias("key")
     )
     # filter state follows the exact seen set through insert+delete
-    tables = update_cuckoo(
-        build_cuckoo(seen0, hash_col="key", n_partitions=8),
-        inserts=adds, deletes=dels, hash_col="key", n_partitions=8,
+    tables = update_filter(
+        build_filter(seen0, CuckooTable, hash_col="key", n_buckets=8),
+        CuckooTable, inserts=adds, deletes=dels, hash_col="key", n_buckets=8,
     )
     seen = seen0.unionByName(adds).subtract(dels)  # EXCEPT DISTINCT
-    tagged = cuckoo_prefilter(cand, tables, hash_col="key", n_partitions=8)
-    definitely_new = tagged.filter(F.col("maybe_seen") == 0).drop("maybe_seen")
-    suspects = tagged.filter(F.col("maybe_seen") == 1).drop("maybe_seen")
-    verified = suspects.join(seen, "key", "left_anti")
-    return definitely_new.unionByName(verified)
+    return new_urls(cand, seen, tables, CuckooTable, hash_col="key", n_buckets=8)
 
 
 _SEEN_CUCKOO_SQL = """

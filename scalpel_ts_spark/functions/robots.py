@@ -308,10 +308,8 @@ def robots_filter_stage(
       disallow for server errors (there is no separate status column to
       lose on the way through the cache table);
     * if the robots table carries several rows for one host (e.g. a
-      re-fetch landed next to a cached row), the row with the greatest
-      ``fetch_time`` column wins when present, else the lexicographically
-      greatest body — deterministic under pandas cogroup order either
-      way.
+      re-fetch landed next to a cached row), the lexicographically
+      greatest body wins — deterministic under pandas cogroup order.
     """
     out_schema = StructType(
         list(candidates.schema.fields) + [StructField("allowed", IntegerType())]
@@ -321,14 +319,7 @@ def robots_filter_stage(
         if len(rob_pdf) == 0:
             return None
         if len(rob_pdf) > 1:
-            if "fetch_time" in rob_pdf.columns:
-                rob_pdf = rob_pdf.sort_values(
-                    ["fetch_time", robots_txt_col], na_position="first"
-                )
-            else:
-                rob_pdf = rob_pdf.sort_values(
-                    robots_txt_col, na_position="first"
-                )
+            rob_pdf = rob_pdf.sort_values(robots_txt_col, na_position="first")
         return rob_pdf[robots_txt_col].iloc[-1]
 
     def _vet(cand_pdf: pd.DataFrame, rob_pdf: pd.DataFrame) -> pd.DataFrame:

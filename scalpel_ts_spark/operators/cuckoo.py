@@ -1,21 +1,21 @@
-"""Partition-owned cuckoo filters — the deletable URL-seen prefilter.
+"""Cuckoo filter — the deletable kind of URL-seen prefilter.
 
 North rule: "partitioned bloom-filter (with cuckoo-filter fallback
 for deletes) URL-seen set".  Blooms cannot delete (clearing a bit may
 clear other keys); a cuckoo filter stores displaceable 16-bit
 fingerprints in two candidate buckets, so membership, insert AND
-delete are all O(1) — the engine uses it where crawl policy must
-*retract* URLs (robots rule changes, recrawl scheduling, GDPR purges)
-without rebuilding the prefilter.
+delete are all O(1) — for crawl policy that must *retract* URLs
+(robots rule changes, recrawl scheduling, GDPR purges) without
+rebuilding the prefilter.
 
-Same architecture as operators/seen.py blooms: one filter per
-``pmod(url_hash, n_partitions)`` partition, stored as a binary column,
-maintained/probed with cogrouped Arrow batches (numpy inside, no
-per-row Python).  The exact seen table remains the authority; the
-filter is only ever a prefilter (identical FP-safety argument as the
-bloom path).
+:class:`CuckooTable` is one hash bucket's filter.  It has the
+interface of :class:`~scalpel_ts_spark.operators.seen.Bloom` plus
+``delete_many``, so it rides the one prefilter pipeline in
+operators/seen.py (``build_filter``/``update_filter``/``prefilter``/
+``new_urls``).  The exact seen table remains the authority; the
+filter is only ever a prefilter.
 
-Layout per partition: ``n_buckets`` buckets x ``bucket_size`` slots of
+Layout per table: ``n_buckets`` buckets x ``bucket_size`` slots of
 uint16 fingerprints (0 = empty).  Classic Fan et al. partial-key
 cuckoo hashing: bucket2 = bucket1 XOR H(fingerprint).
 """
@@ -23,22 +23,6 @@ cuckoo hashing: bucket2 = bucket1 XOR H(fingerprint).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    IntegerType,
-    StructField,
-    StructType,
-)
-
-CUCKOO_SCHEMA = StructType(
-    [
-        StructField("part", IntegerType()),
-        StructField("table", BinaryType()),
-    ]
-)
 
 _FP_SEED = np.uint64(0x9E3779B97F4A7C15)
 _MAX_KICKS = 500
@@ -53,14 +37,15 @@ _HEADER_BYTES = 16
 
 
 class CuckooSaturationError(RuntimeError):
-    """A partition's cuckoo table could not hold every key.
+    """A bucket's cuckoo table could not hold every key.
 
     Dropped fingerprints would be silent FALSE NEGATIVES — callers of
-    :func:`cuckoo_prefilter` rely on "no false negatives" to let
-    ``maybe_seen = 0`` rows skip the exact anti-join, so saturation
-    must fail loudly instead of corrupting the seen set.  Fix by
-    raising ``n_buckets``/``bucket_size`` (capacity per partition) or
-    ``n_partitions`` (keys per partition).
+    :func:`~scalpel_ts_spark.operators.seen.prefilter` rely on "no
+    false negatives" to let ``maybe_seen = 0`` rows skip the exact
+    anti-join, so saturation must fail loudly instead of corrupting
+    the seen set.  Fix by raising the table geometry
+    (``n_buckets``/``bucket_size``, capacity per table) or the
+    pipeline's ``n_buckets`` (keys per table).
     """
 
 
@@ -77,8 +62,8 @@ class CuckooDeleteError(RuntimeError):
 
 
 class CuckooTable:
-    """In-memory cuckoo filter over uint16 fingerprints (one
-    partition's state; (de)serialized to a binary column)."""
+    """In-memory cuckoo filter over uint16 fingerprints (one hash
+    bucket's state; (de)serialized to a binary column)."""
 
     __slots__ = ("n_buckets", "bucket_size", "slots")
 
@@ -244,134 +229,3 @@ class CuckooTable:
             .copy()
         )
         return cls(nb, bs, slots)
-
-
-def _partitioned(df: DataFrame, hash_col: str, n_partitions: int) -> DataFrame:
-    return df.select(
-        F.pmod(F.col(hash_col), F.lit(n_partitions)).cast("int").alias("part"),
-        F.col(hash_col).alias("url_hash"),
-    )
-
-
-def build_cuckoo(
-    seen: DataFrame,
-    hash_col: str = "url_hash",
-    n_partitions: int = 32,
-    n_buckets: int = 1 << 14,
-    bucket_size: int = 4,
-) -> DataFrame:
-    """One cuckoo table per hash partition: (part, table)."""
-
-    def _build(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame({"part": [], "table": []})
-        part = int(pdf["part"].iloc[0])
-        t = CuckooTable(n_buckets, bucket_size)
-        failed = t.insert_many(pdf["url_hash"].to_numpy(dtype=np.int64))
-        if failed:
-            raise CuckooSaturationError(
-                f"cuckoo partition {part} saturated: {failed}/{len(pdf)} "
-                f"fingerprints dropped (capacity ~{n_buckets * bucket_size} "
-                f"slots); raise n_buckets/bucket_size or n_partitions"
-            )
-        return pd.DataFrame({"part": [part], "table": [t.to_bytes()]})
-
-    return (
-        _partitioned(seen, hash_col, n_partitions)
-        .groupBy("part")
-        .applyInPandas(_build, CUCKOO_SCHEMA)
-    )
-
-
-def update_cuckoo(
-    tables: DataFrame,
-    inserts: DataFrame | None = None,
-    deletes: DataFrame | None = None,
-    hash_col: str = "url_hash",
-    n_partitions: int = 32,
-    n_buckets: int = 1 << 14,
-    bucket_size: int = 4,
-) -> DataFrame:
-    """Apply inserts then deletes partition-locally (the delete path
-    blooms cannot offer).  Either side may be None/empty."""
-    spark = tables.sparkSession
-    empty = spark.createDataFrame([], "url_hash long")
-    ins = _partitioned(inserts if inserts is not None else empty,
-                       hash_col if inserts is not None else "url_hash",
-                       n_partitions).withColumn("op", F.lit(1))
-    dels = _partitioned(deletes if deletes is not None else empty,
-                        hash_col if deletes is not None else "url_hash",
-                        n_partitions).withColumn("op", F.lit(-1))
-    delta = ins.unionByName(dels)
-
-    def _apply(delta_pdf: pd.DataFrame, tab_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(tab_pdf) > 0:
-            t = CuckooTable.from_bytes(
-                tab_pdf["table"].iloc[0], n_buckets, bucket_size
-            )
-            part = int(tab_pdf["part"].iloc[0])
-        else:
-            t = CuckooTable(n_buckets, bucket_size)
-            part = int(delta_pdf["part"].iloc[0])
-        if len(delta_pdf):
-            ins_h = delta_pdf.loc[delta_pdf["op"] == 1, "url_hash"]
-            del_h = delta_pdf.loc[delta_pdf["op"] == -1, "url_hash"]
-            if len(ins_h):
-                failed = t.insert_many(ins_h.to_numpy(dtype=np.int64))
-                if failed:
-                    raise CuckooSaturationError(
-                        f"cuckoo partition {part} saturated on update: "
-                        f"{failed}/{len(ins_h)} fingerprints dropped; raise "
-                        f"n_buckets/bucket_size or n_partitions"
-                    )
-            if len(del_h):
-                misses = t.delete_many(del_h.to_numpy(dtype=np.int64))
-                if misses:
-                    raise CuckooDeleteError(
-                        f"cuckoo partition {part}: {misses}/{len(del_h)} "
-                        f"deletes targeted keys never inserted"
-                    )
-        return pd.DataFrame({"part": [part], "table": [t.to_bytes()]})
-
-    return (
-        delta.groupBy("part")
-        .cogroup(tables.groupBy("part"))
-        .applyInPandas(_apply, CUCKOO_SCHEMA)
-    )
-
-
-def cuckoo_prefilter(
-    candidates: DataFrame,
-    tables: DataFrame,
-    hash_col: str = "url_hash",
-    n_partitions: int = 32,
-    n_buckets: int = 1 << 14,
-    bucket_size: int = 4,
-) -> DataFrame:
-    """Tag candidates with ``maybe_seen`` (cogrouped, vectorized) —
-    drop-in replacement for the bloom prefilter where deletes are
-    required."""
-    with_part = candidates.withColumn(
-        "_part", F.pmod(F.col(hash_col), F.lit(n_partitions)).cast("int")
-    )
-    out_schema = StructType(
-        with_part.schema.fields + [StructField("maybe_seen", IntegerType())]
-    )
-
-    def _probe(cand_pdf: pd.DataFrame, tab_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(cand_pdf) == 0:
-            return cand_pdf.assign(maybe_seen=pd.array([], dtype="int32"))
-        if len(tab_pdf) == 0:
-            return cand_pdf.assign(
-                maybe_seen=np.zeros(len(cand_pdf), dtype=np.int32)
-            )
-        t = CuckooTable.from_bytes(
-            tab_pdf["table"].iloc[0], n_buckets, bucket_size
-        )
-        hit = t.contains_many(cand_pdf[hash_col].to_numpy(dtype=np.int64))
-        return cand_pdf.assign(maybe_seen=hit.astype(np.int32))
-
-    cg = with_part.groupBy("_part").cogroup(
-        tables.withColumnRenamed("part", "_part").groupBy("_part")
-    )
-    return cg.applyInPandas(_probe, out_schema).drop("_part")

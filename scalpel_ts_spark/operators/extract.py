@@ -19,7 +19,6 @@ Scale notes:
 
 from __future__ import annotations
 
-from typing import Optional
 from urllib.parse import urljoin
 
 import pandas as pd
@@ -276,17 +275,14 @@ def crawl_extract_tokens(tokens):
     return spans, links, title
 
 
-def crawl_extract_udf(link_scraper: Optional[Scraper] = None):
+def crawl_extract_udf():
     """(url, html) -> struct(spans, links, title) in ONE parse per doc.
 
     links are href attributes of anchor tags (reference combinator
     ``attrs('href', tag('a'))``) resolved against the document URL;
-    title is ``text(tag('title'))``.  The default plan runs the
-    fused flat pass (:func:`crawl_extract_tokens`); passing a custom
-    ``link_scraper`` takes the generic TagSpec/DFS path.
+    title is ``text(tag('title'))``.  The plan runs the fused flat
+    pass (:func:`crawl_extract_tokens`).
     """
-    if link_scraper is not None:
-        return _crawl_extract_generic_udf(link_scraper)
 
     @F.pandas_udf(CRAWL_EXTRACT_SCHEMA)
     def _udf(url: pd.Series, html: pd.Series) -> pd.DataFrame:
@@ -345,41 +341,6 @@ def fused_fetch_extract_udf(fetch_fn):
     @F.pandas_udf(CRAWL_EXTRACT_SCHEMA)
     def _udf(url: pd.Series) -> pd.DataFrame:
         return _extract_batch(url, url.map(fetch_fn))
-
-    return _udf
-
-
-def _crawl_extract_generic_udf(link_scraper: Scraper):
-    """Generic-plan variant: arbitrary link scraper over the TagSpec."""
-    import scalpel_ts_spark.core.scraper as S
-    import scalpel_ts_spark.core.select as Sel
-
-    span_scraper = SpanExtractor()
-    title_scraper = S.text(Sel.tag("title"))
-
-    @F.pandas_udf(CRAWL_EXTRACT_SCHEMA)
-    def _udf(url: pd.Series, html: pd.Series) -> pd.DataFrame:
-        spans_out, links_out, title_out = [], [], []
-        for u, doc in zip(url, html):
-            if doc is None:
-                spans_out.append(None)
-                links_out.append(None)
-                title_out.append(None)
-                continue
-            spec = tags_to_spec(parse(doc))
-            spans = span_scraper.run(spec)
-            raw_links = link_scraper.run(spec)
-            title = title_scraper.run(spec)
-            if raw_links is NOTHING:
-                links = []
-            else:
-                links = [urljoin(u, link) for link in raw_links]
-            spans_out.append(None if spans is NOTHING else spans)
-            links_out.append(links)
-            title_out.append(None if title is NOTHING else title)
-        return pd.DataFrame(
-            {"spans": spans_out, "links": links_out, "title": title_out}
-        )
 
     return _udf
 

@@ -64,10 +64,11 @@ from scalpel_ts_spark.operators.extract import (
 from scalpel_ts_spark.operators.seen import (
     BLOOM_MIN_BUCKETS,
     BLOOM_ROWS_PER_BUCKET,
+    Bloom,
     bloom_geometry,
-    build_bloom,
+    build_filter,
     new_urls,
-    update_bloom,
+    update_filter,
 )
 from scalpel_ts_spark.operators.topk import topk_per_group
 from scalpel_ts_spark.plans.storage import ParquetSnapshotStorage, SnapshotStorage
@@ -334,7 +335,7 @@ class CrawlEngine:
         # of a macro-round's discovery in one task).  Expected
         # discovery ≈ link amplification (~8/page) x round budget
         # (cap x n_hosts); the probe itself asserts a hard per-bucket
-        # row bound (see bloom_prefilter) so a mismatch fails loudly
+        # row bound (see seen.prefilter) so a mismatch fails loudly
         # instead of OOMing.  At the 10^10-URL design point
         # (10^8-URL rounds) this derives ~800 buckets — matching the
         # >=512 the seen module docstring sizes for.  The same
@@ -524,10 +525,11 @@ class CrawlEngine:
             init_writes.append(
                 (
                     self._write,
-                    build_bloom(
+                    build_filter(
                         frontier,
+                        Bloom,
+                        self._bloom_bits,
                         n_buckets=self.bloom_buckets,
-                        bits_per_bucket=self._bloom_bits,
                     ),
                     "bloom",
                 )
@@ -977,6 +979,7 @@ class CrawlEngine:
                 discovered,
                 st.seen,
                 st.blooms,
+                Bloom,
                 n_buckets=self.bloom_buckets,
                 persisted_out=st.caches,
                 dedup=True,
@@ -1278,20 +1281,18 @@ class CrawlEngine:
                 if compacted
                 else self._seen_union(nxt)
             )
-            bloom_df = build_bloom(
-                rebuild_src,
-                n_buckets=want_buckets,
-                bits_per_bucket=self._bloom_bits,
+            bloom_df = build_filter(
+                rebuild_src, Bloom, self._bloom_bits, n_buckets=want_buckets
             )
         else:
             # incremental: OR this round's new hashes into the
             # previous bitmaps partition-locally — never rescans
             # seen history (existing bitmaps keep their stored
             # geometry; the param only sizes brand-new buckets)
-            bloom_df = update_bloom(
-                st.blooms, st.fresh.select("url_hash"),
+            bloom_df = update_filter(
+                st.blooms, Bloom, self._bloom_bits,
+                inserts=st.fresh.select("url_hash"),
                 n_buckets=self.bloom_buckets,
-                bits_per_bucket=self._bloom_bits,
             )
         # bitmap rows are ~bits/8 bytes each; pack ~64 MB per file at
         # whatever geometry the bitmaps currently have

@@ -84,15 +84,15 @@ class ParquetSnapshotStorage:
     def __init__(self, spark: SparkSession, workdir: str):
         self.spark = spark
         self.workdir = workdir
-        #: per-table schema cache — METADATA only (the engine writes
-        #: these tables itself, so the schema of round N's read is the
-        #: schema of the round-N write).  Passing it explicitly on
-        #: read skips parquet schema inference, which cost one
+        #: per-(table, round) schema cache — METADATA only (the engine
+        #: writes these tables itself, so the schema of round N's read
+        #: is the schema of the round-N write).  Passing it explicitly
+        #: on read skips parquet schema inference, which cost one
         #: footer-read job per table per round (~6 extra tiny jobs a
         #: round on a 43-job round loop, r6 profile).  Keyed per
-        #: TABLE, not per round: a table whose schema legitimately
+        #: ROUND, not per table: a table whose schema legitimately
         #: changes between rounds (fetch_log gaining a status column)
-        #: refreshes the entry on write.
+        #: must still read each older round with that round's schema.
         self._schemas: dict = {}
 
     def _path(self, table: str, rnd: int) -> str:
@@ -100,7 +100,7 @@ class ParquetSnapshotStorage:
 
     def write(self, df: DataFrame, table: str, rnd: int) -> None:
         df.write.mode("overwrite").parquet(self._path(table, rnd))
-        self._schemas[table] = df.schema
+        self._schemas[table, rnd] = df.schema
 
     def write_small(self, df: DataFrame, table: str, rnd: int) -> None:
         """Collect-to-driver + single pyarrow parquet file.
@@ -120,21 +120,23 @@ class ParquetSnapshotStorage:
             shutil.rmtree(path)
         os.makedirs(path)
         pq.write_table(tbl, os.path.join(path, "part-00000.parquet"))
-        self._schemas[table] = df.schema
-
-    def _reader(self, table: str):
-        schema = self._schemas.get(table)
-        if schema is not None:
-            return self.spark.read.schema(schema)
-        return self.spark.read
+        self._schemas[table, rnd] = df.schema
 
     def read(self, table: str, rnd: int) -> DataFrame:
-        return self._reader(table).parquet(self._path(table, rnd))
+        return self.read_union(table, [rnd])
 
     def read_union(self, table: str, rounds: Sequence[int]) -> DataFrame:
-        return self._reader(table).parquet(
-            *[self._path(table, r) for r in rounds]
+        """A cached schema is passed only when every requested round
+        has that same one; otherwise parquet merges the rounds'
+        schemas (columns a round lacks read as null)."""
+        schemas = {self._schemas.get((table, r)) for r in rounds}
+        schema = schemas.pop() if len(schemas) == 1 else None
+        reader = (
+            self.spark.read.schema(schema)
+            if schema is not None
+            else self.spark.read.option("mergeSchema", "true")
         )
+        return reader.parquet(*[self._path(table, r) for r in rounds])
 
     def save_manifest(self, manifest: dict) -> None:
         # The manifest IS the round-commit record: a crash mid-write

@@ -4,11 +4,11 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from scalpel_ts_spark.operators.cuckoo import (
-    CuckooTable,
-    build_cuckoo,
-    cuckoo_prefilter,
-    update_cuckoo,
+from scalpel_ts_spark.operators.cuckoo import CuckooTable
+from scalpel_ts_spark.operators.seen import (
+    build_filter,
+    prefilter,
+    update_filter,
 )
 
 
@@ -40,10 +40,10 @@ def seen_df(spark):
 
 
 def test_build_and_prefilter(spark, seen_df):
-    tables = build_cuckoo(seen_df, n_partitions=8, n_buckets=1 << 12)
+    tables = build_filter(seen_df, CuckooTable, 1 << 12, n_buckets=8)
     tables.persist().count()
     cand = spark.range(2500, 7500).select(F.xxhash64("id").alias("url_hash"))
-    tagged = cuckoo_prefilter(cand, tables, n_partitions=8, n_buckets=1 << 12)
+    tagged = prefilter(cand, tables, CuckooTable, n_buckets=8)
     seen_keys = {r["url_hash"] for r in seen_df.collect()}
     rows = tagged.collect()
     # zero false negatives: every truly-seen candidate is flagged
@@ -59,19 +59,17 @@ def test_build_and_prefilter(spark, seen_df):
 
 
 def test_update_with_deletes(spark, seen_df):
-    tables = build_cuckoo(seen_df, n_partitions=8, n_buckets=1 << 12)
+    tables = build_filter(seen_df, CuckooTable, 1 << 12, n_buckets=8)
     ins = spark.range(5000, 6000).select(F.xxhash64("id").alias("url_hash"))
     dels = spark.range(0, 1000).select(F.xxhash64("id").alias("url_hash"))
-    updated = update_cuckoo(
-        tables, inserts=ins, deletes=dels, n_partitions=8, n_buckets=1 << 12
+    updated = update_filter(
+        tables, CuckooTable, 1 << 12, inserts=ins, deletes=dels, n_buckets=8
     )
     updated.persist().count()
     probe = spark.range(0, 6000).select(F.xxhash64("id").alias("url_hash"))
     tagged = {
         r["url_hash"]: r["maybe_seen"]
-        for r in cuckoo_prefilter(
-            probe, updated, n_partitions=8, n_buckets=1 << 12
-        ).collect()
+        for r in prefilter(probe, updated, CuckooTable, n_buckets=8).collect()
     }
     kept = spark.range(1000, 6000).select(F.xxhash64("id").alias("url_hash"))
     for r in kept.collect():  # still-present keys: no false negatives
@@ -89,7 +87,7 @@ def test_build_raises_on_saturation(spark):
     # silently drop fingerprints (dropped = false negatives downstream)
     seen = spark.range(0, 4000).select(F.xxhash64("id").alias("url_hash"))
     with pytest.raises(Exception) as exc_info:
-        build_cuckoo(seen, n_partitions=1, n_buckets=1 << 8).collect()
+        build_filter(seen, CuckooTable, 1 << 8, n_buckets=1).collect()
     assert "CuckooSaturationError" in str(exc_info.value) or isinstance(
         exc_info.value, CuckooSaturationError
     )
@@ -99,13 +97,13 @@ def test_update_raises_on_delete_of_never_inserted_key(spark):
     from scalpel_ts_spark.operators.cuckoo import CuckooDeleteError
 
     seen = spark.range(0, 100).select(F.xxhash64("id").alias("url_hash"))
-    tables = build_cuckoo(seen, n_partitions=1, n_buckets=1 << 10)
+    tables = build_filter(seen, CuckooTable, 1 << 10, n_buckets=1)
     bogus = spark.range(10_000, 10_050).select(
         F.xxhash64("id").alias("url_hash")
     )
     with pytest.raises(Exception) as exc_info:
-        update_cuckoo(
-            tables, deletes=bogus, n_partitions=1, n_buckets=1 << 10
+        update_filter(
+            tables, CuckooTable, 1 << 10, deletes=bogus, n_buckets=1
         ).collect()
     assert "CuckooDeleteError" in str(exc_info.value) or isinstance(
         exc_info.value, CuckooDeleteError

@@ -88,15 +88,15 @@ def test_budget_join_broadcasts_host_state_not_frontier(spark):
 
 
 def test_bloom_split_sends_only_suspects_to_antijoin(spark):
-    from scalpel_ts_spark.operators.seen import build_bloom, new_urls
+    from scalpel_ts_spark.operators.seen import Bloom, build_filter, new_urls
 
     orders = _tbl(spark, "orders")
     cand = orders.select(F.col("o_custkey").alias("key")).distinct()
     seen = orders.filter(F.col("o_orderkey") % 3 == 0).select(
         F.col("o_custkey").alias("key")
     )
-    blooms = build_bloom(seen, hash_col="key", n_buckets=8)
-    out = new_urls(cand, seen, blooms, hash_col="key", n_buckets=8)
+    blooms = build_filter(seen, Bloom, hash_col="key", n_buckets=8)
+    out = new_urls(cand, seen, blooms, Bloom, hash_col="key", n_buckets=8)
     plan = _formatted(out)
     # exactly one anti-join node...
     assert plan.count("Join type: LeftAnti") == 1

@@ -85,3 +85,16 @@ def test_protocol_required_stubs_raise():
     # the OPTIONAL write_small stub stays inert (identity-filtered by
     # resolve_write_small, never called)
     assert Missing().write_small(None, "t", 0) is None
+
+
+def test_schema_cache_is_per_round(spark, tmp_path):
+    """A table whose schema gains a column in round 2 must still read
+    round 1 with round 1's schema, and a union over both rounds must
+    show the new column (null for round 1)."""
+    st = ParquetSnapshotStorage(spark, str(tmp_path))
+    st.write(spark.createDataFrame([(1,)], "a long"), "t", 1)
+    st.write(spark.createDataFrame([(2, "x")], "a long, c string"), "t", 2)
+    assert st.read("t", 1).columns == ["a"]
+    both = st.read_union("t", [1, 2])
+    assert "c" in both.columns
+    assert sorted((r.a, r.c) for r in both.collect()) == [(1, None), (2, "x")]

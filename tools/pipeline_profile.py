@@ -1,6 +1,5 @@
 """Per-query stage/job profile for the bench pipeline queries and the
-bench-shaped crawl, via the live UI's REST API (the same approach as
-tools/stage_profile.py but per queries() entry).
+bench-shaped crawl, via the live UI's REST API, per queries() entry.
 
 For each named query: one untimed warm rep, then one timed rep whose
 NEW jobs and stages (diffed by id against the pre-rep snapshot) are
