@@ -65,16 +65,20 @@ SF0001 = "/root/testdata/sf0.001"
 #: from the parquet bytes.  Passing an explicit schema skips the
 #: per-read schema-inference job (one task + a driver hop that showed
 #: up as 25-50 ms at the head of every timed query rep, r6 profile);
-#: on a real deployment this is the catalog's job.
-_SCHEMA_CACHE: dict[str, object] = {}
+#: on a real deployment this is the catalog's job.  Keyed by the
+#: path's ``(st_mtime_ns, st_size)`` too: a parquet rewritten at the
+#: same path with a new schema must not be read with the old one.
+_SCHEMA_CACHE: dict[tuple, object] = {}
 
 
 def _tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
-    schema = _SCHEMA_CACHE.get(path)
+    st = os.stat(path)
+    key = (path, st.st_mtime_ns, st.st_size)
+    schema = _SCHEMA_CACHE.get(key)
     if schema is None:
         df = spark.read.parquet(path)
-        _SCHEMA_CACHE[path] = df.schema
+        _SCHEMA_CACHE[key] = df.schema
         return df
     return spark.read.schema(schema).parquet(path)
 

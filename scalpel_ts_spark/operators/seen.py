@@ -17,8 +17,8 @@ the authority, so correctness never depends on the filter's FP rate.
 One pipeline, two filter kinds, over one interface (``from_bytes``,
 ``to_bytes``, ``insert_many``, ``contains_many``):
 
-* :class:`Bloom` — the crawl engine's filter: a bitmap whose geometry
-  is its own byte length; it never rejects a key.
+* :class:`Bloom` — a bitmap whose geometry is its own byte length; it
+  never rejects a key.
 * :class:`~scalpel_ts_spark.operators.cuckoo.CuckooTable` — the
   deletable fallback: it also has ``delete_many``, and its
   ``insert_many`` can fail when its table is full, which raises
@@ -28,6 +28,11 @@ At the 10^10-URL design point: 10 bits/key => ~12 GiB of bloom bits
 across >= 512 buckets of ~24 MiB — each bucket fits comfortably in an
 executor; buckets co-partition with the candidate side so the probe is
 a map-side operation after one hash-partition exchange.
+
+The crawl engine does not run a prefilter: it calls ``new_urls`` with
+no filters.  The ``left_anti`` join builds on the seen side, which is
+exchanged in full either way, so a prefilter only pays when the seen
+side is never shuffled (BASELINE.md r7).
 """
 
 from __future__ import annotations
@@ -46,62 +51,11 @@ from scalpel_ts_spark.operators.cuckoo import (
 #: one row per bucket: the bucket's serialized filter
 FILTER_SCHEMA = "bucket int, bits binary"
 
-#: bloom geometry (see :func:`bloom_geometry`): the bucket-count floor,
-#: and the discovery rows per bucket the crawl engine sizes for (one
-#: bucket = one cogroup task's pandas heap; its probe fails above 4x)
-BLOOM_MIN_BUCKETS = 32
+#: candidate rows per bucket a probe is sized for (one bucket = one
+#: cogroup task's pandas heap; the probe raises above 4x)
 BLOOM_ROWS_PER_BUCKET = 1_000_000
-BLOOM_BITS_PER_KEY = 10
 #: hash functions per key; build, update and probe must agree
 BLOOM_HASH_FUNCS = 5
-#: per-bucket bitmap byte bound: one bucket's bitmap is one cogroup
-#: task's numpy heap, so past it the bucket COUNT grows instead of
-#: the bitmaps.  64 MiB/bucket = ~13M keys/bucket at 10 bits x4
-#: headroom; a 10^10-URL seen set at the 32-bucket floor grows to
-#: 1024 buckets instead of carrying 2 GiB bitmaps per task.
-BLOOM_MAX_BUCKET_BYTES = 64 << 20
-
-
-def bloom_bits_for(
-    n_keys: int,
-    n_buckets: int,
-    bits_per_key: int = 10,
-    floor: int = 1 << 17,
-) -> int:
-    """Per-bucket bitmap size (bits, power of two) for an expected key
-    count.
-
-    ~10 bits/key keeps a bloom's false-positive rate ~1%; a bitmap
-    sized far below that saturates (FP -> 100%) and the anti-join
-    bypass silently stops bypassing anything — still CORRECT (the
-    exact anti-join is always the authority) but the whole discovery
-    volume then rides the expensive exchange.  Callers pass the key
-    count they expect the seen set to reach before the next rebuild
-    (the crawl engine resizes at every compaction, where the full
-    seen set is rewritten anyway)."""
-    want = max(floor, (bits_per_key * max(1, n_keys)) // max(1, n_buckets))
-    bits = floor
-    while bits < want:
-        bits <<= 1
-    return bits
-
-
-def bloom_geometry(n_keys: int, min_buckets: int) -> tuple[int, int]:
-    """``(buckets, bits_per_bucket)`` for a seen set expected to hold
-    ``n_keys`` keys: ``BLOOM_BITS_PER_KEY`` bits/key with x4 growth
-    headroom, so bitmaps stay near ~1% FP until the set quadruples.
-    ``min_buckets`` doubles until a bitmap fits
-    ``BLOOM_MAX_BUCKET_BYTES``.  Callers only GROW the geometry they
-    hold, and change the bucket count only at a full rebuild: a bucket
-    with no bloom row reads "definitely new" under the build-time
-    bucketing."""
-    buckets = min_buckets
-    while (
-        bloom_bits_for(4 * n_keys, buckets, BLOOM_BITS_PER_KEY)
-        > 8 * BLOOM_MAX_BUCKET_BYTES
-    ):
-        buckets <<= 1
-    return buckets, bloom_bits_for(4 * n_keys, buckets, BLOOM_BITS_PER_KEY)
 
 
 def _positions(hashes: np.ndarray, m_bits: int):
@@ -116,9 +70,9 @@ class Bloom:
     """One bucket's bloom bitmap; ``n_bits`` sizes a new, empty one.
 
     The geometry is SELF-DESCRIBING (derived from the stored bytes,
-    not a config param): the engine resizes bitmaps at compaction
-    rebuilds, and a resumed or mid-resize probe must test against each
-    bucket's actual size."""
+    not a config param): buckets built at different sizes can share
+    one filter table, and a probe tests each against its actual
+    size."""
 
     __slots__ = ("bits",)
 
@@ -296,8 +250,8 @@ def prefilter(
             # fail loudly, not OOM an executor (round-4 verdict #3)
             raise ValueError(
                 f"filter bucket overflow: {len(cand_pdf)} candidate rows in "
-                f"one bucket exceed {max_rows}; raise n_buckets "
-                f"(CrawlEngine derives it from BLOOM_ROWS_PER_BUCKET)"
+                f"one bucket exceed {max_rows}; raise n_buckets to about "
+                f"candidate rows / BLOOM_ROWS_PER_BUCKET"
             )
         if dedup_by_hash and len(cand_pdf):
             cand_pdf = cand_pdf.drop_duplicates(
@@ -326,7 +280,6 @@ def new_urls(
     kind=Bloom,
     hash_col: str = "url_hash",
     n_buckets: int = 32,
-    persisted_out: list | None = None,
     dedup: bool = False,
 ) -> DataFrame:
     """candidates ∖ seen — exact, with an optional ``kind`` prefilter
@@ -335,7 +288,8 @@ def new_urls(
     ``dedup=True`` also drops duplicate ``hash_col`` rows (the crawl's
     per-round link dedup): with filters it rides the bucket cogroup for
     free (see :func:`prefilter`); without, it is a plain hash-keyed
-    ``dropDuplicates`` before the anti-join.
+    ``dropDuplicates`` whose exchange the anti-join reuses, so the
+    candidates are shuffled once (the crawl engine's seen check).
 
     The exact ``left_anti`` join is the authority; when filters are
     supplied, ONLY filter-positive rows pay for it.  At 10^10 URLs the
@@ -347,11 +301,7 @@ def new_urls(
     A single conditional anti-join (``ON hash = seen AND maybe_seen =
     1``) would be wrong-shaped — anti-join semantics force every tagged
     row through the exchange since non-matching rows must be kept.
-
-    ``persisted_out``: callers running inside a loop (the crawl engine)
-    pass a list; the internal persisted frame is appended so it can be
-    unpersisted after the result is materialized.  One-shot callers may
-    omit it (the cache dies with the session).
+    The tagged frame's cache lives as long as the session.
     """
     if filters is None:
         if dedup:
@@ -360,8 +310,6 @@ def new_urls(
     tagged = prefilter(
         candidates, filters, kind, hash_col, n_buckets, dedup_by_hash=dedup
     ).persist()
-    if persisted_out is not None:
-        persisted_out.append(tagged)
     definite_new = tagged.filter(F.col("maybe_seen") == 0).drop("maybe_seen")
     suspects = tagged.filter(F.col("maybe_seen") == 1).drop("maybe_seen")
     checked = suspects.join(seen.select(hash_col), hash_col, "left_anti")

@@ -14,9 +14,9 @@ right, which pass one ``_Round`` state object:
        │  (one parse: spans, links, title)
     explode links ── canonicalize                    _discover_dedup
        │
-    bloom prefilter + hash dedup (ONE bucket
-    exchange) + exact anti-join vs seen
-    (operators.seen)
+    hash dedup + exact anti-join vs seen, on ONE
+    url_hash exchange of the discovered side
+    (operators.seen.new_urls)
        │
     robots rules for new hosts (cache table)         _robots
        │
@@ -25,8 +25,15 @@ right, which pass one ``_Round`` state object:
     set-difference); next frontier, token spend
        │
     write snapshots: docs+, fetch_log+, seen+,       _commit
-       frontier', host_state', bloom', robots'       (_next_bloom)
+       frontier', host_state', robots'
     manifest (metrics + per-partition lineage)       _record
+
+The seen check runs no bloom: a ``left_anti`` join builds on its right
+side, the seen set, so the seen set is exchanged in full with or
+without a prefilter, and a bloom would only add its own cogroup,
+bitmap exchange, update and write to every round (BASELINE.md r7 has
+the measurements).  The partitioned bloom/cuckoo prefilter stays an
+operator in :mod:`scalpel_ts_spark.operators.seen`.
 
 Storage goes through the :mod:`scalpel_ts_spark.plans.storage` seam:
 the sandbox uses ``ParquetSnapshotStorage`` (every table versioned by
@@ -61,15 +68,7 @@ from scalpel_ts_spark.operators.extract import (
     crawl_extract_udf,
     fused_fetch_extract_udf,
 )
-from scalpel_ts_spark.operators.seen import (
-    BLOOM_MIN_BUCKETS,
-    BLOOM_ROWS_PER_BUCKET,
-    Bloom,
-    bloom_geometry,
-    build_filter,
-    new_urls,
-    update_filter,
-)
+from scalpel_ts_spark.operators.seen import new_urls
 from scalpel_ts_spark.operators.topk import topk_per_group
 from scalpel_ts_spark.plans.storage import ParquetSnapshotStorage, SnapshotStorage
 from scalpel_ts_spark.sources.synthetic import (
@@ -80,9 +79,7 @@ from scalpel_ts_spark.sources.synthetic import (
     seq_col,
 )
 
-TABLES = (
-    "frontier", "seen", "host_state", "docs", "fetch_log", "bloom", "robots"
-)
+TABLES = ("frontier", "seen", "host_state", "docs", "fetch_log", "robots")
 
 #: ~24 MB of longs — comfortably under Spark's driver/executor broadcast
 #: comfort zone; above this the anti-join falls back to a plain shuffle
@@ -90,7 +87,7 @@ DEFAULT_BROADCAST_FETCHED_MAX = 3_000_000
 
 #: config keys of options that no longer exist: manifests written
 #: before their removal still resume (each one's old value only tuned
-#: performance; ``bloom_buckets`` moved to a top-level manifest key)
+#: performance or selected the retired engine bloom)
 _RETIRED_CONFIG_KEYS = (
     "narrow_probe",
     "bloom_buckets",
@@ -99,7 +96,12 @@ _RETIRED_CONFIG_KEYS = (
     "bloom_max_bucket_bytes",
     "bloom_presize_keys",
     "broadcast_fetched_max",
+    "use_bloom",
 )
+
+#: top-level manifest keys of the retired engine bloom's sizing state;
+#: resume drops them from manifests written while it existed
+_RETIRED_MANIFEST_KEYS = ("bloom_buckets", "bloom_bits", "seen_rows")
 
 #: per-host tables (one row per host) are collected and written driver-
 #: side below this row count: no distributed-write job, no commit-
@@ -234,7 +236,6 @@ class _Round:
     n_errors: int = 0
     # discover_dedup, robots
     seen: DataFrame | None = None
-    blooms: DataFrame | None = None
     new_keys: DataFrame | None = None
     robots: DataFrame | None = None
     robots_obs: Observation | None = None
@@ -278,7 +279,6 @@ class CrawlEngine:
         cap: int = 8,
         refill: int = 4,
         salt_buckets: int = 16,
-        use_bloom: bool = True,
         write_docs: bool = True,
         compact_every: int = 8,
         storage: SnapshotStorage | None = None,
@@ -328,27 +328,6 @@ class CrawlEngine:
         self.cap = cap
         self.refill = refill
         self.salt_buckets = salt_buckets
-        self.use_bloom = use_bloom
-        # one bloom bucket = one cogroup task's pandas heap, so the
-        # bucket count must scale with the per-round discovery volume
-        # (round-4 verdict #3: a static 32 at a 100x crawl puts ~1/32
-        # of a macro-round's discovery in one task).  Expected
-        # discovery ≈ link amplification (~8/page) x round budget
-        # (cap x n_hosts); the probe itself asserts a hard per-bucket
-        # row bound (see seen.prefilter) so a mismatch fails loudly
-        # instead of OOMing.  At the 10^10-URL design point
-        # (10^8-URL rounds) this derives ~800 buckets — matching the
-        # >=512 the seen module docstring sizes for.  The same
-        # estimate presizes the bitmaps at init().
-        self._expected_discovery = 8 * cap * n_hosts
-        #: bloom geometry STATE (operators.seen.bloom_geometry): set at
-        #: init(), grown only at rebuilds, pinned by resume()
-        self.bloom_buckets = max(
-            BLOOM_MIN_BUCKETS,
-            -(-self._expected_discovery // BLOOM_ROWS_PER_BUCKET),
-        )
-        self._bloom_bits = 1 << 17  # re-derived at init()/rebuilds
-        self._seen_rows = 0
         self.write_docs = write_docs
         self.compact_every = compact_every
         self.storage = storage or ParquetSnapshotStorage(spark, workdir)
@@ -376,7 +355,6 @@ class CrawlEngine:
             "cap": self.cap,
             "refill": self.refill,
             "salt_buckets": self.salt_buckets,
-            "use_bloom": self.use_bloom,
             "compact_every": self.compact_every,
             "max_fetch_retries": self.max_fetch_retries,
         }
@@ -446,15 +424,6 @@ class CrawlEngine:
         base = max(r for r in self._seen_full_rounds() if r <= upto)
         return self.storage.read_union("seen", range(base, upto + 1))
 
-    def _save_manifest(self):
-        # the seen/bloom sizing state commits with every manifest save
-        self.manifest.update(
-            seen_rows=self._seen_rows,
-            bloom_bits=self._bloom_bits,
-            bloom_buckets=self.bloom_buckets,
-        )
-        self.storage.save_manifest(self.manifest)
-
     # --- lifecycle --------------------------------------------------------
 
     def init(self, seeds):
@@ -478,16 +447,12 @@ class CrawlEngine:
             F.lit(0).alias("fails"),  # fetch-retry count (bounded)
         )
         # the seed count rides the frontier write as an Observation
-        # (no separate count job): it seeds the arithmetic row
-        # trackers AND sizes the bloom bitmaps below
+        # (no separate count job): it seeds the arithmetic row tracker
         observed, seed_obs = _with_count(frontier, "n")
         self._write(observed, "frontier", 0)
-        n_seeds = _obs_count(seed_obs, "n")
-        self._frontier_rows = n_seeds
-        self._seen_rows = n_seeds
+        self._frontier_rows = _obs_count(seed_obs, "n")
         # the remaining round-0 snapshots are independent of each other
-        # (only the bloom sizing needed n_seeds, known now) — submit
-        # them concurrently like the round commit's multi-sink pool
+        # — submit them concurrently like the round commit's pool
         init_writes = [
             (self._write, frontier.select("url", "url_hash"), "seen"),
             (
@@ -513,27 +478,6 @@ class CrawlEngine:
                 "robots",
             )
         )
-        if self.use_bloom:
-            # bitmaps sized for the seed set PLUS the a-priori
-            # discovery budget: seed-only sizing forced an early
-            # full-seen-scan rebuild on every crawl whose frontier
-            # outgrows its seeds (the bench crawl paid two rebuilds
-            # inside four rounds, r6 profile: 3-4 s apiece)
-            self.bloom_buckets, self._bloom_bits = bloom_geometry(
-                n_seeds + self._expected_discovery, self.bloom_buckets
-            )
-            init_writes.append(
-                (
-                    self._write,
-                    build_filter(
-                        frontier,
-                        Bloom,
-                        self._bloom_bits,
-                        n_buckets=self.bloom_buckets,
-                    ),
-                    "bloom",
-                )
-            )
         with ThreadPoolExecutor(max_workers=len(init_writes)) as pool:
             futures = [
                 pool.submit(fn, df, table, 0)
@@ -545,7 +489,7 @@ class CrawlEngine:
         self._host_rows = 0
         self.manifest["rounds"] = []
         self.manifest["seen_full_rounds"] = [0]
-        self._save_manifest()
+        self.storage.save_manifest(self.manifest)
 
     @classmethod
     def resume(
@@ -564,11 +508,10 @@ class CrawlEngine:
         storage = storage or ParquetSnapshotStorage(spark, workdir)
         manifest = storage.load_manifest()
         cfg = manifest["config"]
-        # bloom bucket count: a top-level key since it became state;
-        # older manifests kept it in the config
-        bloom_buckets = manifest.get("bloom_buckets", cfg.get("bloom_buckets"))
         for key in _RETIRED_CONFIG_KEYS:
             cfg.pop(key, None)
+        for key in _RETIRED_MANIFEST_KEYS:
+            manifest.pop(key, None)
         eng = cls(
             spark,
             workdir,
@@ -585,22 +528,6 @@ class CrawlEngine:
         eng._host_rows = sum(
             m.get("robots_cache_misses", 0) for m in manifest["rounds"]
         )
-        # bloom sizing state: bitmap SIZE on disk is self-describing
-        # (the probe derives each bucket's geometry from its stored
-        # bytes), so _bloom_bits only steers FUTURE rebuilds — but the
-        # BUCKET COUNT is not: a bucket with no bloom row reads as
-        # "definitely new", which is only correct under the build-time
-        # bucketing.  The constructor may derive a different count
-        # than the stored one (init() may have grown it, or the rule
-        # changed since), and probing at the wrong count would
-        # cogroup candidates against empty bloom rows and silently
-        # bypass the exact anti-join — so pin the stored geometry;
-        # bucket growth happens only through a rebuild, which rewrites
-        # bitmaps and manifest together.
-        if bloom_buckets is not None:
-            eng.bloom_buckets = bloom_buckets
-        eng._seen_rows = manifest.get("seen_rows", 0)
-        eng._bloom_bits = manifest.get("bloom_bits", eng._bloom_bits)
         return eng
 
     # --- production robots helpers -----------------------------------------
@@ -939,8 +866,7 @@ class CrawlEngine:
 
     def _discover_dedup(self, st: _Round) -> None:
         """Link discovery -> canonical URLs -> the genuinely-new set
-        (bloom prefilter + in-bucket hash dedup + exact anti-join
-        against seen)."""
+        (hash dedup + exact anti-join against seen)."""
         # 4. link discovery -> canonical candidate URLs.
         # NOT persisted: at discovery volume re-running the regex pass
         # from the (persisted) fetched content costs less than
@@ -960,31 +886,18 @@ class CrawlEngine:
             # discovery time
             st.robots_prev = st.robots_prev.unionByName(st.prefetch_rules)
 
-        # 5. seen-set dedup FIRST: the in-bucket hash dedup rides the
-        #    bloom cogroup's url_hash-derived exchange (one exchange
-        #    for dedup + probe, replacing the former string-keyed
-        #    dropDuplicates shuffle — round-3 verdict's top lever), and
-        #    the exact anti-join sees only bloom suspects.  Only
-        #    (url, host_id, url_hash) travels through the exchange.
+        # 5. seen-set dedup FIRST: the url_hash-keyed dropDuplicates
+        #    and the exact anti-join share one hash exchange of the
+        #    discovered side (tests/test_plan_shapes.py pins it).  Only
+        #    (url, host_id, url_hash) travels through that exchange.
         st.seen = self._seen_union(st.r)
-        st.blooms = self._read("bloom", st.r) if self.use_bloom else None
         discovered = candidates_raw.select(
             "url", "host_id", url_hash(F.col("url")).alias("url_hash")
         )
         # persisted: the genuinely-new set (post-dedup, post-anti-join
         # — orders of magnitude smaller than raw discovery) feeds both
         # the new-host robots lookup and the robots vet below
-        st.new_keys = st.cache(
-            new_urls(
-                discovered,
-                st.seen,
-                st.blooms,
-                Bloom,
-                n_buckets=self.bloom_buckets,
-                persisted_out=st.caches,
-                dedup=True,
-            )
-        )
+        st.new_keys = st.cache(new_urls(discovered, st.seen, dedup=True))
 
     def _robots(self, st: _Round) -> None:
         """The round's robots cache table: rules are fetched only for
@@ -1035,8 +948,8 @@ class CrawlEngine:
         # commutes with dedup and anti-join, so it vets the (much
         # smaller) genuinely-new set instead of the full discovery
         # volume; the ordering keys (priority, seq) are likewise
-        # derived post-dedup only.  Denied URLs never reach seen/
-        # frontier/bloom — exactly as when the filter ran first.
+        # derived post-dedup only.  Denied URLs never reach seen or
+        # frontier — exactly as when the filter ran first.
         if self.robots_stage is not None:
             allowed = robots_filter_stage(
                 self._with_path(st.new_keys), st.robots
@@ -1062,7 +975,7 @@ class CrawlEngine:
         )
         # the new-URL count rides the seen write as an Observation
         # instead of paying a separate count job; fresh stays persisted
-        # because three sinks consume it (seen, frontier, bloom)
+        # because two sinks consume it (seen, frontier)
         observed, st.n_new_obs = _with_count(fresh, "n_new")
         st.seen_delta = observed.select("url", "url_hash")
 
@@ -1118,11 +1031,11 @@ class CrawlEngine:
         """Commit the round's snapshots; marks ``seen_dedup`` after the
         seen write and ``commit`` at the end.
 
-        The seven tables are independent and their expensive inputs
+        The six tables are independent and their expensive inputs
         (fetched, fresh, new_rules) are persisted+materialized before
         their consumers race, so the writes are submitted CONCURRENTLY
         from driver threads — Spark schedules them as parallel jobs,
-        collapsing commit latency from the sum of seven jobs to
+        collapsing commit latency from the sum of six jobs to
         roughly the slowest one.  (On a cluster this is the standard
         multi-sink pattern; atomicity stays at round granularity
         because the manifest is written only after every write
@@ -1130,7 +1043,7 @@ class CrawlEngine:
         stats job (docs, fetch_log, host_state read only
         fetched_all/new_state cache) start EARLY, overlapping the seen
         write's discovery pipeline; tables consuming `fresh`/`new_keys`
-        (frontier, bloom, robots) wait for the seen write to populate
+        (frontier, robots) wait for the seen write to populate
         those caches — racing them cold would recompute the dedup plan
         per consumer (caches are per-executor on a real cluster)."""
         nxt = st.r + 1
@@ -1179,7 +1092,6 @@ class CrawlEngine:
             seen_write = (
                 _coalesce_for_write(st.seen_delta, st.n_fetched * 8), "seen"
             )
-        want_buckets = self.bloom_buckets
         # the pool spans every submission and the result loop, so an
         # exception anywhere (the main-thread seen write included)
         # still waits for the writes already in flight
@@ -1199,21 +1111,16 @@ class CrawlEngine:
             # early cache-only writes run beside it
             self._write(*seen_write, nxt)
             st.mark("seen_dedup")
-            # the tracked seen count sizes the bloom rebuild below
             st.n_new = _obs_count(st.n_new_obs, "n_new")
-            self._seen_rows += st.n_new
             frontier_est = self._frontier_rows + 8 * st.n_fetched
-            late_writes = [
-                (_coalesce_for_write(st.next_frontier, frontier_est),
-                 "frontier")
-            ]
-            if self.use_bloom:
-                bloom_df, want_buckets = self._next_bloom(st, compacted)
-                late_writes.append((bloom_df, "bloom"))
-            futures += [
-                pool.submit(self._write, df, table, nxt)
-                for df, table in late_writes
-            ]
+            futures.append(
+                pool.submit(
+                    self._write,
+                    _coalesce_for_write(st.next_frontier, frontier_est),
+                    "frontier",
+                    nxt,
+                )
+            )
             # robots is per-host (write_small fast path) but consumes
             # new_rules -> new_keys, so it belongs to the late batch
             futures.append(
@@ -1226,12 +1133,6 @@ class CrawlEngine:
             # marking it earlier would let a failed-then-retried round
             # treat a mere delta as the entire seen set
             self.manifest.setdefault("seen_full_rounds", [0]).append(nxt)
-        # switch the engine to a grown bucket count only AFTER the
-        # rebuilt bitmaps landed: probe bucketing must always match the
-        # latest COMMITTED build (a failed write must leave the next
-        # probe on the old geometry, in-process or via resume — the
-        # manifest commits both together)
-        self.bloom_buckets = want_buckets
         if st.denied_obs is not None:
             st.n_denied = _obs_count(st.denied_obs, "n_denied")
         if st.kept_obs is not None:
@@ -1242,65 +1143,6 @@ class CrawlEngine:
             )
         st.release()
         st.mark("commit")
-
-    def _next_bloom(self, st: _Round, compacted: bool):
-        """The next round's bloom bitmaps, ready to write, and their
-        bucket count: rebuilt from the seen set when it outgrew the
-        current sizing, else this round's new hashes OR-ed into the
-        previous ones."""
-        # bucket-count growth (bloom_geometry doubles buckets once a
-        # bitmap would pass BLOOM_MAX_BUCKET_BYTES) is safe only here,
-        # because the rebuild below writes fresh bitmaps keyed by the
-        # new count and the manifest records it in the same commit
-        # (probe bucketing must always match the on-disk build
-        # bucketing; see resume()).
-        want_buckets, want_bits = bloom_geometry(
-            self._seen_rows, self.bloom_buckets
-        )
-        # upward-only (at unchanged bucket count): the seen set
-        # never shrinks, so a smaller want_bits can only mean lost
-        # tracking (e.g. a resumed pre-sizing manifest) — keep the
-        # larger on-disk geometry.  A bucket-count change always
-        # rebuilds (per-bucket bits legitimately shrink then).
-        if want_buckets > self.bloom_buckets or want_bits > self._bloom_bits:
-            # RESIZE + rebuild: without this a fixed bitmap
-            # saturates as the crawl grows (at 4M seen keys the
-            # old fixed 2^17 bits ran ~1 bit/key, FP~100%, and the
-            # bloom bypassed nothing — the whole discovery volume
-            # rode the exact anti-join it exists to bypass).  The
-            # rebuild scans the full seen set: the just-rewritten
-            # compacted snapshot when this round compacted, else
-            # the bounded snapshot+delta union.  The x4 sizing
-            # headroom means this fires only when the seen set has
-            # QUADRUPLED past the last sizing — O(log growth)
-            # rebuilds over a whole crawl, each one seen-scan.
-            self._bloom_bits = want_bits
-            nxt = st.r + 1
-            rebuild_src = (
-                self._read("seen", nxt)
-                if compacted
-                else self._seen_union(nxt)
-            )
-            bloom_df = build_filter(
-                rebuild_src, Bloom, self._bloom_bits, n_buckets=want_buckets
-            )
-        else:
-            # incremental: OR this round's new hashes into the
-            # previous bitmaps partition-locally — never rescans
-            # seen history (existing bitmaps keep their stored
-            # geometry; the param only sizes brand-new buckets)
-            bloom_df = update_filter(
-                st.blooms, Bloom, self._bloom_bits,
-                inserts=st.fresh.select("url_hash"),
-                n_buckets=self.bloom_buckets,
-            )
-        # bitmap rows are ~bits/8 bytes each; pack ~64 MB per file at
-        # whatever geometry the bitmaps currently have
-        return _coalesce_for_write(
-            bloom_df,
-            want_buckets,
-            rows_per_file=max(1, (64 << 20) // max(1, self._bloom_bits // 8)),
-        ), want_buckets
 
     def _record(self, st: _Round) -> dict:
         """The committed round's metrics, appended to the manifest,
@@ -1324,7 +1166,7 @@ class CrawlEngine:
             metrics["robots_denied"] = st.n_denied
         self.manifest["rounds"].append(metrics)
         self.round = nxt
-        self._save_manifest()
+        self.storage.save_manifest(self.manifest)
         return metrics
 
     def run(self, rounds: int):

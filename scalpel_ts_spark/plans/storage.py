@@ -171,8 +171,8 @@ class IcebergSnapshotStorage:
         CREATE TABLE <ns>.seen (url string, url_hash bigint, round int)
         USING iceberg PARTITIONED BY (round, bucket(512, url_hash))
 
-    so the bloom buckets, the seen anti-join, and the table layout all
-    co-partition on ``url_hash``.
+    so the seen anti-join and the table layout co-partition on
+    ``url_hash``.
     """
 
     #: per-table extra bucket spec appended to `round` partitioning
@@ -201,7 +201,10 @@ class IcebergSnapshotStorage:
     VERSION_COL = "_snapshot_round"
 
     #: every table the engine writes (storage must not depend on the
-    #: engine module, so the list is owned here; reset() drops them all)
+    #: engine module, so the list is owned here; reset() drops them all).
+    #: ``bloom`` is no longer written, but a crawl from before the engine
+    #: dropped its bloom left one in the namespace, and reset() must
+    #: still drop it so a fresh crawl starts clean.
     ENGINE_TABLES = (
         "frontier", "seen", "host_state", "docs", "fetch_log", "bloom",
         "robots", "manifest",

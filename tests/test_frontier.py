@@ -3,9 +3,10 @@
 1. the Spark engine's ordered fetch log and final URL-seen set equal
    the single-process reference simulator's under the same seed list
    and politeness budget;
-2. a run resumed from a mid-crawl snapshot produces an identical tail;
-3. the bloom prefilter changes nothing (it is a prefilter, the exact
-   anti-join is the authority).
+2. a run resumed from a mid-crawl snapshot produces an identical tail,
+   also after a crash inside a round's commit;
+3. the seen-set prefilter operator changes nothing (it is a prefilter,
+   the exact anti-join is the authority), on the simulator's crawl.
 """
 
 import json
@@ -15,7 +16,6 @@ import pytest
 
 from scalpel_ts_spark.operators import seen as seen_ops
 from scalpel_ts_spark.operators.cuckoo import CuckooTable
-from scalpel_ts_spark.plans import frontier as frontier_plan
 from scalpel_ts_spark.plans.frontier import CrawlEngine
 from scalpel_ts_spark.plans.simulator import simulate_crawl
 from scalpel_ts_spark.sources.synthetic import make_url
@@ -74,49 +74,33 @@ def test_resume_produces_identical_tail(spark, tmp_path_factory, sim_state):
     )
     eng.init(SEEDS)
     eng.run(2)
-    # a manifest written before the retired options were removed
-    # carries each one in its config (at its old default), with the
-    # bloom bucket count stored there instead of at the top level;
-    # resume must drop the options and still pin the bucket count
+    # a manifest written before the retired options and the engine
+    # bloom were removed carries each option in its config (at its old
+    # default) and the bloom's sizing state at the top level; resume
+    # must drop both and continue
     mpath = os.path.join(wd, "manifest.json")
     with open(mpath) as f:
         manifest = json.load(f)
     manifest["config"].update(
         narrow_probe=False,
-        bloom_buckets=manifest.pop("bloom_buckets"),
+        bloom_buckets=32,
         bloom_target_rows_per_bucket=1_000_000,
         bloom_bits_per_key=10,
         bloom_max_bucket_bytes=64 << 20,
         bloom_presize_keys=None,
         broadcast_fetched_max=3_000_000,
+        use_bloom=True,
     )
+    manifest.update(bloom_buckets=32, bloom_bits=1 << 17, seen_rows=95)
     with open(mpath, "w") as f:
         json.dump(manifest, f)
     # simulate a crash: reopen from the manifest and continue
     eng2 = CrawlEngine.resume(spark, wd)
     assert eng2.round == 2
-    assert eng2.bloom_buckets == eng.bloom_buckets
     eng2.run(ROUNDS - 2)
+    assert not {"bloom_buckets", "bloom_bits", "seen_rows"} & set(eng2.manifest)
     assert _engine_log(eng2) == _sim_log(sim_state)
     assert {r.url for r in eng2.seen().collect()} == sim_state.seen
-
-
-def test_prefilter_is_transparent(spark, tmp_path_factory):
-    wd = str(tmp_path_factory.mktemp("crawl_nobloom"))
-    eng = CrawlEngine(
-        spark,
-        wd,
-        n_hosts=N_HOSTS,
-        cap=8,
-        refill=4,
-        use_bloom=False,
-        write_docs=False,
-    )
-    eng.init(SEEDS)
-    eng.run(ROUNDS)
-    sim = _sim()
-    assert _engine_log(eng) == _sim_log(sim)
-    assert {r.url for r in eng.seen().collect()} == sim.seen
 
 
 def test_commit_waits_for_writes_in_flight(spark, tmp_path_factory):
@@ -165,6 +149,48 @@ def test_commit_waits_for_writes_in_flight(spark, tmp_path_factory):
     assert storage.load_manifest()["rounds"] == []
 
 
+@pytest.mark.parametrize("compact_every", [8, 2], ids=["delta", "compacted"])
+def test_resume_after_crash_between_seen_and_frontier_writes(
+    spark, tmp_path_factory, sim_state, compact_every
+):
+    # round 2 crashes on its frontier write after its seen snapshot
+    # (a delta, or a full compacted one) has landed; the round stays
+    # uncommitted, and the resumed crawl must redo it to the same
+    # crawl without reading the orphaned seen snapshot twice
+    from scalpel_ts_spark.plans.storage import ParquetSnapshotStorage
+
+    class CrashStorage(ParquetSnapshotStorage):
+        def _crash(self, write, df, table, rnd):
+            if table == "frontier" and rnd == 2:
+                assert os.path.isdir(self._path("seen", 2))
+                raise OSError("frontier write failed")
+            write(df, table, rnd)
+
+        def write(self, df, table, rnd):
+            self._crash(super().write, df, table, rnd)
+
+        def write_small(self, df, table, rnd):
+            self._crash(super().write_small, df, table, rnd)
+
+    wd = str(tmp_path_factory.mktemp(f"crawl_crash_{compact_every}"))
+    eng = CrawlEngine(
+        spark, wd, n_hosts=N_HOSTS, cap=8, refill=4,
+        compact_every=compact_every, write_docs=False,
+        storage=CrashStorage(spark, wd),
+    )
+    eng.init(SEEDS)
+    eng.run(1)
+    with pytest.raises(OSError, match="frontier write failed"):
+        eng.run_round()
+    eng2 = CrawlEngine.resume(spark, wd)
+    assert eng2.round == 1
+    eng2.run(ROUNDS - 1)
+    assert _engine_log(eng2) == _sim_log(sim_state)
+    seen_urls = [r.url for r in eng2.seen().collect()]
+    assert len(seen_urls) == len(set(seen_urls))
+    assert set(seen_urls) == sim_state.seen
+
+
 def test_new_urls_dedup_matches_python(spark):
     # dedup=True keeps one row per new hash, through the prefilter
     # split-union (in-bucket dedup) of both filter kinds and the
@@ -193,27 +219,63 @@ def test_new_urls_dedup_matches_python(spark):
         ) == expected, f"kind={kind}"
 
 
-def test_bloom_buckets_autoscale_with_budget(
-    spark, tmp_path_factory, monkeypatch
-):
-    # round-4 verdict #3: bucket count must track expected discovery
-    # volume (8 links x cap x n_hosts), BLOOM_MIN_BUCKETS is a floor.
-    # The 10^10 design point derives >= 512 from the real target
-    big = CrawlEngine(
-        spark, str(tmp_path_factory.mktemp("crawl_bb10")),
-        n_hosts=2_000_000, cap=50, write_docs=False,
-    )
-    assert big.bloom_buckets >= 512
-    monkeypatch.setattr(frontier_plan, "BLOOM_ROWS_PER_BUCKET", 5)
-    wd = str(tmp_path_factory.mktemp("crawl_scalebb"))
-    eng = CrawlEngine(
-        spark, wd, n_hosts=N_HOSTS, cap=8, refill=4, write_docs=False,
-    )
-    # ceil(8*8*20 / 5) = 256 buckets, well above the 32 floor
-    assert eng.bloom_buckets == 256
-    eng.init(SEEDS)
-    eng.run(ROUNDS)
-    assert _engine_log(eng) == _sim_log(_sim())
+def _crawl_seen_and_links(spark, sim):
+    # the simulator's final seen set, and the out-links of every seen
+    # page as candidates (duplicates, seen and new URLs mixed), keyed
+    # by the engine's url_hash
+    from scalpel_ts_spark.functions.url import url_hash
+    from scalpel_ts_spark.sources.synthetic import out_link_ids, parse_url_ids
+
+    links = [
+        make_url(*t)
+        for u in sorted(sim.seen)
+        for t in out_link_ids(*parse_url_ids(u), N_HOSTS)
+    ]
+
+    def keyed(urls):
+        df = spark.createDataFrame([(u,) for u in urls], "url string")
+        return df.withColumn("url_hash", url_hash(df.url))
+
+    return keyed(sorted(sim.seen)), keyed(links), links
+
+
+def test_prefilter_is_transparent(spark, sim_state):
+    # the prefilter is a prefilter, the exact anti-join is the
+    # authority: on a crawl's seen set and discovered links, new_urls
+    # through either filter kind returns exactly the no-filter rows
+    # (duplicates kept), and no seen candidate is tagged definitely new
+    from scalpel_ts_spark.operators.seen import build_filter, new_urls, prefilter
+
+    seen, cand, links = _crawl_seen_and_links(spark, sim_state)
+    expected = sorted(u for u in links if u not in sim_state.seen)
+    assert 0 < len(expected) < len(links)
+    assert sorted(r.url for r in new_urls(cand, seen).collect()) == expected
+    for kind in (seen_ops.Bloom, CuckooTable):
+        filters = build_filter(seen, kind, n_buckets=8)
+        tagged = prefilter(cand, filters, kind, n_buckets=8).collect()
+        assert all(r.maybe_seen for r in tagged if r.url in sim_state.seen)
+        assert any(not r.maybe_seen for r in tagged), f"kind={kind}"
+        got = new_urls(cand, seen, filters, kind, n_buckets=8).collect()
+        assert sorted(r.url for r in got) == expected, f"kind={kind}"
+
+
+def test_non_default_bloom_buckets_match_simulator(spark, sim_state):
+    # regression: new_urls must probe with the SAME bucket count the
+    # bitmaps were built with, or already-seen URLs pass as bloom
+    # false negatives (ADVICE r1).  A non-power-of-two count of 7
+    # matches the simulator; probing those bitmaps at 8 buckets does not
+    from scalpel_ts_spark.operators.seen import Bloom, build_filter, new_urls
+
+    seen, cand, links = _crawl_seen_and_links(spark, sim_state)
+    expected = set(links) - sim_state.seen
+    blooms = build_filter(seen, Bloom, n_buckets=7)
+    assert blooms.count() == 7
+    got = new_urls(cand, seen, blooms, Bloom, n_buckets=7, dedup=True).collect()
+    assert sorted(r.url for r in got) == sorted(expected)
+    # the mismatch this guards against: bucket 7 has no bitmap, other
+    # buckets hold another bucketing's keys, so seen URLs leak through
+    skewed = new_urls(cand, seen, blooms, Bloom, n_buckets=8, dedup=True)
+    assert {r.url for r in skewed.collect()} & sim_state.seen
 
 
 @pytest.mark.parametrize(
@@ -250,28 +312,6 @@ def test_robots_cache_fetches_each_host_once(spark, tmp_path_factory):
     assert rules.select("host_id").distinct().count() == rules.count()
 
 
-def test_non_default_bloom_buckets_match_simulator(
-    spark, tmp_path_factory, sim_state, monkeypatch
-):
-    # regression: new_urls must probe with the SAME bucket count the
-    # bitmaps were built with, or already-seen URLs re-enter the
-    # frontier as bloom false negatives (ADVICE r1).  The patched
-    # constants derive a non-power-of-two count of 7 buckets
-    monkeypatch.setattr(frontier_plan, "BLOOM_MIN_BUCKETS", 2)
-    monkeypatch.setattr(frontier_plan, "BLOOM_ROWS_PER_BUCKET", 183)
-    wd = str(tmp_path_factory.mktemp("crawl_bb7"))
-    eng = CrawlEngine(
-        spark, wd, n_hosts=N_HOSTS, cap=8, refill=4, write_docs=False,
-    )
-    # ceil(8*8*20 / 183) = 7 buckets, above the floor of 2
-    assert eng.bloom_buckets == 7
-    eng.init(SEEDS)
-    assert eng.bloom_buckets == 7
-    eng.run(ROUNDS)
-    assert _engine_log(eng) == _sim_log(sim_state)
-    assert {r.url for r in eng.seen().collect()} == sim_state.seen
-
-
 def test_seen_compaction_bounds_delta_chain(spark, tmp_path_factory, sim_state):
     # compaction on (every 2 rounds): results identical, and the seen
     # read is bounded to <= compact_every snapshots regardless of
@@ -294,133 +334,6 @@ def test_seen_compaction_bounds_delta_chain(spark, tmp_path_factory, sim_state):
     # the union read spans only rounds since the last full snapshot
     base = max(r for r in fulls if r <= eng2.round)
     assert eng2.round - base < 2
-
-
-def test_bloom_resizes_as_seen_grows(
-    spark, tmp_path_factory, sim_state, monkeypatch
-):
-    # bitmaps are sized from the seed count at init and RE-SIZED +
-    # rebuilt as the seen set outgrows them — from the snapshot+delta
-    # union on ordinary rounds, from the full snapshot on compaction
-    # rounds (a fixed bitmap saturates: at 4M seen keys the old fixed
-    # 2^17 bits ran ~1 bit/key, FP ~100%, bloom bypassed nothing).
-    # bits_per_key is cranked so this small crawl crosses the 2^17
-    # floor the way a 4M-URL crawl does at the default 10 bits/key:
-    # seen is 19 after round 1 (union-path resize), 95 after the
-    # compacting round 2 (snapshot-path rebuild).
-    monkeypatch.setattr(seen_ops, "BLOOM_BITS_PER_KEY", 100_000)
-    wd = str(tmp_path_factory.mktemp("crawl_bloomresize"))
-    eng = CrawlEngine(
-        spark, wd, n_hosts=N_HOSTS, cap=8, refill=4,
-        compact_every=2, write_docs=False,
-    )
-    # a zero discovery estimate pins seed-only init sizing (the real
-    # estimate would presize past the growth this test exercises)
-    eng._expected_discovery = 0
-    eng.init(SEEDS)
-    assert eng._bloom_bits == 1 << 17  # 3 seeds: floor geometry
-    eng.run(1)  # non-compaction round: union-path resize
-    assert eng._bloom_bits > 1 << 17
-    eng.run(1)  # round 2 compacts: snapshot-path rebuild
-    grown = eng._bloom_bits
-    assert grown > 1 << 17
-    assert eng.manifest["bloom_bits"] == grown
-    # on-disk bitmaps carry the new geometry (probe derives size from
-    # stored bytes, so this is the size the next round actually tests)
-    sizes = {
-        len(r.bits) * 8 for r in eng._read("bloom", 2).collect()
-    }
-    assert sizes == {grown}
-    # resize is transparent: resumed tail still equals the simulator,
-    # and resume restores the sizing state
-    eng2 = CrawlEngine.resume(spark, wd)
-    assert eng2._bloom_bits == grown
-    assert eng2._seen_rows == eng._seen_rows > 0
-    eng2.run(ROUNDS - 2)
-    assert _engine_log(eng2) == _sim_log(sim_state)
-    assert {r.url for r in eng2.seen().collect()} == sim_state.seen
-
-
-def test_bloom_bucket_count_pinned_on_resume(
-    spark, tmp_path_factory, monkeypatch
-):
-    # the probe's bucketing MUST match the count the on-disk bitmaps
-    # were built with: a bucket with no bloom row reads "definitely
-    # new" (bypassing the exact anti-join), which is only correct
-    # under the build-time bucketing.  Where the constructor's rule
-    # now derives MORE buckets than the bitmaps have (the rule
-    # changed since the manifest was written), resume must pin the
-    # stored count instead.
-    wd = str(tmp_path_factory.mktemp("crawl_bucketpin"))
-    eng = CrawlEngine(
-        spark, wd, n_hosts=N_HOSTS, cap=8, refill=4, write_docs=False
-    )
-    eng.init(SEEDS)
-    eng.run(2)
-    # rewrite the manifest with a small stored bucket count, and raise
-    # the floor so that re-derivation exceeds it
-    mpath = os.path.join(wd, "manifest.json")
-    with open(mpath) as f:
-        manifest = json.load(f)
-    manifest["bloom_buckets"] = 4
-    with open(mpath, "w") as f:
-        json.dump(manifest, f)
-    monkeypatch.setattr(frontier_plan, "BLOOM_MIN_BUCKETS", 1024)
-    eng2 = CrawlEngine.resume(spark, wd)
-    assert eng2.bloom_buckets == 4
-
-
-def test_bloom_bucket_count_grows_at_rebuild(
-    spark, tmp_path_factory, sim_state, monkeypatch
-):
-    # long-crawl path: when the seen set outgrows what the current
-    # bucket count can hold at <= BLOOM_MAX_BUCKET_BYTES per bitmap,
-    # the BUCKET COUNT doubles at the next rebuild (fresh build keyed
-    # by the new count) instead of per-bucket bitmaps growing without
-    # bound.  Bits per key are cranked and the bound is set to the
-    # 2^17-bit bitmap floor (16 KiB), so this small crawl hits it the
-    # way a 10^10-URL crawl would at 10 bits/key; 3 seeds still fit
-    # 2 floor-sized buckets at init.
-    monkeypatch.setattr(frontier_plan, "BLOOM_MIN_BUCKETS", 2)
-    monkeypatch.setattr(seen_ops, "BLOOM_BITS_PER_KEY", 10_000)
-    monkeypatch.setattr(seen_ops, "BLOOM_MAX_BUCKET_BYTES", (1 << 17) // 8)
-    wd = str(tmp_path_factory.mktemp("crawl_bucketgrow"))
-    eng = CrawlEngine(
-        spark, wd, n_hosts=N_HOSTS, cap=8, refill=4, write_docs=False,
-    )
-    eng._expected_discovery = 0  # seed-only init sizing
-    eng.init(SEEDS)
-    assert eng.bloom_buckets == 2
-    eng.run(1)  # seen grows past what 2 floor-sized buckets hold
-    grown = eng.bloom_buckets
-    assert grown > 2
-    assert eng.manifest["bloom_buckets"] == grown
-    # on-disk bitmaps were rebuilt at the new bucketing
-    assert eng._read("bloom", 1).count() <= grown
-    # growth is transparent: the remaining rounds (probing at the new
-    # count, in-process AND resumed) still equal the simulator
-    eng.run(1)
-    eng2 = CrawlEngine.resume(spark, wd)
-    assert eng2.bloom_buckets == eng.bloom_buckets
-    eng2.run(ROUNDS - 2)
-    assert _engine_log(eng2) == _sim_log(sim_state)
-    assert {r.url for r in eng2.seen().collect()} == sim_state.seen
-
-
-# the init geometry (seeds + one round's discovery budget) of every
-# crawl shape in the repo, and one past the per-bitmap byte bound
-@pytest.mark.parametrize(
-    "n_keys, want",
-    [
-        (256 + 8 * 8 * 64, (32, 1 << 17)),  # perfbench crawl_deep
-        (len(SEEDS) + 8 * 8 * N_HOSTS, (32, 1 << 17)),  # this module
-        (5_000 + 8 * 512 * 200, (32, 1 << 20)),  # bench.py
-        (2_000_000 + 8 * 4_256 * 500, (32, 1 << 25)),  # scaling_bench
-        (10**9, (128, 1 << 29)),  # buckets double past 64 MiB
-    ],
-)
-def test_bloom_geometry_at_repo_shapes(n_keys, want):
-    assert seen_ops.bloom_geometry(n_keys, 32) == want
 
 
 def _synthetic_http(url):
@@ -848,30 +761,3 @@ def test_crawl_invariants_oracle_matches_simulator():
         .fetchall()
     )
     assert derived == pinned
-
-
-def test_bloom_presized_for_discovery_budget_avoids_rebuild(
-    spark, tmp_path_factory, monkeypatch
-):
-    # init sizing covers seeds + the a-priori per-round discovery
-    # budget (8 links/page x cap x n_hosts), so a short crawl growing
-    # well past its seed count triggers NO mid-crawl full-seen-scan
-    # rebuild (the r6 bench crawl paid two inside four rounds under
-    # seed-only sizing).  Bits per key are cranked so that seed-only
-    # sizing WOULD rebuild here: 95 seen keys after round 2 need 2^18
-    # bits per bucket, 3 seeds only the 2^17 floor.
-    monkeypatch.setattr(seen_ops, "BLOOM_BITS_PER_KEY", 20_000)
-    wd = str(tmp_path_factory.mktemp("crawl_bloompresize"))
-    eng = CrawlEngine(
-        spark, wd, n_hosts=N_HOSTS, cap=8, refill=4, write_docs=False,
-    )
-    eng.init(SEEDS)
-    sized = eng._bloom_bits
-    assert (eng.bloom_buckets, sized) == seen_ops.bloom_geometry(
-        len(SEEDS) + 8 * 8 * N_HOSTS, 32
-    )
-    eng.run(2)
-    # grew well past the seeds: seed-only sizing would have rebuilt
-    assert seen_ops.bloom_geometry(eng._seen_rows, 32)[1] > 1 << 17
-    assert eng._bloom_bits == sized  # ...with no resize/rebuild
-    assert eng.bloom_buckets == eng.manifest["bloom_buckets"]

@@ -9,6 +9,8 @@ Each test pins one plan property the engine's docs claim:
   frontier;
 * the bloom split-union sends only bloom-positive rows through the
   exact anti-join exchange;
+* the crawl engine's seen check shuffles its candidates once, and runs
+  no Python;
 * whole-stage codegen spans the JVM-side text analytics (no Python in
   the hot path).
 
@@ -106,6 +108,60 @@ def test_bloom_split_sends_only_suspects_to_antijoin(spark):
     assert "(maybe_seen" in plan
     assert "= 1)" in plan and "= 0)" in plan
     assert "Union" in plan
+
+
+def _nodes(plan):
+    """Every node of a JVM physical plan, depth-first."""
+    yield plan
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _nodes(kids.apply(i))
+
+
+def test_engine_seen_dedup_exchanges_candidates_once(spark):
+    """The crawl engine's seen check, ``new_urls(dedup=True)`` with no
+    filters: the url_hash dropDuplicates and the left-anti join share
+    ONE hashpartitioning(url_hash) exchange of the candidates, and no
+    Python stage (no bloom cogroup) runs.  Broadcast is off so the
+    shape is the one a seen set too big to broadcast gets."""
+    from scalpel_ts_spark.functions.url import canonicalize_url, url_hash
+    from scalpel_ts_spark.operators.seen import new_urls
+    from scalpel_ts_spark.sources.synthetic import host_id_col
+
+    def urls(df):
+        raw = F.concat(
+            F.lit("http://h"), (F.col("o_custkey") % 7).cast("string"),
+            F.lit(".test/p/"), F.col("o_custkey").cast("string"),
+        )
+        return df.select(canonicalize_url(raw).alias("url")).select(
+            "url",
+            host_id_col(F.col("url")).alias("host_id"),
+            url_hash(F.col("url")).alias("url_hash"),
+        )
+
+    orders = _tbl(spark, "orders")
+    discovered = urls(orders)
+    seen = urls(orders.filter(F.col("o_orderkey") % 3 == 0))
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        out = new_urls(discovered, seen.select("url", "url_hash"), dedup=True)
+        plan = out._jdf.queryExecution().executedPlan().executedPlan()
+    finally:
+        spark.conf.set(key, old)
+    nodes = list(_nodes(plan))
+    join = next(n for n in nodes if "LeftAnti" in n.simpleStringWithNodeId())
+    cand_side = list(_nodes(join.children().apply(0)))
+    exchanges = [n for n in cand_side if n.nodeName() == "Exchange"]
+    assert len(exchanges) == 1
+    assert "hashpartitioning(url_hash" in exchanges[0].toString()
+    # the dedup aggregate sits on top of that exchange and feeds the
+    # join without another one (the seen side has its own)
+    assert sum(n.nodeName() == "Exchange" for n in nodes) == 2
+    names = {n.nodeName() for n in nodes}
+    assert "FlatMapCoGroupsInPandas" not in names
+    assert not any("Python" in n or "Pandas" in n for n in names)
 
 
 def test_winnow_dedup_plan_is_equijoin_and_jvm_only(spark):

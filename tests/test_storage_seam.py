@@ -1,6 +1,7 @@
 """Storage-seam contracts that are not Iceberg call-sequence tests:
-the parquet manifest's crash-safe publish and the engine's probe for
-the OPTIONAL ``write_small`` method.
+the parquet manifest's crash-safe publish, the engine's probe for
+the OPTIONAL ``write_small`` method, and the driver entry's parquet
+schema cache.
 """
 
 import json
@@ -98,3 +99,21 @@ def test_schema_cache_is_per_round(spark, tmp_path):
     both = st.read_union("t", [1, 2])
     assert "c" in both.columns
     assert sorted((r.a, r.c) for r in both.collect()) == [(1, None), (2, "x")]
+
+
+def test_entry_schema_cache_sees_rewritten_parquet(spark, tmp_path):
+    """``__spark_entry__._tbl`` caches each parquet's schema; a file
+    rewritten at the same path with an extra column must be read with
+    the new schema, not the cached one."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as E
+
+    path = tmp_path / "documents.parquet"
+    pq.write_table(pa.table({"doc_id": [1, 2]}), path)
+    assert E._tbl(spark, str(tmp_path), "documents").columns == ["doc_id"]
+    pq.write_table(pa.table({"doc_id": [1, 2], "lang": ["en", "de"]}), path)
+    df = E._tbl(spark, str(tmp_path), "documents")
+    assert df.columns == ["doc_id", "lang"]
+    assert sorted(r.lang for r in df.collect()) == ["de", "en"]

@@ -4,8 +4,8 @@ from N to 4N executors).
 No real cluster exists in the sandbox, so the same job runs at two
 parallelism levels on the SAME input: one macro-round of the crawl
 engine over a 2M-URL seeded frontier (SCALING_PAGES_PER_HOST) (politeness top-k -> fetch ->
-parse+extract -> link discovery -> canonicalize -> bloom+exact seen
-dedup -> snapshot commit).  Each level runs in a fresh process/JVM
+parse+extract -> link discovery -> canonicalize -> hash dedup + exact
+seen anti-join -> snapshot commit).  Each level runs in a fresh process/JVM
 with a small warm-up crawl first so codegen/Python-worker startup is
 excluded from both measurements equally, and — round 4 — each child
 is ``taskset``-pinned to exactly its core count, because ``local[N]``
