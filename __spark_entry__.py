@@ -343,7 +343,7 @@ def _url_canonicalize_sql() -> str:
 
 
 def q_frontier_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Politeness priority queue: salted top-k per host (k=4)."""
+    """Politeness priority queue: top-k per host (k=4)."""
     docs = _tbl(spark, sf_dir, "documents")
     frontier = docs.select(
         (F.col("doc_id") % 7).alias("host_id"),
@@ -352,14 +352,13 @@ def q_frontier_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") % 3).alias("priority"),
         F.col("doc_id").alias("seq"),
     )
-    # k as a Column keeps this on the salted two-phase path (the
-    # north-rule strategy the crawl engine uses for per-host quotas)
+    # k as a Column bounded by the literal prune_k: the shape the crawl
+    # engine runs for its per-host token quotas
     return topk_per_group(
         frontier,
         group_cols=["host_id"],
         order_cols=[F.col("priority"), F.col("seq")],
         k=F.lit(4),
-        salt_buckets=8,
         prune_k=4,
     ).select("host_id", "url", "priority", "seq")
 
@@ -510,7 +509,8 @@ WHERE o_orderkey % 2 = 0 OR o_orderkey % 3 = 0
 
 
 def q_topk_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Salted top-k on a real fact table (top-3 items per supplier).
+    """Per-group top-k on a real fact table (top-3 items per supplier):
+    the literal k gives the window its map-side partial group limit.
 
     The small single-row-group lineitem file scans as ~3 tasks and the
     window's map-side partial rank runs at scan parallelism — the
@@ -529,7 +529,6 @@ def q_topk_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_linenumber"),
         ],
         k=3,
-        salt_buckets=8,
     )
 
 
@@ -1201,8 +1200,7 @@ def q_crawl_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     workdir = tempfile.mkdtemp(prefix="crawl_entry_")
     eng = CrawlEngine(
-        spark, workdir, n_hosts=5, cap=4, refill=2, salt_buckets=4,
-        write_docs=False,
+        spark, workdir, n_hosts=5, cap=4, refill=2, write_docs=False,
     )
     eng.init([make_url(h, 0) for h in range(3)])
     eng.run(2)
@@ -1231,8 +1229,7 @@ def q_crawl_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     workdir = tempfile.mkdtemp(prefix="crawl_inv_")
     eng = CrawlEngine(
-        spark, workdir, n_hosts=8, cap=4, refill=2, salt_buckets=4,
-        write_docs=False,
+        spark, workdir, n_hosts=8, cap=4, refill=2, write_docs=False,
     )
     eng.init([make_url(h, 0) for h in range(6)])
     eng.run(3)

@@ -171,7 +171,7 @@ def main() -> None:
         t0 = time.time()
         eng = CrawlEngine(
             spark, workdir, n_hosts=200, cap=512, refill=256,
-            salt_buckets=16, write_docs=True,
+            write_docs=True,
         )
         eng.init([make_url(h, p) for h in range(200) for p in range(25)])
         fetched = 0

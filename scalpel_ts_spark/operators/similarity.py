@@ -2,8 +2,8 @@
 
 * :func:`brute_force_topk` — exact cosine top-k.  The query set is
   broadcast (it's the small side by construction), so the scan over
-  the candidate corpus is a single map stage + the salted top-k
-  reduction from operators/topk.py: no all-to-all shuffle, scales
+  the candidate corpus is a single map stage + the partial-limit
+  top-k reduction from operators/topk.py: no all-to-all shuffle, scales
   linearly in corpus size.
 * :func:`lsh_topk` — random-hyperplane LSH: both sides get
   ``n_tables`` sign-bucket keys; candidates are generated by an

@@ -7,7 +7,7 @@ right, which pass one ``_Round`` state object:
     frontier ──(refill token buckets)── host_state   _select
        │ join on host_id
        ▼
-    salted top-k per host (operators.topk)
+    top-k per host (operators.topk)
        │ (production: robots pre-vet for hosts       _robots_prevet
        │  with no cached rules)
     fetch UDF ── parse+extract UDF                   _fetch_extract
@@ -97,6 +97,7 @@ _RETIRED_CONFIG_KEYS = (
     "bloom_presize_keys",
     "broadcast_fetched_max",
     "use_bloom",
+    "salt_buckets",
 )
 
 #: top-level manifest keys of the retired engine bloom's sizing state;
@@ -108,6 +109,12 @@ _RETIRED_MANIFEST_KEYS = ("bloom_buckets", "bloom_bits", "seen_rows")
 #: protocol renames.  Above it (10^7-host design point) they stay
 #: distributed writes.
 DRIVER_WRITE_MAX_ROWS = 1_000_000
+
+#: frontier rows per selection task below which the selection window
+#: is pre-keyed onto the fetch stage's ``par`` partitions; above it the
+#: window gets its own exchange at full shuffle parallelism, with the
+#: partial group limit beneath it
+SELECT_ROWS_PER_TASK = 500_000
 
 
 def frontier_anti_join(
@@ -219,7 +226,7 @@ class _Round:
     frontier: DataFrame | None = None
     new_state: DataFrame | None = None
     candidates: DataFrame | None = None
-    single_phase: bool = False
+    prekeyed: bool = False
     par: int = 1
     robots_prev: DataFrame | None = None
     miss_sites: DataFrame | None = None
@@ -278,7 +285,6 @@ class CrawlEngine:
         n_hosts: int = 50,
         cap: int = 8,
         refill: int = 4,
-        salt_buckets: int = 16,
         write_docs: bool = True,
         compact_every: int = 8,
         storage: SnapshotStorage | None = None,
@@ -327,7 +333,6 @@ class CrawlEngine:
         self.n_hosts = n_hosts
         self.cap = cap
         self.refill = refill
-        self.salt_buckets = salt_buckets
         self.write_docs = write_docs
         self.compact_every = compact_every
         self.storage = storage or ParquetSnapshotStorage(spark, workdir)
@@ -354,7 +359,6 @@ class CrawlEngine:
             "n_hosts": self.n_hosts,
             "cap": self.cap,
             "refill": self.refill,
-            "salt_buckets": self.salt_buckets,
             "compact_every": self.compact_every,
             "max_fetch_retries": self.max_fetch_retries,
         }
@@ -622,7 +626,7 @@ class CrawlEngine:
             st.release()
 
     def _select(self, st: _Round) -> None:
-        """Token refill and the politeness-budgeted salted top-k; on the
+        """Token refill and the politeness-budgeted top-k; on the
         production path, the robots pre-vet of first-contact hosts."""
         frontier = st.frontier = self._read("frontier", st.r)
         host_state = self._read("host_state", st.r)
@@ -646,26 +650,18 @@ class CrawlEngine:
         # per pending/known host, materialized by the first job.
         st.new_state = st.cache(refreshed.unionByName(idle))
 
-        # 2. politeness-budgeted selection: salted top-k per host by
+        # 2. politeness-budgeted selection: top-k per host by
         #    (priority, seq) with k = the host's token balance.
         #    host_state is per-HOST (millions of rows at most) while
         #    the frontier is per-URL (10^10 design point) — broadcast
         #    the small side so the frontier is not shuffled for this
         #    join
         budgeted = frontier.join(F.broadcast(st.new_state), "host_id")
-        # single_phase from the ARITHMETIC frontier row count (the
-        # optimizer's estimate of a frontier-x-broadcast join is a
-        # cardinality product, junk).  Under ~2M rows even a monster
-        # host's pending set is one bounded task and the salt phase
-        # is a pure extra exchange + window pass; past it (or
-        # untracked) the salted skew-safe shape engages — both shapes
-        # are row-identical.
         # the frontier row count is tracked arithmetically
         # (rows' = rows - fetched + new); the first round after
         # init/resume pays one parquet-metadata count
         if self._frontier_rows is None:
             self._frontier_rows = frontier.count()
-        st.single_phase = self._frontier_rows <= 2_000_000
         # fetch-stage parallelism, derived from the round's expected
         # fetch volume (~2k rows/task), capped at ONE task per core:
         # each Python-stage task pays a measured ~140ms runner-init
@@ -677,23 +673,31 @@ class CrawlEngine:
         cores = self.spark.sparkContext.defaultParallelism
         expected = min(self._frontier_rows, self.cap * self.n_hosts)
         st.par = max(1, min(cores, -(-expected // 2048)))
-        if st.single_phase and self.fetch_stage is None:
+        st.prekeyed = (
+            self.fetch_stage is None
+            and self._frontier_rows <= st.par * SELECT_ROWS_PER_TASK
+        )
+        if st.prekeyed:
             # pre-key the selection exchange at the fetch stage's own
-            # partitioning: the single-phase window reuses it (same
-            # host_id clustering), and the fused fetch UDF then runs
-            # IN the window's stage — no separate candidate
-            # repartition, one exchange fewer per round.  Balance:
-            # a host's selected rows are capped at `cap`, so host
-            # keying bounds any task at cap x (hosts/par) rows.
+            # partitioning: the window reuses it (same host_id
+            # clustering), and the fused fetch UDF then runs IN the
+            # window's stage — no separate candidate repartition, one
+            # exchange fewer per round.  Only while the whole frontier
+            # fits `par` tasks (by the tracked row count: the
+            # optimizer's estimate of a frontier-x-broadcast join is a
+            # cardinality product): the partial group limit then runs
+            # after this exchange, not before it.  Balance: a host's
+            # selected rows are capped at `cap`, so host keying bounds
+            # any task at cap x (hosts/par) rows.
             budgeted = budgeted.repartition(st.par, "host_id")
+        # tokens <= cap (the refill's least() above), so `cap` is the
+        # literal bound that gives the window its partial group limit
         st.candidates = topk_per_group(
             budgeted,
             group_cols=["host_id"],
             order_cols=[F.col("priority"), F.col("seq")],
             k=F.col("tokens"),
-            salt_buckets=self.salt_buckets,
             prune_k=self.cap,
-            single_phase=st.single_phase,
         ).drop("tokens")
         st.robots_prev = self._read("robots", st.r)
         if self.robots_stage is not None:
@@ -749,7 +753,7 @@ class CrawlEngine:
         The Python stage needs explicit ROW-based partitioning (AQE
         sizes by bytes; fetch/parse cost is per row and the UDF's
         output is ~10x its input).  ``par`` was derived before the
-        selection; on the single-phase path the selection exchange
+        selection; on the pre-keyed path the selection exchange
         already established it, so the fused UDF rides the window's
         stage with no further repartition.
 
@@ -786,12 +790,12 @@ class CrawlEngine:
             # udf's docstring and the A/B in BASELINE.md r5)
             keep_cols = list(candidates.columns)
             n_hosts = self.n_hosts
-            if st.single_phase:
+            if st.prekeyed:
                 # the selection exchange was pre-keyed at (par,
-                # host_id) and the single-phase window reused it, so
-                # the candidate batch is already row-balanced on `par`
-                # partitions — the fused UDF runs in the window's
-                # stage, no second exchange
+                # host_id) and the window reused it, so the candidate
+                # batch is already row-balanced on `par` partitions —
+                # the fused UDF runs in the window's stage, no second
+                # exchange
                 spread = candidates
             else:
                 spread = candidates.repartition(st.par, "host_id", "url_hash")

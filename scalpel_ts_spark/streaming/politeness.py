@@ -1,7 +1,7 @@
 """Stateful streaming politeness: a per-host token bucket as an
 ``applyInPandasWithState`` operator.
 
-The batch engine enforces per-host budgets with the salted top-k +
+The batch engine enforces per-host budgets with the per-host top-k +
 host_state table (plans/frontier.py steps 1-2).  This module is the
 same policy as a *continuous* operator: candidate URLs stream in, the
 per-host token balance lives in the Spark state store (checkpointed,

@@ -16,6 +16,7 @@ import pytest
 
 from scalpel_ts_spark.operators import seen as seen_ops
 from scalpel_ts_spark.operators.cuckoo import CuckooTable
+from scalpel_ts_spark.plans import frontier as frontier_mod
 from scalpel_ts_spark.plans.frontier import CrawlEngine
 from scalpel_ts_spark.plans.simulator import simulate_crawl
 from scalpel_ts_spark.sources.synthetic import make_url
@@ -67,6 +68,33 @@ def test_spark_crawl_matches_simulator(spark, tmp_path_factory, sim_state):
         assert sum(p["rows"] for p in m["lineage"]) == m["fetched"]
 
 
+def test_unprekeyed_selection_matches_simulator(
+    spark, tmp_path_factory, monkeypatch, sim_state
+):
+    # one selection task per frontier row: every round's frontier is
+    # past the pre-key bound, so the window takes its own exchange with
+    # the partial group limit beneath it, and the fused fetch stage
+    # repartitions the candidates itself
+    monkeypatch.setattr(frontier_mod, "SELECT_ROWS_PER_TASK", 1)
+    paths = []
+    fetch_extract = CrawlEngine._fetch_extract
+
+    def spy(self, st):
+        paths.append(st.prekeyed)
+        return fetch_extract(self, st)
+
+    monkeypatch.setattr(CrawlEngine, "_fetch_extract", spy)
+    wd = str(tmp_path_factory.mktemp("crawl_unprekeyed"))
+    eng = CrawlEngine(
+        spark, wd, n_hosts=N_HOSTS, cap=8, refill=4, write_docs=False
+    )
+    eng.init(SEEDS)
+    eng.run(ROUNDS)
+    assert paths == [False] * ROUNDS
+    assert _engine_log(eng) == _sim_log(sim_state)
+    assert {r.url for r in eng.seen().collect()} == sim_state.seen
+
+
 def test_resume_produces_identical_tail(spark, tmp_path_factory, sim_state):
     wd = str(tmp_path_factory.mktemp("crawl_resume"))
     eng = CrawlEngine(
@@ -74,10 +102,10 @@ def test_resume_produces_identical_tail(spark, tmp_path_factory, sim_state):
     )
     eng.init(SEEDS)
     eng.run(2)
-    # a manifest written before the retired options and the engine
-    # bloom were removed carries each option in its config (at its old
-    # default) and the bloom's sizing state at the top level; resume
-    # must drop both and continue
+    # a manifest written before the retired options (the top-k salt
+    # among them) and the engine bloom were removed carries each option
+    # in its config (at its old default) and the bloom's sizing state
+    # at the top level; resume must drop both and continue
     mpath = os.path.join(wd, "manifest.json")
     with open(mpath) as f:
         manifest = json.load(f)
@@ -90,6 +118,7 @@ def test_resume_produces_identical_tail(spark, tmp_path_factory, sim_state):
         bloom_presize_keys=None,
         broadcast_fetched_max=3_000_000,
         use_bloom=True,
+        salt_buckets=16,
     )
     manifest.update(bloom_buckets=32, bloom_bits=1 << 17, seen_rows=95)
     with open(mpath, "w") as f:

@@ -11,6 +11,8 @@ Each test pins one plan property the engine's docs claim:
   exact anti-join exchange;
 * the crawl engine's seen check shuffles its candidates once, and runs
   no Python;
+* the per-row-k top-k bounds hot groups with a map-side partial group
+  limit beneath its one exchange;
 * whole-stage codegen spans the JVM-side text analytics (no Python in
   the hot path).
 
@@ -162,6 +164,41 @@ def test_engine_seen_dedup_exchanges_candidates_once(spark):
     names = {n.nodeName() for n in nodes}
     assert "FlatMapCoGroupsInPandas" not in names
     assert not any("Python" in n or "Pandas" in n for n in names)
+
+
+def test_per_row_k_topk_limits_hot_groups_below_the_exchange(spark):
+    """The politeness top-k's skew guard: with a per-row k (the token
+    quota) bounded by the literal ``prune_k``, the one window gets a
+    map-side ``WindowGroupLimit`` in Partial mode beneath its single
+    Exchange, so a hot host's reducer input is at most prune_k rows
+    per map partition — no salt column, no second window."""
+    from scalpel_ts_spark.operators.topk import topk_per_group
+
+    frontier = _tbl(spark, "documents").select(
+        (F.col("doc_id") % 7).alias("host_id"),
+        (F.col("doc_id") % 3).alias("priority"),
+        F.col("doc_id").alias("seq"),
+        ((F.col("doc_id") % 5) + 1).cast("int").alias("tokens"),
+    )
+    out = topk_per_group(
+        frontier,
+        group_cols=["host_id"],
+        order_cols=[F.col("priority"), F.col("seq")],
+        k=F.col("tokens"),
+        prune_k=8,
+    )
+    plan = out._jdf.queryExecution().executedPlan().executedPlan()
+    nodes = list(_nodes(plan))
+    exchanges = [n for n in nodes if n.nodeName() == "Exchange"]
+    assert len(exchanges) == 1
+    assert "hashpartitioning(host_id" in exchanges[0].toString()
+    below = [
+        n.simpleString(100) for n in _nodes(exchanges[0].children().apply(0))
+        if n.nodeName() == "WindowGroupLimit"
+    ]
+    assert len(below) == 1 and "Partial" in below[0]
+    assert sum(n.nodeName() == "Window" for n in nodes) == 1
+    assert "_salt" not in plan.toString()
 
 
 def test_winnow_dedup_plan_is_equijoin_and_jvm_only(spark):

@@ -1,9 +1,11 @@
-"""topk_per_group: the salted per-row-k path.
+"""topk_per_group with a per-row k.
 
-The salt-local prune is lossless only under ``k <= prune_k``
-(operators/topk.py phase 1); a violating caller must fail loudly —
-silently dropping qualifying rows is the failure mode the in-plan
-assert exists to prevent.
+The window's rank filter carries the literal ``prune_k``, so Catalyst
+puts a map-side partial group limit below the exchange, which keeps
+only the top ``prune_k`` rows of each group per map partition.  That
+is lossless only under ``k <= prune_k``; a violating caller must fail
+loudly — silently dropping qualifying rows is the failure mode the
+in-plan assert exists to prevent.
 """
 
 import pytest
@@ -21,36 +23,42 @@ def _frontier(spark):
     )
 
 
-def test_per_row_k_exceeding_prune_k_fails_loudly(spark):
-    df = _frontier(spark).withColumn(
-        "quota", F.when(F.col("host_id") == 0, 300).otherwise(4)
-    )
-    out = topk_per_group(
+def _topk(df):
+    return topk_per_group(
         df,
         group_cols=["host_id"],
         order_cols=[F.col("priority"), F.col("seq")],
         k=F.col("quota"),
         prune_k=8,
     )
-    with pytest.raises(Exception, match="exceeds prune_k"):
-        out.collect()
+
+
+def test_per_row_k_exceeding_prune_k_fails_loudly(spark):
+    df = _frontier(spark)
+    oversized = [
+        # every row of host 0
+        F.col("host_id") == 0,
+        # only host 0's worst-priority rows, each ranked past prune_k:
+        # the partial group limit drops them before a check above the
+        # window could see them
+        (F.col("host_id") == 0) & (F.col("priority") == 6),
+    ]
+    for cond in oversized:
+        out = _topk(df.withColumn("quota", F.when(cond, 300).otherwise(4)))
+        with pytest.raises(Exception, match="exceeds prune_k"):
+            out.collect()
 
 
 def test_per_row_k_within_prune_k_matches_unsalted(spark):
+    # a plain window filtered on rank <= quota is the reference,
+    # including NULL quotas, which keep no rows of their host
     df = _frontier(spark).withColumn(
-        "quota", (F.col("host_id") + 2).cast("int")
+        "quota",
+        F.when(F.col("host_id") == 0, F.lit(None).cast("int")).otherwise(
+            (F.col("host_id") + 2).cast("int")
+        ),
     )
-    got = sorted(
-        (r.host_id, r.seq)
-        for r in topk_per_group(
-            df,
-            group_cols=["host_id"],
-            order_cols=[F.col("priority"), F.col("seq")],
-            k=F.col("quota"),
-            prune_k=8,
-            salt_buckets=4,
-        ).collect()
-    )
+    got = sorted((r.host_id, r.seq) for r in _topk(df).collect())
     w = Window.partitionBy("host_id").orderBy("priority", "seq")
     expect = sorted(
         (r.host_id, r.seq)
@@ -59,6 +67,7 @@ def test_per_row_k_within_prune_k_matches_unsalted(spark):
         .collect()
     )
     assert got == expect
+    assert {h for h, _ in got} == {1, 2, 3}
 
 
 def test_null_per_row_k_drops_rows_without_failing(spark):
@@ -66,38 +75,5 @@ def test_null_per_row_k_drops_rows_without_failing(spark):
         "quota",
         F.when(F.col("host_id") == 0, F.lit(None).cast("int")).otherwise(4),
     )
-    rows = topk_per_group(
-        df,
-        group_cols=["host_id"],
-        order_cols=[F.col("priority"), F.col("seq")],
-        k=F.col("quota"),
-        prune_k=8,
-    ).collect()
+    rows = _topk(df).collect()
     assert {r.host_id for r in rows} == {1, 2, 3}
-
-
-def test_single_phase_gate_matches_salted(spark):
-    # single_phase=True's one-window shape must be row-identical to the
-    # default salted two-phase shape (the prune is lossless), including
-    # on NULL quotas
-    df = _frontier(spark).withColumn(
-        "quota",
-        F.when(F.col("host_id") == 0, F.lit(None).cast("int")).otherwise(
-            (F.col("host_id") + 2).cast("int")
-        ),
-    )
-    kw = dict(
-        group_cols=["host_id"],
-        order_cols=[F.col("priority"), F.col("seq")],
-        k=F.col("quota"),
-        prune_k=8,
-    )
-    one_window = sorted(
-        (r.host_id, r.seq)
-        for r in topk_per_group(df, **kw, single_phase=True).collect()
-    )
-    salted = sorted(
-        (r.host_id, r.seq) for r in topk_per_group(df, **kw).collect()
-    )
-    assert one_window == salted
-    assert {h for h, _ in salted} == {1, 2, 3}

@@ -94,7 +94,7 @@ def child(cores: int) -> None:
 
     # warm-up: tiny crawl exercises every code path once
     wd = tempfile.mkdtemp(prefix="scale_warm_", dir=WORKDIR_BASE)
-    warm = CrawlEngine(spark, wd, n_hosts=5, cap=8, refill=4, salt_buckets=4,
+    warm = CrawlEngine(spark, wd, n_hosts=5, cap=8, refill=4,
                        write_docs=True)
     warm.init([make_url(h, 0) for h in range(5)])
     warm.run(2)
@@ -106,7 +106,7 @@ def child(cores: int) -> None:
     # >= seeded URLs) so the macro-round fetches everything it seeded
     cap = max(4096, PAGES_PER_HOST + 256)
     eng = CrawlEngine(spark, wd, n_hosts=N_HOSTS, cap=cap, refill=cap // 2,
-                      salt_buckets=32, write_docs=True)
+                      write_docs=True)
     seeds = spark.range(N_HOSTS * PAGES_PER_HOST).select(
         F.concat(
             F.lit("http://h"), (F.col("id") % N_HOSTS).cast("string"),
