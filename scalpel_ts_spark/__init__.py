@@ -3,9 +3,9 @@
 A from-scratch engine pairing scalpel-style selector/scraper extraction
 semantics (reference: IMax153/scalpel-ts) with a PySpark-native URL
 frontier + fetch scheduler.  The extraction core is pure Python
-(picklable, runs identically on the driver and inside Arrow-batched
-pandas UDFs); everything cross-document is expressed with the Spark
-DataFrame API so Catalyst/AQE plan the physical execution.
+(shipped by cloudpickle, runs identically on the driver and inside
+Arrow-batched pandas UDFs); everything cross-document is expressed with
+the Spark DataFrame API so Catalyst/AQE plan the physical execution.
 
 Layout:
     core/        single-document extraction semantics (tokenizer, tag

@@ -2,9 +2,8 @@
 
 Everything in this package is deliberately free of Spark imports: the
 same evaluator runs on the driver (tests, the crawl simulator) and
-inside Arrow-batched pandas UDFs on executors.  All objects are
-picklable so a compiled scraper can be shipped to executors via task
-closure / broadcast.
+inside Arrow-batched pandas UDFs on executors.  A compiled scraper is
+shipped by cloudpickle to executors via task closure / broadcast.
 """
 
 from scalpel_ts_spark.core.tokenizer import (

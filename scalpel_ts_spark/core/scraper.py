@@ -5,8 +5,9 @@ Reference: src/Scraper.ts (combinators) + src/Internal/ReaderOption.ts
 ``TagSpec -> value | NOTHING``; ``NOTHING`` models the reference's
 ``Option`` failure and becomes SQL NULL at the Spark boundary.
 
-Everything is picklable: scrapers built from these combinators are
-shipped inside pandas-UDF closures to executors unchanged.
+Every combinator returns a ``Scraper`` around a closure over the
+scrapers it composes, and Spark's cloudpickle ships those closures
+inside pandas-UDF task closures to executors unchanged.
 """
 
 from __future__ import annotations
@@ -52,180 +53,82 @@ class Scraper:
     # Functor / Monad / Alternative / Filterable
     # (reference src/Internal/ReaderOption.ts:160-318)
     def map(self, f):
-        return _Map(self, f)
+        run = self.run
+
+        def mapped(spec):
+            v = run(spec)
+            return v if v is NOTHING else f(v)
+
+        return Scraper(mapped)
 
     def chain(self, f):
         """f: value -> Scraper (reference chain / do-notation bind)."""
-        return _Chain(self, f)
+        run = self.run
+
+        def chained(spec):
+            v = run(spec)
+            return v if v is NOTHING else f(v).run(spec)
+
+        return Scraper(chained)
 
     def alt(self, other):
         """First success wins (ReaderOption.ts:240-242)."""
-        return _Alt(self, other)
+        first, second = self.run, other.run
+
+        def alternative(spec):
+            v = first(spec)
+            return v if v is not NOTHING else second(spec)
+
+        return Scraper(alternative)
 
     def filter(self, predicate):
-        return _Filter(self, predicate)
+        run = self.run
+
+        def filtered(spec):
+            v = run(spec)
+            if v is NOTHING or not predicate(v):
+                return NOTHING
+            return v
+
+        return Scraper(filtered)
 
     def filter_map(self, f):
         """f: value -> value | NOTHING."""
-        return _FilterMap(self, f)
+        return self.map(f)
 
     # do-notation helpers mirroring bindTo / bind
     def bind_to(self, name):
-        return _Map(self, _BindTo(name))
+        return self.map(lambda value: {name: value})
 
     def bind(self, name, f):
         """f: dict -> Scraper; result dict gains key ``name``."""
-        return _Bind(self, name, f)
+        run = self.run
 
+        def bound(spec):
+            ctx = run(spec)
+            if ctx is NOTHING:
+                return NOTHING
+            v = f(ctx).run(spec)
+            if v is NOTHING:
+                return NOTHING
+            out = dict(ctx)
+            out[name] = v
+            return out
 
-class _BindTo:
-    def __init__(self, name):
-        self.name = name
-
-    def __call__(self, value):
-        return {self.name: value}
-
-
-class _Map(Scraper):
-    __slots__ = ("inner", "f")
-
-    def __init__(self, inner, f):
-        self.inner = inner
-        self.f = f
-        super().__init__(self._run)
-
-    def _run(self, spec):
-        v = self.inner.run(spec)
-        return v if v is NOTHING else self.f(v)
-
-    def __reduce__(self):
-        return (_Map, (self.inner, self.f))
-
-
-class _Chain(Scraper):
-    __slots__ = ("inner", "f")
-
-    def __init__(self, inner, f):
-        self.inner = inner
-        self.f = f
-        super().__init__(self._run)
-
-    def _run(self, spec):
-        v = self.inner.run(spec)
-        return v if v is NOTHING else self.f(v).run(spec)
-
-    def __reduce__(self):
-        return (_Chain, (self.inner, self.f))
-
-
-class _Alt(Scraper):
-    __slots__ = ("first", "second")
-
-    def __init__(self, first, second):
-        self.first = first
-        self.second = second
-        super().__init__(self._run)
-
-    def _run(self, spec):
-        v = self.first.run(spec)
-        return v if v is not NOTHING else self.second.run(spec)
-
-    def __reduce__(self):
-        return (_Alt, (self.first, self.second))
-
-
-class _Filter(Scraper):
-    __slots__ = ("inner", "predicate")
-
-    def __init__(self, inner, predicate):
-        self.inner = inner
-        self.predicate = predicate
-        super().__init__(self._run)
-
-    def _run(self, spec):
-        v = self.inner.run(spec)
-        if v is NOTHING or not self.predicate(v):
-            return NOTHING
-        return v
-
-    def __reduce__(self):
-        return (_Filter, (self.inner, self.predicate))
-
-
-class _FilterMap(Scraper):
-    __slots__ = ("inner", "f")
-
-    def __init__(self, inner, f):
-        self.inner = inner
-        self.f = f
-        super().__init__(self._run)
-
-    def _run(self, spec):
-        v = self.inner.run(spec)
-        return v if v is NOTHING else self.f(v)
-
-    def __reduce__(self):
-        return (_FilterMap, (self.inner, self.f))
-
-
-class _Bind(Scraper):
-    __slots__ = ("inner", "name", "f")
-
-    def __init__(self, inner, name, f):
-        self.inner = inner
-        self.name = name
-        self.f = f
-        super().__init__(self._run)
-
-    def _run(self, spec):
-        ctx = self.inner.run(spec)
-        if ctx is NOTHING:
-            return NOTHING
-        v = self.f(ctx).run(spec)
-        if v is NOTHING:
-            return NOTHING
-        out = dict(ctx)
-        out[self.name] = v
-        return out
-
-    def __reduce__(self):
-        return (_Bind, (self.inner, self.name, self.f))
-
-
-class _Of(Scraper):
-    __slots__ = ("value",)
-
-    def __init__(self, value):
-        self.value = value
-        super().__init__(self._run)
-
-    def _run(self, spec):
-        return self.value
-
-    def __reduce__(self):
-        return (_Of, (self.value,))
+        return Scraper(bound)
 
 
 def of(value):
     """Scrape.of — always succeeds with ``value``."""
-    return _Of(value)
+    return Scraper(lambda spec: value)
+
+
+def _fail(spec):
+    return NOTHING
 
 
 def fail():
-    return _FailScraper()
-
-
-class _FailScraper(Scraper):
-    __slots__ = ()
-
-    def __init__(self):
-        super().__init__(self._run)
-
-    def _run(self, spec):
-        return NOTHING
-
-    def __reduce__(self):
-        return (_FailScraper, ())
+    return Scraper(_fail)
 
 
 # ---------------------------------------------------------------------------
@@ -269,169 +172,117 @@ def _tags_to_inner_html(spec: TagSpec) -> str:
 # ---------------------------------------------------------------------------
 
 
-class _Chroots(Scraper):
+def chroots(selector, scraper):
     """chroots: run inner scraper per match, keep successes
     (Scraper.ts:46-49)."""
+    selector, run = tuple(selector), scraper.run
 
-    __slots__ = ("selector", "inner")
-
-    def __init__(self, selector, inner):
-        self.selector = tuple(selector)
-        self.inner = inner
-        super().__init__(self._run)
-
-    def _run(self, spec):
+    def each(spec):
         out = []
-        for sub in select(self.selector, spec):
-            v = self.inner.run(sub)
+        for sub in select(selector, spec):
+            v = run(sub)
             if v is not NOTHING:
                 out.append(v)
         return out
 
-    def __reduce__(self):
-        return (_Chroots, (self.selector, self.inner))
+    return Scraper(each)
 
 
-class _Chroot(Scraper):
+def chroot(selector, scraper):
     """chroot: first match only (Scraper.ts:62-63)."""
+    selector, run = tuple(selector), scraper.run
 
-    __slots__ = ("selector", "inner")
-
-    def __init__(self, selector, inner):
-        self.selector = tuple(selector)
-        self.inner = inner
-        super().__init__(self._run)
-
-    def _run(self, spec):
-        for sub in select(self.selector, spec):
-            v = self.inner.run(sub)
+    def first(spec):
+        for sub in select(selector, spec):
+            v = run(sub)
             if v is not NOTHING:
                 return v
         return NOTHING
 
-    def __reduce__(self):
-        return (_Chroot, (self.selector, self.inner))
-
-
-class _Matches(Scraper):
-    """matches: None (void) if the selector matches at all
-    (Scraper.ts:72-78)."""
-
-    __slots__ = ("selector",)
-
-    def __init__(self, selector):
-        self.selector = tuple(selector)
-        super().__init__(self._run)
-
-    def _run(self, spec):
-        return None if select(self.selector, spec) else NOTHING
-
-    def __reduce__(self):
-        return (_Matches, (self.selector,))
-
-
-class _WithMatches(Scraper):
-    """Shared shape of text/texts/html/htmls/innerHTML(s)/attr/attrs."""
-
-    __slots__ = ("selector", "mode", "key")
-
-    _FIRST = {"text", "html", "inner_html", "attr"}
-
-    def __init__(self, selector, mode, key=None):
-        self.selector = tuple(selector)
-        self.mode = mode
-        self.key = key
-        super().__init__(self._run)
-
-    def _run(self, spec):
-        matches = select(self.selector, spec)
-        mode = self.mode
-        if mode in ("text", "texts"):
-            fn = _tags_to_text
-        elif mode in ("html", "htmls"):
-            fn = _tags_to_html
-        elif mode in ("inner_html", "inner_htmls"):
-            fn = _tags_to_inner_html
-        else:  # attr / attrs: drop matches lacking the key
-            results = []
-            for m in matches:
-                v = _tags_to_attr(self.key, m)
-                if v is not NOTHING:
-                    results.append(v)
-            if mode == "attr":
-                return results[0] if results else NOTHING
-            return results
-        if mode in self._FIRST:
-            if not matches:
-                return NOTHING
-            return fn(matches[0])
-        return [fn(m) for m in matches]
-
-    def __reduce__(self):
-        return (_WithMatches, (self.selector, self.mode, self.key))
-
-
-class _Position(Scraper):
-    """position: index of the current chroot among sibling matches
-    (Scraper.ts:224)."""
-
-    __slots__ = ()
-
-    def __init__(self):
-        super().__init__(self._run)
-
-    def _run(self, spec):
-        return spec.context.position
-
-    def __reduce__(self):
-        return (_Position, ())
-
-
-def chroots(selector, scraper):
-    return _Chroots(selector, scraper)
-
-
-def chroot(selector, scraper):
-    return _Chroot(selector, scraper)
+    return Scraper(first)
 
 
 def matches(selector):
-    return _Matches(selector)
+    """matches: None (void) if the selector matches at all
+    (Scraper.ts:72-78)."""
+    selector = tuple(selector)
+    return Scraper(lambda spec: None if select(selector, spec) else NOTHING)
+
+
+def _first_match(selector, extract):
+    """``extract`` of the first match, NOTHING without one
+    (text/html/innerHTML)."""
+    selector = tuple(selector)
+
+    def first(spec):
+        found = select(selector, spec)
+        return extract(found[0]) if found else NOTHING
+
+    return Scraper(first)
+
+
+def _every_match(selector, extract):
+    """``extract`` of every match (texts/htmls/innerHTMLs)."""
+    selector = tuple(selector)
+    return Scraper(lambda spec: [extract(m) for m in select(selector, spec)])
+
+
+def _head(values):
+    return values[0] if values else NOTHING
 
 
 def text(selector):
-    return _WithMatches(selector, "text")
+    return _first_match(selector, _tags_to_text)
 
 
 def texts(selector):
-    return _WithMatches(selector, "texts")
+    return _every_match(selector, _tags_to_text)
 
 
 def html(selector):
-    return _WithMatches(selector, "html")
+    return _first_match(selector, _tags_to_html)
 
 
 def htmls(selector):
-    return _WithMatches(selector, "htmls")
+    return _every_match(selector, _tags_to_html)
 
 
 def inner_html(selector):
-    return _WithMatches(selector, "inner_html")
+    return _first_match(selector, _tags_to_inner_html)
 
 
 def inner_htmls(selector):
-    return _WithMatches(selector, "inner_htmls")
+    return _every_match(selector, _tags_to_inner_html)
 
 
 def attr(key, selector):
-    return _WithMatches(selector, "attr", key)
+    """First value of :func:`attrs`, so a first match lacking the key
+    falls through to the next match that has it."""
+    return attrs(key, selector).filter_map(_head)
 
 
 def attrs(key, selector):
-    return _WithMatches(selector, "attrs", key)
+    """Values of ``key`` over the matches; matches lacking it drop."""
+    selector = tuple(selector)
+
+    def values(spec):
+        out = []
+        for m in select(selector, spec):
+            v = _tags_to_attr(key, m)
+            if v is not NOTHING:
+                out.append(v)
+        return out
+
+    return Scraper(values)
 
 
-position = _Position()
+def _position(spec):
+    return spec.context.position
+
+
+#: position: index of the current chroot among sibling matches
+#: (Scraper.ts:224)
+position = Scraper(_position)
 
 
 # ---------------------------------------------------------------------------

@@ -7,8 +7,8 @@ producing one chrooted TagSpec per match tagged with its match index
 descends, Fail keeps descending, Cull prunes the whole subtree
 (reference MatchResult.ts:105-111 — Cull absorbs).
 
-All predicate objects are top-level classes so compiled selectors
-pickle cleanly into Spark task closures.
+Compiled selectors are shipped by cloudpickle into Spark task
+closures.
 """
 
 from __future__ import annotations
@@ -75,10 +75,10 @@ class AttrRegex(AttributePredicate):
 
     def __init__(self, key: str, pattern: str):
         self.key = key.lower()
-        self.pattern = pattern
+        self.rx = re.compile(pattern)
 
     def __call__(self, attrs):
-        rx = re.compile(self.pattern)
+        rx = self.rx
         return any(
             k.lower() == self.key and rx.search(v) is not None
             for k, v in attrs
@@ -89,10 +89,10 @@ class AnyAttrRegex(AttributePredicate):
     """anyAttributeRegex(re) (Select.ts:347-351)."""
 
     def __init__(self, pattern: str):
-        self.pattern = pattern
+        self.rx = re.compile(pattern)
 
     def __call__(self, attrs):
-        rx = re.compile(self.pattern)
+        rx = self.rx
         return any(rx.search(v) is not None for _, v in attrs)
 
 
@@ -121,10 +121,7 @@ class NotP(AttributePredicate):
 
 
 class MatchPred(AttributePredicate):
-    """match(f): f(key, value) over any attribute (Select.ts:427-431).
-
-    ``fn`` must be picklable (a top-level function) to run inside Spark.
-    """
+    """match(f): f(key, value) over any attribute (Select.ts:427-431)."""
 
     def __init__(self, fn):
         self.fn = fn

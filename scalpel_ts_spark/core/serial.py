@@ -42,6 +42,13 @@ def _zipper_from_specs(specs) -> Zipper:
     return Zipper((), None, tuple(specs) + (None,))
 
 
+def _zipper_from_specs_back(specs_back) -> Zipper:
+    """``_zipper_from_specs``' mirror for nodes collected moving back:
+    focused on the trailing bookend, nodes to its left in document
+    order."""
+    return Zipper((None,) + tuple(reversed(specs_back)), None, ())
+
+
 class SerialScraper:
     """Wraps ``run: Zipper -> (value, Zipper) | NOTHING``."""
 
@@ -51,174 +58,91 @@ class SerialScraper:
         self.run = run
 
     def map(self, f):
-        return _SMap(self, f)
+        run = self.run
+
+        def mapped(z):
+            r = run(z)
+            if r is NOTHING:
+                return NOTHING
+            v, z2 = r
+            return (f(v), z2)
+
+        return SerialScraper(mapped)
 
     def chain(self, f):
         """f: value -> SerialScraper."""
-        return _SChain(self, f)
+        run = self.run
+
+        def chained(z):
+            r = run(z)
+            if r is NOTHING:
+                return NOTHING
+            v, z2 = r
+            return f(v).run(z2)
+
+        return SerialScraper(chained)
 
     def alt(self, other):
-        return _SAlt(self, other)
+        first, second = self.run, other.run
+
+        def alternative(z):
+            r = first(z)
+            return r if r is not NOTHING else second(z)
+
+        return SerialScraper(alternative)
 
     def ap_second(self, other):
-        return _SApSecond(self, other)
+        first, second = self.run, other.run
+
+        def then(z):
+            r = first(z)
+            if r is NOTHING:
+                return NOTHING
+            return second(r[1])
+
+        return SerialScraper(then)
 
     def bind_to(self, name):
-        return _SMap(self, _SBindTo(name))
+        return self.map(lambda value: {name: value})
 
     def bind(self, name, f):
-        return _SBind(self, name, f)
+        run = self.run
 
+        def bound(z):
+            r = run(z)
+            if r is NOTHING:
+                return NOTHING
+            ctx, z2 = r
+            r2 = f(ctx).run(z2)
+            if r2 is NOTHING:
+                return NOTHING
+            v, z3 = r2
+            out = dict(ctx)
+            out[name] = v
+            return (out, z3)
 
-class _SBindTo:
-    def __init__(self, name):
-        self.name = name
-
-    def __call__(self, value):
-        return {self.name: value}
-
-
-class _SOf(SerialScraper):
-    __slots__ = ("value",)
-
-    def __init__(self, value):
-        self.value = value
-        super().__init__(self._run)
-
-    def _run(self, z):
-        return (self.value, z)
-
-    def __reduce__(self):
-        return (_SOf, (self.value,))
+        return SerialScraper(bound)
 
 
 def of(value):
-    return _SOf(value)
+    return SerialScraper(lambda z: (value, z))
 
 
-class _SMap(SerialScraper):
-    __slots__ = ("inner", "f")
-
-    def __init__(self, inner, f):
-        self.inner = inner
-        self.f = f
-        super().__init__(self._run)
-
-    def _run(self, z):
-        r = self.inner.run(z)
-        if r is NOTHING:
-            return NOTHING
-        v, z2 = r
-        return (self.f(v), z2)
-
-    def __reduce__(self):
-        return (_SMap, (self.inner, self.f))
-
-
-class _SChain(SerialScraper):
-    __slots__ = ("inner", "f")
-
-    def __init__(self, inner, f):
-        self.inner = inner
-        self.f = f
-        super().__init__(self._run)
-
-    def _run(self, z):
-        r = self.inner.run(z)
-        if r is NOTHING:
-            return NOTHING
-        v, z2 = r
-        return self.f(v).run(z2)
-
-    def __reduce__(self):
-        return (_SChain, (self.inner, self.f))
-
-
-class _SAlt(SerialScraper):
-    __slots__ = ("first", "second")
-
-    def __init__(self, first, second):
-        self.first = first
-        self.second = second
-        super().__init__(self._run)
-
-    def _run(self, z):
-        r = self.first.run(z)
-        return r if r is not NOTHING else self.second.run(z)
-
-    def __reduce__(self):
-        return (_SAlt, (self.first, self.second))
-
-
-class _SApSecond(SerialScraper):
-    __slots__ = ("first", "second")
-
-    def __init__(self, first, second):
-        self.first = first
-        self.second = second
-        super().__init__(self._run)
-
-    def _run(self, z):
-        r = self.first.run(z)
-        if r is NOTHING:
-            return NOTHING
-        return self.second.run(r[1])
-
-    def __reduce__(self):
-        return (_SApSecond, (self.first, self.second))
-
-
-class _SBind(SerialScraper):
-    __slots__ = ("inner", "name", "f")
-
-    def __init__(self, inner, name, f):
-        self.inner = inner
-        self.name = name
-        self.f = f
-        super().__init__(self._run)
-
-    def _run(self, z):
-        r = self.inner.run(z)
-        if r is NOTHING:
-            return NOTHING
-        ctx, z2 = r
-        r2 = self.f(ctx).run(z2)
-        if r2 is NOTHING:
-            return NOTHING
-        v, z3 = r2
-        out = dict(ctx)
-        out[self.name] = v
-        return (out, z3)
-
-    def __reduce__(self):
-        return (_SBind, (self.inner, self.name, self.f))
-
-
-class _Sequence(SerialScraper):
+def sequence(items):
     """Applicative sequence of serial scrapers → list of values."""
+    runs = tuple(s.run for s in items)
 
-    __slots__ = ("items",)
-
-    def __init__(self, items):
-        self.items = tuple(items)
-        super().__init__(self._run)
-
-    def _run(self, z):
+    def each(z):
         out = []
-        for s in self.items:
-            r = s.run(z)
+        for run in runs:
+            r = run(z)
             if r is NOTHING:
                 return NOTHING
             v, z = r
             out.append(v)
         return (out, z)
 
-    def __reduce__(self):
-        return (_Sequence, (self.items,))
-
-
-def sequence(items):
-    return _Sequence(items)
+    return SerialScraper(each)
 
 
 # ---------------------------------------------------------------------------
@@ -226,158 +150,123 @@ def sequence(items):
 # ---------------------------------------------------------------------------
 
 
-class _Step(SerialScraper):
+def _step(move, scraper):
     """step{Next,Back}: move once, read focus, run scraper
     (SerialScraper.ts:200-215, 293-302)."""
+    run = scraper.run
 
-    __slots__ = ("scraper", "forward")
-
-    def __init__(self, scraper, forward):
-        self.scraper = scraper
-        self.forward = forward
-        super().__init__(self._run)
-
-    def _run(self, z):
-        z2 = _down(z) if self.forward else _up(z)
+    def step(z):
+        z2 = move(z)
         if z2 is NOTHING or z2.focus is None:
             return NOTHING
-        v = self.scraper.run(z2.focus)
+        v = run(z2.focus)
         if v is NOTHING:
             return NOTHING
         return (v, z2)
 
-    def __reduce__(self):
-        return (_Step, (self.scraper, self.forward))
+    return SerialScraper(step)
 
 
-class _Seek(SerialScraper):
+def _seek(move, scraper):
     """seek{Next,Back}: advance until the scraper succeeds
     (SerialScraper.ts:220-247, 312-322)."""
+    run = scraper.run
 
-    __slots__ = ("scraper", "forward")
-
-    def __init__(self, scraper, forward):
-        self.scraper = scraper
-        self.forward = forward
-        super().__init__(self._run)
-
-    def _run(self, z):
-        move = _down if self.forward else _up
+    def seek(z):
         while True:
             z2 = move(z)
             if z2 is NOTHING:
                 return NOTHING
             z = z2
             if z.focus is not None:
-                v = self.scraper.run(z.focus)
+                v = run(z.focus)
                 if v is not NOTHING:
                     return (v, z)
 
-    def __reduce__(self):
-        return (_Seek, (self.scraper, self.forward))
+    return SerialScraper(seek)
 
 
-class _Until(SerialScraper):
+def _until(move, sub_zipper, sentinel, inner):
     """until{Next,Back}: collect nodes into a sub-context until the
     sentinel matches, run the inner serial scraper on the sub-context;
     the outer cursor is left just before the sentinel
-    (SerialScraper.ts:255-284, 332-349)."""
+    (SerialScraper.ts:255-284, 332-349).
 
-    __slots__ = ("sentinel", "inner", "forward")
+    ``sub_zipper`` builds the sub-context exactly as the reference's
+    appendNode unwinding does: forward (insertLeft) leaves the cursor on
+    the left bookend with elements to the right in document order;
+    backward (insertRight) leaves it on the right bookend with the
+    collected elements to the left in document order."""
+    is_sentinel, run = sentinel.run, inner.run
 
-    def __init__(self, sentinel, inner, forward):
-        self.sentinel = sentinel
-        self.inner = inner
-        self.forward = forward
-        super().__init__(self._run)
-
-    def _run(self, z):
-        forward = self.forward
-        move = _down if forward else _up
+    def until(z):
         collected = []
         state = z
         while True:
             z2 = move(state)
             if z2 is NOTHING or z2.focus is None:
                 break  # off the end: sub-context gets everything collected
-            if self.sentinel.run(z2.focus) is not NOTHING:
+            if is_sentinel(z2.focus) is not NOTHING:
                 break  # sentinel matched; cursor stays before it
             collected.append(z2.focus)
             state = z2
-        # Build the sub-zipper exactly as the reference's appendNode
-        # unwinding does: forward (insertLeft) leaves the cursor on the
-        # left bookend with elements to the right in document order;
-        # backward (insertRight) leaves it on the right bookend with
-        # the collected elements to the left in document order.
-        if forward:
-            sub = Zipper((), None, tuple(collected) + (None,))
-        else:
-            sub = Zipper((None,) + tuple(reversed(collected)), None, ())
-        r = self.inner.run(sub)
+        r = run(sub_zipper(collected))
         if r is NOTHING:
             return NOTHING
         return (r[0], state)
 
-    def __reduce__(self):
-        return (_Until, (self.sentinel, self.inner, self.forward))
+    return SerialScraper(until)
 
 
-class _Repeat(SerialScraper):
+def _repeat(serial, at_least_one):
     """repeat / repeat1 (SerialScraper.ts:178-195)."""
+    run = serial.run
 
-    __slots__ = ("inner", "at_least_one")
-
-    def __init__(self, inner, at_least_one):
-        self.inner = inner
-        self.at_least_one = at_least_one
-        super().__init__(self._run)
-
-    def _run(self, z):
+    def repeated(z):
         out = []
         while True:
-            r = self.inner.run(z)
+            r = run(z)
             if r is NOTHING:
                 break
             v, z = r
             out.append(v)
-        if self.at_least_one and not out:
+        if at_least_one and not out:
             return NOTHING
         return (out, z)
 
-    def __reduce__(self):
-        return (_Repeat, (self.inner, self.at_least_one))
+    return SerialScraper(repeated)
 
 
 def step_next(scraper):
-    return _Step(scraper, True)
+    return _step(_down, scraper)
 
 
 def step_back(scraper):
-    return _Step(scraper, False)
+    return _step(_up, scraper)
 
 
 def seek_next(scraper):
-    return _Seek(scraper, True)
+    return _seek(_down, scraper)
 
 
 def seek_back(scraper):
-    return _Seek(scraper, False)
+    return _seek(_up, scraper)
 
 
 def until_next(sentinel, inner):
-    return _Until(sentinel, inner, True)
+    return _until(_down, _zipper_from_specs, sentinel, inner)
 
 
 def until_back(sentinel, inner):
-    return _Until(sentinel, inner, False)
+    return _until(_up, _zipper_from_specs_back, sentinel, inner)
 
 
 def repeat(serial):
-    return _Repeat(serial, False)
+    return _repeat(serial, False)
 
 
 def repeat1(serial):
-    return _Repeat(serial, True)
+    return _repeat(serial, True)
 
 
 # ---------------------------------------------------------------------------
@@ -385,17 +274,12 @@ def repeat1(serial):
 # ---------------------------------------------------------------------------
 
 
-class _InSerial(Scraper):
+def in_serial(serial) -> Scraper:
     """Run a serial scraper over the focused node's immediate children
     (chrooted) or the document's root siblings (top level)."""
+    run = serial.run
 
-    __slots__ = ("serial",)
-
-    def __init__(self, serial):
-        self.serial = serial
-        super().__init__(self._run)
-
-    def _run(self, spec):
+    def over_siblings(spec):
         if not spec.hierarchy:
             return NOTHING
         if spec.context.in_chroot:
@@ -403,14 +287,9 @@ class _InSerial(Scraper):
         else:
             trees = spec.hierarchy
         specs = [TagSpec(spec.context, [t], spec.tags) for t in trees]
-        r = self.serial.run(_zipper_from_specs(specs))
+        r = run(_zipper_from_specs(specs))
         if r is NOTHING:
             return NOTHING
         return r[0]
 
-    def __reduce__(self):
-        return (_InSerial, (self.serial,))
-
-
-def in_serial(serial) -> Scraper:
-    return _InSerial(serial)
+    return Scraper(over_siblings)

@@ -1,10 +1,11 @@
 """Extraction operators: Arrow-batched pandas UDFs over the core.
 
 The single-document core (scalpel_ts_spark.core) is pure Python and
-picklable, so a compiled scraper travels to executors inside the UDF
-closure — the Spark-side plan stays fully declarative and Catalyst can
-prune/push down around the UDF.  Each UDF parses a document ONCE and
-runs every requested scraper against the same TagSpec.
+shipped by cloudpickle, so a compiled scraper travels to executors
+inside the UDF closure — the Spark-side plan stays fully declarative
+and Catalyst can prune/push down around the UDF.  Each UDF parses a
+document ONCE and runs every requested scraper against the same
+TagSpec.
 
 Scale notes:
 * ``pandas_udf`` (Series -> Series/DataFrame) keeps transfer in Arrow
@@ -56,9 +57,9 @@ MEDIA_KINDS = {
 }
 
 
-class SpanExtractor(Scraper):
-    """Scraper producing the interleaved (kind, text, media_ref, offset)
-    span sequence of a document in token order.
+def _spans(spec: TagSpec):
+    """The interleaved (kind, text, media_ref, offset) span sequence of
+    a document in token order.
 
     Text tokens become ``text`` spans; media open tags (img/audio/
     video/embed) become media spans whose ``media_ref`` is their
@@ -66,49 +67,49 @@ class SpanExtractor(Scraper):
     sequence — the per-row invariant checked against the reference is
     (kind, text, media_ref, order).
     """
-
-    __slots__ = ()
-
-    def __init__(self):
-        super().__init__(self._run)
-
-    def _run(self, spec: TagSpec):
-        spans = []
-        ordinal = 0
-        for info in spec.tags:
-            tok = info.token
-            kind = type(tok)
-            if kind is Text:
+    spans = []
+    ordinal = 0
+    for info in spec.tags:
+        tok = info.token
+        kind = type(tok)
+        if kind is Text:
+            spans.append(
+                {
+                    "kind": "text",
+                    "text": tok.text,
+                    "media_ref": None,
+                    "offset": ordinal,
+                }
+            )
+            ordinal += 1
+        elif kind is TagOpen:
+            media = MEDIA_KINDS.get(tok.name)
+            if media is not None:
+                src = None
+                for k, v in tok.attributes:
+                    if k == "src":
+                        src = v
+                        break
                 spans.append(
                     {
-                        "kind": "text",
-                        "text": tok.text,
-                        "media_ref": None,
+                        "kind": media,
+                        "text": None,
+                        "media_ref": src,
                         "offset": ordinal,
                     }
                 )
                 ordinal += 1
-            elif kind is TagOpen:
-                media = MEDIA_KINDS.get(tok.name)
-                if media is not None:
-                    src = None
-                    for k, v in tok.attributes:
-                        if k == "src":
-                            src = v
-                            break
-                    spans.append(
-                        {
-                            "kind": media,
-                            "text": None,
-                            "media_ref": src,
-                            "offset": ordinal,
-                        }
-                    )
-                    ordinal += 1
-        return spans
+    return spans
 
-    def __reduce__(self):
-        return (SpanExtractor, ())
+
+class SpanExtractor(Scraper):
+    """Scraper over :func:`_spans`; it pickles by reference, so plain
+    ``pickle`` ships it as well as cloudpickle."""
+
+    __slots__ = ()
+
+    def __init__(self):
+        super().__init__(_spans)
 
 
 def scrape_udf(scraper: Scraper, return_type):

@@ -19,8 +19,11 @@ explicit two-phase salting at every shape tried (BASELINE.md).
   (the crawl engine passes its token ``cap``).
 
 ``prune_k`` must stay under ``spark.sql.optimizer.
-windowGroupLimitThreshold`` (1000 by default) for Catalyst to insert
-the partial limit; above it the window is still exact, only unguarded.
+windowGroupLimitThreshold`` for Catalyst to insert the partial limit;
+above it the window is still exact, only unguarded.  Spark's default
+is 1000; ``sources.session.get_spark`` raises it to 8192, above the
+largest token cap any crawl here runs (4256 in
+``tools/scaling_bench.py``).
 """
 
 from __future__ import annotations

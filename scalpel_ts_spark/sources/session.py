@@ -67,6 +67,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        # topk_per_group's skew guard (the partial WindowGroupLimit) is
+        # planned only for rank bounds under this threshold (default
+        # 1000); the crawl engine's bound is its token cap
+        .config("spark.sql.optimizer.windowGroupLimitThreshold", "8192")
         .config("spark.ui.enabled", "false")
     )
     # shuffle/spill scratch stays on Spark's DISK default: spilling

@@ -282,3 +282,113 @@ def test_fix_tree_hoists_cascade_through_levels():
         TagNode(2, 99, []),
         TagNode(5, 6, []),
     ]
+
+
+# --- Shipping: Spark sends every scraper to executors with cloudpickle.
+
+# documents of the golden scraper / serial / example corpora
+SHIPPING_DOCS = (
+    "",
+    "<a>1</a><b>2</b><a>3</a>",
+    "<parent><a>1</a><b>2</b></parent>",
+    "1<a>2</a><b>3</b>",
+    "<b foo=bar /><a>1</a><a>2</a><a>3</a>",
+    "<a key1=foo /><b key1=bar key2=foo /><a key1=bar key2=baz />",
+    "<a><!-- Comment -->foo</a><a key1=foo></a><a key1=bar>bar</a>",
+    "<img src='foobar' />",
+)
+
+
+def _shipped_scrapers():
+    import scalpel_ts_spark.core.scraper as S
+    import scalpel_ts_spark.core.select as Sel
+    import scalpel_ts_spark.core.serial as Z
+    from scalpel_ts_spark.examples.html_to_markdown import formatted_texts
+    from scalpel_ts_spark.operators.extract import SpanExtractor
+
+    a, b = Sel.tag("a"), Sel.tag("b")
+    any_text = S.text(Sel.any_node)
+    step = Z.step_next(any_text)
+    return {
+        "chroots": S.chroots(a, S.position),
+        "chroot": S.chroot(Sel.tag("parent"), S.texts(Sel.any_node)),
+        "matches": S.matches(b),
+        "text": S.text(a),
+        "texts": S.texts(a),
+        "html": S.html(a),
+        "htmls": S.htmls(Sel.any_node),
+        "inner_html": S.inner_html(Sel.any_node),
+        "inner_htmls": S.inner_htmls(a),
+        "attr": S.attr("key1", a),
+        "attrs": S.attrs("key1", a),
+        "position": S.position,
+        "of": S.of(7),
+        "fail": S.fail(),
+        "map": S.texts(a).map(len),
+        "chain": S.text(a).chain(lambda t: S.of(t * 2)),
+        "alt": S.text(Sel.tag("p")).alt(S.text(b)),
+        "filter": S.texts(a).filter(lambda ts: len(ts) > 1),
+        "filter_map": S.texts(a).filter_map(
+            lambda ts: ts[-1] if ts else S.NOTHING
+        ),
+        "bind": S.text(a).bind_to("t").bind("h", lambda d: S.html(b)),
+        "in_serial repeat step_next": Z.in_serial(Z.repeat(step)),
+        "sequence ap_second step_back": Z.in_serial(
+            Z.sequence([step, step.ap_second(Z.step_back(any_text))])
+        ),
+        "repeat1 seek": Z.in_serial(
+            Z.repeat1(Z.seek_next(S.text(a))).bind_to("forwards").bind(
+                "back", lambda d: Z.seek_back(S.text(a))
+            )
+        ),
+        "until": Z.in_serial(
+            Z.until_next(S.matches(b), Z.repeat(step)).bind_to("next").bind(
+                "back",
+                lambda d: Z.until_back(
+                    S.matches(Sel.tag("p")),
+                    Z.repeat(Z.step_back(any_text)),
+                ),
+            )
+        ),
+        "serial of map chain alt": Z.in_serial(
+            Z.of(1)
+            .map(lambda n: n + 1)
+            .chain(lambda n: step.map(lambda t: (n, t)))
+            .alt(Z.of("none"))
+        ),
+        "spans": SpanExtractor(),
+        "formatted_texts": formatted_texts,
+    }
+
+
+def test_scrapers_round_trip_through_cloudpickle():
+    """Every public combinator of ``core.scraper`` and ``core.serial``,
+    the span extractor and the markdown example's recursive scraper
+    ship with Spark's cloudpickle and scrape the same values after.
+    The span extractor also ships with plain ``pickle``."""
+    import pickle
+
+    from pyspark import cloudpickle
+
+    from scalpel_ts_spark.core.scraper import scrape_either
+    from scalpel_ts_spark.examples.comments import (
+        EXAMPLE_HTML,
+        REPETITION_HTML,
+    )
+    from scalpel_ts_spark.operators.extract import SpanExtractor
+    from tests.test_examples import MD_HTML
+
+    docs = SHIPPING_DOCS + (EXAMPLE_HTML, REPETITION_HTML, MD_HTML)
+    for name, scraper in _shipped_scrapers().items():
+        shipped = cloudpickle.loads(cloudpickle.dumps(scraper))
+        assert shipped is not scraper
+        want = [scrape_either(d, scraper) for d in docs]
+        assert [scrape_either(d, shipped) for d in docs] == want, name
+        if name != "fail":
+            assert any(w[0] == "right" for w in want), name
+    spans = SpanExtractor()
+    plain = pickle.loads(pickle.dumps(spans))
+    assert type(plain) is type(spans)
+    assert [scrape_either(d, plain) for d in docs] == [
+        scrape_either(d, spans) for d in docs
+    ]

@@ -166,12 +166,15 @@ def test_engine_seen_dedup_exchanges_candidates_once(spark):
     assert not any("Python" in n or "Pandas" in n for n in names)
 
 
-def test_per_row_k_topk_limits_hot_groups_below_the_exchange(spark):
+@pytest.mark.parametrize("prune_k", [8, 4256])
+def test_per_row_k_topk_limits_hot_groups_below_the_exchange(spark, prune_k):
     """The politeness top-k's skew guard: with a per-row k (the token
     quota) bounded by the literal ``prune_k``, the one window gets a
     map-side ``WindowGroupLimit`` in Partial mode beneath its single
     Exchange, so a hot host's reducer input is at most prune_k rows
-    per map partition — no salt column, no second window."""
+    per map partition — no salt column, no second window.  4256 is
+    ``tools/scaling_bench.py``'s token cap: above Spark's default
+    ``windowGroupLimitThreshold`` (1000), under the session's."""
     from scalpel_ts_spark.operators.topk import topk_per_group
 
     frontier = _tbl(spark, "documents").select(
@@ -185,7 +188,7 @@ def test_per_row_k_topk_limits_hot_groups_below_the_exchange(spark):
         group_cols=["host_id"],
         order_cols=[F.col("priority"), F.col("seq")],
         k=F.col("tokens"),
-        prune_k=8,
+        prune_k=prune_k,
     )
     plan = out._jdf.queryExecution().executedPlan().executedPlan()
     nodes = list(_nodes(plan))
