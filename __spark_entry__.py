@@ -1046,15 +1046,15 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same clustering, forced through the large-star/small-star path
-    (the O(log^2 n) variant for diameter-heavy dup graphs) — must
-    produce byte-identical labels to plain propagation, checked against
-    the same recursive-CTE oracle."""
+    (the O(log^2 n) variant for diameter-heavy dup graphs) by a zero
+    propagation budget — must produce byte-identical labels to plain
+    propagation, checked against the same recursive-CTE oracle."""
     from scalpel_ts_spark.operators.dedup import connected_components
 
     pairs = minhash_near_duplicates(
         _neardup_corpus(spark, sf_dir), threshold=0.8
     )
-    return connected_components(pairs, method="star").select(
+    return connected_components(pairs, max_iter=0).select(
         F.col("v").alias("doc_id"), F.col("component").alias("cluster_id")
     )
 

@@ -25,18 +25,11 @@ from scalpel_ts_spark.core.tokenizer import (
 class _Nothing:
     """Singleton failure marker (reference Option None)."""
 
-    _instance = None
-
-    def __new__(cls):
-        if cls._instance is None:
-            cls._instance = super().__new__(cls)
-        return cls._instance
-
     def __repr__(self):
         return "NOTHING"
 
-    def __reduce__(self):  # pickle to the same singleton
-        return (_Nothing, ())
+    def __reduce__(self):  # pickle by reference to the module global
+        return "NOTHING"
 
 
 NOTHING = _Nothing()

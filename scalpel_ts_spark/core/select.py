@@ -232,11 +232,12 @@ def _count_containing(root_hierarchy, node) -> int:
     return count
 
 
-def _check_settings(depth, curr_hierarchy, root_hierarchy) -> int:
-    """Depth constraint: Fail below, Cull beyond (Select.ts:629-668)."""
-    if depth is None or not curr_hierarchy:
+def _check_settings(depth, curr_hierarchy, root_hierarchy, i=0) -> int:
+    """Depth constraint on ``curr_hierarchy[i]``: Fail below, Cull
+    beyond (Select.ts:629-668)."""
+    if depth is None or i >= len(curr_hierarchy):
         return MATCH_OK
-    current_depth = _count_containing(root_hierarchy, curr_hierarchy[0])
+    current_depth = _count_containing(root_hierarchy, curr_hierarchy[i])
     if current_depth < depth:
         return MATCH_FAIL
     if current_depth > depth:
@@ -244,9 +245,11 @@ def _check_settings(depth, curr_hierarchy, root_hierarchy) -> int:
     return MATCH_OK
 
 
-def _node_matches(selection, info, curr_hierarchy, root_hierarchy) -> int:
+def _node_matches(selection, info, curr_hierarchy, i, root_hierarchy) -> int:
     """Select.ts:670-704."""
-    settings = _check_settings(selection.depth, curr_hierarchy, root_hierarchy)
+    settings = _check_settings(
+        selection.depth, curr_hierarchy, root_hierarchy, i
+    )
     if selection.strategy == STRAT_ONE:
         check = _check_tag(selection.tag, selection.predicates, info)
     elif selection.strategy == STRAT_ANY:
@@ -256,16 +259,44 @@ def _node_matches(selection, info, curr_hierarchy, root_hierarchy) -> int:
     return combine_match(settings, check)
 
 
-def lift_siblings(acc, start, end, forest):
-    """Hoist malformed-HTML spans nested in siblings (Select.ts:467-479)."""
-    if not forest:
+def lift_siblings(acc, start, end, forest, i=0, ordered=False):
+    """Hoist malformed-HTML spans nested in siblings ``forest[i:]``
+    (Select.ts:467-479).
+
+    ``ordered`` says that ``forest`` and every sibling list of its
+    tree are ordered by start.  The walk then stops at the first
+    sibling that starts past ``end``, since every later one does too.
+    That also holds for the lists lifted from an overlapping sibling:
+    they hold contained spans, which start before ``end``, followed by
+    one sibling list of the tree."""
+    if i >= len(forest):
         return acc
-    t, ts = forest[0], forest[1:]
+    t = forest[i]
+    if ordered and end < t.start:
+        return acc
     if start < t.start and t.end < end:
-        return [t] + lift_siblings(acc, start, end, ts)
+        return [t] + lift_siblings(acc, start, end, forest, i + 1, ordered)
     if end < t.start or t.end < start:
-        return lift_siblings(acc, start, end, ts)
-    return lift_siblings(t.forest, start, end, lift_siblings(acc, start, end, ts))
+        return lift_siblings(acc, start, end, forest, i + 1, ordered)
+    lifted = lift_siblings(acc, start, end, forest, i + 1, ordered)
+    return lift_siblings(t.forest, start, end, lifted, 0, ordered)
+
+
+def _in_order(nodes) -> bool:
+    return all(a.start <= b.start for a, b in zip(nodes, nodes[1:]))
+
+
+def _tree_in_order(forest) -> bool:
+    """True when every sibling list of the forest is ordered by start.
+    Crossing closes can break that: a hoisted node may start after the
+    next sibling of the node it left."""
+    stack = [forest]
+    while stack:
+        nodes = stack.pop()
+        if not _in_order(nodes):
+            return False
+        stack.extend(t.forest for t in nodes)
+    return True
 
 
 def _recenter_tree(node, offset):
@@ -285,43 +316,51 @@ def _shrink_spec_with(spec: TagSpec, node: TagNode) -> TagSpec:
     )
 
 
-def _select_nodes(selectors, curr_hierarchy, spec, root_hierarchy, acc):
-    """The DFS (Select.ts:481-564).  Matches are prepended onto ``acc``
-    exactly as the reference's cons-based fold does."""
-    if not selectors or not curr_hierarchy:
+def _select_nodes(selectors, hier, i, spec, root, acc, ordered):
+    """The DFS (Select.ts:481-564) over the siblings ``hier[i:]``.
+
+    ``acc`` is a cons list of ``(match, rest)`` pairs ending in None:
+    matches are prepended exactly as the reference's cons-based fold
+    does, each in O(1), and :func:`select` unwinds the list once.
+    ``ordered`` says that ``hier`` and every sibling list of the tree
+    are ordered by start (:func:`lift_siblings`)."""
+    if not selectors or i >= len(hier):
         return acc
     n = selectors[0]
     ns = selectors[1:]
-    f = curr_hierarchy[0]
-    fs = curr_hierarchy[1:]
-    verdict = _node_matches(n, spec.tags[f.start], curr_hierarchy, root_hierarchy)
+    f = hier[i]
+    verdict = _node_matches(n, spec.tags[f.start], hier, i, root)
 
     if not ns:
         if verdict == MATCH_OK:
-            inner = _select_nodes((n,), f.forest, spec, root_hierarchy, acc)
-            outer = _select_nodes((n,), fs, spec, root_hierarchy, inner)
-            return [_shrink_spec_with(spec, f)] + outer
+            inner = _select_nodes(selectors, f.forest, 0, spec, root, acc, ordered)
+            outer = _select_nodes(selectors, hier, i + 1, spec, root, inner, ordered)
+            return (_shrink_spec_with(spec, f), outer)
         if verdict == MATCH_CULL:
-            return _select_nodes((n,), fs, spec, root_hierarchy, acc)
-        inner = _select_nodes((n,), fs, spec, root_hierarchy, acc)
-        return _select_nodes((n,), f.forest, spec, root_hierarchy, inner)
+            return _select_nodes(selectors, hier, i + 1, spec, root, acc, ordered)
+        inner = _select_nodes(selectors, hier, i + 1, spec, root, acc, ordered)
+        return _select_nodes(selectors, f.forest, 0, spec, root, inner, ordered)
 
     if verdict == MATCH_OK:
         # malformed-HTML siblings nested inside f's span may be valid
         # children for the remaining selectors (Select.ts:526-535)
-        siblings = lift_siblings([], f.start, f.end, list(fs))
-        inner = _select_nodes(selectors, fs, spec, root_hierarchy, acc)
+        siblings = lift_siblings([], f.start, f.end, hier, i + 1, ordered)
+        children = list(f.forest) + siblings
+        inner = _select_nodes(selectors, hier, i + 1, spec, root, acc, ordered)
         return _select_nodes(
             ns,
-            list(f.forest) + siblings,
+            children,
+            0,
             spec,
             [f] + siblings,  # new root for depth checks
             inner,
+            # lifted siblings may start before f's later children
+            ordered and _in_order(children),
         )
     if verdict == MATCH_CULL:
-        return _select_nodes(selectors, fs, spec, root_hierarchy, acc)
-    inner = _select_nodes(selectors, fs, spec, root_hierarchy, acc)
-    return _select_nodes(selectors, f.forest, spec, root_hierarchy, inner)
+        return _select_nodes(selectors, hier, i + 1, spec, root, acc, ordered)
+    inner = _select_nodes(selectors, hier, i + 1, spec, root, acc, ordered)
+    return _select_nodes(selectors, f.forest, 0, spec, root, inner, ordered)
 
 
 def select(selector, spec: TagSpec):
@@ -330,10 +369,14 @@ def select(selector, spec: TagSpec):
     sys.setrecursionlimit(
         max(sys.getrecursionlimit(), 8 * len(spec.tags) + 1000)
     )
-    results = _select_nodes(
-        tuple(selector), list(spec.hierarchy), spec, list(spec.hierarchy), []
+    selector = tuple(selector)
+    # only a nested selector lifts siblings
+    ordered = len(selector) > 1 and _tree_in_order(spec.hierarchy)
+    acc = _select_nodes(
+        selector, spec.hierarchy, 0, spec, list(spec.hierarchy), None, ordered
     )
-    return [
-        TagSpec(SelectContext(p, True), s.hierarchy, s.tags)
-        for p, s in enumerate(results)
-    ]
+    out = []
+    while acc is not None:
+        s, acc = acc
+        out.append(TagSpec(SelectContext(len(out), True), s.hierarchy, s.tags))
+    return out

@@ -41,21 +41,6 @@ class TagNode:
         )
 
 
-def _malformed(end: int, pre_bad: list, remaining: list):
-    """Split ``remaining`` into nodes within ``end`` (ok) and hoisted
-    nodes whose span escapes it (bad), preserving order.
-
-    Reference: TagForest.ts:74-90 (right fold).
-    """
-    ok: list = []
-    hoisted: list = []
-    for node in remaining:
-        (hoisted if end < node.end else ok).append(node)
-    # the fold conses onto the recursion's result whose base case is
-    # ``preBad``, so hoisted nodes precede the seed, all in doc order
-    return ok, hoisted + list(pre_bad)
-
-
 def _fix_tree(forest: list) -> list:
     """Hoist malformed children (reference fixTree, TagForest.ts:94-100).
 

@@ -39,8 +39,6 @@ from scalpel_ts_spark.functions.text import (
 )
 from scalpel_ts_spark.operators.spread import spread_small
 
-_MERSENNE61 = (1 << 61) - 1
-
 
 def _hash_strings(flat: np.ndarray) -> np.ndarray:
     """Vectorized stable 64-bit hash of a string array.
@@ -279,7 +277,6 @@ def minhash_near_duplicates(
     n_perm: int = 128,
     n_bands: int = 32,
     rows_per_band: int = 4,
-    persisted_out: list | None = None,
 ) -> DataFrame:
     """Near-dup pairs: shingle -> minhash -> LSH bands -> candidate
     self-join -> exact-Jaccard verification (the authority).
@@ -294,9 +291,7 @@ def minhash_near_duplicates(
     filter — two ArrowEvalPython nodes per side in the r6 before-plan).
     Caching *with_sig* instead of the bare shingles (r6) makes every
     consumer read one materialization: one shingle pass, ONE signature
-    UDF pass.  Loop callers pass ``persisted_out`` to receive the
-    cached frame for unpersisting after the action — the same cache
-    contract as :func:`connected_components`.
+    UDF pass.  The cache lives as long as the session.
     """
     if n_bands * rows_per_band > n_perm:
         raise ValueError(
@@ -318,8 +313,6 @@ def minhash_near_duplicates(
     with_sig = shingled.withColumn(
         "minhash", minhash_signature_udf(n_perm)(F.col("shingles"))
     ).persist()
-    if persisted_out is not None:
-        persisted_out.append(with_sig)
     cand = lsh_candidate_pairs(
         with_sig, n_bands, rows_per_band, id_col=id_col, sig_col="minhash"
     )
@@ -336,11 +329,7 @@ def minhash_near_duplicates(
     return _verify_jaccard(pairs, threshold)
 
 
-def _star_components(
-    sym: DataFrame,
-    persisted_out: list | None = None,
-    max_iter: int = 50,
-) -> DataFrame:
+def _star_components(sym: DataFrame, max_iter: int = 50) -> DataFrame:
     """Large-star/small-star connected components (Kiveris et al.
     2014, "Connected Components in MapReduce and Beyond").
 
@@ -355,7 +344,11 @@ def _star_components(
     shuffles.  Every step is a JVM-side join + hash aggregate on
     (src, dst) pairs; nothing is collected.
 
-    Input: a symmetric (src, dst) edge frame.  Output: (v, component).
+    Input: the symmetric (src, dst) edge frame, already checkpointed
+    by :func:`connected_components`; both the vertex set (which must
+    keep vertices whose only edge is a self-loop) and the
+    canonically-oriented working edges derive from it.  Output:
+    (v, component).
 
     Each alternation references the previous edge set several times
     (both orientations, the min-aggregate, the join-back, the fixpoint
@@ -366,17 +359,11 @@ def _star_components(
     a reliable checkpoint dir / the Iceberg scratch table instead, same
     shape.
     """
-    # one checkpoint of the symmetric edge list is the ONLY evaluation
-    # of `sym` (which may be an expensive un-cached pair-generation
-    # pipeline); both the vertex set (which must keep vertices whose
-    # only edge is a self-loop) and the canonically-oriented working
-    # edges derive from it
-    base = sym.localCheckpoint()
     # canonical orientation big -> small (drops self-loops); every
     # rewrite below preserves src > dst, so 'distinct' is a true
     # edge-set dedup
     e = (
-        base.filter(F.col("src") > F.col("dst"))
+        sym.filter(F.col("src") > F.col("dst"))
         .distinct()
         .localCheckpoint()
     )
@@ -434,8 +421,8 @@ def _star_components(
             f"star connected components did not reach fixpoint in "
             f"{max_iter} alternations"
         )
-    verts = base.select(F.col("src").alias("v")).distinct()
-    labels = (
+    verts = sym.select(F.col("src").alias("v")).distinct()
+    return (
         verts.join(
             e.select(F.col("src").alias("v"), F.col("dst").alias("c")),
             "v",
@@ -443,11 +430,7 @@ def _star_components(
         )
         .groupBy("v")
         .agg(F.min(F.coalesce(F.col("c"), F.col("v"))).alias("component"))
-        .persist()
     )
-    if persisted_out is not None:
-        persisted_out.append(labels)
-    return labels.select("v", "component")
 
 
 def connected_components(
@@ -455,8 +438,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 25,
-    persisted_out: list | None = None,
-    method: str = "auto",
 ) -> DataFrame:
     """Cluster duplicate pairs into components: (vertex, component)
     where component = the smallest vertex id reachable — the standard
@@ -466,23 +447,18 @@ def connected_components(
     its own and its neighbors' labels; converges in graph-diameter
     iterations (each is one shuffle-join + one hash aggregate, all
     JVM-side).  Dup clusters are near-cliques, so the diameter — and
-    the iteration count — is tiny in practice.
+    the iteration count — is tiny in practice.  If the labels have not
+    converged after ``max_iter`` rounds, the graph's diameter exceeds
+    the budget and the same checkpointed edges go to the O(log^2 n)
+    large-star/small-star algorithm (:func:`_star_components`), which
+    is correct on any graph, just costlier per round;
+    ``max_iter=0`` goes straight to it.  Both are deterministic (labels
+    are data — min ids — never scheduling order) and give identical
+    output.
 
-    ``method``:
-
-    * ``"auto"`` (default) — plain propagation up to ``max_iter``;
-      if the graph's diameter exceeds the budget, fall back to the
-      O(log^2 n) large-star/small-star algorithm
-      (:func:`_star_components`) instead of failing;
-    * ``"star"`` — go straight to large-star/small-star (the choice
-      for graphs known to be chain-shaped);
-    * ``"plain"`` — propagation only; RAISES on non-convergence
-      (silently returning intermediate labels would split clusters).
-
-    Both methods are deterministic (labels are data — min ids — never
-    scheduling order) and produce identical output.  Every iteration
-    ends in an eager ``localCheckpoint`` — exactly like the star path —
-    because a lazily-``persist``-ed label frame is a trap: the
+    The symmetric edges are checkpointed once, and every propagation
+    round ends in an eager ``localCheckpoint`` — exactly like the star
+    path — because a lazily-``persist``-ed label frame is a trap: the
     convergence probe's ``limit(1).count()`` may materialize only a
     slice of the cache, so unpersisting the predecessor re-opens the
     whole join chain for recompute, and the un-truncated logical plan
@@ -490,23 +466,19 @@ def connected_components(
     wall time (measured: 60-vertex graph, 194 s and a driver OOM under
     heap pressure; checkpointed, ~10 s).  The checkpoint is one
     bounded job per iteration over (v, c) pairs — the iteration's
-    required materialization, not an extra one.  Loop-callers pass
-    ``persisted_out`` to unpersist the returned frame after use.
+    required materialization, not an extra one.  Checkpoint blocks
+    are freed by the ContextCleaner once their frames are unreferenced.
     """
-    sym = edges.select(
-        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
-    ).unionByName(
-        edges.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
-    )
-    if method == "star":
-        return _star_components(sym, persisted_out)
-    labels = (
-        sym.select(F.col("src").alias("v")).distinct()
-        .withColumn("c", F.col("v"))
+    sym = (
+        edges.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+        .unionByName(
+            edges.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
+        )
         .localCheckpoint()
     )
-    sym = sym.localCheckpoint()
-    converged = False
+    labels = sym.select(F.col("src").alias("v")).distinct().withColumn(
+        "c", F.col("v")
+    )
     for _ in range(max_iter):
         nbr_min = (
             sym.join(
@@ -536,36 +508,10 @@ def connected_components(
             )
             .localCheckpoint()
         )
-        changed = stepped.filter("moved").limit(1).count()
         labels = stepped.select("v", "c")
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        if method == "auto":
-            # diameter exceeded the propagation budget: switch to the
-            # O(log^2 n) star algorithm rather than failing — correct
-            # on any graph, just costlier per round.  sym is already
-            # checkpointed, so the star reads materialized blocks
-            # (freed by the ContextCleaner once unreferenced)
-            return _star_components(sym, persisted_out)
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} "
-            f"iterations (graph diameter exceeds max_iter); raise "
-            f"max_iter or use method='auto'/'star' — returning partial "
-            f"labels would split clusters"
-        )
-    out = labels.select(F.col("v"), F.col("c").alias("component"))
-    if persisted_out is not None:
-        # the appended frame must be genuinely persisted for the
-        # caller's unpersist() to free anything (labels reads
-        # localCheckpoint blocks, which the cache manager doesn't
-        # own — same discipline as the star path's persisted output;
-        # the per-iteration checkpoint blocks free via the
-        # ContextCleaner as their frames drop out of scope)
-        out = out.persist()
-        persisted_out.append(out)
-    return out
+        if stepped.filter("moved").limit(1).count() == 0:
+            return labels.select(F.col("v"), F.col("c").alias("component"))
+    return _star_components(sym)
 
 
 # --- SimHash ---------------------------------------------------------------
@@ -578,7 +524,6 @@ def winnow_duplicates(
     w: int = 16,
     text_col: str = "text",
     id_col: str = "doc_id",
-    persisted_out: list | None = None,
 ) -> DataFrame:
     """Near-dup pairs by winnowing-fingerprint overlap (the MOSS
     pipeline: Schleimer/Wilkerson/Aiken, SIGMOD 2003 §5).
@@ -604,9 +549,7 @@ def winnow_duplicates(
     sizes, float-free like :func:`jaccard_pairs`.
 
     The fingerprint frame is persisted (it feeds the explode and both
-    verification joins); loop callers pass ``persisted_out`` to
-    receive it for unpersisting after the action — the same cache
-    contract as :func:`minhash_near_duplicates`.
+    verification joins); the cache lives as long as the session.
     """
     fps = (
         spread_small(df, id_col)
@@ -620,8 +563,6 @@ def winnow_duplicates(
         .filter(F.size("fps") > 0)
     )
     fps.persist()
-    if persisted_out is not None:
-        persisted_out.append(fps)
     exploded = fps.select(F.col(id_col), F.explode("fps").alias("fp"))
     # per-doc fingerprint sets are DISTINCT, so each shared
     # fingerprint contributes exactly one joined row per pair —
@@ -712,7 +653,6 @@ def simhash_near_duplicates(
     max_hamming: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    persisted_out: list | None = None,
 ) -> DataFrame:
     """Pairs with simhash hamming distance <= max_hamming (exact,
     verified after banded candidate generation).  Requires
@@ -724,8 +664,8 @@ def simhash_near_duplicates(
     duplicating the UDF around pushed-down isnotnull filters: the r6
     before-plan evaluated the simhash UDF SIX times per query where
     one pass suffices.  The cached frame is two longs per document —
-    negligible at any scale next to the corpus it indexes.  Loop
-    callers pass ``persisted_out`` to unpersist after their action.
+    negligible at any scale next to the corpus it indexes.  The cache
+    lives as long as the session.
     """
     assert max_hamming < 4, "4-band split is lossless only for hamming <= 3"
     from scalpel_ts_spark.functions.text import tokens as tokens_col
@@ -741,8 +681,6 @@ def simhash_near_duplicates(
         .select(F.col(id_col), simhash_udf()(F.col("_toks")).alias("simhash"))
         .persist()
     )
-    if persisted_out is not None:
-        persisted_out.append(with_sim)
     bands = with_sim.select(
         F.col(id_col),
         F.col("simhash"),

@@ -92,7 +92,7 @@ def top_ngram_repetition(docs: DataFrame, id_col: str = "doc_id",
 
 def decontaminate(docs: DataFrame, benchmark: DataFrame,
                   id_col: str = "doc_id", text_col: str = "text",
-                  n: int = 3, broadcast_benchmark: bool = True) -> DataFrame:
+                  n: int = 3) -> DataFrame:
     """Benchmark decontamination: per training document, how many of
     its distinct word ``n``-grams appear anywhere in the benchmark
     corpus, and a 0/1 ``contaminated`` flag (any overlap).
@@ -108,16 +108,12 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame,
     per-doc count, which map-side partial-combines.  Every document
     is kept (left join): zero-hit docs report ``n_hit_grams = 0``,
     so the output is a decision column, not a filtered subset.
-    Set ``broadcast_benchmark=False`` if the benchmark gram set
-    outgrows executor memory; the join then shuffles on gram.
     """
-    bench_grams = (
+    bench_grams = F.broadcast(
         benchmark.select(
             F.explode(T.word_shingles(F.col(text_col), n)).alias("gram")
         ).distinct()
     )
-    if broadcast_benchmark:
-        bench_grams = F.broadcast(bench_grams)
     # NOT spread: unlike top_ngram_repetition, the gram stream here is
     # immediately reduced by the broadcast join + per-doc count, and a
     # pre-explode repartition measurably LOST (0.21 -> 0.29 s at

@@ -30,7 +30,6 @@ import scalpel_ts_spark.core.select as Sel
 from scalpel_ts_spark.core.scraper import NOTHING
 from scalpel_ts_spark.core.tag_spec import tags_to_spec
 from scalpel_ts_spark.core.tokenizer import parse
-from scalpel_ts_spark.operators.extract import SpanExtractor
 from scalpel_ts_spark.sources.synthetic import (
     html_for_url,
     parse_url_ids,
@@ -45,7 +44,6 @@ class SimState:
     seen: set = field(default_factory=set)
     tokens: dict = field(default_factory=dict)  # host_id -> tokens
     fetch_log: list = field(default_factory=list)
-    docs: list = field(default_factory=list)  # (url, spans)
     round: int = 0
 
 
@@ -55,10 +53,8 @@ def simulate_crawl(
     cap: int = 8,
     refill: int = 4,
     n_hosts: int = 50,
-    collect_spans: bool = False,
 ) -> SimState:
     links_scraper = S.attrs("href", Sel.tag("a"))
-    span_scraper = SpanExtractor()
     st = SimState()
     for url in seeds:
         st.frontier[url] = (0, seq_of(url))
@@ -114,8 +110,6 @@ def simulate_crawl(
                     "n_new": n_new,
                 }
             )
-            if collect_spans:
-                st.docs.append((url, span_scraper.run(spec)))
 
         for link, (prio, seq) in discovered.items():
             st.frontier[link] = (prio, seq)

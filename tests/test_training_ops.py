@@ -156,14 +156,6 @@ def test_simhash_ignores_null_text_docs(spark):
     assert pairs == {(2, 3)}
 
 
-def test_minhash_persisted_out_contract(spark, docs_df):
-    caches: list = []
-    D.minhash_near_duplicates(docs_df, persisted_out=caches).collect()
-    assert len(caches) == 1 and caches[0].is_cached
-    caches[0].unpersist()
-    assert not caches[0].is_cached
-
-
 def test_exact_dedup(spark, docs_df):
     groups = D.exact_duplicates(docs_df).collect()
     sizes = sorted(g["n_dupes"] for g in groups)
@@ -449,25 +441,38 @@ def test_connected_components_chain_and_clique(spark):
                    20: 20, 21: 20}
 
 
-def test_connected_components_plain_raises_on_non_convergence(spark):
-    from scalpel_ts_spark.operators.dedup import connected_components
-
+def test_connected_components_short_budget_falls_back_to_same_labels(
+    spark, monkeypatch
+):
+    # a chain of diameter 6 does not converge in 2 propagation rounds:
+    # the labels then come from the star path, and equal those that
+    # 10 rounds of propagation reach on their own
+    calls = []
+    star = D._star_components
+    monkeypatch.setattr(
+        D, "_star_components", lambda sym: calls.append(1) or star(sym)
+    )
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(6)], ["id_a", "id_b"]
     )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iter=2, method="plain").collect()
-    # and converges fine with enough iterations
-    got = connected_components(chain, max_iter=10, method="plain").collect()
-    assert {r["component"] for r in got} == {0}
+    short = {
+        (r["v"], r["component"])
+        for r in D.connected_components(chain, max_iter=2).collect()
+    }
+    assert calls == [1]
+    full = {
+        (r["v"], r["component"])
+        for r in D.connected_components(chain, max_iter=10).collect()
+    }
+    assert calls == [1]
+    assert short == full == {(i, 0) for i in range(7)}
 
 
 def test_star_components_beat_diameter_bound(spark):
     # VERDICT r2 'what's missing' #2: a diameter-120 chain would need
-    # 120 propagation rounds (or trip the plain raise); the large-star/
-    # small-star path must label it correctly within its O(log^2 n)
-    # alternation budget — and 'auto' must fall back to it when the
-    # plain iteration budget is exhausted
+    # 120 propagation rounds; the large-star/small-star path must label
+    # it correctly within its O(log^2 n) alternation budget — both when
+    # the propagation budget runs out and when it is zero
     from scalpel_ts_spark.operators.dedup import connected_components
 
     chain = spark.createDataFrame(
@@ -475,12 +480,12 @@ def test_star_components_beat_diameter_bound(spark):
     )
     got = {
         r["v"]: r["component"]
-        for r in connected_components(chain, max_iter=4, method="auto").collect()
+        for r in connected_components(chain, max_iter=4).collect()
     }
     assert got == {i: 0 for i in range(121)}
     direct = {
         r["v"]: r["component"]
-        for r in connected_components(chain, method="star").collect()
+        for r in connected_components(chain, max_iter=0).collect()
     }
     assert direct == got
 
@@ -497,11 +502,11 @@ def test_star_components_match_plain_on_random_graph(spark):
     edges = spark.createDataFrame(sorted(pairs), ["id_a", "id_b"])
     plain = {
         (r["v"], r["component"])
-        for r in connected_components(edges, max_iter=50, method="plain").collect()
+        for r in connected_components(edges, max_iter=50).collect()
     }
     star = {
         (r["v"], r["component"])
-        for r in connected_components(edges, method="star").collect()
+        for r in connected_components(edges, max_iter=0).collect()
     }
     assert plain == star
 
@@ -514,11 +519,11 @@ def test_star_components_keep_self_loop_vertices(spark):
     edges = spark.createDataFrame([(1, 2), (5, 5)], ["id_a", "id_b"])
     plain = {
         (r["v"], r["component"])
-        for r in connected_components(edges, method="plain").collect()
+        for r in connected_components(edges).collect()
     }
     star = {
         (r["v"], r["component"])
-        for r in connected_components(edges, method="star").collect()
+        for r in connected_components(edges, max_iter=0).collect()
     }
     assert plain == star == {(1, 1), (2, 1), (5, 5)}
 
