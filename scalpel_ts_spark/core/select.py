@@ -15,6 +15,8 @@ from __future__ import annotations
 
 import re
 import sys
+from itertools import groupby
+from operator import itemgetter
 from typing import NamedTuple, Optional, Tuple
 
 from scalpel_ts_spark.core.tag_spec import SelectContext, TagSpec
@@ -219,25 +221,62 @@ def _check_tag(tag_name, predicates, info) -> int:
     return combine_match(x, y)
 
 
-def _count_containing(root_hierarchy, node) -> int:
-    """Number of spans in the root hierarchy strictly containing node."""
-    cs, ce = node.start, node.end
-    count = 0
+def _containment_counts(root_hierarchy) -> dict:
+    """``(start, end) -> `` the number of spans in the root hierarchy
+    strictly containing that span: the depth :func:`at_depth` checks.
+
+    The tree's spans, one per occurrence, are sorted by start and swept
+    with a Fenwick tree over their ends.  Each group of equal starts is
+    counted against the spans already inserted, which all start
+    strictly earlier, before it is inserted itself: O(n log n) for the
+    whole tree.  Tree depth is not the same count: crossing closes can
+    hoist a node inside a sibling's span."""
+    spans = []
     stack = list(root_hierarchy)
     while stack:
         t = stack.pop()
-        if t.start < cs and ce < t.end:
-            count += 1
+        spans.append((t.start, t.end))
         stack.extend(t.forest)
-    return count
+    spans.sort()
+    rank = {e: r for r, e in enumerate(sorted({e for _, e in spans}), 1)}
+    fenwick = [0] * (len(rank) + 1)
+    counts = {}
+    inserted = 0
+    for start, group in groupby(spans, key=itemgetter(0)):
+        ends = [e for _, e in group]
+        for e in ends:
+            # inserted spans that end after e
+            r = rank[e]
+            at_or_before = 0
+            while r:
+                at_or_before += fenwick[r]
+                r &= r - 1
+            counts[(start, e)] = inserted - at_or_before
+        for e in ends:
+            r = rank[e]
+            while r < len(fenwick):
+                fenwick[r] += 1
+                r += r & -r
+        inserted += len(ends)
+    return counts
 
 
-def _check_settings(depth, curr_hierarchy, root_hierarchy, i=0) -> int:
+def _depth_counts(selectors, root_hierarchy):
+    """The containment counts of a root, built only when a remaining
+    selection constrains depth."""
+    if any(s.depth is not None for s in selectors):
+        return _containment_counts(root_hierarchy)
+    return None
+
+
+def _check_settings(depth, curr_hierarchy, counts, i=0) -> int:
     """Depth constraint on ``curr_hierarchy[i]``: Fail below, Cull
-    beyond (Select.ts:629-668)."""
+    beyond (Select.ts:629-668).  ``counts`` is the root's
+    :func:`_containment_counts`."""
     if depth is None or i >= len(curr_hierarchy):
         return MATCH_OK
-    current_depth = _count_containing(root_hierarchy, curr_hierarchy[i])
+    node = curr_hierarchy[i]
+    current_depth = counts[(node.start, node.end)]
     if current_depth < depth:
         return MATCH_FAIL
     if current_depth > depth:
@@ -245,11 +284,9 @@ def _check_settings(depth, curr_hierarchy, root_hierarchy, i=0) -> int:
     return MATCH_OK
 
 
-def _node_matches(selection, info, curr_hierarchy, i, root_hierarchy) -> int:
+def _node_matches(selection, info, curr_hierarchy, i, counts) -> int:
     """Select.ts:670-704."""
-    settings = _check_settings(
-        selection.depth, curr_hierarchy, root_hierarchy, i
-    )
+    settings = _check_settings(selection.depth, curr_hierarchy, counts, i)
     if selection.strategy == STRAT_ONE:
         check = _check_tag(selection.tag, selection.predicates, info)
     elif selection.strategy == STRAT_ANY:
@@ -316,51 +353,52 @@ def _shrink_spec_with(spec: TagSpec, node: TagNode) -> TagSpec:
     )
 
 
-def _select_nodes(selectors, hier, i, spec, root, acc, ordered):
+def _select_nodes(selectors, hier, i, spec, counts, acc, ordered):
     """The DFS (Select.ts:481-564) over the siblings ``hier[i:]``.
 
     ``acc`` is a cons list of ``(match, rest)`` pairs ending in None:
     matches are prepended exactly as the reference's cons-based fold
     does, each in O(1), and :func:`select` unwinds the list once.
     ``ordered`` says that ``hier`` and every sibling list of the tree
-    are ordered by start (:func:`lift_siblings`)."""
+    are ordered by start (:func:`lift_siblings`).  ``counts`` holds the
+    current root's containment counts (:func:`_depth_counts`)."""
     if not selectors or i >= len(hier):
         return acc
     n = selectors[0]
     ns = selectors[1:]
     f = hier[i]
-    verdict = _node_matches(n, spec.tags[f.start], hier, i, root)
+    verdict = _node_matches(n, spec.tags[f.start], hier, i, counts)
 
     if not ns:
         if verdict == MATCH_OK:
-            inner = _select_nodes(selectors, f.forest, 0, spec, root, acc, ordered)
-            outer = _select_nodes(selectors, hier, i + 1, spec, root, inner, ordered)
+            inner = _select_nodes(selectors, f.forest, 0, spec, counts, acc, ordered)
+            outer = _select_nodes(selectors, hier, i + 1, spec, counts, inner, ordered)
             return (_shrink_spec_with(spec, f), outer)
         if verdict == MATCH_CULL:
-            return _select_nodes(selectors, hier, i + 1, spec, root, acc, ordered)
-        inner = _select_nodes(selectors, hier, i + 1, spec, root, acc, ordered)
-        return _select_nodes(selectors, f.forest, 0, spec, root, inner, ordered)
+            return _select_nodes(selectors, hier, i + 1, spec, counts, acc, ordered)
+        inner = _select_nodes(selectors, hier, i + 1, spec, counts, acc, ordered)
+        return _select_nodes(selectors, f.forest, 0, spec, counts, inner, ordered)
 
     if verdict == MATCH_OK:
         # malformed-HTML siblings nested inside f's span may be valid
         # children for the remaining selectors (Select.ts:526-535)
         siblings = lift_siblings([], f.start, f.end, hier, i + 1, ordered)
         children = list(f.forest) + siblings
-        inner = _select_nodes(selectors, hier, i + 1, spec, root, acc, ordered)
+        inner = _select_nodes(selectors, hier, i + 1, spec, counts, acc, ordered)
         return _select_nodes(
             ns,
             children,
             0,
             spec,
-            [f] + siblings,  # new root for depth checks
+            _depth_counts(ns, [f] + siblings),  # new root for depth checks
             inner,
             # lifted siblings may start before f's later children
             ordered and _in_order(children),
         )
     if verdict == MATCH_CULL:
-        return _select_nodes(selectors, hier, i + 1, spec, root, acc, ordered)
-    inner = _select_nodes(selectors, hier, i + 1, spec, root, acc, ordered)
-    return _select_nodes(selectors, f.forest, 0, spec, root, inner, ordered)
+        return _select_nodes(selectors, hier, i + 1, spec, counts, acc, ordered)
+    inner = _select_nodes(selectors, hier, i + 1, spec, counts, acc, ordered)
+    return _select_nodes(selectors, f.forest, 0, spec, counts, inner, ordered)
 
 
 def select(selector, spec: TagSpec):
@@ -372,9 +410,8 @@ def select(selector, spec: TagSpec):
     selector = tuple(selector)
     # only a nested selector lifts siblings
     ordered = len(selector) > 1 and _tree_in_order(spec.hierarchy)
-    acc = _select_nodes(
-        selector, spec.hierarchy, 0, spec, list(spec.hierarchy), None, ordered
-    )
+    counts = _depth_counts(selector, spec.hierarchy)
+    acc = _select_nodes(selector, spec.hierarchy, 0, spec, counts, None, ordered)
     out = []
     while acc is not None:
         s, acc = acc

@@ -514,9 +514,6 @@ def connected_components(
     return _star_components(sym)
 
 
-# --- SimHash ---------------------------------------------------------------
-
-
 def winnow_duplicates(
     df: DataFrame,
     threshold: float = 0.5,
@@ -605,6 +602,11 @@ def winnow_duplicates(
     )
 
 
+# --- SimHash ---------------------------------------------------------------
+
+SIMHASH_BANDS = 4  # equal bit-bands of the 64-bit simhash
+
+
 def simhash_udf():
     """tokens(array<string>) -> 64-bit simhash (long).
 
@@ -631,19 +633,19 @@ def simhash_udf():
     return _udf
 
 
-def simhash_bands(sim: Column, n_bands: int = 4) -> Column:
-    """Split the 64-bit simhash into ``n_bands`` equal bit-bands.
+def simhash_bands(sim: Column) -> Column:
+    """Split the 64-bit simhash into ``SIMHASH_BANDS`` equal bit-bands.
 
-    Pigeonhole: two hashes within hamming distance ``n_bands - 1``
+    Pigeonhole: two hashes within hamming distance ``SIMHASH_BANDS - 1``
     share at least one identical band, so banding is a lossless
     candidate filter for that radius.
     """
-    width = 64 // n_bands
+    width = 64 // SIMHASH_BANDS
     mask = (1 << width) - 1
     return F.array(
         *[
             F.shiftrightunsigned(sim, b * width).bitwiseAND(F.lit(mask))
-            for b in range(n_bands)
+            for b in range(SIMHASH_BANDS)
         ]
     )
 
@@ -656,7 +658,7 @@ def simhash_near_duplicates(
 ) -> DataFrame:
     """Pairs with simhash hamming distance <= max_hamming (exact,
     verified after banded candidate generation).  Requires
-    ``max_hamming < n_bands`` for losslessness; n_bands fixed at 4.
+    ``max_hamming < SIMHASH_BANDS`` for losslessness.
 
     The (id, simhash) frame is persisted — it feeds BOTH sides of the
     band self-join, and without the cache each side re-ran the
@@ -667,7 +669,7 @@ def simhash_near_duplicates(
     negligible at any scale next to the corpus it indexes.  The cache
     lives as long as the session.
     """
-    assert max_hamming < 4, "4-band split is lossless only for hamming <= 3"
+    assert max_hamming < SIMHASH_BANDS, "banding is lossless only below SIMHASH_BANDS"
     from scalpel_ts_spark.functions.text import tokens as tokens_col
 
     with_sim = (

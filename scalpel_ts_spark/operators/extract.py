@@ -4,8 +4,8 @@ The single-document core (scalpel_ts_spark.core) is pure Python and
 shipped by cloudpickle, so a compiled scraper travels to executors
 inside the UDF closure — the Spark-side plan stays fully declarative
 and Catalyst can prune/push down around the UDF.  Each UDF parses a
-document ONCE and runs every requested scraper against the same
-TagSpec.
+document ONCE; only a scraper UDF builds a TagSpec from the tokens, and
+the span and signature UDFs fold over the tokens themselves.
 
 Scale notes:
 * ``pandas_udf`` (Series -> Series/DataFrame) keeps transfer in Arrow
@@ -57,59 +57,62 @@ MEDIA_KINDS = {
 }
 
 
-def _spans(spec: TagSpec):
+def _spans(tokens):
     """The interleaved (kind, text, media_ref, offset) span sequence of
-    a document in token order.
+    a token stream, in token order; the one code that builds span rows.
 
     Text tokens become ``text`` spans; media open tags (img/audio/
     video/embed) become media spans whose ``media_ref`` is their
     src attribute.  ``offset`` is the ordinal in the interleaved
     sequence — the per-row invariant checked against the reference is
-    (kind, text, media_ref, order).
+    (kind, text, media_ref, order).  The fold reads tokens only, never
+    the tag forest, so the UDFs run it on ``parse`` output directly.
     """
     spans = []
-    ordinal = 0
-    for info in spec.tags:
-        tok = info.token
-        kind = type(tok)
-        if kind is Text:
-            spans.append(
-                {
-                    "kind": "text",
-                    "text": tok.text,
-                    "media_ref": None,
-                    "offset": ordinal,
-                }
-            )
-            ordinal += 1
-        elif kind is TagOpen:
-            media = MEDIA_KINDS.get(tok.name)
-            if media is not None:
-                src = None
-                for k, v in tok.attributes:
-                    if k == "src":
-                        src = v
-                        break
-                spans.append(
-                    {
-                        "kind": media,
-                        "text": None,
-                        "media_ref": src,
-                        "offset": ordinal,
-                    }
-                )
-                ordinal += 1
+    for tok in tokens:
+        k = type(tok)
+        if k is Text:
+            kind, text, ref = "text", tok.text, None
+        elif k is TagOpen and tok.name in MEDIA_KINDS:
+            kind, text, ref = MEDIA_KINDS[tok.name], None, None
+            for ak, av in tok.attributes:
+                if ak == "src":
+                    ref = av
+                    break
+        else:
+            continue
+        spans.append(
+            {"kind": kind, "text": text, "media_ref": ref, "offset": len(spans)}
+        )
     return spans
 
 
+def _spec_spans(spec: TagSpec):
+    return _spans(info.token for info in spec.tags)
+
+
 class SpanExtractor(Scraper):
-    """Scraper over :func:`_spans`; it pickles by reference, so plain
-    ``pickle`` ships it as well as cloudpickle."""
+    """Scraper over :func:`_spans` of the chroot's tokens; it pickles by
+    reference, so plain ``pickle`` ships it as well as cloudpickle."""
 
     __slots__ = ()
 
     def __init__(self):
-        super().__init__(_spans)
+        super().__init__(_spec_spans)
+
+
+def _doc_udf(fn, return_type):
+    """Arrow-batched UDF: html -> ``fn(parse(html))`` per document
+    (``fn``'s result must fit ``return_type``); a NULL document gives
+    NULL."""
+
+    @F.pandas_udf(return_type)
+    def _udf(html: pd.Series) -> pd.Series:
+        return pd.Series(
+            [None if doc is None else fn(parse(doc)) for doc in html]
+        )
+
+    return _udf
 
 
 def scrape_udf(scraper: Scraper, return_type):
@@ -118,25 +121,18 @@ def scrape_udf(scraper: Scraper, return_type):
     The scraper's result must be representable in ``return_type``
     (NOTHING becomes NULL).
     """
+    run = scraper.run
 
-    @F.pandas_udf(return_type)
-    def _udf(html: pd.Series) -> pd.Series:
-        out = []
-        run = scraper.run
-        for doc in html:
-            if doc is None:
-                out.append(None)
-                continue
-            v = run(tags_to_spec(parse(doc)))
-            out.append(None if v is NOTHING else v)
-        return pd.Series(out)
+    def scrape(tokens):
+        v = run(tags_to_spec(tokens))
+        return None if v is NOTHING else v
 
-    return _udf
+    return _doc_udf(scrape, return_type)
 
 
 def extract_spans_udf():
     """html -> interleaved span sequence (SPAN_SCHEMA)."""
-    return scrape_udf(SpanExtractor(), SPAN_SCHEMA)
+    return _doc_udf(_spans, SPAN_SCHEMA)
 
 
 CRAWL_EXTRACT_SCHEMA = StructType(
@@ -149,14 +145,14 @@ CRAWL_EXTRACT_SCHEMA = StructType(
 
 
 def crawl_extract_tokens(tokens):
-    """One flat pass over a token stream computing the crawl triple
-    (spans, links, title) — semantically identical to running
-    ``SpanExtractor``, ``attrs('href', tag('a'))`` and
-    ``text(tag('title'))`` over the TagSpec, but without building the
-    forest or walking it three times.
+    """The crawl triple (spans, links, title) of a token list: the span
+    fold :func:`_spans` plus one flat links/title pass — semantically
+    identical to running ``SpanExtractor``, ``attrs('href', tag('a'))``
+    and ``text(tag('title'))`` over the TagSpec, but without building
+    the forest or walking it three times.
 
     Why this is sound (asserted over the golden corpus + random HTML in
-    tests/test_extract_spark.py):
+    tests/test_property.py):
 
     * every ``TagOpen`` becomes exactly one forest node, and the DFS
       emits single-tag matches in document order — so "all ``a``
@@ -180,8 +176,8 @@ def crawl_extract_tokens(tokens):
       identical (50k-case fuzz + property tests), sibling anchors in
       well-formed HTML are exactly identical, and the generic DFS
       path keeps full reference behavior;
-    * ``SpanExtractor`` already folds over ``spec.tags`` (token order)
-      and never consults the hierarchy;
+    * ``SpanExtractor`` runs the same :func:`_spans` over
+      ``spec.tags`` (token order) and never consults the hierarchy;
     * ``text(tag('title'))`` concatenates Text tokens in the first
       title's span; the matching close under the reference's per-name
       LIFO annotation (TagInfo.ts:228-237) is found by depth-counting
@@ -192,7 +188,6 @@ def crawl_extract_tokens(tokens):
     single parsing authority; only the O(nodes x selectors) DFS and the
     O(n log n) forest build are bypassed for this fixed plan.
     """
-    spans: list = []
     link_slots: list = []  # one slot per <a> open, document order
     a_stack: list = []  # [slot_idx, own_href, first_href_in_span]
     title = NOTHING
@@ -200,19 +195,9 @@ def crawl_extract_tokens(tokens):
     collecting = False
     title_seen = False
     pending = 0
-    ordinal = 0
     for tok in tokens:
         k = type(tok)
         if k is Text:
-            spans.append(
-                {
-                    "kind": "text",
-                    "text": tok.text,
-                    "media_ref": None,
-                    "offset": ordinal,
-                }
-            )
-            ordinal += 1
             if collecting:
                 title_parts.append(tok.text)
         elif k is TagOpen:
@@ -237,23 +222,6 @@ def crawl_extract_tokens(tokens):
                     pending = 1
                 elif collecting:
                     pending += 1
-            else:
-                media = MEDIA_KINDS.get(name)
-                if media is not None:
-                    src = None
-                    for ak, av in tok.attributes:
-                        if ak == "src":
-                            src = av
-                            break
-                    spans.append(
-                        {
-                            "kind": media,
-                            "text": None,
-                            "media_ref": src,
-                            "offset": ordinal,
-                        }
-                    )
-                    ordinal += 1
         elif k is TagClose:
             name = tok.name
             if name == "a":
@@ -273,7 +241,7 @@ def crawl_extract_tokens(tokens):
         # [open, open], so the text fold over it is empty
         title = ""
     links = [v for v in link_slots if v is not None]
-    return spans, links, title
+    return _spans(tokens), links, title
 
 
 def crawl_extract_udf():
@@ -325,7 +293,7 @@ def fused_fetch_extract_udf(fetch_fn):
     """url -> struct(spans, links, title): fetch AND parse inside one
     Python worker call.
 
-    Chaining ``fetch_udf`` and ``crawl_extract_udf`` evaluates as two
+    Chaining a fetch UDF and ``crawl_extract_udf`` evaluates as two
     ArrowEvalPython stages (the second consumes the first's output),
     so every document body crosses the JVM<->Python boundary twice —
     serialized out of the fetch UDF and back into the extract UDF —
@@ -348,21 +316,10 @@ def fused_fetch_extract_udf(fetch_fn):
 
 def tag_signature_udf():
     """html -> sorted distinct tag names (materialized pushdown column)."""
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def _udf(html: pd.Series) -> pd.Series:
-        out = []
-        for doc in html:
-            if doc is None:
-                out.append(None)
-                continue
-            names = {
-                t.name for t in parse(doc) if type(t) is TagOpen
-            }
-            out.append(sorted(names))
-        return pd.Series(out)
-
-    return _udf
+    return _doc_udf(
+        lambda tokens: sorted({t.name for t in tokens if type(t) is TagOpen}),
+        ArrayType(StringType()),
+    )
 
 
 def with_tag_signature(df, html_col: str = "html", out_col: str = "tag_names"):

@@ -204,7 +204,6 @@ def prefilter(
     kind,
     hash_col: str = "url_hash",
     n_buckets: int = 32,
-    dedup_by_hash: bool = False,
 ) -> DataFrame:
     """Tag candidates with ``maybe_seen``; definite-new rows (filter
     miss) skip the exact anti-join entirely.
@@ -219,17 +218,6 @@ def prefilter(
     candidate group in a few numpy passes — the filter is never
     duplicated per row, which is what lets 10^10-URL filter state
     (GiBs of bits) stay partition-owned instead of broadcast.
-
-    ``dedup_by_hash=True`` additionally drops duplicate ``hash_col``
-    rows inside the probe: the bucket is a pure function of the hash,
-    so equal hashes always land in the same task and an in-task
-    ``drop_duplicates`` IS a global dedup — sharing the bucket
-    exchange instead of paying a second, string-keyed shuffle (the
-    round-3 verdict's top lever: the crawl's link-discovery
-    ``dropDuplicates(url)`` was the widest exchange in the engine).
-    Rows with equal hash are identical in every derived column (the
-    64-bit hash is the engine-wide URL identity), so keeping the
-    first is deterministic.
 
     A bucket holding more than 4x ``BLOOM_ROWS_PER_BUCKET`` candidate
     rows raises instead of loading them into one task's heap.
@@ -252,10 +240,6 @@ def prefilter(
                 f"filter bucket overflow: {len(cand_pdf)} candidate rows in "
                 f"one bucket exceed {max_rows}; raise n_buckets to about "
                 f"candidate rows / BLOOM_ROWS_PER_BUCKET"
-            )
-        if dedup_by_hash and len(cand_pdf):
-            cand_pdf = cand_pdf.drop_duplicates(
-                subset=[hash_col], ignore_index=True
             )
         if len(cand_pdf) == 0:
             return cand_pdf.assign(maybe_seen=pd.array([], dtype="int32"))
@@ -280,16 +264,9 @@ def new_urls(
     kind=Bloom,
     hash_col: str = "url_hash",
     n_buckets: int = 32,
-    dedup: bool = False,
 ) -> DataFrame:
     """candidates ∖ seen — exact, with an optional ``kind`` prefilter
     (``filters`` built with the same ``n_buckets``).
-
-    ``dedup=True`` also drops duplicate ``hash_col`` rows (the crawl's
-    per-round link dedup): with filters it rides the bucket cogroup for
-    free (see :func:`prefilter`); without, it is a plain hash-keyed
-    ``dropDuplicates`` whose exchange the anti-join reuses, so the
-    candidates are shuffled once (the crawl engine's seen check).
 
     The exact ``left_anti`` join is the authority; when filters are
     supplied, ONLY filter-positive rows pay for it.  At 10^10 URLs the
@@ -304,12 +281,8 @@ def new_urls(
     The tagged frame's cache lives as long as the session.
     """
     if filters is None:
-        if dedup:
-            candidates = candidates.dropDuplicates([hash_col])
         return candidates.join(seen.select(hash_col), hash_col, "left_anti")
-    tagged = prefilter(
-        candidates, filters, kind, hash_col, n_buckets, dedup_by_hash=dedup
-    ).persist()
+    tagged = prefilter(candidates, filters, kind, hash_col, n_buckets).persist()
     definite_new = tagged.filter(F.col("maybe_seen") == 0).drop("maybe_seen")
     suspects = tagged.filter(F.col("maybe_seen") == 1).drop("maybe_seen")
     checked = suspects.join(seen.select(hash_col), hash_col, "left_anti")

@@ -24,7 +24,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from scalpel_ts_spark.functions.vector import (
-    cosine,
     cosine_with_norms,
     hyperplanes,
     lsh_buckets_udf,
@@ -32,6 +31,19 @@ from scalpel_ts_spark.functions.vector import (
 )
 from scalpel_ts_spark.operators.spread import spread_small
 from scalpel_ts_spark.operators.topk import topk_per_group
+
+
+def _rerank_topk(cand: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, sim) -> each query's top ``k`` neighbors by
+    exact cosine, ties to the lower neighbor id, with their rank."""
+    return topk_per_group(
+        cand,
+        group_cols=["query_id"],
+        order_cols=[F.col("sim").desc(), F.col("neighbor_id")],
+        k=k,
+        rank_col="rank",
+        keep_rank=True,
+    ).select("query_id", "neighbor_id", "rank")
 
 
 def brute_force_topk(
@@ -82,14 +94,7 @@ def brute_force_topk(
         )
         .select("query_id", "neighbor_id", "sim")
     )
-    return topk_per_group(
-        scored,
-        group_cols=["query_id"],
-        order_cols=[F.col("sim").desc(), F.col("neighbor_id")],
-        k=k,
-        rank_col="rank",
-        keep_rank=True,
-    ).select("query_id", "neighbor_id", "rank")
+    return _rerank_topk(scored, k)
 
 
 def _with_probe_flips(df, n_bits: int, probe_radius: int):
@@ -223,14 +228,7 @@ def lsh_topk(
             F.col("vec_a"), F.col("vec_b"), F.col("_na"), F.col("_nb")
         ).alias("sim"),
     )
-    return topk_per_group(
-        cand,
-        group_cols=["query_id"],
-        order_cols=[F.col("sim").desc(), F.col("neighbor_id")],
-        k=k,
-        rank_col="rank",
-        keep_rank=True,
-    ).select("query_id", "neighbor_id", "rank")
+    return _rerank_topk(cand, k)
 
 
 def _collect_centroids(corpus, n_cells, id_col, vec_col):
@@ -424,14 +422,7 @@ def ivf_topk(
             ).alias("sim"),
         )
     )
-    return topk_per_group(
-        cand,
-        group_cols=["query_id"],
-        order_cols=[F.col("sim").desc(), F.col("neighbor_id")],
-        k=k,
-        rank_col="rank",
-        keep_rank=True,
-    ).select("query_id", "neighbor_id", "rank")
+    return _rerank_topk(cand, k)
 
 
 def embedding_near_duplicates(

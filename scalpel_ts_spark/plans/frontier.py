@@ -901,7 +901,9 @@ class CrawlEngine:
         # persisted: the genuinely-new set (post-dedup, post-anti-join
         # — orders of magnitude smaller than raw discovery) feeds both
         # the new-host robots lookup and the robots vet below
-        st.new_keys = st.cache(new_urls(discovered, st.seen, dedup=True))
+        st.new_keys = st.cache(
+            new_urls(discovered.dropDuplicates(["url_hash"]), st.seen)
+        )
 
     def _robots(self, st: _Round) -> None:
         """The round's robots cache table: rules are fetched only for

@@ -18,9 +18,7 @@ from __future__ import annotations
 import re
 from hashlib import md5
 
-import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
 _URL_RE = re.compile(r"^http://h(\d+)\.test/p/(\d+)$")
 
@@ -95,18 +93,6 @@ def html_for_url(url: str, n_hosts: int = 50) -> str:
         f"{''.join(paras)}{media}<nav>{anchors}</nav>"
         f"</body></html>"
     )
-
-
-def fetch_udf(n_hosts: int = 50):
-    """url -> html, Arrow-batched (the sandbox stand-in for the real
-    fetch stage; a production deployment swaps in an async-HTTP
-    ``applyInPandas`` per host partition)."""
-
-    @F.pandas_udf(StringType())
-    def _udf(url: pd.Series) -> pd.Series:
-        return url.map(lambda u: html_for_url(u, n_hosts))
-
-    return _udf
 
 
 # --- Spark-side (JVM, codegen) mirrors of the URL id helpers ---

@@ -167,7 +167,7 @@ def test_tag_signature_prefilter(spark):
 
 
 def test_fused_fetch_extract_matches_two_stage(spark):
-    """fused fetch+parse UDF == fetch_udf |> crawl_extract_udf on the
+    """fused fetch+parse UDF == a fetch UDF |> crawl_extract_udf on the
     same URLs (bodies never cross Arrow in the fused path; semantics
     must be bit-identical by construction — both call _extract_batch)."""
     from scalpel_ts_spark.operators.extract import fused_fetch_extract_udf

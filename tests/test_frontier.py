@@ -221,10 +221,10 @@ def test_resume_after_crash_between_seen_and_frontier_writes(
 
 
 def test_new_urls_dedup_matches_python(spark):
-    # dedup=True keeps one row per new hash, through the prefilter
-    # split-union (in-bucket dedup) of both filter kinds and the
-    # no-filter dropDuplicates branch.  Rows are a pure function of
-    # url_hash, the engine-wide premise (equal hash => identical row).
+    # candidates deduped by url_hash keep one row per new hash, through
+    # the prefilter split-union of both filter kinds and the no-filter
+    # anti-join.  Rows are a pure function of url_hash, the engine-wide
+    # premise (equal hash => identical row).
     import pyspark.sql.functions as F
 
     from scalpel_ts_spark.operators.seen import Bloom, build_filter, new_urls
@@ -242,7 +242,8 @@ def test_new_urls_dedup_matches_python(spark):
     )
     for kind in (Bloom, CuckooTable, None):
         filters = None if kind is None else build_filter(seen, kind, n_buckets=8)
-        got = new_urls(cand, seen, filters, kind, n_buckets=8, dedup=True).collect()
+        unique = cand.dropDuplicates(["url_hash"])
+        got = new_urls(unique, seen, filters, kind, n_buckets=8).collect()
         assert sorted(
             (r.url, r.host_id, r.url_hash) for r in got
         ) == expected, f"kind={kind}"
@@ -299,11 +300,12 @@ def test_non_default_bloom_buckets_match_simulator(spark, sim_state):
     expected = set(links) - sim_state.seen
     blooms = build_filter(seen, Bloom, n_buckets=7)
     assert blooms.count() == 7
-    got = new_urls(cand, seen, blooms, Bloom, n_buckets=7, dedup=True).collect()
+    cand = cand.dropDuplicates(["url_hash"])
+    got = new_urls(cand, seen, blooms, Bloom, n_buckets=7).collect()
     assert sorted(r.url for r in got) == sorted(expected)
     # the mismatch this guards against: bucket 7 has no bitmap, other
     # buckets hold another bucketing's keys, so seen URLs leak through
-    skewed = new_urls(cand, seen, blooms, Bloom, n_buckets=8, dedup=True)
+    skewed = new_urls(cand, seen, blooms, Bloom, n_buckets=8)
     assert {r.url for r in skewed.collect()} & sim_state.seen
 
 

@@ -121,11 +121,12 @@ def _nodes(plan):
 
 
 def test_engine_seen_dedup_exchanges_candidates_once(spark):
-    """The crawl engine's seen check, ``new_urls(dedup=True)`` with no
-    filters: the url_hash dropDuplicates and the left-anti join share
-    ONE hashpartitioning(url_hash) exchange of the candidates, and no
-    Python stage (no bloom cogroup) runs.  Broadcast is off so the
-    shape is the one a seen set too big to broadcast gets."""
+    """The crawl engine's seen check, ``new_urls`` with no filters over
+    candidates deduped by url_hash: the dropDuplicates and the left-anti
+    join share ONE hashpartitioning(url_hash) exchange of the
+    candidates, and no Python stage (no bloom cogroup) runs.  Broadcast
+    is off so the shape is the one a seen set too big to broadcast
+    gets."""
     from scalpel_ts_spark.functions.url import canonicalize_url, url_hash
     from scalpel_ts_spark.operators.seen import new_urls
     from scalpel_ts_spark.sources.synthetic import host_id_col
@@ -148,7 +149,10 @@ def test_engine_seen_dedup_exchanges_candidates_once(spark):
     old = spark.conf.get(key)
     spark.conf.set(key, "-1")
     try:
-        out = new_urls(discovered, seen.select("url", "url_hash"), dedup=True)
+        out = new_urls(
+            discovered.dropDuplicates(["url_hash"]),
+            seen.select("url", "url_hash"),
+        )
         plan = out._jdf.queryExecution().executedPlan().executedPlan()
     finally:
         spark.conf.set(key, old)
