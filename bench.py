@@ -151,7 +151,9 @@ def main() -> None:
     # JVM/codegen/Python-worker warm-up, EXCLUDED from the timed runs —
     # the same protocol tools/scaling_bench.py has used since round 1
     # (a fresh local JVM spends 10-15s on first-job class loading and
-    # codegen that a long-lived cluster pays once, not per crawl).  The
+    # codegen).  Codegen is paid once, not per crawl, only because
+    # get_spark's codegen cache holds the engine's generated classes;
+    # at Spark's default 100 entries every crawl recompiled them.  The
     # miniature crawl touches every code path: parquet IO, pandas UDFs,
     # cogroups, broadcasts, window/top-k.
     warm_dir = tempfile.mkdtemp(prefix="bench_warm_", dir=workdir_base)

@@ -367,6 +367,29 @@ def test_seen_compaction_bounds_delta_chain(spark, tmp_path_factory, sim_state):
     assert eng2.round - base < 2
 
 
+def test_repeated_crawl_compiles_no_new_classes(spark, tmp_path_factory):
+    # the codegen cache (get_spark's spark.sql.codegen.cache.maxEntries)
+    # holds a whole crawl's generated classes, so a second crawl of the
+    # same shape and seeds compiles none; at Spark's default of 100
+    # entries the crawl's ~144 classes cycle through the LRU and every
+    # pass recompiled about 160
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    seeds = [make_url(h, p) for h in range(64) for p in (3, 17, 41, 97)]
+
+    def crawl():
+        wd = str(tmp_path_factory.mktemp("crawl_codegen"))
+        eng = CrawlEngine(
+            spark, wd, n_hosts=64, cap=8, refill=4, compact_every=2
+        )
+        eng.init(seeds)
+        return sum(m["fetched"] for m in eng.run(2))
+
+    first = crawl()
+    before = codegen.METRIC_COMPILATION_TIME().getCount()
+    assert crawl() == first > 0
+    assert codegen.METRIC_COMPILATION_TIME().getCount() - before == 0
+
+
 def _synthetic_http(url):
     # FetchFn over the same deterministic web as the default fetcher
     from scalpel_ts_spark.sources.synthetic import html_for_url

@@ -7,7 +7,9 @@ engine over a 2M-URL seeded frontier (SCALING_PAGES_PER_HOST) (politeness top-k 
 parse+extract -> link discovery -> canonicalize -> hash dedup + exact
 seen anti-join -> snapshot commit).  Each level runs in a fresh process/JVM
 with a small warm-up crawl first so codegen/Python-worker startup is
-excluded from both measurements equally, and — round 4 — each child
+excluded from both measurements equally (the warm-up pays codegen once
+only because get_spark's codegen cache holds the engine's generated
+classes), and — round 4 — each child
 is ``taskset``-pinned to exactly its core count, because ``local[N]``
 caps task slots but not actual CPU (see ``_run_child``); the pin is
 what makes "N cores" physically true, as an executor cgroup would.
