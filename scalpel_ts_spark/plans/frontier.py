@@ -44,8 +44,9 @@ tables partitioned by round + ``bucket(url_hash)`` /
 table is append-only deltas with a FULL compacted snapshot rewritten
 every ``compact_every`` rounds, so per-round scan cost and file count
 stay bounded for arbitrarily long crawls; the manifest records
-per-round metrics, per-partition lineage, and which seen snapshots are
-full — giving atomic-at-round granularity and resume-from-any-round.
+per-round metrics, per-partition lineage, which seen snapshots are
+full, and the row counts that size the next round — giving
+atomic-at-round granularity and resume-from-any-round.
 
 Determinism: every ordering/selection key (priority, seq, url_hash) is
 derived from the data, never from task scheduling — so the engine
@@ -59,6 +60,7 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -76,6 +78,7 @@ from scalpel_ts_spark.sources.synthetic import (
     html_for_url,
     host_id_col,
     page_id_col,
+    seed_seq_col,
     seq_col,
 )
 
@@ -140,19 +143,22 @@ def frontier_anti_join(
 
 
 def _obs_count(obs: Observation, key: str) -> int:
-    """Read a count metric off an Observation, treating a never-fired
-    observation as 0.
+    """Read a count metric off an Observation, treating an observation
+    that AQE pruned as 0.
 
-    When the observed side of a union is EMPTY at runtime, AQE's
-    empty-relation propagation can prune the CollectMetrics node
-    entirely — the metric row is then null and ``Observation.get``
-    raises from the JVM instead of returning.  For count metrics the
-    pruned-empty case IS zero (discovered latent: any round with zero
-    robots cache misses hit this; a job that genuinely failed raises
-    at its action, long before the metric read)."""
+    When the observed plan is EMPTY at runtime (an empty join side, or
+    a cached empty relation), AQE's empty-relation propagation can
+    prune the CollectMetrics node entirely — the metric row is then
+    null, and ``Observation.get`` raises a ``Py4JJavaError`` whose
+    Java exception is the ``AssertionError`` of
+    ``PythonSQLUtils.toPyRow``.  For count metrics the pruned-empty
+    case IS zero.  Anything else propagates: these counts size later
+    rounds, so a silent 0 must not hide a fault."""
     try:
         return int(obs.get[key])
-    except Exception:
+    except Py4JJavaError as e:
+        if e.java_exception.getClass().getName() != "java.lang.AssertionError":
+            raise
         return 0
 
 
@@ -247,15 +253,12 @@ class _Round:
     robots: DataFrame | None = None
     robots_obs: Observation | None = None
     # next frontier, commit
-    fresh: DataFrame | None = None
     seen_delta: DataFrame | None = None
     n_new_obs: Observation | None = None
     denied_obs: Observation | None = None
-    kept_obs: Observation | None = None
     next_frontier: DataFrame | None = None
     host_state_next: DataFrame | None = None
-    n_new: int = 0
-    n_denied: int = 0
+    sizes: dict = field(default_factory=dict)
 
     def __post_init__(self):
         self._last = self.t0
@@ -339,14 +342,6 @@ class CrawlEngine:
         self.fetch_stage = fetch_stage
         self.robots_stage = robots_stage
         self.max_fetch_retries = max_fetch_retries
-        self.round = 0
-        self._frontier_rows: int | None = None
-        #: tracked host-universe size (rows in the per-host tables),
-        #: accumulated from the per-round robots cache-miss
-        #: observations — the actual row count, not the n_hosts config
-        #: (round-3 ADVICE: an understated config must not let a grown
-        #: robots table collect onto the driver)
-        self._host_rows: int = 0
         self._consec_all_error_rounds = 0
         self.manifest = {
             "config": self._config(),
@@ -363,51 +358,56 @@ class CrawlEngine:
             "max_fetch_retries": self.max_fetch_retries,
         }
 
+    @property
+    def round(self) -> int:
+        """The last committed round: the manifest holds one entry per
+        committed round."""
+        return len(self.manifest["rounds"])
+
+    def _sizes(self) -> dict:
+        """The row counts after the last committed round: its manifest
+        entry, or ``init``'s for round 0.  ``frontier_rows`` is observed
+        on the frontier write; ``host_rows`` is the larger of the two
+        per-host tables (host_state, robots), observed on their writes
+        — round 0's is the seeds' approximate distinct host count."""
+        rounds = self.manifest["rounds"]
+        return rounds[-1] if rounds else self.manifest["init"]
+
     # --- snapshot IO (thin delegates onto the storage seam) ---------------
 
-    def _write(self, df: DataFrame, table: str, rnd: int):
+    def _write(self, df: DataFrame, table: str, rnd: int, write=None):
+        """``write`` defaults to the storage's distributed write."""
         # label the write's jobs in the UI (guide §1.5); thread-local,
         # so each concurrent commit-pool write is labelled correctly
         self.spark.sparkContext.setJobDescription(f"write {table} r{rnd}")
         try:
-            self.storage.write(df, table, rnd)
+            (write or self.storage.write)(df, table, rnd)
         finally:
             self.spark.sparkContext.setJobDescription(None)
 
-    def _write_per_host(self, df: DataFrame, table: str, rnd: int):
+    def _write_per_host(self, df: DataFrame, table: str, rnd: int) -> int:
         """Per-host tables (host_state, robots): one row per host, so
         under DRIVER_WRITE_MAX_ROWS they take the storage seam's
         driver-side write (no distributed job, no commit-protocol
         renames); past it they stay distributed, file count bounded.
+        Returns the rows written, observed on the write.
 
-        The gate uses the TRACKED row count of the host universe
-        (``_host_rows``, accumulated from robots cache-miss
-        observations; resume recomputes it from the manifest), not the
-        static ``n_hosts`` config — with a production robots_stage the
-        table grows with discovered hosts, and an understated config
-        must not collect an oversized table onto the driver (round-3
-        ADVICE).  The tracked count lags the current round's write by
-        one round of discovery, so the gate keeps 2x headroom.
-
-        ``write_small`` is an OPTIONAL storage method: a custom
-        storage written to the original five-method contract falls
-        back to its plain write.  The probe must reject the
-        ``SnapshotStorage`` Protocol's own stub body — a storage class
-        that explicitly subclasses the Protocol without overriding
-        ``write_small`` inherits that ``...`` body, and calling it
-        would silently write nothing."""
-        est = max(self.n_hosts, self._host_rows)
+        The gate uses the host count of the last committed round
+        (``_sizes``), not the static ``n_hosts`` config — with a
+        production robots_stage the table grows with discovered hosts,
+        and an understated config must not collect an oversized table
+        onto the driver (round-3 ADVICE).  This round's table can be
+        larger by one round of discovery, so the gate keeps 2x
+        headroom.  ``write_small`` is optional (``resolve_write_small``
+        says when a storage has one)."""
+        est = max(self.n_hosts, self._sizes()["host_rows"])
+        df, obs = _with_count(df, "rows")
         write_small = resolve_write_small(self.storage)
-        self.spark.sparkContext.setJobDescription(
-            f"write_small {table} r{rnd}"
-        )
-        try:
-            if write_small is not None and est <= DRIVER_WRITE_MAX_ROWS // 2:
-                write_small(df, table, rnd)
-            else:
-                self.storage.write(_coalesce_for_write(df, est), table, rnd)
-        finally:
-            self.spark.sparkContext.setJobDescription(None)
+        if write_small is not None and est <= DRIVER_WRITE_MAX_ROWS // 2:
+            self._write(df, table, rnd, write_small)
+        else:
+            self._write(_coalesce_for_write(df, est), table, rnd)
+        return _obs_count(obs, "rows")
 
     def _read(self, table: str, rnd: int) -> DataFrame:
         return self.storage.read(table, rnd)
@@ -446,25 +446,24 @@ class CrawlEngine:
             "url",
             host_id_col(F.col("url")).alias("host_id"),
             F.lit(0).alias("priority"),
-            seq_col(F.col("url")).alias("seq"),
+            # a seed outside the synthetic URL space fails this write
+            seed_seq_col(F.col("url")).alias("seq"),
             url_hash(F.col("url")).alias("url_hash"),
             F.lit(0).alias("fails"),  # fetch-retry count (bounded)
         )
-        # the seed count rides the frontier write as an Observation
-        # (no separate count job): it seeds the arithmetic row tracker
-        observed, seed_obs = _with_count(frontier, "n")
+        # round 0's row counts ride the frontier write as an
+        # Observation (no separate count job); the per-host tables
+        # start empty, so the seeds' distinct hosts stand in for their
+        # round-1 size
+        obs = Observation()
+        observed = frontier.observe(
+            obs,
+            F.count(F.lit(1)).alias("frontier_rows"),
+            F.approx_count_distinct("host_id").alias("host_rows"),
+        )
         self._write(observed, "frontier", 0)
-        self._frontier_rows = _obs_count(seed_obs, "n")
-        # the remaining round-0 snapshots are independent of each other
-        # — submit them concurrently like the round commit's pool
-        init_writes = [
-            (self._write, frontier.select("url", "url_hash"), "seen"),
-            (
-                self._write_per_host,
-                self.spark.createDataFrame([], "host_id long, tokens int"),
-                "host_state",
-            ),
-        ]
+        init = {k: _obs_count(obs, k) for k in ("frontier_rows", "host_rows")}
+        self.manifest.update(init=init, rounds=[], seen_full_rounds=[0])
         # production robots cache rows carry an exemplar url (for
         # re-fetches) and the consecutive-unreachable counter that
         # bounds how long a 5xx DISALLOW_ALL sentinel sticks (r3
@@ -475,24 +474,26 @@ class CrawlEngine:
             if self.robots_stage is not None
             else "host_id long, disallow_mod int, disallow_rem int"
         )
-        init_writes.append(
-            (
-                self._write_per_host,
-                self.spark.createDataFrame([], robots_schema),
-                "robots",
-            )
-        )
-        with ThreadPoolExecutor(max_workers=len(init_writes)) as pool:
+        per_host = {
+            "host_state": "host_id long, tokens int",
+            "robots": robots_schema,
+        }
+        # the remaining round-0 snapshots are independent of each other
+        # — the empty per-host tables are written beside the seen
+        # write, like the round commit's pool
+        with ThreadPoolExecutor(max_workers=len(per_host)) as pool:
             futures = [
-                pool.submit(fn, df, table, 0)
-                for fn, df, table in init_writes
+                pool.submit(
+                    self._write_per_host,
+                    self.spark.createDataFrame([], schema),
+                    table,
+                    0,
+                )
+                for table, schema in per_host.items()
             ]
+            self._write(frontier.select("url", "url_hash"), "seen", 0)
             for fut in futures:
                 fut.result()
-        self.round = 0
-        self._host_rows = 0
-        self.manifest["rounds"] = []
-        self.manifest["seen_full_rounds"] = [0]
         self.storage.save_manifest(self.manifest)
 
     @classmethod
@@ -524,14 +525,17 @@ class CrawlEngine:
             robots_stage=robots_stage,
             **{k: cfg[k] for k in cfg},
         )
-        eng.manifest = manifest
-        eng.round = len(manifest["rounds"])
-        # rebuild the host-universe row tracker from the per-round
-        # cache-miss metrics (slight overcount under robots re-fetches
-        # — conservative: the driver-write gate only trips earlier)
-        eng._host_rows = sum(
-            m.get("robots_cache_misses", 0) for m in manifest["rounds"]
-        )
+        # a manifest written before the engine kept its row counts has
+        # neither: count the last committed round's snapshots once
+        eng.manifest = {"init": {}, **manifest}
+        sizes = eng._sizes()
+        if "frontier_rows" not in sizes:
+            rnd = eng.round
+            sizes["frontier_rows"] = eng._read("frontier", rnd).count()
+            sizes["host_rows"] = max(
+                eng._read(table, rnd).count()
+                for table in ("host_state", "robots")
+            )
         return eng
 
     # --- production robots helpers -----------------------------------------
@@ -657,11 +661,7 @@ class CrawlEngine:
         #    the small side so the frontier is not shuffled for this
         #    join
         budgeted = frontier.join(F.broadcast(st.new_state), "host_id")
-        # the frontier row count is tracked arithmetically
-        # (rows' = rows - fetched + new); the first round after
-        # init/resume pays one parquet-metadata count
-        if self._frontier_rows is None:
-            self._frontier_rows = frontier.count()
+        frontier_rows = self._sizes()["frontier_rows"]
         # fetch-stage parallelism, derived from the round's expected
         # fetch volume (~2k rows/task), capped at ONE task per core:
         # each Python-stage task pays a measured ~140ms runner-init
@@ -671,11 +671,11 @@ class CrawlEngine:
         # latency variance raises this through defaultParallelism on
         # a bigger cluster.
         cores = self.spark.sparkContext.defaultParallelism
-        expected = min(self._frontier_rows, self.cap * self.n_hosts)
+        expected = min(frontier_rows, self.cap * self.n_hosts)
         st.par = max(1, min(cores, -(-expected // 2048)))
         st.prekeyed = (
             self.fetch_stage is None
-            and self._frontier_rows <= st.par * SELECT_ROWS_PER_TASK
+            and frontier_rows <= st.par * SELECT_ROWS_PER_TASK
         )
         if st.prekeyed:
             # pre-key the selection exchange at the fetch stage's own
@@ -683,7 +683,7 @@ class CrawlEngine:
             # clustering), and the fused fetch UDF then runs IN the
             # window's stage — no separate candidate repartition, one
             # exchange fewer per round.  Only while the whole frontier
-            # fits `par` tasks (by the tracked row count: the
+            # fits `par` tasks (by the manifest's row count: the
             # optimizer's estimate of a frontier-x-broadcast join is a
             # cardinality product): the partial group limit then runs
             # after this exchange, not before it.  Balance: a host's
@@ -862,7 +862,7 @@ class CrawlEngine:
             "fetched": 0,
             "stopped": stopped,
             "fetch_errors": st.n_errors,
-            # nothing was written and self.round did not advance: a
+            # nothing was written and the manifest gained no round: a
             # retried outage round must not collide with the later
             # committed round of the same number in metrics streams
             "committed": False,
@@ -882,6 +882,8 @@ class CrawlEngine:
             st.content.select(F.explode("ex.links").alias("raw_url"))
             .select(canonicalize_url(F.col("raw_url")).alias("url"))
             .withColumn("host_id", host_id_col(F.col("url")))
+            # hosts and seq are keyed by the synthetic URL shape: a
+            # link outside it has no host id and is dropped
             .filter(F.col("host_id").isNotNull())
         )
         if st.prefetch_rules is not None:
@@ -969,7 +971,7 @@ class CrawlEngine:
                 )
                 .drop("disallow_mod", "disallow_rem")
             )
-        fresh = st.fresh = st.cache(
+        fresh = st.cache(
             allowed.select(
                 "url",
                 "host_id",
@@ -1018,10 +1020,6 @@ class CrawlEngine:
                 .drop("_errored")
                 .filter(F.col("fails") <= F.lit(self.max_fetch_retries))
             )
-            # retry-capped drops make the arithmetic row tracker drift;
-            # an Observation on the kept branch rides the frontier
-            # write and restores the exact count
-            kept, st.kept_obs = _with_count(kept, "n_kept")
         st.next_frontier = kept.unionByName(fresh)
 
         # 7. spend tokens
@@ -1098,6 +1096,9 @@ class CrawlEngine:
             seen_write = (
                 _coalesce_for_write(st.seen_delta, st.n_fetched * 8), "seen"
             )
+        # the next round's sizes ride the frontier and per-host writes
+        # as Observations
+        next_frontier, frontier_obs = _with_count(st.next_frontier, "rows")
         # the pool spans every submission and the result loop, so an
         # exception anywhere (the main-thread seen write included)
         # still waits for the writes already in flight
@@ -1106,32 +1107,30 @@ class CrawlEngine:
                 pool.submit(self._write, df, table, nxt)
                 for df, table in early_writes
             ]
-            futures.append(
-                pool.submit(
-                    self._write_per_host, st.host_state_next, "host_state",
-                    nxt,
-                )
+            host_state = pool.submit(
+                self._write_per_host, st.host_state_next, "host_state", nxt
             )
+            futures.append(host_state)
             # the seen write pulls `fresh` through its persist (and
             # fires the n_new observation) on the MAIN thread while the
             # early cache-only writes run beside it
             self._write(*seen_write, nxt)
             st.mark("seen_dedup")
-            st.n_new = _obs_count(st.n_new_obs, "n_new")
-            frontier_est = self._frontier_rows + 8 * st.n_fetched
+            frontier_est = self._sizes()["frontier_rows"] + 8 * st.n_fetched
             futures.append(
                 pool.submit(
                     self._write,
-                    _coalesce_for_write(st.next_frontier, frontier_est),
+                    _coalesce_for_write(next_frontier, frontier_est),
                     "frontier",
                     nxt,
                 )
             )
             # robots is per-host (write_small fast path) but consumes
             # new_rules -> new_keys, so it belongs to the late batch
-            futures.append(
-                pool.submit(self._write_per_host, st.robots, "robots", nxt)
+            robots = pool.submit(
+                self._write_per_host, st.robots, "robots", nxt
             )
+            futures.append(robots)
             for fut in futures:
                 fut.result()
         if compacted:
@@ -1139,14 +1138,10 @@ class CrawlEngine:
             # marking it earlier would let a failed-then-retried round
             # treat a mere delta as the entire seen set
             self.manifest.setdefault("seen_full_rounds", [0]).append(nxt)
-        if st.denied_obs is not None:
-            st.n_denied = _obs_count(st.denied_obs, "n_denied")
-        if st.kept_obs is not None:
-            self._frontier_rows = _obs_count(st.kept_obs, "n_kept") + st.n_new
-        else:
-            self._frontier_rows = (
-                self._frontier_rows - st.n_fetched - st.n_denied + st.n_new
-            )
+        st.sizes = {
+            "frontier_rows": _obs_count(frontier_obs, "rows"),
+            "host_rows": max(host_state.result(), robots.result()),
+        }
         st.release()
         st.mark("commit")
 
@@ -1157,21 +1152,20 @@ class CrawlEngine:
         cache_misses = _obs_count(st.robots_obs, "n_new_rules")
         if st.prefetch_obs is not None:
             cache_misses += _obs_count(st.prefetch_obs, "n_prefetch")
-        self._host_rows += cache_misses
         metrics = {
             "round": nxt,
             "fetched": st.n_fetched,
-            "discovered_new": st.n_new,
+            "discovered_new": _obs_count(st.n_new_obs, "n_new"),
             "fetch_errors": st.n_errors,
             "robots_cache_misses": cache_misses,
             "wall_sec": round(time.time() - st.t0, 3),
             "sections": st.sections,
             "lineage": st.lineage,
+            **st.sizes,
         }
         if st.denied_obs is not None:
-            metrics["robots_denied"] = st.n_denied
+            metrics["robots_denied"] = _obs_count(st.denied_obs, "n_denied")
         self.manifest["rounds"].append(metrics)
-        self.round = nxt
         self.storage.save_manifest(self.manifest)
         return metrics
 

@@ -96,19 +96,35 @@ def html_for_url(url: str, n_hosts: int = 50) -> str:
 
 
 # --- Spark-side (JVM, codegen) mirrors of the URL id helpers ---
+# They match the whole URL as parse_url_ids does, so a URL outside the
+# synthetic URL space reads as null ids (try_cast: under ANSI mode a
+# plain cast of the empty non-match raises).
 
 def host_id_col(url):
-    return F.regexp_extract(url, r"^http://h(\d+)\.test/", 1).cast("long")
+    return F.regexp_extract(url, _URL_RE.pattern, 1).try_cast("long")
 
 
 def page_id_col(url):
-    return F.regexp_extract(url, r"/p/(\d+)$", 1).cast("long")
+    return F.regexp_extract(url, _URL_RE.pattern, 2).try_cast("long")
 
 
 def seq_col(url):
     """Deterministic per-URL ordering key (data-derived — crawl order
     must never depend on task scheduling)."""
     return host_id_col(url) * F.lit(1_000_000_000) + page_id_col(url)
+
+
+def seed_seq_col(url):
+    """``seq_col`` for a seed list: a URL outside the synthetic URL
+    space fails the job that evaluates it, with :func:`seq_of`'s
+    message, instead of reading as a null key."""
+    seq = seq_col(url)
+    msg = F.concat(
+        F.lit("malformed synthetic URL '"),
+        url,
+        F.lit("': expected http://h{n}.test/p/{n} (check the seed list)"),
+    )
+    return F.coalesce(F.assert_true(seq.isNotNull(), msg), seq)
 
 
 def fetch_robots_rules(hosts_df):

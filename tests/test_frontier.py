@@ -46,6 +46,19 @@ def sim_state():
     return _sim()
 
 
+def _assert_sizes_match_snapshots(eng):
+    # every committed round's manifest entry holds the row counts of the
+    # snapshots that round wrote: the frontier, and the larger of the
+    # two per-host tables
+    for rnd, m in enumerate(eng.manifest["rounds"], 1):
+        rows = {
+            table: eng.storage.read(table, rnd).count()
+            for table in ("frontier", "host_state", "robots")
+        }
+        assert m["frontier_rows"] == rows["frontier"], rnd
+        assert m["host_rows"] == max(rows["host_state"], rows["robots"]), rnd
+
+
 def test_spark_crawl_matches_simulator(spark, tmp_path_factory, sim_state):
     wd = str(tmp_path_factory.mktemp("crawl"))
     eng = CrawlEngine(
@@ -56,6 +69,10 @@ def test_spark_crawl_matches_simulator(spark, tmp_path_factory, sim_state):
     assert _engine_log(eng) == _sim_log(sim_state)
     got_seen = {r.url for r in eng.seen().collect()}
     assert got_seen == sim_state.seen
+    # the row counts that size each round: init's from the seeds, then
+    # each round's observed on its own writes
+    assert eng.manifest["init"] == {"frontier_rows": 3, "host_rows": 3}
+    _assert_sizes_match_snapshots(eng)
     # the round-metrics contract perfbench reads: sections in order,
     # each measured contiguously from the round's start, and lineage
     # accounting for every fetched row
@@ -121,6 +138,11 @@ def test_resume_produces_identical_tail(spark, tmp_path_factory, sim_state):
         salt_buckets=16,
     )
     manifest.update(bloom_buckets=32, bloom_bits=1 << 17, seen_rows=95)
+    # ... and a manifest written before the engine kept its row counts
+    # has neither; resume counts the last round's snapshots instead
+    del manifest["init"]
+    for m in manifest["rounds"]:
+        del m["frontier_rows"], m["host_rows"]
     with open(mpath, "w") as f:
         json.dump(manifest, f)
     # simulate a crash: reopen from the manifest and continue
@@ -417,6 +439,32 @@ def test_pluggable_http_fetch_stage_matches_simulator(
     eng.run(ROUNDS)
     assert _engine_log(eng) == _sim_log(sim_state)
     assert {r.url for r in eng.seen().collect()} == sim_state.seen
+
+
+def test_link_outside_synthetic_url_space_is_dropped(spark, tmp_path_factory):
+    # the engine keys hosts and seq by the synthetic URL shape: a link
+    # outside it has no host id and is dropped, it does not fail the
+    # round
+    from functools import partial
+
+    from scalpel_ts_spark.sources.fetch import http_fetch_stage
+
+    def external_link_http(url):
+        status, ctype, body = _synthetic_http(url)
+        anchor = b'<a href="https://example.com/x">out</a></nav>'
+        return status, ctype, body.replace(b"</nav>", anchor)
+
+    wd = str(tmp_path_factory.mktemp("crawl_external_link"))
+    eng = CrawlEngine(
+        spark, wd, n_hosts=N_HOSTS, cap=8, refill=4, write_docs=False,
+        fetch_stage=partial(http_fetch_stage, fetch_fn=external_link_http),
+    )
+    eng.init(SEEDS)
+    m = eng.run_round()
+    assert eng.round == 1 and m["discovered_new"] > 0
+    seen = {r.url for r in eng.seen().collect()}
+    frontier = {r.url for r in eng.storage.read("frontier", 1).collect()}
+    assert not {u for u in seen | frontier if "example.com" in u}
 
 
 def _flaky_http(url):
@@ -765,9 +813,12 @@ def test_unreachable_robots_refetch_recovers(spark, tmp_path_factory):
     r3 = host1_row(3)
     assert r3.robots_txt == "User-agent: *\nAllow: /"
     assert r3.fetch_fails == 0
+    # the host count is the robots table's rows, not the summed cache
+    # misses (host 1's re-fetches are misses of a host already cached)
+    _assert_sizes_match_snapshots(eng)
 
 
-def test_seq_of_rejects_malformed_seed():
+def test_seq_of_rejects_malformed_seed(spark, tmp_path_factory):
     import pytest as _pytest
 
     from scalpel_ts_spark.sources.synthetic import seq_of
@@ -775,6 +826,68 @@ def test_seq_of_rejects_malformed_seed():
     assert seq_of(make_url(3, 7)) == 3 * 1_000_000_000 + 7
     with _pytest.raises(ValueError, match="malformed synthetic URL"):
         seq_of("http://h3.test/page/7")  # wrong path shape
+    # the engine's seed list fails its round-0 frontier write the same
+    # way, not by dropping the seed
+    wd = str(tmp_path_factory.mktemp("crawl_bad_seed"))
+    eng = CrawlEngine(spark, wd, n_hosts=N_HOSTS, write_docs=False)
+    with _pytest.raises(
+        Exception,
+        match=r"malformed synthetic URL 'http://h3\.test/page/7': "
+        r"expected http://h\{n\}\.test/p/\{n\}",
+    ):
+        eng.init([make_url(1, 0), "http://h3.test/page/7"])
+
+
+def test_round_one_per_host_writes_gated_on_seed_hosts(
+    spark, tmp_path_factory, monkeypatch
+):
+    # n_hosts understates the seed list's 16 hosts: round 1's host_state
+    # holds every seed host, so the driver-write gate must size it by
+    # the seeds' host count, not by the empty round-0 per-host tables
+    from scalpel_ts_spark.plans.storage import ParquetSnapshotStorage
+
+    monkeypatch.setattr(frontier_mod, "DRIVER_WRITE_MAX_ROWS", 8)
+    calls = []
+
+    class SpyStorage(ParquetSnapshotStorage):
+        def write(self, df, table, rnd):
+            calls.append((table, rnd, "write"))
+            super().write(df, table, rnd)
+
+        def write_small(self, df, table, rnd):
+            calls.append((table, rnd, "write_small"))
+            super().write_small(df, table, rnd)
+
+    wd = str(tmp_path_factory.mktemp("crawl_host_gate"))
+    eng = CrawlEngine(
+        spark, wd, n_hosts=1, cap=8, refill=4, write_docs=False,
+        storage=SpyStorage(spark, wd),
+    )
+    eng.init([make_url(h, 0) for h in range(16)])
+    eng.run_round()
+    assert ("host_state", 1, "write") in calls
+    assert ("host_state", 1, "write_small") not in calls
+    assert eng.manifest["rounds"][0]["host_rows"] == 16
+
+
+def test_obs_count_reads_only_a_pruned_observation_as_zero(spark):
+    # AQE prunes the observed empty join side, so its metric row is
+    # null: that reads as 0; a metric the observation lacks raises
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    pruned = Observation()
+    empty = (
+        spark.range(100).filter("id < 0").repartition(3, "id")
+        .observe(pruned, F.count(F.lit(1)).alias("n"))
+    )
+    assert spark.range(1000).join(empty, "id").collect() == []
+    assert frontier_mod._obs_count(pruned, "n") == 0
+    fired = Observation()
+    spark.range(3).observe(fired, F.count(F.lit(1)).alias("n")).collect()
+    assert frontier_mod._obs_count(fired, "n") == 3
+    with pytest.raises(KeyError):
+        frontier_mod._obs_count(fired, "m")
 
 
 def test_crawl_invariants_oracle_matches_simulator():
