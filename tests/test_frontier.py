@@ -200,46 +200,87 @@ def test_commit_waits_for_writes_in_flight(spark, tmp_path_factory):
     assert storage.load_manifest()["rounds"] == []
 
 
-@pytest.mark.parametrize("compact_every", [8, 2], ids=["delta", "compacted"])
-def test_resume_after_crash_between_seen_and_frontier_writes(
-    spark, tmp_path_factory, sim_state, compact_every
-):
-    # round 2 crashes on its frontier write after its seen snapshot
-    # (a delta, or a full compacted one) has landed; the round stays
-    # uncommitted, and the resumed crawl must redo it to the same
-    # crawl without reading the orphaned seen snapshot twice
+class FaultStorage:
+    """A snapshot storage that delegates to ``inner`` but raises on the
+    write of ``table`` in round ``rnd``: ``before`` its files land or
+    ``after``, through ``write`` and ``write_small`` alike."""
+
+    def __init__(self, inner, table, rnd, when):
+        self.inner, self.table, self.rnd, self.when = inner, table, rnd, when
+
+    def _write(self, write, df, table, rnd):
+        hit = (table, rnd) == (self.table, self.rnd)
+        if hit and self.when == "before":
+            raise OSError(f"{table} write failed")
+        write(df, table, rnd)
+        if hit:
+            raise OSError(f"{table} write failed")
+
+    def write(self, df, table, rnd):
+        self._write(self.inner.write, df, table, rnd)
+
+    def write_small(self, df, table, rnd):
+        self._write(self.inner.write_small, df, table, rnd)
+
+    def __getattr__(self, name):
+        return getattr(self.inner, name)
+
+
+def _crash_resume_finish(spark, wd, sim, table, when, compact_every):
+    # round 2 crashes on one table's write (every other write of the
+    # round runs); the round stays uncommitted, and the resumed crawl
+    # must redo it to the same crawl without reading any orphaned
+    # round-2 snapshot
     from scalpel_ts_spark.plans.storage import ParquetSnapshotStorage
 
-    class CrashStorage(ParquetSnapshotStorage):
-        def _crash(self, write, df, table, rnd):
-            if table == "frontier" and rnd == 2:
-                assert os.path.isdir(self._path("seen", 2))
-                raise OSError("frontier write failed")
-            write(df, table, rnd)
-
-        def write(self, df, table, rnd):
-            self._crash(super().write, df, table, rnd)
-
-        def write_small(self, df, table, rnd):
-            self._crash(super().write_small, df, table, rnd)
-
-    wd = str(tmp_path_factory.mktemp(f"crawl_crash_{compact_every}"))
+    storage = FaultStorage(ParquetSnapshotStorage(spark, wd), table, 2, when)
     eng = CrawlEngine(
         spark, wd, n_hosts=N_HOSTS, cap=8, refill=4,
-        compact_every=compact_every, write_docs=False,
-        storage=CrashStorage(spark, wd),
+        compact_every=compact_every, storage=storage,
     )
     eng.init(SEEDS)
     eng.run(1)
-    with pytest.raises(OSError, match="frontier write failed"):
+    with pytest.raises(OSError, match=f"{table} write failed"):
         eng.run_round()
     eng2 = CrawlEngine.resume(spark, wd)
     assert eng2.round == 1
     eng2.run(ROUNDS - 1)
-    assert _engine_log(eng2) == _sim_log(sim_state)
+    assert _engine_log(eng2) == _sim_log(sim)
     seen_urls = [r.url for r in eng2.seen().collect()]
     assert len(seen_urls) == len(set(seen_urls))
-    assert set(seen_urls) == sim_state.seen
+    assert set(seen_urls) == sim.seen
+    _assert_sizes_match_snapshots(eng2)
+
+
+@pytest.mark.parametrize("compact_every", [8, 2], ids=["delta", "compacted"])
+def test_resume_after_crash_between_seen_and_frontier_writes(
+    spark, tmp_path_factory, sim_state, compact_every
+):
+    # the frontier write fails after the seen snapshot (a delta, or a
+    # full compacted one) has landed
+    wd = str(tmp_path_factory.mktemp(f"crawl_crash_{compact_every}"))
+    _crash_resume_finish(
+        spark, wd, sim_state, "frontier", "before", compact_every
+    )
+    assert os.path.isdir(os.path.join(wd, "seen", "r2"))
+
+
+@pytest.mark.parametrize(
+    "table,when,compact_every",
+    [
+        pytest.param(table, when, every, id=f"{table}-{when}-{mode}")
+        for table in frontier_mod.TABLES
+        for when in ("before", "after")
+        for mode, every in (("delta", 8), ("compacting", 2))
+        # frontier-before is the test above
+        if (table, when) != ("frontier", "before")
+    ],
+)
+def test_resume_after_crash_at_any_commit_point(
+    spark, tmp_path_factory, sim_state, table, when, compact_every
+):
+    wd = str(tmp_path_factory.mktemp(f"crawl_crash_{table}_{when}"))
+    _crash_resume_finish(spark, wd, sim_state, table, when, compact_every)
 
 
 def test_new_urls_dedup_matches_python(spark):
