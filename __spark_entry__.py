@@ -1257,8 +1257,8 @@ def q_crawl_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CRAWL_INVARIANTS_SQL = """
 SELECT * FROM (VALUES
   (0,  6, 6, 1, 0),
-  (1, 18, 6, 4, 0),
-  (2, 17, 6, 4, 0)
+  (1, 20, 6, 4, 0),
+  (2, 16, 6, 4, 0)
 ) AS t(round, fetched, hosts_active, max_host_fetched, dup_urls_total)
 """
 

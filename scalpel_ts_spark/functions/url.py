@@ -12,14 +12,24 @@ Canonical form:
     * empty path -> '/'
     * query parameters sorted lexicographically ('&'-split)
     * trailing lone '?' dropped
+
+Keys: ``url_hash`` is ``xxhash64`` (seed 42) of the canonical URL and
+``host_id`` is ``xxhash64`` of its ``scheme://authority``; a URL with
+no authority has no host (null).  ``url_hash_py`` and ``host_id_py``
+compute the same longs in pure Python (XXH64 over the UTF-8 bytes), so
+the reference crawl simulator keys URLs exactly as the engine does.
 """
 
 from __future__ import annotations
+
+import re
+import struct
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 _AUTH_RE = r"^([a-zA-Z][a-zA-Z0-9+.\-]*://[^/?]*)"
+_AUTH_PY = re.compile(_AUTH_RE)
 
 
 def canonicalize_url(url: Column) -> Column:
@@ -67,5 +77,68 @@ def canonicalize_url_sql_duckdb(col: str) -> str:
 
 
 def url_hash(canon_url: Column) -> Column:
-    """64-bit identity of a canonical URL (frontier/seen key)."""
+    """64-bit identity of a canonical URL (frontier/seen key, and the
+    crawl order within a priority)."""
     return F.xxhash64(canon_url)
+
+
+def host_id(canon_url: Column) -> Column:
+    """64-bit host key: ``xxhash64`` of the URL's ``scheme://authority``,
+    null when it has none."""
+    authority = F.regexp_extract(canon_url, _AUTH_RE, 1)
+    return F.when(authority != "", F.xxhash64(authority))
+
+
+# --- pure-Python mirrors: XXH64 with seed 42, as Spark's xxhash64 ---
+
+_P1, _P2, _P3, _P4, _P5 = (
+    0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9,
+    0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5,
+)
+_M64 = (1 << 64) - 1
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _lane(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def _xxh64(data: bytes, seed: int = 42) -> int:
+    n = len(data)
+    i = n - n % 32  # the bytes of whole 32-byte stripes
+    h = seed + _P5
+    if i:
+        v = [seed + _P1 + _P2, seed + _P2, seed, seed - _P1]
+        for stripe in struct.iter_unpack("<4Q", data[:i]):
+            v = [_lane(a, b) for a, b in zip(v, stripe)]
+        h = sum(_rotl(a, r) for a, r in zip(v, (1, 7, 12, 18))) & _M64
+        for a in v:
+            h = ((h ^ _lane(0, a)) * _P1 + _P4) & _M64
+    h = (h + n) & _M64
+    j = n - (n - i) % 8  # the end of the 8-byte words
+    for (k,) in struct.iter_unpack("<Q", data[i:j]):
+        h = (_rotl(h ^ _lane(0, k), 27) * _P1 + _P4) & _M64
+    if n - j >= 4:
+        (k,) = struct.unpack_from("<I", data, j)
+        h = (_rotl(h ^ (k * _P1 & _M64), 23) * _P2 + _P3) & _M64
+        j += 4
+    for b in data[j:]:
+        h = _rotl(h ^ (b * _P5 & _M64), 11) * _P1 & _M64
+    for shift, prime in ((33, _P2), (29, _P3)):
+        h = (h ^ (h >> shift)) * prime & _M64
+    h ^= h >> 32
+    return h - (1 << 64) if h >> 63 else h
+
+
+def url_hash_py(canon_url: str) -> int:
+    """:func:`url_hash` of one URL, in Python."""
+    return _xxh64(canon_url.encode("utf-8"))
+
+
+def host_id_py(canon_url: str) -> int | None:
+    """:func:`host_id` of one URL, in Python."""
+    m = _AUTH_PY.match(canon_url)
+    return url_hash_py(m.group(1)) if m else None

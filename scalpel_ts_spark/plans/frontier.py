@@ -48,10 +48,13 @@ per-round metrics, per-partition lineage, which seen snapshots are
 full, and the row counts that size the next round — giving
 atomic-at-round granularity and resume-from-any-round.
 
-Determinism: every ordering/selection key (priority, seq, url_hash) is
-derived from the data, never from task scheduling — so the engine
-reproduces the reference simulator's fetch log and seen set exactly,
-at any parallelism, resumed or not (tests/test_frontier.py).
+Determinism: every key is derived from the URL itself, never from
+task scheduling or the URL's shape: ``host_id`` and ``url_hash`` are
+hashes of the canonical URL's authority and of the URL
+(:mod:`scalpel_ts_spark.functions.url`), and a host's crawl order is
+(priority, url_hash) — so the engine reproduces the reference
+simulator's fetch log and seen set exactly, at any parallelism,
+resumed or not (tests/test_frontier.py).
 """
 
 from __future__ import annotations
@@ -65,7 +68,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from scalpel_ts_spark.functions.robots import robots_filter_stage
-from scalpel_ts_spark.functions.url import canonicalize_url, url_hash
+from scalpel_ts_spark.functions.url import canonicalize_url, host_id, url_hash
 from scalpel_ts_spark.operators.extract import (
     crawl_extract_udf,
     fused_fetch_extract_udf,
@@ -73,39 +76,13 @@ from scalpel_ts_spark.operators.extract import (
 from scalpel_ts_spark.operators.seen import new_urls
 from scalpel_ts_spark.operators.topk import topk_per_group
 from scalpel_ts_spark.plans.storage import ParquetSnapshotStorage, SnapshotStorage
-from scalpel_ts_spark.sources.synthetic import (
-    fetch_robots_rules,
-    html_for_url,
-    host_id_col,
-    page_id_col,
-    seed_seq_col,
-    seq_col,
-)
+from scalpel_ts_spark.sources.synthetic import fetch_robots_rules, html_for_url
 
 TABLES = ("frontier", "seen", "host_state", "docs", "fetch_log", "robots")
 
 #: ~24 MB of longs — comfortably under Spark's driver/executor broadcast
 #: comfort zone; above this the anti-join falls back to a plain shuffle
 DEFAULT_BROADCAST_FETCHED_MAX = 3_000_000
-
-#: config keys of options that no longer exist: manifests written
-#: before their removal still resume (each one's old value only tuned
-#: performance or selected the retired engine bloom)
-_RETIRED_CONFIG_KEYS = (
-    "narrow_probe",
-    "bloom_buckets",
-    "bloom_target_rows_per_bucket",
-    "bloom_bits_per_key",
-    "bloom_max_bucket_bytes",
-    "bloom_presize_keys",
-    "broadcast_fetched_max",
-    "use_bloom",
-    "salt_buckets",
-)
-
-#: top-level manifest keys of the retired engine bloom's sizing state;
-#: resume drops them from manifests written while it existed
-_RETIRED_MANIFEST_KEYS = ("bloom_buckets", "bloom_bits", "seen_rows")
 
 #: per-host tables (one row per host) are collected and written driver-
 #: side below this row count: no distributed-write job, no commit-
@@ -194,24 +171,10 @@ def _coalesce_for_write(
 
 
 def resolve_write_small(storage):
-    """Return the storage's OPTIONAL ``write_small`` method, or None.
-
-    Duck-typed storages that never defined it fall back to plain
-    ``write``; so must a class that explicitly subclasses the
-    ``SnapshotStorage`` Protocol without overriding it — such a class
-    INHERITS the Protocol's ``...`` stub body, and calling that no-op
-    would silently write nothing (data loss at the commit seam)."""
-    write_small = getattr(storage, "write_small", None)
-    if write_small is None:
-        return None
-    if "write_small" in getattr(storage, "__dict__", {}):
-        return write_small  # instance-level override is a real impl
-    if (
-        getattr(type(storage), "write_small", None)
-        is SnapshotStorage.write_small
-    ):
-        return None
-    return write_small
+    """The storage's ``write_small``, a required method of the seam;
+    kept as a name because perfbench/test_timed_storage.py imports
+    it."""
+    return storage.write_small
 
 
 @dataclass
@@ -398,13 +361,11 @@ class CrawlEngine:
         and an understated config must not collect an oversized table
         onto the driver (round-3 ADVICE).  This round's table can be
         larger by one round of discovery, so the gate keeps 2x
-        headroom.  ``write_small`` is optional (``resolve_write_small``
-        says when a storage has one)."""
+        headroom."""
         est = max(self.n_hosts, self._sizes()["host_rows"])
         df, obs = _with_count(df, "rows")
-        write_small = resolve_write_small(self.storage)
-        if write_small is not None and est <= DRIVER_WRITE_MAX_ROWS // 2:
-            self._write(df, table, rnd, write_small)
+        if est <= DRIVER_WRITE_MAX_ROWS // 2:
+            self._write(df, table, rnd, self.storage.write_small)
         else:
             self._write(_coalesce_for_write(df, est), table, rnd)
         return _obs_count(obs, "rows")
@@ -442,15 +403,14 @@ class CrawlEngine:
         driver)."""
         self.storage.reset()
         seed_df = seeds_df.select(canonicalize_url(F.col("url")).alias("url"))
+        # a seed without scheme://authority has no host: not crawled
         frontier = seed_df.select(
             "url",
-            host_id_col(F.col("url")).alias("host_id"),
+            host_id(F.col("url")).alias("host_id"),
             F.lit(0).alias("priority"),
-            # a seed outside the synthetic URL space fails this write
-            seed_seq_col(F.col("url")).alias("seq"),
             url_hash(F.col("url")).alias("url_hash"),
             F.lit(0).alias("fails"),  # fetch-retry count (bounded)
-        )
+        ).filter(F.col("host_id").isNotNull())
         # round 0's row counts ride the frontier write as an
         # Observation (no separate count job); the per-host tables
         # start empty, so the seeds' distinct hosts stand in for their
@@ -512,22 +472,28 @@ class CrawlEngine:
         ``robots_stage`` it crawled with."""
         storage = storage or ParquetSnapshotStorage(spark, workdir)
         manifest = storage.load_manifest()
-        cfg = manifest["config"]
-        for key in _RETIRED_CONFIG_KEYS:
-            cfg.pop(key, None)
-        for key in _RETIRED_MANIFEST_KEYS:
-            manifest.pop(key, None)
+        # a frontier from before the URL keying change carries `seq`
+        # and host ids parsed from the URL shape (and its manifest may
+        # name options since removed): crawling on would mix two keys
+        # per host
+        frontier = storage.read("frontier", len(manifest["rounds"]))
+        if "seq" in frontier.columns:
+            raise ValueError(
+                f"{workdir} was crawled before the URL keying change (host "
+                "and order keys are now hashes of the canonical URL): it "
+                "cannot be resumed, start a new crawl with init"
+            )
         eng = cls(
             spark,
             workdir,
             storage=storage,
             fetch_stage=fetch_stage,
             robots_stage=robots_stage,
-            **{k: cfg[k] for k in cfg},
+            **manifest["config"],
         )
+        eng.manifest = {"init": {}, **manifest}
         # a manifest written before the engine kept its row counts has
         # neither: count the last committed round's snapshots once
-        eng.manifest = {"init": {}, **manifest}
         sizes = eng._sizes()
         if "frontier_rows" not in sizes:
             rnd = eng.round
@@ -655,7 +621,7 @@ class CrawlEngine:
         st.new_state = st.cache(refreshed.unionByName(idle))
 
         # 2. politeness-budgeted selection: top-k per host by
-        #    (priority, seq) with k = the host's token balance.
+        #    (priority, url_hash) with k = the host's token balance.
         #    host_state is per-HOST (millions of rows at most) while
         #    the frontier is per-URL (10^10 design point) — broadcast
         #    the small side so the frontier is not shuffled for this
@@ -695,7 +661,7 @@ class CrawlEngine:
         st.candidates = topk_per_group(
             budgeted,
             group_cols=["host_id"],
-            order_cols=[F.col("priority"), F.col("seq")],
+            order_cols=[F.col("priority"), F.col("url_hash")],
             k=F.col("tokens"),
             prune_k=self.cap,
         ).drop("tokens")
@@ -881,9 +847,8 @@ class CrawlEngine:
         candidates_raw = (
             st.content.select(F.explode("ex.links").alias("raw_url"))
             .select(canonicalize_url(F.col("raw_url")).alias("url"))
-            .withColumn("host_id", host_id_col(F.col("url")))
-            # hosts and seq are keyed by the synthetic URL shape: a
-            # link outside it has no host id and is dropped
+            .withColumn("host_id", host_id(F.col("url")))
+            # a link without scheme://authority has no host: dropped
             .filter(F.col("host_id").isNotNull())
         )
         if st.prefetch_rules is not None:
@@ -955,9 +920,8 @@ class CrawlEngine:
         # robots vetting AFTER the set-difference: per-URL allow/deny
         # commutes with dedup and anti-join, so it vets the (much
         # smaller) genuinely-new set instead of the full discovery
-        # volume; the ordering keys (priority, seq) are likewise
-        # derived post-dedup only.  Denied URLs never reach seen or
-        # frontier — exactly as when the filter ran first.
+        # volume.  Denied URLs never reach seen or frontier — exactly
+        # as when the filter ran first.
         if self.robots_stage is not None:
             allowed = robots_filter_stage(
                 self._with_path(st.new_keys), st.robots
@@ -965,8 +929,9 @@ class CrawlEngine:
         else:
             allowed = (
                 st.new_keys.join(F.broadcast(st.robots), "host_id")
+                # pmod: Spark's % is negative for a negative url_hash
                 .filter(
-                    page_id_col(F.col("url")) % F.col("disallow_mod")
+                    F.pmod(F.col("url_hash"), F.col("disallow_mod"))
                     != F.col("disallow_rem")
                 )
                 .drop("disallow_mod", "disallow_rem")
@@ -976,7 +941,6 @@ class CrawlEngine:
                 "url",
                 "host_id",
                 F.lit(st.r + 1).alias("priority"),
-                seq_col(F.col("url")).alias("seq"),
                 "url_hash",
                 F.lit(0).alias("fails"),
             )
@@ -1069,7 +1033,8 @@ class CrawlEngine:
         log_cols = [
             F.lit(st.r).alias("round"),
             F.col("priority"),
-            F.col("seq"),
+            # the order key keeps the log's `seq` column name
+            F.col("url_hash").alias("seq"),
             F.col("url"),
             F.col("host_id"),
             F.size("ex.links").alias("n_links"),

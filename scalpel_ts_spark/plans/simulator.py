@@ -9,15 +9,20 @@ this file share the synthetic-web functions, and the equality gate in
 tests/test_frontier.py compares ordered fetch logs and seen sets.
 
 Policy (shared with plans/frontier.py):
-  * state: frontier {url -> (priority, seq)}, seen set of canonical
-    urls, per-host token buckets (capacity CAP, +REFILL per round)
+  * keys: a URL's host is ``host_id_py`` and its order key is
+    ``url_hash_py`` (functions/url.py: the engine's xxhash64 keys,
+    computed in Python); a URL with no scheme://authority has no host
+    and is not crawled
+  * state: frontier {url -> (priority, url_hash)}, seen set of
+    canonical urls, per-host token buckets (capacity CAP, +REFILL per
+    round)
   * each round: refill tokens; per host take the top ``tokens`` urls
-    ordered by (priority, seq); fetch; extract links via the scalpel
-    combinator ``attrs('href', tag('a'))``; canonicalize; drop
-    robots-disallowed targets; de-dup against seen; enqueue with
-    priority = round + 1 and data-derived seq
-  * fetch-log ordering key: (round, priority, seq) — data-derived,
-    never task/scheduler-derived
+    ordered by (priority, url_hash); fetch; extract links via the
+    scalpel combinator ``attrs('href', tag('a'))``; canonicalize; drop
+    links without a host and robots-disallowed targets; de-dup against
+    seen; enqueue with priority = round + 1
+  * fetch-log ordering key: (round, priority, url_hash), logged as
+    ``seq`` — data-derived, never task/scheduler-derived
 """
 
 from __future__ import annotations
@@ -30,17 +35,13 @@ import scalpel_ts_spark.core.select as Sel
 from scalpel_ts_spark.core.scraper import NOTHING
 from scalpel_ts_spark.core.tag_spec import tags_to_spec
 from scalpel_ts_spark.core.tokenizer import parse
-from scalpel_ts_spark.sources.synthetic import (
-    html_for_url,
-    parse_url_ids,
-    robots_disallowed,
-    seq_of,
-)
+from scalpel_ts_spark.functions.url import host_id_py, url_hash_py
+from scalpel_ts_spark.sources.synthetic import html_for_url, robots_disallowed
 
 
 @dataclass
 class SimState:
-    frontier: dict = field(default_factory=dict)  # url -> (priority, seq)
+    frontier: dict = field(default_factory=dict)  # url -> (priority, url_hash)
     seen: set = field(default_factory=set)
     tokens: dict = field(default_factory=dict)  # host_id -> tokens
     fetch_log: list = field(default_factory=list)
@@ -57,15 +58,16 @@ def simulate_crawl(
     links_scraper = S.attrs("href", Sel.tag("a"))
     st = SimState()
     for url in seeds:
-        st.frontier[url] = (0, seq_of(url))
-        st.seen.add(url)
+        if host_id_py(url) is not None:
+            st.frontier[url] = (0, url_hash_py(url))
+            st.seen.add(url)
 
     for r in range(rounds):
         st.round = r + 1
         # refill / init token buckets for hosts with pending urls
         by_host: dict = {}
         for url, (prio, seq) in st.frontier.items():
-            h, _ = parse_url_ids(url)
+            h = host_id_py(url)
             by_host.setdefault(h, []).append((prio, seq, url))
         for h in by_host:
             st.tokens[h] = min(cap, st.tokens.get(h, cap) + (refill if h in st.tokens else 0))
@@ -92,12 +94,12 @@ def simulate_crawl(
             links = [] if raw_links is NOTHING else [urljoin(url, x) for x in raw_links]
             n_new = 0
             for link in links:
-                ids = parse_url_ids(link)
-                if ids is None or robots_disallowed(ids[1]):
-                    continue
                 if link in st.seen or link in discovered:
                     continue
-                discovered[link] = (r + 1, seq_of(link))
+                key = url_hash_py(link)
+                if host_id_py(link) is None or robots_disallowed(key):
+                    continue
+                discovered[link] = (r + 1, key)
                 n_new += 1
             st.fetch_log.append(
                 {

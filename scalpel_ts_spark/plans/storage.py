@@ -19,10 +19,10 @@ mapping is code, not comments:
   catalog is configured (the sandbox has no Iceberg jars), but every
   code path is the real production call sequence.
 
-Both implement the same five required methods the engine uses —
-``write / read / read_union / save_manifest / load_manifest`` — plus
-the OPTIONAL ``write_small`` fast path for tiny per-host tables (the
-engine probes for it with getattr and falls back to ``write``).
+Both implement the same methods the engine uses — ``write /
+write_small / read / read_union / save_manifest / load_manifest /
+reset``; ``write_small`` is the driver-side path for tiny per-host
+tables, which a storage without one implements as ``write``.
 """
 
 from __future__ import annotations
@@ -44,21 +44,16 @@ class SnapshotStorage(Protocol):
     the inherited default would otherwise be a silent None-returning
     no-op at the commit seam (a save_manifest that writes nothing
     makes every round unresumable with no error).  Duck-typed
-    implementations never inherit these bodies.  ``write_small`` is
-    the one OPTIONAL method: its stub stays inert because the engine's
-    ``resolve_write_small`` probe filters it by identity and falls
-    back to plain ``write``.
+    implementations never inherit these bodies.
     """
 
     def write(self, df: DataFrame, table: str, rnd: int) -> None:
         raise NotImplementedError("SnapshotStorage.write")
 
     def write_small(self, df: DataFrame, table: str, rnd: int) -> None:
-        """OPTIONAL: write a small (driver-collectable) table —
-        implementations may skip the distributed write path entirely.
-        The engine probes for a real override and otherwise uses
-        ``write``."""
-        ...
+        """Write a small (driver-collectable) table — implementations
+        may skip the distributed write path entirely."""
+        raise NotImplementedError("SnapshotStorage.write_small")
 
     def read(self, table: str, rnd: int) -> DataFrame:
         raise NotImplementedError("SnapshotStorage.read")

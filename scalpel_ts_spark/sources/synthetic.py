@@ -7,10 +7,13 @@ drive both the Spark fetch UDF and the single-process reference
 simulator, which is what makes the crawl-ordering equality gate
 meaningful.
 
-URL space: ``http://h{h}.test/p/{p}`` for host id h in [0, n_hosts)
-and page id p >= 0.  The link graph has host locality plus a built-in
-hot host (h0 receives ~20% of cross-host links) to exercise skew
-mitigation.  Pages with ``p % 13 == 7`` are disallowed by robots.
+URL space: the generator writes pages and links as
+``http://h{h}.test/p/{p}`` for host id h in [0, n_hosts) and page id
+p >= 0; only page generation reads that shape back.  The crawl keys a
+URL by hashes of the URL itself (``functions.url``), never by h or p.
+The link graph has host locality plus a built-in hot host (h0 receives
+~20% of cross-host links) to exercise skew mitigation.  The synthetic
+robots rule disallows a URL when ``pmod(url_hash, 13) == 7``.
 """
 
 from __future__ import annotations
@@ -57,8 +60,9 @@ def out_link_ids(host_id: int, page_id: int, n_hosts: int):
     return targets
 
 
-def robots_disallowed(page_id: int) -> bool:
-    return page_id % 13 == 7
+def robots_disallowed(url_hash: int) -> bool:
+    # Python's % on a negative long is Spark's pmod, not its %
+    return url_hash % 13 == 7
 
 
 _WORDS = (
@@ -95,41 +99,9 @@ def html_for_url(url: str, n_hosts: int = 50) -> str:
     )
 
 
-# --- Spark-side (JVM, codegen) mirrors of the URL id helpers ---
-# They match the whole URL as parse_url_ids does, so a URL outside the
-# synthetic URL space reads as null ids (try_cast: under ANSI mode a
-# plain cast of the empty non-match raises).
-
-def host_id_col(url):
-    return F.regexp_extract(url, _URL_RE.pattern, 1).try_cast("long")
-
-
-def page_id_col(url):
-    return F.regexp_extract(url, _URL_RE.pattern, 2).try_cast("long")
-
-
-def seq_col(url):
-    """Deterministic per-URL ordering key (data-derived — crawl order
-    must never depend on task scheduling)."""
-    return host_id_col(url) * F.lit(1_000_000_000) + page_id_col(url)
-
-
-def seed_seq_col(url):
-    """``seq_col`` for a seed list: a URL outside the synthetic URL
-    space fails the job that evaluates it, with :func:`seq_of`'s
-    message, instead of reading as a null key."""
-    seq = seq_col(url)
-    msg = F.concat(
-        F.lit("malformed synthetic URL '"),
-        url,
-        F.lit("': expected http://h{n}.test/p/{n} (check the seed list)"),
-    )
-    return F.coalesce(F.assert_true(seq.isNotNull(), msg), seq)
-
-
 def fetch_robots_rules(hosts_df):
     """Synthetic per-host robots.txt fetch: every host's rules parse
-    to 'disallow pages where p % 13 == 7' (matches
+    to 'disallow URLs where pmod(url_hash, 13) == 7' (matches
     :func:`robots_disallowed`).  Production swaps this for a batched
     HTTP GET of /robots.txt per host inside a pandas UDF — the cache
     table and broadcast-join shape downstream are unchanged."""
@@ -138,14 +110,3 @@ def fetch_robots_rules(hosts_df):
         F.lit(13).alias("disallow_mod"),
         F.lit(7).alias("disallow_rem"),
     )
-
-
-def seq_of(url: str) -> int:
-    ids = parse_url_ids(url)
-    if ids is None:
-        raise ValueError(
-            f"malformed synthetic URL {url!r}: expected "
-            "http://h{n}.test/p/{n} (check the seed list)"
-        )
-    h, p = ids
-    return h * 1_000_000_000 + p

@@ -9,8 +9,9 @@ exactly-once, survives restarts), and every candidate is emitted with
 a ``fetch`` / ``defer`` decision.  One trigger == one crawl round:
 the bucket refills by ``refill`` (capped at ``cap``) per trigger,
 mirroring CrawlEngine's round refill, and decisions within a trigger
-follow the engine's deterministic (priority, seq) order — never
-arrival order, which task scheduling could reorder.
+follow a deterministic (priority, seq) order (the engine's is
+(priority, url_hash)) — never arrival order, which task scheduling
+could reorder.
 
 State shape note for 100 TB operation: state is ONE ROW PER HOST
 (two ints), partitioned by the state store on host_id — hot hosts cost

@@ -14,6 +14,7 @@ import os
 
 import pytest
 
+from scalpel_ts_spark.functions.url import host_id_py, url_hash_py
 from scalpel_ts_spark.operators import seen as seen_ops
 from scalpel_ts_spark.operators.cuckoo import CuckooTable
 from scalpel_ts_spark.plans import frontier as frontier_mod
@@ -32,12 +33,13 @@ def _sim():
 
 def _engine_log(eng):
     rows = eng.fetch_log().collect()
-    return sorted((r.round, r.priority, r.seq, r.url) for r in rows)
+    return sorted((r.round, r.priority, r.seq, r.url, r.host_id) for r in rows)
 
 
 def _sim_log(sim):
     return sorted(
-        (e["round"], e["priority"], e["seq"], e["url"]) for e in sim.fetch_log
+        (e["round"], e["priority"], e["seq"], e["url"], e["host_id"])
+        for e in sim.fetch_log
     )
 
 
@@ -73,6 +75,14 @@ def test_spark_crawl_matches_simulator(spark, tmp_path_factory, sim_state):
     # each round's observed on its own writes
     assert eng.manifest["init"] == {"frontier_rows": 3, "host_rows": 3}
     _assert_sizes_match_snapshots(eng)
+    # the frontier is keyed by hashes of the URL alone; the fetch log
+    # keeps its shape, with the order key in `seq`
+    assert set(eng.storage.read("frontier", ROUNDS).columns) == {
+        "url", "host_id", "priority", "url_hash", "fails"
+    }
+    assert eng.fetch_log().columns == [
+        "round", "priority", "seq", "url", "host_id", "n_links"
+    ]
     # the round-metrics contract perfbench reads: sections in order,
     # each measured contiguously from the round's start, and lineage
     # accounting for every fetched row
@@ -119,27 +129,11 @@ def test_resume_produces_identical_tail(spark, tmp_path_factory, sim_state):
     )
     eng.init(SEEDS)
     eng.run(2)
-    # a manifest written before the retired options (the top-k salt
-    # among them) and the engine bloom were removed carries each option
-    # in its config (at its old default) and the bloom's sizing state
-    # at the top level; resume must drop both and continue
+    # a manifest written before the engine kept its row counts has
+    # neither; resume counts the last round's snapshots instead
     mpath = os.path.join(wd, "manifest.json")
     with open(mpath) as f:
         manifest = json.load(f)
-    manifest["config"].update(
-        narrow_probe=False,
-        bloom_buckets=32,
-        bloom_target_rows_per_bucket=1_000_000,
-        bloom_bits_per_key=10,
-        bloom_max_bucket_bytes=64 << 20,
-        bloom_presize_keys=None,
-        broadcast_fetched_max=3_000_000,
-        use_bloom=True,
-        salt_buckets=16,
-    )
-    manifest.update(bloom_buckets=32, bloom_bits=1 << 17, seen_rows=95)
-    # ... and a manifest written before the engine kept its row counts
-    # has neither; resume counts the last round's snapshots instead
     del manifest["init"]
     for m in manifest["rounds"]:
         del m["frontier_rows"], m["host_rows"]
@@ -149,7 +143,6 @@ def test_resume_produces_identical_tail(spark, tmp_path_factory, sim_state):
     eng2 = CrawlEngine.resume(spark, wd)
     assert eng2.round == 2
     eng2.run(ROUNDS - 2)
-    assert not {"bloom_buckets", "bloom_bits", "seen_rows"} & set(eng2.manifest)
     assert _engine_log(eng2) == _sim_log(sim_state)
     assert {r.url for r in eng2.seen().collect()} == sim_state.seen
 
@@ -482,17 +475,19 @@ def test_pluggable_http_fetch_stage_matches_simulator(
     assert {r.url for r in eng.seen().collect()} == sim_state.seen
 
 
-def test_link_outside_synthetic_url_space_is_dropped(spark, tmp_path_factory):
-    # the engine keys hosts and seq by the synthetic URL shape: a link
-    # outside it has no host id and is dropped, it does not fail the
-    # round
+def test_link_outside_synthetic_url_space_is_crawled(spark, tmp_path_factory):
+    # hosts and crawl order are hashes of the URL, not of the synthetic
+    # URL shape: a real-web link is discovered under its own host and
+    # fetched the next round
     from functools import partial
 
     from scalpel_ts_spark.sources.fetch import http_fetch_stage
 
+    external = "https://example.com/x"
+
     def external_link_http(url):
         status, ctype, body = _synthetic_http(url)
-        anchor = b'<a href="https://example.com/x">out</a></nav>'
+        anchor = f'<a href="{external}">out</a></nav>'.encode()
         return status, ctype, body.replace(b"</nav>", anchor)
 
     wd = str(tmp_path_factory.mktemp("crawl_external_link"))
@@ -503,9 +498,38 @@ def test_link_outside_synthetic_url_space_is_dropped(spark, tmp_path_factory):
     eng.init(SEEDS)
     m = eng.run_round()
     assert eng.round == 1 and m["discovered_new"] > 0
-    seen = {r.url for r in eng.seen().collect()}
-    frontier = {r.url for r in eng.storage.read("frontier", 1).collect()}
-    assert not {u for u in seen | frontier if "example.com" in u}
+    assert external in {r.url for r in eng.seen().collect()}
+    frontier = {
+        r.url: r for r in eng.storage.read("frontier", 1).collect()
+    }
+    assert frontier[external].host_id == host_id_py(external)
+    assert frontier[external].url_hash == url_hash_py(external)
+    eng.run_round()
+    log = {r.url: r for r in eng.fetch_log().collect()}
+    assert log[external].round == 1
+    assert log[external].host_id == host_id_py(external)
+
+
+def test_resume_refuses_a_crawl_keyed_before_url_hashing(
+    spark, tmp_path_factory
+):
+    # a frontier from before the keying change: host ids parsed from
+    # the synthetic URL shape and a `seq` order key
+    wd = str(tmp_path_factory.mktemp("crawl_old_keys"))
+    eng = CrawlEngine(spark, wd, n_hosts=N_HOSTS, write_docs=False)
+    eng.init(SEEDS)
+    old = spark.createDataFrame(
+        [(make_url(1, 0), 1, 0, 1_000_000_000, url_hash_py(make_url(1, 0)), 0)],
+        "url string, host_id long, priority int, seq long, url_hash long, "
+        "fails int",
+    )
+    eng.storage.write(old, "frontier", 0)
+    # such a crawl's manifest may also name options removed since: the
+    # keying change is what the refusal names
+    eng.manifest["config"]["salt_buckets"] = 16
+    eng.storage.save_manifest(eng.manifest)
+    with pytest.raises(ValueError, match="URL keying change"):
+        CrawlEngine.resume(spark, wd)
 
 
 def _flaky_http(url):
@@ -784,9 +808,11 @@ def test_http_robots_stage_end_to_end(spark, tmp_path_factory):
     assert rules.columns == ["host_id", "robots_txt", "url", "fetch_fails"]
     assert rules.count() == rules.select("host_id").distinct().count()
     by_host = {r.host_id: r for r in rules.collect()}
-    assert by_host[0].fetch_fails == 3  # prefetch + 2 discovery retries
+    host0_id = host_id_py(make_url(0, 0))
+    # prefetch + 2 discovery retries
+    assert by_host[host0_id].fetch_fails == 3
     assert all(
-        r.fetch_fails == 0 for h, r in by_host.items() if h != 0
+        r.fetch_fails == 0 for h, r in by_host.items() if h != host0_id
     )
 
 
@@ -836,7 +862,7 @@ def test_unreachable_robots_refetch_recovers(spark, tmp_path_factory):
             r.host_id: r
             for r in spark.read.parquet(f"{wd}/robots/r{rnd}").collect()
         }
-        return rows.get(1)
+        return rows.get(host_id_py(make_url(1, 0)))
 
     m1 = eng.run_round()
     # pre-vet fetched host 1's robots, got the outage sentinel, denied
@@ -857,26 +883,6 @@ def test_unreachable_robots_refetch_recovers(spark, tmp_path_factory):
     # the host count is the robots table's rows, not the summed cache
     # misses (host 1's re-fetches are misses of a host already cached)
     _assert_sizes_match_snapshots(eng)
-
-
-def test_seq_of_rejects_malformed_seed(spark, tmp_path_factory):
-    import pytest as _pytest
-
-    from scalpel_ts_spark.sources.synthetic import seq_of
-
-    assert seq_of(make_url(3, 7)) == 3 * 1_000_000_000 + 7
-    with _pytest.raises(ValueError, match="malformed synthetic URL"):
-        seq_of("http://h3.test/page/7")  # wrong path shape
-    # the engine's seed list fails its round-0 frontier write the same
-    # way, not by dropping the seed
-    wd = str(tmp_path_factory.mktemp("crawl_bad_seed"))
-    eng = CrawlEngine(spark, wd, n_hosts=N_HOSTS, write_docs=False)
-    with _pytest.raises(
-        Exception,
-        match=r"malformed synthetic URL 'http://h3\.test/page/7': "
-        r"expected http://h\{n\}\.test/p/\{n\}",
-    ):
-        eng.init([make_url(1, 0), "http://h3.test/page/7"])
 
 
 def test_round_one_per_host_writes_gated_on_seed_hosts(

@@ -127,9 +127,8 @@ def test_engine_seen_dedup_exchanges_candidates_once(spark):
     candidates, and no Python stage (no bloom cogroup) runs.  Broadcast
     is off so the shape is the one a seen set too big to broadcast
     gets."""
-    from scalpel_ts_spark.functions.url import canonicalize_url, url_hash
+    from scalpel_ts_spark.functions.url import canonicalize_url, host_id, url_hash
     from scalpel_ts_spark.operators.seen import new_urls
-    from scalpel_ts_spark.sources.synthetic import host_id_col
 
     def urls(df):
         raw = F.concat(
@@ -138,7 +137,7 @@ def test_engine_seen_dedup_exchanges_candidates_once(spark):
         )
         return df.select(canonicalize_url(raw).alias("url")).select(
             "url",
-            host_id_col(F.col("url")).alias("host_id"),
+            host_id(F.col("url")).alias("host_id"),
             url_hash(F.col("url")).alias("url_hash"),
         )
 

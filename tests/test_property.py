@@ -134,6 +134,57 @@ def test_canonicalize_duckdb_mirror_on_whitespace_edges(spark):
     assert got == oracle
 
 
+def test_python_url_keys_equal_spark_xxhash64(spark):
+    """The simulator's keys are the engine's: ``url_hash_py`` and
+    ``host_id_py`` equal Spark's ``xxhash64`` (seed 42) on every XXH64
+    code path — 0 to 80 bytes covers the empty input, the 1-, 4- and
+    8-byte tails and the 32-byte stripes — on ASCII and multibyte
+    UTF-8, and a URL without scheme://authority has no host."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from scalpel_ts_spark.functions.url import (
+        host_id,
+        host_id_py,
+        url_hash,
+        url_hash_py,
+    )
+
+    rng = random.Random(7)
+    alphabet = "az09/:?.-\xe9\u20ac\U0001f600"
+    texts = [
+        "".join(rng.choice(alphabet) for _ in range(n))
+        for n in range(81)
+        for _ in range(2)
+    ]
+    texts += ["x" * n for n in range(81)]
+    texts += [
+        "http://h1.test/p/0",
+        "https://example.com:8443/a?b=1",
+        "http://\u00e9xample.test/\u20ac",
+        "mailto:a@b.test",
+        "http://",
+    ]
+    assert max(len(t.encode()) for t in texts) >= 70
+    rows = (
+        spark.createDataFrame([(t,) for t in texts], "u string")
+        .select(
+            "u",
+            url_hash(F.col("u")).alias("h"),
+            host_id(F.col("u")).alias("host"),
+        )
+        .collect()
+    )
+    assert [(r.h, r.host) for r in rows] == [
+        (url_hash_py(t), host_id_py(t)) for t in texts
+    ]
+    assert host_id_py("mailto:a@b.test") is None
+    assert host_id_py("https://example.com/a") == url_hash_py(
+        "https://example.com"
+    )
+
+
 # ---------------------------------------------------------------------------
 # fused crawl-extract pass == combinator path (operators/extract.py)
 # ---------------------------------------------------------------------------

@@ -1,13 +1,11 @@
 """Storage-seam contracts that are not Iceberg call-sequence tests:
-the parquet manifest's crash-safe publish, the engine's probe for
-the OPTIONAL ``write_small`` method, and the driver entry's parquet
-schema cache.
+the parquet manifest's crash-safe publish, the Protocol's required
+method stubs, and the driver entry's parquet schema cache.
 """
 
 import json
 import os
 
-from scalpel_ts_spark.plans.frontier import resolve_write_small
 from scalpel_ts_spark.plans.storage import (
     ParquetSnapshotStorage,
     SnapshotStorage,
@@ -31,44 +29,6 @@ def test_save_manifest_is_atomic_publish(tmp_path):
         assert json.load(f) == {"rounds": []}
 
 
-def test_resolve_write_small_rejects_protocol_stub():
-    """A storage class that explicitly subclasses the Protocol without
-    overriding write_small inherits its ``...`` stub — calling that
-    no-op would silently write nothing, so the probe must fall back to
-    plain write for it (and still accept a REAL duck-typed one)."""
-
-    class InheritsStub(SnapshotStorage):
-        def write(self, df, table, rnd):
-            pass
-
-    class DuckWithFastPath:
-        def write_small(self, df, table, rnd):
-            return "fast"
-
-    class DuckWithout:
-        def write(self, df, table, rnd):
-            pass
-
-    class SubclassOverrides(SnapshotStorage):
-        def write_small(self, df, table, rnd):
-            return "real"
-
-    class SubclassInstanceLevel(SnapshotStorage):
-        def __init__(self):
-            self.write_small = lambda df, table, rnd: "instance"
-
-    assert resolve_write_small(InheritsStub()) is None
-    assert resolve_write_small(DuckWithout()) is None
-    fast = resolve_write_small(DuckWithFastPath())
-    assert fast is not None and fast(None, "t", 0) == "fast"
-    real = resolve_write_small(SubclassOverrides())
-    assert real is not None and real(None, "t", 0) == "real"
-    # an instance-level assignment is a REAL implementation even
-    # though the class attribute is still the Protocol stub
-    inst = resolve_write_small(SubclassInstanceLevel())
-    assert inst is not None and inst(None, "t", 0) == "instance"
-
-
 def test_protocol_required_stubs_raise():
     """An explicit Protocol subclass that forgot a REQUIRED method
     must fail loudly when the engine calls it — the old inherited
@@ -83,9 +43,8 @@ def test_protocol_required_stubs_raise():
         Missing().save_manifest({})
     with pytest.raises(NotImplementedError, match="reset"):
         Missing().reset()
-    # the OPTIONAL write_small stub stays inert (identity-filtered by
-    # resolve_write_small, never called)
-    assert Missing().write_small(None, "t", 0) is None
+    with pytest.raises(NotImplementedError, match="write_small"):
+        Missing().write_small(None, "t", 0)
 
 
 def test_schema_cache_is_per_round(spark, tmp_path):
